@@ -49,15 +49,18 @@ object FanOut {
     * Long.MaxValue — treat anything implausibly large as unknown. */
   private val UnknownBytes = BigInt(1L << 50)
 
-  private def target(df: DataFrame): Int = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+  private def target(df: DataFrame): Int =
+    targetFor(df.sparkSession.sparkContext.defaultParallelism,
+      df.queryExecution.optimizedPlan.stats.sizeInBytes)
+
+  /** clamp(ceil(bytes / 8 MB), 4, par), where the floor of 4 never
+    * exceeds `par` (a `local[2]` session fans to 2, not 4). */
+  private[core] def targetFor(par: Int, bytes: BigInt): Int =
     if (bytes <= 0 || bytes >= UnknownBytes) par
     else {
       val byBytes = ((bytes + BytesPerTask - 1) / BytesPerTask).toLong
-      math.max(4L, math.min(par.toLong, byBytes)).toInt
+      math.min(par.toLong, math.max(4L, byBytes)).toInt
     }
-  }
 
   def fanOut(df: DataFrame): DataFrame = {
     // toRdd is the already-planned physical RDD (cached on the

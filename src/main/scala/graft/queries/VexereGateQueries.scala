@@ -324,15 +324,13 @@ object VexereGateQueries extends QueryModule {
         def readIf(path: String): Option[DataFrame] =
           if (new java.io.File(path).exists()) Some(s.read.parquet(path))
           else None
-        var flakyCalls = 0
+        // tasks run on pool threads: shared state must be thread-safe
+        val flakyCalls = new java.util.concurrent.atomic.AtomicInteger(0)
         def goldTask(name: String, deps: Seq[String], tries: Int = 1)
                     (build: () => DataFrame): Task =
           Task(s"gold_$name", deps, () => {
-            if (name == "cau_5") {
-              flakyCalls += 1
-              if (flakyCalls == 1)
-                sys.error("transient gold failure (exercises retry)")
-            }
+            if (name == "cau_5" && flakyCalls.incrementAndGet() == 1)
+              sys.error("transient gold failure (exercises retry)")
             build().write.mode("overwrite").parquet(p(s"gold/$name"))
           }, maxTries = tries)
         val bus = busIds(s, dir)
