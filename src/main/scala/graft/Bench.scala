@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs the headline query set (SparkEntry.benchQueries)
   * against SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query
   * wall-clock seconds. Per-query progress goes to stderr so stragglers
@@ -14,13 +12,7 @@ object Bench {
     // 2.7x slow)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       math.max(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.core.GraftSession.tune(spark)
+    val spark = graft.core.GraftSession.local(cpus.toInt, "graft-bench")
     spark.sparkContext.setLogLevel("ERROR")
     // warm the JVM + parquet footers once so per-query numbers measure
     // the operators, not first-touch codegen/classloading

@@ -2,6 +2,7 @@ package graft.core
 
 import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
@@ -18,12 +19,18 @@ import org.apache.spark.sql.SparkSession
   * listener bus has no per-job filter hook at this level), so run
   * serially — concurrent jobs would fold into the same counters.
   * Listener events post asynchronously; the harness spins until the
-  * counters go quiet before reporting (the SimilaritySpec idiom). */
+  * counters go quiet before reporting (the SimilaritySpec idiom).
+  *
+  * `codegenCompiles` is the number of classes Spark compiled while the
+  * action ran: the change in `CodegenMetrics`' compilation-time
+  * histogram, which counts one sample per generated-class cache miss.
+  * It is process-global in the same way: compiles by any other thread
+  * in the JVM during the action fold into it. */
 object Metrics {
 
   final case class Run(
       bytesRead: Long, shuffleWriteBytes: Long, shuffleReadBytes: Long,
-      spillBytes: Long, resultSize: Long)
+      spillBytes: Long, resultSize: Long, codegenCompiles: Long)
 
   def measure[T](spark: SparkSession)(action: => T): (T, Run) = {
     val read = new AtomicLong; val sw = new AtomicLong
@@ -43,6 +50,7 @@ object Metrics {
       }
     }
     spark.sparkContext.addSparkListener(listener)
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     try {
       val out = action
       // events post async: wait for the counters to go quiet
@@ -52,7 +60,8 @@ object Metrics {
       while (sum != last && spins < 50) {
         last = sum; Thread.sleep(100); spins += 1
       }
-      (out, Run(read.get, sw.get, sr.get, spill.get, res.get))
+      (out, Run(read.get, sw.get, sr.get, spill.get, res.get,
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0))
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

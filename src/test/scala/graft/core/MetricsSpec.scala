@@ -25,6 +25,15 @@ class MetricsSpec extends SparkSuite {
     assert(agg.shuffleWriteBytes > mapOnly.shuffleWriteBytes * 10)
   }
 
+  test("measure: codegenCompiles counts fresh classes, none for a repeated plan") {
+    // a literal codegen has not seen yet, so the first run must compile
+    val df = spark.range(10).selectExpr(s"id * ${System.nanoTime()}")
+    val (_, cold) = Metrics.measure(spark)(df.collect())
+    assert(cold.codegenCompiles > 0, s"fresh plan compiled nothing: $cold")
+    val (_, warm) = Metrics.measure(spark)(df.collect())
+    assert(warm.codegenCompiles == 0, s"repeated plan recompiled: $warm")
+  }
+
   test("grid radius join shuffles linearly in points, not quadratically") {
     def pts(n: Long) = {
       val h = md5(col("id").cast("string"))
