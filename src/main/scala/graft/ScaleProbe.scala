@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.sources.VersionedTable.Write
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[32]")
@@ -342,7 +343,7 @@ object ScaleProbe {
           .createTempDirectory("probe_fold").resolve("t").toString
         val d = df0.repartition(files)
         val t0 = System.nanoTime()
-        graft.sources.VersionedTable.overwriteWithStats(d, root, "k", "v")
+        graft.sources.VersionedTable.overwrite(d, root, Write.stats("k", "v"))
         val secs = (System.nanoTime() - t0) / 1e9
         if (round > 1) // round 1 warms JIT/codegen
           println(f"[probe] files=$files%4d fold_commit $secs%7.3f s")
@@ -366,8 +367,8 @@ object ScaleProbe {
         val n = 200000L * mult
         val rows = spark.range(n).select(col("id").as("k"),
           md5(col("id").cast("string")).as("s"), (col("id") * 2).as("v"))
-        VersionedTable.overwriteWithStats(
-          rows.repartitionByRange(8 * mult, col("k")), root, "k")
+        VersionedTable.overwrite(rows.repartitionByRange(8 * mult, col("k")), root,
+          Write.stats("k"))
         import spark.implicits._
         // BROAD merge: one source key per 200 target rows, spread over
         // every file — phase 2 rewrites the WHOLE table, so a recompute
@@ -383,9 +384,9 @@ object ScaleProbe {
             beforeCommit = () => {
               if (!raced) {
                 raced = true
-                VersionedTable.appendWithStats(
+                VersionedTable.append(
                   Seq((appendKey, "r", 1L)).toDF("k", "s", "v"),
-                  root, "k")
+                  root, Write.stats("k"))
               }
             })
           (System.nanoTime() - t0) / 1e9
@@ -413,10 +414,10 @@ object ScaleProbe {
           (System.nanoTime() - t0) / 1e9
         }
         // two tiny tail files for the disjoint compaction to pack
-        VersionedTable.appendWithStats(
-          Seq((n + 1, "x", 1L)).toDF("k", "s", "v"), root, "k")
-        VersionedTable.appendWithStats(
-          Seq((n + 2, "x", 1L)).toDF("k", "s", "v"), root, "k")
+        VersionedTable.append(Seq((n + 1, "x", 1L)).toDF("k", "s", "v"), root,
+          Write.stats("k"))
+        VersionedTable.append(Seq((n + 2, "x", 1L)).toDF("k", "s", "v"), root,
+          Write.stats("k"))
         val rebC = armNarrow(100L, () => {
           VersionedTable.compact(spark, root, targetBytes = 64L << 10)
           ()
@@ -482,9 +483,10 @@ object ScaleProbe {
           .createTempDirectory("probe_scan").resolve("t").toString
         val n = 400000L * mult
         val files = 16 * mult
-        graft.sources.VersionedTable.overwriteWithStats(
+        graft.sources.VersionedTable.overwrite(
           spark.range(n).select(col("id").as("k"), (col("id") % 97).as("v"))
-            .repartitionByRange(files, col("k")), root, "k")
+            .repartitionByRange(files, col("k")),
+          root, Write.stats("k"))
         val t0 = System.nanoTime()
         val sliced = graft.sources.VersionedTable.scan(spark, root)
           .filter(col("k") >= 0L && col("k") <= n / 16)
@@ -520,12 +522,13 @@ object ScaleProbe {
         val files = 16 * mult
         // one year of data regardless of mult: density grows, the
         // slice stays one month of wall-clock
-        graft.sources.VersionedTable.overwriteWithStats(
+        graft.sources.VersionedTable.overwrite(
           spark.range(n).select(col("id").as("k"),
             timestamp_micros(lit(1704067200000000L) +
               (col("id") * (365L * 86400000000L / n))).as("ts"),
             (col("id") % 97).cast("double").as("v"))
-            .repartitionByRange(files, col("ts")), root, "ts", "v")
+            .repartitionByRange(files, col("ts")),
+          root, Write.stats("ts", "v"))
         val t0 = System.nanoTime()
         val sliced = graft.sources.VersionedTable.scan(spark, root)
           .filter(col("ts") >= to_timestamp(lit("2024-06-01 00:00:00")) &&
@@ -565,12 +568,12 @@ object ScaleProbe {
           .createTempDirectory("probe_part").resolve("t").toString
         val n = 400000L * mult
         val filesPerTenant = 8 * mult
-        graft.sources.VersionedTable.overwritePartitionedWithStats(
+        graft.sources.VersionedTable.overwrite(
           spark.range(n).select(col("id").as("k"),
             concat(lit("t"), col("id") % 8).as("tenant"),
             (col("id") % 97).as("v"))
             .repartitionByRange(filesPerTenant, col("k")),
-          root, Seq("tenant"), "k")
+          root, Write(stats = Some(Seq("k")), partitionBy = Seq("tenant")))
         val total = graft.sources.VersionedTable.scan(spark, root)
           .select(input_file_name()).distinct().count()
         val t0 = System.nanoTime()
@@ -747,15 +750,15 @@ object ScaleProbe {
           concat(lit("doc://"), col("doc_id").cast("string")).as("url"),
           col("doc_id"))
           .repartition(8 * mult, col("doc_id"))
-        graft.sources.VersionedTable.appendWithBloomIndex(docs, root, "url",
-          expectedPerFile = 25000, fpp = 0.01)
+        graft.sources.VersionedTable.append(docs, root,
+          Write(stats = Some(Seq.empty), bloom = Some(Write.Bloom("url", 25000))))
         val keys = Seq("doc://7", "doc://123", "doc://400")
         val t0 = System.nanoTime()
-        val out = graft.sources.VersionedTable.readWhereEq(spark, root, "url", keys)
+        val out = graft.sources.VersionedTable.scan(spark, root)
+          .filter(col("url").isin(keys: _*))
         val n = out.count()
-        val opened = out.inputFiles.length
-        val total = graft.sources.VersionedTable.read(spark, root)
-          .inputFiles.length
+        val opened = org.apache.spark.sql.graft.GraftScan.filesRead(out)
+        val total = graft.sources.VersionedTable.fileCount(root)
         println(f"[probe] mult=$mult%2d files_total=$total%4d " +
           f"files_opened=$opened%3d rows=$n%2d ${(System.nanoTime() - t0) / 1e9}%6.2f s")
       }
@@ -789,11 +792,11 @@ object ScaleProbe {
         graft.operators.TextIndex.append(batch, root)
         val ingest = (System.nanoTime() - t0) / 1e9
         val t1 = System.nanoTime()
-        val pruned = graft.sources.VersionedTable.readWhereEq(
-          spark, s"$root/postings", "term", Seq("tixprobe_unique_term"))
+        val pruned = graft.sources.VersionedTable.scan(spark, s"$root/postings")
+          .filter(col("term").isin("tixprobe_unique_term"))
         val hits = pruned.count()
         val serve = (System.nanoTime() - t1) / 1e9
-        val opened = pruned.inputFiles.length
+        val opened = org.apache.spark.sql.graft.GraftScan.filesRead(pruned)
         val total = graft.operators.TextIndex.postings(spark, root)
           .inputFiles.length
         println(f"[probe] mult=$mult%2d corpus=$n%7d batch=$nb%6d " +
@@ -833,9 +836,9 @@ object ScaleProbe {
           Seq("phraseprobe_u1", "phraseprobe_u2"))
         val hits = res.count()
         val serve = (System.nanoTime() - t0) / 1e9
-        val opened = graft.sources.VersionedTable.readWhereEq(
-          spark, s"$root/positions", "term",
-          Seq("phraseprobe_u1", "phraseprobe_u2")).inputFiles.length
+        val opened = org.apache.spark.sql.graft.GraftScan.filesRead(
+          graft.sources.VersionedTable.scan(spark, s"$root/positions")
+            .filter(col("term").isin("phraseprobe_u1", "phraseprobe_u2")))
         val total = graft.sources.VersionedTable.read(
           spark, s"$root/positions").inputFiles.length
         println(f"[probe] mult=$mult%2d corpus=$n%7d " +
@@ -1195,7 +1198,7 @@ object ScaleProbe {
         val rows = spark.range(0, n)
           .select(col("id").as("k"), (col("id") % 97).cast("double").as("v"))
           .repartitionByRange(mult * 16, col("k"))
-        VersionedTable.overwriteWithStats(rows, root, "k")
+        VersionedTable.overwrite(rows, root, Write.stats("k"))
         val before = VersionedTable.scanListing(root, Some(0L))
           .map(_.path).toSet
         // 900 matched keys spread over the FIRST 90k ids (a bounded
@@ -1235,16 +1238,16 @@ object ScaleProbe {
           .select((col("id") % 512).as("x"),
             (pmod(col("id") * 2654435761L, lit(512L))).as("y"),
             floor(col("id") / lit(n / 512L)).cast("long").as("z"))
-        VersionedTable.overwriteZOrderedK(cube, root, Seq("x", "y", "z"),
-          numFiles = mult * 48, buckets = 64)
+        VersionedTable.overwrite(cube, root,
+          Write(zorder = Some(Write.ZOrder(Seq("x", "y", "z"), mult * 48, 64))))
         val total = VersionedTable.read(spark, root).inputFiles.length
-        val box = Seq(("x", 0L, 63L), ("y", 0L, 63L), ("z", 0L, 63L))
+        def box(cs: String*) = org.apache.spark.sql.graft.GraftScan.filesRead(
+          VersionedTable.scan(spark, root)
+            .filter(cs.map(c => col(c).between(0L, 63L)).reduce(_ && _)))
         val t0 = System.nanoTime()
-        val opened3 = VersionedTable.readWhereBox(spark, root, box)
-          .inputFiles.length
+        val opened3 = box("x", "y", "z")
         val secs = (System.nanoTime() - t0) / 1e9
-        val opened2 = VersionedTable.readWhereBox(spark, root, box.take(2))
-          .inputFiles.length
+        val opened2 = box("x", "y")
         println(f"[probe] mult=$mult%2d rows=$n%8d zbox3d " +
           f"opened3d=$opened3%4d opened2d=$opened2%4d total=$total%4d  " +
           f"$secs%6.2f s")

@@ -28,7 +28,7 @@ import graft.sources.VersionedTable
   *    RANGE-CLUSTERED by cell at build (repartitionByRange → each file
   *    covers a narrow cell band) with per-file [min, max] cell stats in
   *    the manifest — so a probe reads its cells through
-  *    [[VersionedTable.readWhereIn]] FILE-SKIPPING from the listing
+  *    a `cell IN (...)` [[VersionedTable.scan]], FILE-SKIPPING from the listing
   *    alone, the IVF-list seek realized as manifest pruning. At 100 TB
   *    the cells table is the one clustered copy of the vectors; a
   *    query batch opens nprobe/nlist of its files.
@@ -128,14 +128,14 @@ object IvfIndex {
       centroids)
     // explicit file count (default ~2 cells/file): an adaptive
     // coalesce would happily pack a small build into ONE file and
-    // erase the per-file cell bands readWhereIn prunes on
+    // erase the per-file cell bands the scan prunes on
     val files = if (numFiles > 0) numFiles else math.max(nlist / 2, 1)
     val rows = cellRowsOf(corpus, centroids, idCol, vecCol)
       .repartitionByRange(files, col("cell"), col("id"))
     val v =
-      if (txn >= 0) VersionedTable.overwriteTxnWithStats(rows,
-        cellsRoot(root), appId, txn, "cell")
-      else VersionedTable.overwriteWithStats(rows, cellsRoot(root), "cell")
+      VersionedTable.overwrite(rows, cellsRoot(root), VersionedTable.Write(
+        stats = Some(Seq("cell")),
+        txn = if (txn >= 0) Some(appId -> txn) else None))
     VersionedTable.countRows(cellsRoot(root), Some(v))
       .foreach(writeBuildRows(root, _))
     v
@@ -144,7 +144,7 @@ object IvfIndex {
   /** Assign a NEW batch with the STORED centroids and append its cell
     * rows — O(batch); the build's files are inherited untouched.
     * `txn` ≥ 0 makes the append exactly-once per (`appId`, txn) — the
-    * [[VersionedTable.appendTxnWithStats]] protocol for the streaming
+    * `VersionedTable.Write.txn` protocol for the streaming
     * door: a replayed micro-batch no-ops instead of double-adding. */
   def append(batch: DataFrame, root: String,
              idCol: String = "vec_id", vecCol: String = "embedding",
@@ -159,10 +159,9 @@ object IvfIndex {
     val centroids = readCentroidsAt(root, pin)
     val rows = cellRowsOf(batch, centroids, idCol, vecCol)
       .repartitionByRange(math.max(numFiles, 1), col("cell"), col("id"))
-    if (txn >= 0)
-      VersionedTable.appendTxnWithStats(rows, cellsRoot(root), appId,
-        txn, "cell")
-    else VersionedTable.appendWithStats(rows, cellsRoot(root), "cell")
+    VersionedTable.append(rows, cellsRoot(root), VersionedTable.Write(
+      stats = Some(Seq("cell")),
+      txn = if (txn >= 0) Some(appId -> txn) else None))
   }
 
   /** RE-CLUSTER ON DRIFT — the maintenance dial [[append]] deliberately
@@ -201,10 +200,10 @@ object IvfIndex {
     // batch — an extra rewrite, never a wrong answer.
     writeCentroidsFor(root, vOld + 1, centroids)
     val files = if (numFiles > 0) numFiles else math.max(nlist / 2, 1)
-    VersionedTable.overwriteWithStats(
+    VersionedTable.overwrite(
       cellRowsOf(stored, centroids, "id", "vec")
         .repartitionByRange(files, col("cell"), col("id")),
-      cr, "cell")
+      cr, VersionedTable.Write.stats("cell"))
     writeBuildRows(root, total)
     true
   }
@@ -236,8 +235,8 @@ object IvfIndex {
     // own probes.
     val probed = q.select(col("cell")).distinct()
       .collect().map(_.getLong(0)).toSeq
-    val cells = VersionedTable.readWhereIn(spark, cellsRoot(root), "cell",
-      probed, version = Some(pin))
+    val cells = VersionedTable.scan(spark, cellsRoot(root), Some(pin))
+      .filter(col("cell").isin(probed: _*))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("id"))

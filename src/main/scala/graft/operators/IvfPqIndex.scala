@@ -33,7 +33,7 @@ import graft.sources.VersionedTable
   *  - `codes/` — VersionedTable of (id, cell, code array<int>),
   *    RANGE-CLUSTERED by cell with per-file [min, max] cell stats, so
   *    a probe opens only its cells' files via
-  *    [[VersionedTable.readWhereIn]] — the IVF-list seek realized as
+  *    a `cell IN (...)` [[VersionedTable.scan]] — the IVF-list seek realized as
   *    manifest pruning, over rows ~32× smaller than the vectors.
   *    Full-precision vectors stay in the CORPUS table; search re-reads
   *    only the shortlist rows for the exact rescore (equi-join by id),
@@ -178,9 +178,9 @@ object IvfPqIndex {
     val rows = codeRowsOf(corpus, centroids, book, idCol, vecCol)
       .repartitionByRange(files, col("cell"), col("id"))
     val v =
-      if (txn >= 0) VersionedTable.overwriteTxnWithStats(rows,
-        codesRoot(root), appId, txn, "cell")
-      else VersionedTable.overwriteWithStats(rows, codesRoot(root), "cell")
+      VersionedTable.overwrite(rows, codesRoot(root), VersionedTable.Write(
+        stats = Some(Seq("cell")),
+        txn = if (txn >= 0) Some(appId -> txn) else None))
     VersionedTable.countRows(codesRoot(root), Some(v))
       .foreach(writeBuildRows(root, _))
     v
@@ -230,10 +230,9 @@ object IvfPqIndex {
     val rows = codeRowsOf(batch, readCentroidsAt(root, pin),
       readCodebookAt(root, pin), idCol, vecCol)
       .repartitionByRange(math.max(numFiles, 1), col("cell"), col("id"))
-    if (txn >= 0)
-      VersionedTable.appendTxnWithStats(rows, codesRoot(root), appId,
-        txn, "cell")
-    else VersionedTable.appendWithStats(rows, codesRoot(root), "cell")
+    VersionedTable.append(rows, codesRoot(root), VersionedTable.Write(
+      stats = Some(Seq("cell")),
+      txn = if (txn >= 0) Some(appId -> txn) else None))
   }
 
   /** IVFADC search against the persisted index: each query probes its
@@ -272,8 +271,8 @@ object IvfPqIndex {
     // per-row cell equi-join then narrows to each query's own probes
     val probed = q.select(col("cell")).distinct()
       .collect().map(_.getLong(0)).toSeq
-    val codes = VersionedTable.readWhereIn(spark, codesRoot(root),
-      "cell", probed, version = Some(pin))
+    val codes = VersionedTable.scan(spark, codesRoot(root), Some(pin))
+      .filter(col("cell").isin(probed: _*))
     val wAdc = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
       .orderBy(col("__adc").desc, col("id"))

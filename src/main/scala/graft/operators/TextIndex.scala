@@ -19,7 +19,7 @@ import graft.sources.VersionedTable
   *    postings + doc lengths — O(batch), the daily-ingest door;
   *  - `searchBm25` reads ONLY the query terms' postings: the postings
   *    table carries a per-file BLOOM FILTER on `term`
-  *    ([[VersionedTable.appendWithBloomIndex]]), so the term probe
+  *    (`VersionedTable.Write.bloom`), so the term probe
   *    opens ~(files containing the term + fpp·total) files, never the
   *    corpus — the Lucene/Elasticsearch role on lake storage.
   *
@@ -147,29 +147,28 @@ object TextIndex {
   /** Land `df` on `tableRoot` as the next COMMITTED state on top of
     * `recordedV` — content-deterministically: the staged version is
     * exactly readVersion(recordedV) + the batch
-    * ([[VersionedTable.appendOnto]]), never "latest + the batch". A
+    * (`VersionedTable.Write.onto`), never "latest + the batch". A
     * plain append would build on whatever is latest AT COMMIT TIME, so
     * a concurrent appender's table version landing between this
     * writer's pointer read and its append would be silently absorbed
     * into the staged version; if this writer then won the pointer CAS,
     * the published n_docs/sum_dl would exclude that batch and the
     * loser's retry would re-append it — duplicated postings and
-    * permanently double-counted BM25 stats. With appendOnto, concurrent
+    * permanently double-counted BM25 stats. Built onto the base, concurrent
     * versions (and orphans from crashed maintenance ops) stay invisible
     * above the base — no O(|table|) restore rewrite either. Returns the
     * new version to record. */
   private def appendCommitted(df: DataFrame, tableRoot: String,
                               recordedV: Long,
-                              bloomCol: Option[String]): Long =
-    (bloomCol, recordedV < 0) match {
-      case (Some(c), true)  => // fresh (orphans discarded)
-        VersionedTable.overwriteWithBloomIndex(df, tableRoot, c)
-      case (None, true)     => VersionedTable.overwrite(df, tableRoot)
-      case (Some(c), false) =>
-        VersionedTable.appendOntoWithBloomIndex(df, tableRoot, recordedV, c)
-      case (None, false)    =>
-        VersionedTable.appendOnto(df, tableRoot, recordedV)
-    }
+                              w: VersionedTable.Write): Long =
+    // a fresh table (orphans discarded) is overwritten
+    if (recordedV < 0) VersionedTable.overwrite(df, tableRoot, w)
+    else VersionedTable.append(df, tableRoot, w.copy(onto = Some(recordedV)))
+
+  /** How the term-bloomed tables (postings, positions) are written:
+    * row/byte counts and the `term` bloom, no column stats. */
+  private val termBloom = VersionedTable.Write(stats = Some(Seq.empty),
+    bloom = Some(VersionedTable.Write.Bloom("term")))
 
   /** Tokenize `docs` and commit them as the index's first batch.
     * `positional = true` additionally keeps POSITIONAL postings
@@ -197,7 +196,7 @@ object TextIndex {
     * only, never build).
     *
     * `txn` ≥ 0 stamps the batch id into the SAME atomic pointer move
-    * as the commit (the [[graft.sources.VersionedTable.appendTxn]]
+    * as the commit (the `VersionedTable.Write.txn`
     * protocol): a replayed `txn` ≤ [[committedTxn]] is a NO-OP, and
     * because serving reads AT the pointer, even a crash after the
     * table appends but before the pointer leaves the replayed batch's
@@ -254,12 +253,13 @@ object TextIndex {
       // localCheckpoint: the batch postings feed three consumers
       // (postings append, doclen append, stats roll-up) — tokenize once
       val p = postingsOf(fanned, idCol, textCol).localCheckpoint(true)
-      val pV = appendCommitted(p, postingsRoot(root), pV0, Some("term"))
+      val pV = appendCommitted(p, postingsRoot(root), pV0, termBloom)
       // doclen derives from the CHECKPOINTED postings with one cheap
       // shuffle — staging materializes it; a second eager checkpoint
       // here bought nothing but an extra job per batch (guide §2.4)
       val dl = p.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-      val dV = appendCommitted(dl, doclenRoot(root), dV0, None)
+      val dV = appendCommitted(dl, doclenRoot(root), dV0,
+        VersionedTable.Write())
       // positional shape recorded in the pointer → maintain it here.
       // REBALANCE before staging: positionsOf is a pure projection
       // (no aggregation exchange like postingsOf), so the fanned
@@ -269,7 +269,7 @@ object TextIndex {
       val posV = posVersion(root) match {
         case Some(v0) => appendCommitted(
           graft.core.FanOut.rebalance(positionsOf(fanned, idCol, textCol)),
-          positionsRoot(root), v0, Some("term"))
+          positionsRoot(root), v0, termBloom)
         case None => PosAbsent
       }
       // one 1-row driver aggregate — the O(1) stats delta, computed
@@ -324,7 +324,7 @@ object TextIndex {
       val p = postings(spark, root)
         .repartitionByRange(targetFiles, col("term"), col("doc_id"))
         .sortWithinPartitions(col("term"), col("doc_id"))
-      val pV = VersionedTable.overwriteWithBloomIndex(p, postingsRoot(root), "term")
+      val pV = VersionedTable.overwrite(p, postingsRoot(root), termBloom)
       // positional postings recluster by term too (same fragmentation
       // story: appends interleave each batch's vocabulary)
       val posV = posVersion(root) match {
@@ -333,7 +333,7 @@ object TextIndex {
             .repartitionByRange(targetFiles, col("term"), col("doc_id"),
               col("pos"))
             .sortWithinPartitions(col("term"), col("doc_id"), col("pos"))
-          VersionedTable.overwriteWithBloomIndex(pos, positionsRoot(root), "term")
+          VersionedTable.overwrite(pos, positionsRoot(root), termBloom)
         case Some(v0) => v0
         case None => PosAbsent
       }
@@ -398,8 +398,8 @@ object TextIndex {
     val (nDocs, sumDl, pV, dV) = commitState(root)
     require(nDocs > 0, s"empty index at $root")
     val avgdl = sumDl.toDouble / nDocs
-    val tf = VersionedTable.readWhereEq(spark, postingsRoot(root), "term",
-      terms, atVersion = Some(pV))
+    val tf = VersionedTable.scan(spark, postingsRoot(root), Some(pV))
+      .filter(col("term").isin(terms: _*))
     // document frequency per query term — exact, from the term's own
     // postings (the pruned read returns ALL rows of each probed term)
     val dft = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
@@ -436,8 +436,8 @@ object TextIndex {
       sys.error(s"index at $root keeps no positional postings " +
         "(build with positional = true)"))
     require(posV >= 0, s"empty positional index at $root")
-    val pos = VersionedTable.readWhereEq(spark, positionsRoot(root), "term",
-      words.distinct, atVersion = Some(posV))
+    val pos = VersionedTable.scan(spark, positionsRoot(root), Some(posV))
+      .filter(col("term").isin(words.distinct: _*))
     var cur = pos.filter(col("term") === words.head)
       .select(col("doc_id"), col("pos").as("p0"))
     for (i <- 1 until words.length)

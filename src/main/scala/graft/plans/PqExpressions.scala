@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * costs `m` table lookups + adds instead of `d` multiplies.
   *
   * The codebook rides inside the expressions as a plan-time constant
-  * (the ZOrder64 bounds pattern) — map-local, nothing joins or shuffles
+  * (the ZOrderK bounds pattern) — map-local, nothing joins or shuffles
   * to use it.
   */
 private[graft] object Pq {

@@ -2,81 +2,23 @@ package graft.plans
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{DataType, LongType}
 
-/** Z-order (Morton) key for two long columns — the multi-dimensional
-  * clustering primitive (Delta `OPTIMIZE ZORDER BY` role): each value is
-  * first mapped to its quantile bucket via binary search over
-  * PRE-COMPUTED boundaries (so arbitrary skewed domains interleave
-  * uniformly), then the two ≤32-bit bucket ids are bit-interleaved.
-  * Range-partitioning on the result gives files whose min/max are tight
-  * in BOTH dimensions, so manifest/footer stats prune selective
-  * predicates on either column.
-  *
-  * Write-path only (clustering a layout), so CodegenFallback is fine —
-  * the surrounding projection still codegens.
-  */
-case class ZOrder64(left: Expression, right: Expression,
-                    boundsA: Seq[Long], boundsB: Seq[Long])
-    extends BinaryExpression with CodegenFallback {
-
-  require(boundsA.length < (1 << 16) && boundsB.length < (1 << 16),
-    "at most 2^16-1 z-order bucket boundaries per dimension")
-
-  private val bA = boundsA.toArray
-  private val bB = boundsB.toArray
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "zorder64"
-
-  /** Index of the first boundary > v (= bucket id in 0..bounds.length). */
-  private def bucket(v: Long, bounds: Array[Long]): Long = {
-    var lo = 0; var hi = bounds.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (bounds(mid) <= v) lo = mid + 1 else hi = mid
-    }
-    lo.toLong
-  }
-
-  private def interleave(a: Long, b: Long): Long = {
-    var z = 0L; var i = 0
-    while (i < 32) {
-      z |= ((a >> i) & 1L) << (2 * i)
-      z |= ((b >> i) & 1L) << (2 * i + 1)
-      i += 1
-    }
-    z
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    interleave(bucket(a.asInstanceOf[Long], bA),
-      bucket(b.asInstanceOf[Long], bB))
-
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): ZOrder64 = copy(left = l, right = r)
-}
-
-object ZOrder64 {
-  def apply(a: Column, b: Column, boundsA: Seq[Long],
-            boundsB: Seq[Long]): Column =
-    ColumnBridge.column(ZOrder64(
-      ColumnBridge.expression(a), ColumnBridge.expression(b),
-      boundsA, boundsB))
-}
-
-/** k-ary Z-order (Morton) key — [[ZOrder64]] generalized past two
-  * dimensions for the real 100 TB pruning keys (date × tenant × key is
-  * three columns, not two). Each of the k long columns is
-  * quantile-bucketed via binary search over pre-computed boundaries,
+/** k-ary Z-order (Morton) key — the multi-dimensional clustering
+  * primitive (Delta `OPTIMIZE ZORDER BY` role) for 2..6 columns (the
+  * real 100 TB pruning keys are date × tenant × key). Each of the k
+  * long columns is quantile-bucketed via binary search over
+  * pre-computed boundaries (so skewed domains interleave uniformly),
   * then the k bucket ids are bit-interleaved round-robin into one
   * 63-bit key: `floor(63/k)` bits per dimension (21 × 3, 15 × 4), so
   * up to `2^(63/k)` buckets per column. Range-partitioning on the
-  * result yields files tight in ALL k dimensions — a k-bound
-  * `readWhereBox` then prunes multiplicatively from the manifest
-  * alone. Write-path only, so CodegenFallback is fine. */
+  * result yields files tight in ALL k dimensions — a k-bound range
+  * filter on [[graft.sources.VersionedTable.scan]] then prunes
+  * multiplicatively from the manifest alone. Write-path only, so
+  * CodegenFallback is fine (the surrounding projection still
+  * codegens). */
 case class ZOrderK(children: Seq[Expression], bounds: Seq[Seq[Long]])
     extends Expression with CodegenFallback {
 

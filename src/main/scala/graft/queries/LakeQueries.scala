@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 
 import graft.core.Tables
 import graft.sources.Lake
+import graft.sources.VersionedTable.Write
 
 /** Source/sink round-trips (SURVEY.md §2.1 S1-S3 through the Lake
   * layer) plus beyond-reference relational surface: ROLLUP grouping
@@ -264,9 +265,10 @@ object LakeQueries extends QueryModule {
         val li = Tables(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
           .repartitionByRange(8, col("l_orderkey"))
-        graft.sources.VersionedTable.overwriteWithStats(li, root, "l_orderkey")
-        graft.sources.VersionedTable
-          .readWhere(s, root, "l_orderkey", 1000, 3000)
+        graft.sources.VersionedTable.overwrite(li, root,
+          Write.stats("l_orderkey"))
+        graft.sources.VersionedTable.scan(s, root)
+          .filter(col("l_orderkey").between(1000, 3000))
           .groupBy(col("l_returnflag"))
           .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("qty"))
           .orderBy("l_returnflag")
@@ -287,10 +289,10 @@ object LakeQueries extends QueryModule {
         val root = tempRoot("graft_vt_z").resolve("t").toString
         val li = Tables(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
-        graft.sources.VersionedTable.overwriteZOrdered(
-          li, root, "l_orderkey", "l_partkey", numFiles = 8)
-        graft.sources.VersionedTable
-          .readWhere(s, root, "l_partkey", 100, 300)
+        graft.sources.VersionedTable.overwrite(li, root,
+          Write(zorder = Some(Write.ZOrder(Seq("l_orderkey", "l_partkey"), 8))))
+        graft.sources.VersionedTable.scan(s, root)
+          .filter(col("l_partkey").between(100, 300))
           .groupBy((col("l_partkey") % 10).as("pk_mod"))
           .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("qty"))
           .orderBy("pk_mod")
@@ -301,7 +303,7 @@ object LakeQueries extends QueryModule {
         FROM lineitem WHERE l_partkey BETWEEN 100 AND 300
         GROUP BY 1 ORDER BY pk_mod""")),
 
-    // Incremental Z-ordered ingestion (appendZOrdered): two md5-bucketed
+    // Incremental Z-ordered ingestion (z-ordered appends): two md5-bucketed
     // lineitem batches appended as separately-clustered commits, each
     // carrying its own per-file stats; the range read hits the SECOND
     // dimension and must prune across BOTH batches from the manifest
@@ -314,14 +316,12 @@ object LakeQueries extends QueryModule {
         val li = Tables(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
         val b = substring(md5(col("l_orderkey").cast(StringType)), 1, 1)
-        graft.sources.VersionedTable.appendZOrdered(
-          li.filter(b.between("0", "7")), root, "l_orderkey", "l_partkey",
-          numFiles = 6)
-        graft.sources.VersionedTable.appendZOrdered(
-          li.filter(!b.between("0", "7")), root, "l_orderkey", "l_partkey",
-          numFiles = 6)
-        graft.sources.VersionedTable
-          .readWhere(s, root, "l_partkey", 100, 300)
+        graft.sources.VersionedTable.append(li.filter(b.between("0", "7")), root,
+          Write(zorder = Some(Write.ZOrder(Seq("l_orderkey", "l_partkey"), 6))))
+        graft.sources.VersionedTable.append(li.filter(!b.between("0", "7")), root,
+          Write(zorder = Some(Write.ZOrder(Seq("l_orderkey", "l_partkey"), 6))))
+        graft.sources.VersionedTable.scan(s, root)
+          .filter(col("l_partkey").between(100, 300))
           .groupBy((col("l_partkey") % 10).as("pk_mod"))
           .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("qty"))
           .orderBy("pk_mod")
@@ -332,7 +332,7 @@ object LakeQueries extends QueryModule {
         FROM lineitem WHERE l_partkey BETWEEN 100 AND 300
         GROUP BY 1 ORDER BY pk_mod""")),
 
-    // 2-D box read over the z-ordered layout (readWhereBox): the
+    // 2-D box read over the z-ordered layout (a two-range scan): the
     // conjunctive range on BOTH clustered columns — the query shape
     // Morton clustering exists for, pruning multiplicatively on the
     // two dimensions from the manifest alone (VersionedTableSpec pins
@@ -344,11 +344,11 @@ object LakeQueries extends QueryModule {
         val root = tempRoot("graft_vt_box").resolve("t").toString
         val li = Tables(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
-        graft.sources.VersionedTable.overwriteZOrdered(
-          li, root, "l_orderkey", "l_partkey", numFiles = 12)
-        graft.sources.VersionedTable
-          .readWhereBox(s, root,
-            Seq(("l_orderkey", 1000L, 3000L), ("l_partkey", 100L, 400L)))
+        graft.sources.VersionedTable.overwrite(li, root,
+          Write(zorder = Some(Write.ZOrder(Seq("l_orderkey", "l_partkey"), 12))))
+        graft.sources.VersionedTable.scan(s, root)
+          .filter(col("l_orderkey").between(1000L, 3000L) &&
+            col("l_partkey").between(100L, 400L))
           .groupBy((col("l_orderkey") % 7).as("ok_mod"))
           .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("qty"))
           .orderBy("ok_mod")
@@ -361,7 +361,7 @@ object LakeQueries extends QueryModule {
           AND l_partkey BETWEEN 100 AND 400
         GROUP BY 1 ORDER BY ok_mod""")),
 
-    // 3-D Z-order box read (overwriteZOrderedK + readWhereBox — the
+    // 3-D Z-order box read (a 3-column z-order write + a box scan — the
     // k-dim Morton generalization, plans.ZOrderK): lineitem clustered
     // on (orderkey, partkey, suppkey) with 21 bits per dimension, then
     // a conjunctive 3-range read that prunes on ALL THREE columns from
@@ -375,13 +375,13 @@ object LakeQueries extends QueryModule {
         val li = Tables(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
             col("l_quantity"))
-        graft.sources.VersionedTable.overwriteZOrderedK(
-          li, root, Seq("l_orderkey", "l_partkey", "l_suppkey"),
-          numFiles = 16)
-        graft.sources.VersionedTable
-          .readWhereBox(s, root,
-            Seq(("l_orderkey", 1000L, 30000L), ("l_partkey", 100L, 1200L),
-              ("l_suppkey", 1L, 60L)))
+        graft.sources.VersionedTable.overwrite(li, root,
+          Write(zorder = Some(Write.ZOrder(
+            Seq("l_orderkey", "l_partkey", "l_suppkey"), 16))))
+        graft.sources.VersionedTable.scan(s, root)
+          .filter(col("l_orderkey").between(1000L, 30000L) &&
+            col("l_partkey").between(100L, 1200L) &&
+            col("l_suppkey").between(1L, 60L))
           .groupBy((col("l_suppkey") % 5).as("sk_mod"))
           .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("qty"))
           .orderBy("sk_mod")
@@ -423,10 +423,10 @@ object LakeQueries extends QueryModule {
           s, in, root, cols3, li.schema, numFiles = 4,
           autoCompactFiles = 9, compactTargetFiles = 6)
         val replayOk = graft.sources.VersionedTable.versions(root) == vs
-        graft.sources.VersionedTable
-          .readWhereBox(s, root,
-            Seq(("l_orderkey", 1000L, 30000L), ("l_partkey", 100L, 1200L),
-              ("l_suppkey", 1L, 60L)))
+        graft.sources.VersionedTable.scan(s, root)
+          .filter(col("l_orderkey").between(1000L, 30000L) &&
+            col("l_partkey").between(100L, 1200L) &&
+            col("l_suppkey").between(1L, 60L))
           .groupBy((col("l_suppkey") % 5).as("sk_mod"))
           .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("qty"))
           .withColumn("compact_ok", lit(if (compactOk) 1L else 0L))
@@ -448,7 +448,7 @@ object LakeQueries extends QueryModule {
     // for every column — ISO dates, tenants, priorities are the keys
     // a 100 TB lake actually slices on, and a long-cast records
     // nothing for them): orders range-clustered on o_orderpriority,
-    // the same overwriteWithStats call records base64-framed string
+    // the same stats-recording overwrite records base64-framed string
     // [min, max] per file, and a BETWEEN slice on the string key opens
     // only intersecting files (prune_ok counts the opened files;
     // VersionedTableSpec pins the conservative no-stat/oversized
@@ -461,13 +461,13 @@ object LakeQueries extends QueryModule {
           .select(col("o_orderpriority"), col("o_orderstatus"),
             col("o_totalprice"))
           .repartitionByRange(8, col("o_orderpriority"))
-        graft.sources.VersionedTable.overwriteWithStats(
-          od, root, "o_orderpriority")
-        val total = graft.sources.VersionedTable.read(s, root)
-          .inputFiles.length
-        val sliced = graft.sources.VersionedTable.readWhereString(
-          s, root, "o_orderpriority", "2-HIGH", "4-NOT SPECIFIED")
-        val pruneOk = sliced.inputFiles.length < total
+        graft.sources.VersionedTable.overwrite(od, root,
+          Write.stats("o_orderpriority"))
+        val total = graft.sources.VersionedTable.fileCount(root)
+        val sliced = graft.sources.VersionedTable.scan(s, root)
+          .filter(col("o_orderpriority").between("2-HIGH", "4-NOT SPECIFIED"))
+        val pruneOk =
+          org.apache.spark.sql.graft.GraftScan.filesRead(sliced) < total
         sliced
           .groupBy(col("o_orderpriority"))
           .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
@@ -487,7 +487,7 @@ object LakeQueries extends QueryModule {
     // q105 slice written as an ORDINARY DataFrame filter over
     // VersionedTable.scan — Catalyst hands the predicate to the
     // manifest-backed FileIndex at plan time, so files prune with no
-    // readWhere call (prune_ok counts opened files via
+    // special read call (prune_ok counts opened files via
     // input_file_name; GraftScanSpec pins SQL-text pruning, version
     // pinning, IN/flipped shapes, and the manifest-fed auto-broadcast
     // decision). The oracle pins that plan-time skipping never
@@ -498,7 +498,8 @@ object LakeQueries extends QueryModule {
         val li = Tables(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
           .repartitionByRange(8, col("l_orderkey"))
-        graft.sources.VersionedTable.overwriteWithStats(li, root, "l_orderkey")
+        graft.sources.VersionedTable.overwrite(li, root,
+          Write.stats("l_orderkey"))
         val sliced = graft.sources.VersionedTable.scan(s, root)
           .filter(col("l_orderkey") >= 1000L && col("l_orderkey") <= 3000L)
         val pruneOk =
@@ -529,8 +530,8 @@ object LakeQueries extends QueryModule {
         val li = Tables(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
           .repartitionByRange(8, col("l_orderkey"))
-        graft.sources.VersionedTable.overwriteWithStats(
-          li, root, "l_orderkey", "l_returnflag")
+        graft.sources.VersionedTable.overwrite(li, root,
+          Write.stats("l_orderkey", "l_returnflag"))
         val profile = graft.sources.VersionedTable.scan(s, root)
           .agg(min(col("l_orderkey")).as("k_lo"),
             max(col("l_orderkey")).as("k_hi"),
@@ -565,8 +566,8 @@ object LakeQueries extends QueryModule {
           .select(col("o_orderkey"), col("o_orderstatus"),
             col("o_orderpriority"), col("o_totalprice"))
           .repartitionByRange(8, col("o_orderkey"))
-        graft.sources.VersionedTable.overwriteWithStats(
-          orders, root, "o_orderkey")
+        graft.sources.VersionedTable.overwrite(orders, root,
+          Write.stats("o_orderkey"))
         graft.sources.Tombstones.updateMor(s, root, Seq("o_orderkey"),
           col("o_orderstatus") === "F" && col("o_totalprice") < 50000,
           Map("o_orderpriority" -> lit("PATCHED")))
@@ -625,8 +626,9 @@ object LakeQueries extends QueryModule {
           .select(col("o_orderkey"), col("o_orderstatus"),
             col("o_orderpriority"), col("o_totalprice"))
           .repartitionByRange(6, col("o_orderkey"))
-        graft.sources.VersionedTable.overwritePartitionedWithStats(
-          orders, root, Seq("o_orderstatus"), "o_orderkey")
+        graft.sources.VersionedTable.overwrite(orders, root,
+          Write(stats = Some(Seq("o_orderkey")),
+                partitionBy = Seq("o_orderstatus")))
         val sliced = graft.sources.VersionedTable.scan(s, root)
           .filter(col("o_orderstatus") === "F" &&
             col("o_orderkey") >= 1000L && col("o_orderkey") <= 4000L)
@@ -673,13 +675,14 @@ object LakeQueries extends QueryModule {
           .select(col("o_orderkey"), col("o_orderstatus"),
             col("o_totalprice"))
           .repartitionByRange(8, col("o_orderkey"))
-        graft.sources.VersionedTable.overwriteWithStats(
-          orders, root, "o_orderkey")
+        graft.sources.VersionedTable.overwrite(orders, root,
+          Write.stats("o_orderkey"))
         // NON-unique base on purpose: every 11th order appended AGAIN —
         // a tombstoned key must subtract every row that carries it,
         // never one per distinct key
-        graft.sources.VersionedTable.appendWithStats(
-          orders.filter(col("o_orderkey") % 11 === 0), root, "o_orderkey")
+        graft.sources.VersionedTable.append(
+          orders.filter(col("o_orderkey") % 11 === 0),
+          root, Write.stats("o_orderkey"))
         // takedown keys: every 97th order, plus keys the table never
         // held (absent keys must not subtract from the count)
         val keys = orders.filter(col("o_orderkey") % 97 === 0)
@@ -719,14 +722,14 @@ object LakeQueries extends QueryModule {
         val orders = Tables(s, dir, "orders")
           .select(col("o_orderkey"), col("o_orderstatus"),
             col("o_totalprice"))
-        graft.sources.VersionedTable.overwriteWithStats(
+        graft.sources.VersionedTable.overwrite(
           orders.filter(col("o_orderkey") % 2 === 0)
             .repartitionByRange(4, col("o_orderkey")),
-          root, "o_orderkey")
-        graft.sources.VersionedTable.appendWithStats(
+          root, Write.stats("o_orderkey"))
+        graft.sources.VersionedTable.append(
           orders.filter(col("o_orderkey") % 2 === 1)
             .repartitionByRange(4, col("o_orderkey")),
-          root, "o_orderkey")
+          root, Write.stats("o_orderkey"))
         org.apache.spark.sql.graft.GraftCatalog.register(
           s, "gate", "orders_tt", root)
         s.sql("""
@@ -822,8 +825,8 @@ object LakeQueries extends QueryModule {
             col("o_orderdate").cast("timestamp").as("o_orderdate"),
             col("o_orderstatus"), col("o_totalprice"))
           .repartitionByRange(8, col("o_orderdate"))
-        graft.sources.VersionedTable.overwriteWithStats(
-          orders, root, "o_orderdate", "o_totalprice")
+        graft.sources.VersionedTable.overwrite(orders, root,
+          Write.stats("o_orderdate", "o_totalprice"))
         val sliced = graft.sources.VersionedTable.scan(s, root)
           .filter(col("o_orderdate") >=
             to_timestamp(lit("1999-01-01 00:00:00")) &&
@@ -869,8 +872,8 @@ object LakeQueries extends QueryModule {
               .as("o_orderdate"),
             col("o_orderstatus"), col("o_totalprice"))
           .repartitionByRange(8, col("o_orderdate"))
-        graft.sources.VersionedTable.overwriteWithStats(
-          orders, root, "o_orderdate")
+        graft.sources.VersionedTable.overwrite(orders, root,
+          Write.stats("o_orderdate"))
         val sliced = graft.sources.VersionedTable.scan(s, root)
           .filter(col("o_orderdate") >=
             expr("to_timestamp_ntz('1999-01-01 00:00:00')"))
@@ -1042,12 +1045,12 @@ object LakeQueries extends QueryModule {
     "q311_catalog_delete" -> Q(
       run = (s, dir) => {
         val root = tempRoot("graft_vt_cdel").resolve("t").toString
-        graft.sources.VersionedTable.overwriteWithStats(
+        graft.sources.VersionedTable.overwrite(
           Tables(s, dir, "orders")
             .select(col("o_orderkey"), col("o_orderstatus"),
               col("o_totalprice"))
             .repartitionByRange(6, col("o_orderkey")),
-          root, "o_orderkey")
+          root, Write.stats("o_orderkey"))
         org.apache.spark.sql.graft.GraftCatalog.register(
           s, "gate", "cdel", root)
         s.sql("""DELETE FROM graft.gate.cdel
@@ -1223,10 +1226,10 @@ object LakeQueries extends QueryModule {
         (0 to 3).foreach { i =>
           val batch = li.filter(b === i)
             .repartitionByRange(4, col("l_orderkey"))
-          if (i == 0) graft.sources.VersionedTable
-            .overwriteWithStats(batch, root, "l_orderkey")
-          else graft.sources.VersionedTable
-            .appendWithStats(batch, root, "l_orderkey")
+          if (i == 0) graft.sources.VersionedTable.overwrite(batch, root,
+            Write.stats("l_orderkey"))
+          else graft.sources.VersionedTable.append(batch, root,
+            Write.stats("l_orderkey"))
         }
         graft.sources.GraftSql.register(s, name, root)
         graft.sources.GraftSql.execute(s, s"OPTIMIZE $name")
@@ -1445,12 +1448,12 @@ object LakeQueries extends QueryModule {
       run = (s, dir) => {
         val root = tempRoot("graft_vt_meta").resolve("t").toString
         val name = "gsql_meta"
-        graft.sources.VersionedTable.overwritePartitionedWithStats(
+        graft.sources.VersionedTable.overwrite(
           Tables(s, dir, "orders")
             .select(col("o_orderkey"), col("o_totalprice"),
               col("o_orderstatus"))
             .repartitionByRange(4, col("o_orderkey")),
-          root, Seq("o_orderstatus"))
+          root, Write(stats = Some(Seq.empty), partitionBy = Seq("o_orderstatus")))
         graft.sources.GraftSql.register(s, name, root)
         val tablesOk = graft.sources.GraftSql.execute(s, "SHOW TABLES")
           .collect().exists(r => r.getString(0) == name &&
@@ -1609,12 +1612,12 @@ object LakeQueries extends QueryModule {
         import org.apache.spark.sql.types.{FloatType, IntegerType}
         val root = tempRoot("graft_vt_widen").resolve("t").toString
         val name = "gsql_widen"
-        graft.sources.VersionedTable.overwriteWithStats(
+        graft.sources.VersionedTable.overwrite(
           Tables(s, dir, "lineitem")
             .select(col("l_orderkey"), col("l_linenumber"),
               col("l_quantity").cast("float").as("qty_f"))
             .repartitionByRange(6, col("l_orderkey")),
-          root, "l_orderkey")
+          root, Write.stats("l_orderkey"))
         graft.sources.GraftSql.register(s, name, root)
         graft.sources.GraftSql.execute(s,
           s"ALTER TABLE $name ALTER COLUMN l_linenumber TYPE BIGINT")
@@ -1625,10 +1628,10 @@ object LakeQueries extends QueryModule {
             graft.sources.VersionedTable.listingPaths(root, 2L)
         // a row beyond Int range in BOTH widened columns
         import s.implicits._
-        graft.sources.VersionedTable.appendWithStats(
+        graft.sources.VersionedTable.append(
           Seq((9000000000L, 6000000000L, 2.5d))
             .toDF("l_orderkey", "l_linenumber", "qty_f"),
-          root, "l_orderkey")
+          root, Write.stats("l_orderkey"))
         val sc0 = graft.sources.VersionedTable
           .readVersion(s, root, 0L).schema
         val oldTypesOk = sc0("l_linenumber").dataType == IntegerType &&
@@ -1920,7 +1923,7 @@ object LakeQueries extends QueryModule {
     // OPTIMIZE compaction: four stats-carrying appends degenerate the
     // table into small files; compact() bin-packs them (range-clustered
     // on l_orderkey, stats recomputed), and the post-compaction
-    // readWhere must prune from the NEW manifest and answer exactly as
+    // the scan must prune from the NEW manifest and answer exactly as
     // a plain WHERE over the raw table (VersionedTableSpec pins the
     // file-count drop and pruning; the oracle pins the answers).
     // bench=false: the timed region would be five table writes, not a
@@ -1935,16 +1938,16 @@ object LakeQueries extends QueryModule {
           val batch = li.filter(b === i)
             .repartitionByRange(4, col("l_orderkey"))
           if (i == 0)
-            graft.sources.VersionedTable
-              .overwriteWithStats(batch, root, "l_orderkey")
+            graft.sources.VersionedTable.overwrite(batch, root,
+              Write.stats("l_orderkey"))
           else
-            graft.sources.VersionedTable
-              .appendWithStats(batch, root, "l_orderkey")
+            graft.sources.VersionedTable.append(batch, root,
+              Write.stats("l_orderkey"))
         }
         graft.sources.VersionedTable.compact(s, root,
           targetBytes = 256L << 10, statsCols = Seq("l_orderkey"))
-        graft.sources.VersionedTable
-          .readWhere(s, root, "l_orderkey", 2000, 5000)
+        graft.sources.VersionedTable.scan(s, root)
+          .filter(col("l_orderkey").between(2000, 5000))
           .groupBy(col("l_returnflag"))
           .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("qty"))
           .orderBy("l_returnflag")
@@ -2510,12 +2513,12 @@ object LakeQueries extends QueryModule {
         val orders = Tables(s, dir, "orders")
           .select(col("o_orderkey"), col("o_custkey"))
         val m = col("o_orderkey") % 3
-        graft.sources.VersionedTable.overwriteWithStats(
-          orders.filter(m === 0), root, "o_custkey")
-        graft.sources.VersionedTable.appendWithStats(
-          orders.filter(m === 1), root, "o_custkey")
-        graft.sources.VersionedTable.appendWithStats(
-          orders.filter(m === 2), root, "o_custkey")
+        graft.sources.VersionedTable.overwrite(orders.filter(m === 0), root,
+          Write.stats("o_custkey"))
+        graft.sources.VersionedTable.append(orders.filter(m === 1), root,
+          Write.stats("o_custkey"))
+        graft.sources.VersionedTable.append(orders.filter(m === 2), root,
+          Write.stats("o_custkey"))
         val metaN = graft.sources.VersionedTable.countRows(root).get
         val (metaLo, metaHi) =
           graft.sources.VersionedTable.statsRange(root, "o_custkey").get
@@ -2553,12 +2556,12 @@ object LakeQueries extends QueryModule {
             (col("o_totalprice").cast(dec) * 100).cast(LongType)
               .as("price_cents"))
         val m = col("o_orderkey") % 3
-        graft.sources.VersionedTable.overwriteWithSums(
-          orders.filter(m === 0), root, Seq("price_cents"))
-        graft.sources.VersionedTable.appendWithSums(
-          orders.filter(m === 1), root, Seq("price_cents"))
-        graft.sources.VersionedTable.appendWithSums(
-          orders.filter(m === 2), root, Seq("price_cents"))
+        graft.sources.VersionedTable.overwrite(orders.filter(m === 0), root,
+          Write(stats = Some(Seq.empty), sums = Seq("price_cents")))
+        graft.sources.VersionedTable.append(orders.filter(m === 1), root,
+          Write(stats = Some(Seq.empty), sums = Seq("price_cents")))
+        graft.sources.VersionedTable.append(orders.filter(m === 2), root,
+          Write(stats = Some(Seq.empty), sums = Seq("price_cents")))
         val metaSum = graft.sources.VersionedTable
           .sumTotal(root, "price_cents").get
         val metaN = graft.sources.VersionedTable.countRows(root).get
@@ -2626,7 +2629,7 @@ object LakeQueries extends QueryModule {
                CAST(10 * COUNT(*) FILTER (o_orderkey % 7 = 0) AS BIGINT) AS len_bad
         FROM orders""")),
 
-    // PRIMARY-KEY APPEND ENFORCEMENT (VersionedTable.appendUnique):
+    // PRIMARY-KEY APPEND ENFORCEMENT (VersionedTable.Write.unique):
     // a disjoint batch lands; a batch colliding with the snapshot and
     // a batch duplicating itself are both REJECTED whole (nothing
     // staged, nothing committed — proven by the final table state
@@ -2640,17 +2643,15 @@ object LakeQueries extends QueryModule {
         val orders = Tables(s, dir, "orders")
           .select(col("o_orderkey"), col("o_totalprice"))
         val b = substring(md5(col("o_orderkey").cast(StringType)), 1, 1)
-        graft.sources.VersionedTable.appendUnique(
-          orders.filter(b < "8"), root, Seq("o_orderkey"))
-        val collides = scala.util.Try(graft.sources.VersionedTable
-          .appendUnique(orders.filter(b.between("7", "9")), root,
-            Seq("o_orderkey"))).isFailure
-        val selfDup = scala.util.Try(graft.sources.VersionedTable
-          .appendUnique(orders.filter(b === "9")
-            .unionByName(orders.filter(b === "9")), root,
-            Seq("o_orderkey"))).isFailure
-        graft.sources.VersionedTable.appendUnique(
-          orders.filter(b >= "8"), root, Seq("o_orderkey"))
+        def insertUnique(batch: org.apache.spark.sql.DataFrame): Long =
+          graft.sources.VersionedTable.append(batch, root,
+            Write(unique = Seq("o_orderkey")))
+        insertUnique(orders.filter(b < "8"))
+        val collides = scala.util.Try(
+          insertUnique(orders.filter(b.between("7", "9")))).isFailure
+        val selfDup = scala.util.Try(insertUnique(orders.filter(b === "9")
+          .unionByName(orders.filter(b === "9")))).isFailure
+        insertUnique(orders.filter(b >= "8"))
         val st = graft.sources.VersionedTable.read(s, root)
           .agg(count(lit(1)).as("n"), sum(col("o_orderkey")).as("ks")).head()
         Seq((st.getLong(0), st.getLong(1),
@@ -2682,15 +2683,13 @@ object LakeQueries extends QueryModule {
             (col("o_totalprice").cast(dec) * 100).cast(LongType)
               .as("price_cents"))
         val b = substring(md5(col("o_orderkey").cast(StringType)), 1, 1)
-        graft.sources.VersionedTable.overwriteWithSums(
-          orders.filter(b < "6"), root,
-          Seq("price_cents"), Seq("o_orderkey"))
-        graft.sources.VersionedTable.appendWithSums(
-          orders.filter(b.between("6", "b")), root,
-          Seq("price_cents"), Seq("o_orderkey"))
-        graft.sources.VersionedTable.appendWithSums(
-          orders.filter(b > "b"), root,
-          Seq("price_cents"), Seq("o_orderkey"))
+        graft.sources.VersionedTable.overwrite(orders.filter(b < "6"), root,
+          Write(stats = Some(Seq("o_orderkey")), sums = Seq("price_cents")))
+        graft.sources.VersionedTable.append(
+          orders.filter(b.between("6", "b")),
+          root, Write(stats = Some(Seq("o_orderkey")), sums = Seq("price_cents")))
+        graft.sources.VersionedTable.append(orders.filter(b > "b"), root,
+          Write(stats = Some(Seq("o_orderkey")), sums = Seq("price_cents")))
         val vt = graft.sources.VersionedTable
         vt.history(root).map { case (v, files, rows) =>
           val (lo, hi) = vt.statsRange(root, "o_orderkey", Some(v)).get
@@ -2926,13 +2925,12 @@ object LakeQueries extends QueryModule {
           .select(concat(lit("doc://"), col("doc_id").cast(StringType))
             .as("url"), col("doc_id"), col("n_chars"))
           .repartition(8, col("doc_id"))
-        graft.sources.VersionedTable.appendWithBloomIndex(
-          docs, root, "url", expectedPerFile = 2000, fpp = 0.01)
-        val out = graft.sources.VersionedTable.readWhereEq(s, root, "url",
-          Seq("doc://7", "doc://123", "doc://400", "doc://no-such"))
-        val opened = out.inputFiles.length
-        val total = graft.sources.VersionedTable.read(s, root)
-          .inputFiles.length
+        graft.sources.VersionedTable.append(docs, root,
+          Write(stats = Some(Seq.empty), bloom = Some(Write.Bloom("url", 2000))))
+        val out = graft.sources.VersionedTable.scan(s, root).filter(
+          col("url").isin("doc://7", "doc://123", "doc://400", "doc://no-such"))
+        val opened = org.apache.spark.sql.graft.GraftScan.filesRead(out)
+        val total = graft.sources.VersionedTable.fileCount(root)
         out.select(col("url"), col("doc_id"), col("n_chars"))
           .withColumn("pruned_ok", lit(if (opened < total) 1L else 0L))
           .orderBy("doc_id")
@@ -2953,12 +2951,12 @@ object LakeQueries extends QueryModule {
         val root = tempRoot("graft_vt_hist").resolve("t").toString
         val orders = Tables(s, dir, "orders").select(col("o_orderkey"))
         val m = col("o_orderkey") % 3
-        graft.sources.VersionedTable.overwriteWithStats(
-          orders.filter(m === 0), root)
-        graft.sources.VersionedTable.appendWithStats(
-          orders.filter(m === 1), root)
-        graft.sources.VersionedTable.appendWithStats(
-          orders.filter(m === 2), root)
+        graft.sources.VersionedTable.overwrite(orders.filter(m === 0), root,
+          Write.stats())
+        graft.sources.VersionedTable.append(orders.filter(m === 1), root,
+          Write.stats())
+        graft.sources.VersionedTable.append(orders.filter(m === 2), root,
+          Write.stats())
         graft.sources.VersionedTable.history(root)
           .map { case (v, files, rows) =>
             (v, if (files > 0) 1L else 0L, rows.getOrElse(-1L))
@@ -2983,10 +2981,14 @@ object LakeQueries extends QueryModule {
         val li = Tables(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag"))
         val c = col("l_quantity") > 0 && col("l_returnflag").isNotNull
-        graft.sources.VersionedTable.overwriteWithStats(
-          li.filter(col("l_orderkey") % 2 === 0), root)
-        graft.sources.VersionedTable.appendChecked(
-          li.filter(col("l_orderkey") % 2 === 1), root, c)
+        graft.sources.VersionedTable.overwrite(
+          li.filter(col("l_orderkey") % 2 === 0),
+          root, Write.stats())
+        graft.sources.VersionedTable.append(
+          li.filter(col("l_orderkey") % 2 === 1),
+          root,
+          Write(stats = Some(Seq.empty),
+                expect = Seq("CHECK constraint" -> Write.everyRow(c))))
         graft.sources.VersionedTable.read(s, root)
           .groupBy(col("l_returnflag"))
           .agg(count(lit(1)).as("n"),
@@ -3117,10 +3119,10 @@ object LakeQueries extends QueryModule {
     // the engine's own parts): stage a batch on a shallow-clone
     // BRANCH, audit it with a write-time CHECK, and only a batch that
     // passes ever reaches the main table via the branch fast-forward
-    // merge. The poisoned batch is rejected WHOLE (appendChecked
-    // aborts before any commit) and main provably never sees it — the
-    // `bad_rejected` / `main_isolated` flags fold that proof into the
-    // hash.
+    // merge. The poisoned batch is rejected WHOLE (the CHECK
+    // expectation aborts before any commit) and main provably never
+    // sees it — the `bad_rejected` / `main_isolated` flags fold that
+    // proof into the hash.
     "q241_wap_publish" -> Q(
       run = (s, dir) => {
         val main = tempRoot("graft_wap_main").resolve("t").toString
@@ -3130,16 +3132,18 @@ object LakeQueries extends QueryModule {
             col("value"))
         // stats-bearing overwrite → the isolation proof below stays
         // metadata-only (countRows folds the manifest, no scan)
-        graft.sources.VersionedTable.overwriteWithStats(
-          ev.filter(col("event_id") < 5000), main)
+        graft.sources.VersionedTable.overwrite(
+          ev.filter(col("event_id") < 5000),
+          main, Write.stats())
         graft.sources.VersionedTable.shallowClone(main, branch)
         val slice = ev.filter(col("event_id") >= 5000 && col("event_id") < 7500)
         val poisoned = slice.withColumn("value",
           when(col("event_id") === 6000, lit(null)).otherwise(col("value")))
+        val audit = Write(stats = Some(Seq.empty), expect = Seq(
+          "CHECK constraint" -> Write.everyRow(col("value").isNotNull)))
         val badRejected =
           try {
-            graft.sources.VersionedTable.appendChecked(
-              poisoned, branch, col("value").isNotNull)
+            graft.sources.VersionedTable.append(poisoned, branch, audit)
             0L
           } catch { case _: IllegalArgumentException => 1L }
         // audit proof: the branch (and a fortiori main) is still the
@@ -3147,8 +3151,7 @@ object LakeQueries extends QueryModule {
         val mainIsolated =
           if (graft.sources.VersionedTable.countRows(branch).contains(5000L)) 1L
           else 0L
-        graft.sources.VersionedTable.appendChecked(
-          slice, branch, col("value").isNotNull)
+        graft.sources.VersionedTable.append(slice, branch, audit)
         graft.sources.VersionedTable.mergeBranch(s, branch, main)
         graft.sources.VersionedTable.read(s, main)
           .groupBy(col("event_type"))
@@ -3250,7 +3253,7 @@ object LakeQueries extends QueryModule {
         val root = tempRoot("graft_vt_mor").resolve("t").toString
         val orders = Tables(s, dir, "orders")
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-        graft.sources.VersionedTable.overwriteWithStats(orders, root)
+        graft.sources.VersionedTable.overwrite(orders, root, Write.stats())
         val total = orders.count()
         graft.sources.Tombstones.deleteMor(s, root,
           orders.filter(col("o_orderkey") % 5 === 0).select(col("o_orderkey")))
@@ -3304,7 +3307,7 @@ object LakeQueries extends QueryModule {
         val orders = Tables(s, dir, "orders")
           .select(col("o_orderkey"), col("o_orderstatus"),
             col("o_orderpriority"), col("o_totalprice"))
-        graft.sources.VersionedTable.overwriteWithStats(orders, root)
+        graft.sources.VersionedTable.overwrite(orders, root, Write.stats())
         val total = orders.count()
         graft.sources.Tombstones.updateMor(s, root, Seq("o_orderkey"),
           col("o_orderstatus") === "O" && col("o_totalprice") < 100000,
@@ -3381,10 +3384,12 @@ object LakeQueries extends QueryModule {
             .otherwise(col("value")))
         val badRejected =
           try {
-            graft.sources.VersionedTable.appendExpecting(poisoned, root, gates)
+            graft.sources.VersionedTable.append(poisoned, root,
+              Write(stats = Some(Seq.empty), expect = gates))
             0L
           } catch { case _: IllegalArgumentException => 1L }
-        graft.sources.VersionedTable.appendExpecting(odds, root, gates)
+        graft.sources.VersionedTable.append(odds, root,
+          Write(stats = Some(Seq.empty), expect = gates))
         graft.sources.VersionedTable.read(s, root)
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"), dsum(col("value")).as("val_sum"))
@@ -3511,7 +3516,7 @@ object LakeQueries extends QueryModule {
 
     // PERSISTED table constraints (the Delta ADD CONSTRAINT role): the
     // rules are stored WITH the table, so every writer appending
-    // through appendConstrained enforces them — a poisoned batch is
+    // through append enforces them — a poisoned batch is
     // rejected whole naming the broken constraint, and a fresh
     // "writer" (re-reading the sidecar) sees the same contract.
     "q280_persistent_constraints" -> Q(
@@ -3530,7 +3535,7 @@ object LakeQueries extends QueryModule {
             .otherwise(col("o_orderstatus")))
         val badRejected =
           try {
-            graft.sources.VersionedTable.appendConstrained(poisoned, root)
+            graft.sources.VersionedTable.append(poisoned, root, Write.stats())
             0L
           } catch {
             case e: IllegalArgumentException
@@ -3540,7 +3545,7 @@ object LakeQueries extends QueryModule {
         val contractStored =
           if (graft.sources.VersionedTable.constraintsOf(root).size == 2) 1L
           else 0L
-        graft.sources.VersionedTable.appendConstrained(odds, root)
+        graft.sources.VersionedTable.append(odds, root, Write.stats())
         graft.sources.VersionedTable.read(s, root)
           .groupBy(col("o_orderstatus"))
           .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
@@ -3570,9 +3575,10 @@ object LakeQueries extends QueryModule {
     "q289_auto_broadcast" -> Q(
       run = (s, dir) => {
         val root = tempRoot("graft_vt_autobc").resolve("t").toString
-        graft.sources.VersionedTable.appendWithStats(
+        graft.sources.VersionedTable.append(
           Tables(s, dir, "nation")
-            .select(col("n_nationkey"), col("n_name")), root)
+            .select(col("n_nationkey"), col("n_name")),
+          root, Write.stats())
         val cust = Tables(s, dir, "customer")
           .select(col("c_custkey"), col("c_nationkey"), col("c_acctbal"))
         def joined(thr: Long) = cust.join(

@@ -768,7 +768,7 @@ object SimilarityQueries extends QueryModule {
     // vectors with per-file cell stats) — the vector member of the
     // persisted-index family (q125 PQ, q133 LSH, q139 spans). Queries
     // seek straight into their probe cells via manifest file-skipping
-    // (readWhereIn); search is bit-identical to in-memory ivfTopK on
+    // (a `cell IN (...)` scan); search is bit-identical to in-memory ivfTopK on
     // the same corpus/params (IvfIndexSpec pins equality, file
     // skipping, and stored-centroid appends). CERTIFIED vs the exact
     // twin — search ≡ ivfTopK on the same corpus/params (spec-pinned),
@@ -788,7 +788,7 @@ object SimilarityQueries extends QueryModule {
 
     // PERSISTED IVF+PQ composite index (IvfPqIndex) — the IVFADC form
     // a 100 TB corpus actually serves: cell-clustered code rows
-    // (manifest-pruned probes, readWhereIn) carrying PQ-compressed
+    // (manifest-pruned `cell IN (...)` probes) carrying PQ-compressed
     // RESIDUALS; queries open only their probed cells' files, score
     // by base + ADC, and exact-rescore the shortlist against the
     // full-precision corpus. Built on 3/4 of the corpus, the last

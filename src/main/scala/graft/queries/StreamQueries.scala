@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.{BinaryType, LongType, StringType}
 import graft.core.Tables
 import graft.operators.MultiModal
 import graft.streaming.{BatchSessionize, StreamingJobs}
+import graft.sources.VersionedTable.Write
 
 /** Streaming + semi-structured + multimodal inventory over `events` and
   * `documents`. */
@@ -989,12 +990,12 @@ object StreamQueries extends QueryModule {
         val li = Tables(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
         val half = col("l_orderkey") % 2
-        graft.sources.VersionedTable.overwriteWithStats(
+        graft.sources.VersionedTable.overwrite(
           li.filter(half === 0).repartitionByRange(4, col("l_orderkey")),
-          root, "l_orderkey")
-        graft.sources.VersionedTable.appendWithStats(
+          root, Write.stats("l_orderkey"))
+        graft.sources.VersionedTable.append(
           li.filter(half === 1).repartitionByRange(4, col("l_orderkey")),
-          root, "l_orderkey")
+          root, Write.stats("l_orderkey"))
         def runStream(): Unit = {
           val q = graft.sources.VersionedTable.scanStream(s, root)
             .filter(col("l_orderkey") >= 1000L &&
@@ -1004,8 +1005,8 @@ object StreamQueries extends QueryModule {
               (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
                id: Long) =>
                 if (!b.isEmpty)
-                  graft.sources.VersionedTable.appendTxn(b.toDF(), out,
-                    "scan_stream_gate", id)
+                  graft.sources.VersionedTable.append(b.toDF(), out,
+                    Write(txn = Some("scan_stream_gate" -> id)))
                 ()
             }
             .option("checkpointLocation", ckpt)
@@ -1062,12 +1063,13 @@ object StreamQueries extends QueryModule {
         val li = Tables(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
         val third = pmod(col("l_orderkey"), lit(3))
-        graft.sources.VersionedTable.overwriteWithStats(
+        graft.sources.VersionedTable.overwrite(
           li.filter(third === 0).repartitionByRange(2, col("l_orderkey")),
-          root, "l_orderkey") // v0 — NOT streamed (startingVersion = 0)
-        (1 to 2).foreach(i => graft.sources.VersionedTable.appendWithStats(
+          root,
+          Write.stats("l_orderkey")) // v0 — NOT streamed (startingVersion = 0)
+        (1 to 2).foreach(i => graft.sources.VersionedTable.append(
           li.filter(third === i).repartitionByRange(2, col("l_orderkey")),
-          root, "l_orderkey")) // v1, v2 — the streamed backlog
+          root, Write.stats("l_orderkey"))) // v1, v2 — the streamed backlog
         def runOnce(): Unit = {
           val q = graft.sources.VersionedTable.scanStream(s, root,
             startingVersion = Some(0L),
@@ -1077,8 +1079,8 @@ object StreamQueries extends QueryModule {
               (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
                id: Long) =>
                 if (!b.isEmpty)
-                  graft.sources.VersionedTable.appendTxn(b.toDF(), out,
-                    "rlim_gate", id)
+                  graft.sources.VersionedTable.append(b.toDF(), out,
+                    Write(txn = Some("rlim_gate" -> id)))
                 ()
             }
             .option("checkpointLocation", ckpt)
@@ -1134,9 +1136,9 @@ object StreamQueries extends QueryModule {
         // carve-out is only the anchorless initial snapshot load), so
         // the AvailableNow drain genuinely needs several restarts
         graft.sources.VersionedTable.overwrite(li.limit(0), root)
-        (0 to 2).foreach(i => graft.sources.VersionedTable.appendWithStats(
+        (0 to 2).foreach(i => graft.sources.VersionedTable.append(
           li.filter(third === i).repartitionByRange(2, col("l_orderkey")),
-          root, "l_orderkey"))
+          root, Write.stats("l_orderkey")))
         graft.sources.VersionedTable.overwrite(
           li.limit(0), out) // empty catalog table to stream into
         org.apache.spark.sql.graft.GraftCatalog.register(
@@ -1193,8 +1195,8 @@ object StreamQueries extends QueryModule {
               (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
                id: Long) =>
                 if (!b.isEmpty)
-                  graft.sources.VersionedTable.appendTxn(b.toDF(), out,
-                    "stream_compact_gate", id)
+                  graft.sources.VersionedTable.append(b.toDF(), out,
+                    Write(txn = Some("stream_compact_gate" -> id)))
                 ()
             }
             .option("checkpointLocation", ckpt)
@@ -1204,18 +1206,18 @@ object StreamQueries extends QueryModule {
             "scan stream did not drain within 180 s")
           ()
         }
-        graft.sources.VersionedTable.overwriteWithStats(
+        graft.sources.VersionedTable.overwrite(
           li.filter(third === 0).repartitionByRange(4, col("l_orderkey")),
-          root, "l_orderkey")
+          root, Write.stats("l_orderkey"))
         runStream()
-        graft.sources.VersionedTable.appendWithStats(
+        graft.sources.VersionedTable.append(
           li.filter(third === 1).repartitionByRange(4, col("l_orderkey")),
-          root, "l_orderkey")
+          root, Write.stats("l_orderkey"))
         graft.sources.VersionedTable.compact(s, root,
           targetBytes = 1L << 30, statsCols = Seq("l_orderkey"))
-        graft.sources.VersionedTable.appendWithStats(
+        graft.sources.VersionedTable.append(
           li.filter(third === 2).repartitionByRange(4, col("l_orderkey")),
-          root, "l_orderkey")
+          root, Write.stats("l_orderkey"))
         runStream()
         val served = graft.sources.VersionedTable.read(s, out)
         // exactly-once: the streamed row count equals the source

@@ -21,7 +21,7 @@ import org.apache.spark.sql.types.LongType
   *  - `chunks/` — VersionedTable (media_id, chunk_idx, offset,
   *    n_bytes, chunk), RANGE-CLUSTERED by media_id with per-file
   *    [min, max] media_id stats, so a point/range read opens only the
-  *    files holding the asset's chunks ([[VersionedTable.readWhereIn]]
+  *    files holding the asset's chunks ([[VersionedTable.scan]]
   *    manifest pruning) — never the media lake.
   *
   * The chunk split and reassembly are PURE COLUMN MATH (sequence +
@@ -83,19 +83,19 @@ object BlobStore {
         val n = ptr.agg(sum(col("n_chunks"))).collect().head
         math.max(1, (if (n.isNullAt(0)) 0L else n.getLong(0)) / 64).toInt
       }
-    VersionedTable.overwriteWithStats(
+    VersionedTable.overwrite(
       chunks.repartitionByRange(files, col("media_id"), col("chunk_idx")),
-      chunksRoot(root), "media_id")
-    VersionedTable.overwriteWithStats(
+      chunksRoot(root), VersionedTable.Write.stats("media_id"))
+    VersionedTable.overwrite(
       ptr.repartitionByRange(math.max(1, files / 8), col("media_id")),
-      pointerRoot(root), "media_id")
+      pointerRoot(root), VersionedTable.Write.stats("media_id"))
     ()
   }
 
   /** EXACTLY-ONCE streaming append — the incremental door media
     * actually arrives through ([[graft.streaming.StreamingJobs
     * .runMediaIngestAvailableNow]] wraps it in foreachBatch). Both
-    * tables commit txn-stamped ([[VersionedTable.appendTxnWithStats]]:
+    * tables commit txn-stamped (`VersionedTable.Write.txn`:
     * data, stats, and marker in ONE atomic manifest commit), chunks
     * FIRST, pointer LAST — the pointer commit is the publish point, so
     * a crash between the two leaves orphan chunks no reader resolves
@@ -110,12 +110,13 @@ object BlobStore {
     if (VersionedTable.latestTxn(pointerRoot(root), appId).exists(_ >= txn))
       return
     val (ptr, chunks) = splitRows(media, chunkBytes)
-    VersionedTable.appendTxnWithStats(
+    val w = VersionedTable.Write(stats = Some(Seq("media_id")),
+      txn = Some(appId -> txn))
+    VersionedTable.append(
       chunks.repartitionByRange(math.max(1, numFiles),
         col("media_id"), col("chunk_idx")),
-      chunksRoot(root), appId, txn, "media_id")
-    VersionedTable.appendTxnWithStats(ptr.coalesce(1),
-      pointerRoot(root), appId, txn, "media_id")
+      chunksRoot(root), w)
+    VersionedTable.append(ptr.coalesce(1), pointerRoot(root), w)
     // auto-compaction (the TextIndex auto-OPTIMIZE policy at the
     // media layer): one chunk file per micro-batch accumulates into
     // the small-files problem and erodes the media_id bands the range
@@ -246,10 +247,10 @@ object BlobStore {
     // resolve through the POINTER (manifest-pruned to the files that
     // could hold this id): a taken-down asset must stop serving the
     // moment its pointer row dies, not when reclaim catches up
-    val live = VersionedTable.readWhereIn(spark, pointerRoot(root),
-      "media_id", Seq(mediaId)).select(col("media_id"))
-    VersionedTable.readWhereIn(spark, chunksRoot(root), "media_id",
-      Seq(mediaId))
+    val live = VersionedTable.scan(spark, pointerRoot(root))
+      .filter(col("media_id") === mediaId).select(col("media_id"))
+    VersionedTable.scan(spark, chunksRoot(root))
+      .filter(col("media_id") === mediaId)
       .join(broadcast(live), Seq("media_id"), "left_semi")
       .filter(col("offset") + col("n_bytes") > lo && col("offset") < hi)
       // intersection of [offset, offset+n_bytes) with the request:

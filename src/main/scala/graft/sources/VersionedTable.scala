@@ -344,16 +344,8 @@ object VersionedTable {
     * [[statsOf]]. */
   private[sources] val BloomPrefix = "__bloom_"
 
-  private def bloomsOf(line: String): Map[String, Array[Byte]] =
-    line.split('\t').drop(1).grouped(3).collect {
-      case Array(c, _, payload) if c.startsWith(BloomPrefix) =>
-        c.stripPrefix(BloomPrefix) ->
-          java.util.Base64.getDecoder.decode(payload)
-    }.toMap
-
-  /** [[bloomsOf]] without the decode — the [[ScanFile]] listing keeps
-    * sketches base64-framed and defers decoding to the (rare)
-    * equality probe. */
+  /** A line's bloom sketches, still base64-framed — the [[ScanFile]]
+    * listing defers decoding to the (rare) equality probe. */
   private def bloomsB64Of(line: String): Map[String, String] =
     line.split('\t').drop(1).grouped(3).collect {
       case Array(c, _, payload) if c.startsWith(BloomPrefix) =>
@@ -1112,12 +1104,6 @@ object VersionedTable {
     }
   }
 
-  /** Write `df`'s rows as new data files under `data/`, returning their
-    * paths (staged via a temp dir, then renamed in — never copied).
-    * Names carry a writer-unique nonce besides the target version: two
-    * writers racing toward the same version must never stage onto the
-    * same path, or the commit loser's cleanup would delete the winner's
-    * data (exactly the Delta/Iceberg convention of UUID part files). */
   /** Rename a batch's LOGICAL column names to the table's PHYSICAL
     * storage names before staging (no-op for unmapped tables — one
     * file-exists probe). Columns outside the declaration stage under
@@ -1162,9 +1148,10 @@ object VersionedTable {
       col(c).as(m.getOrElse(c.toLowerCase, c))): _*)
   }
 
-  private def stageDataFiles(df0: DataFrame, root: String, v: Long,
-                             mapNames: Boolean = true,
-                             identityFill: Boolean = false): Seq[String] = {
+  /** The checks and renames every staging pass runs before its write
+    * job; returns the frame to write. */
+  private def preStage(df0: DataFrame, root: String, mapNames: Boolean,
+                       identityFill: Boolean): DataFrame = {
     // refuse a feature-fenced table BEFORE writing the batch: the
     // commit-side gate (commitManifest) stays the authority, but
     // staging first would orphan a batch-sized file set per attempt
@@ -1190,20 +1177,36 @@ object VersionedTable {
             "through append()/INSERT (the engine assigns the keys)")
       }
     val df1 = enforceConstraints(df0, root)
-    val df = if (mapNames) toPhysicalStage(df1, root) else df1
+    // partition columns are never mapped (ALTER refuses them), so a
+    // partitioned write's partitionBy names stay valid after the rename
+    if (mapNames) toPhysicalStage(df1, root) else df1
+  }
+
+  /** Write `df`'s rows as new data files under `data/`, returning their
+    * paths (staged via a temp dir, then renamed in — never copied).
+    * Names carry a writer-unique nonce besides the target version: two
+    * writers racing toward the same version must never stage onto the
+    * same path, or the commit loser's cleanup would delete the winner's
+    * data (exactly the Delta/Iceberg convention of UUID part files). */
+  private def stageDataFiles(df0: DataFrame, root: String, v: Long,
+                             mapNames: Boolean = true,
+                             identityFill: Boolean = false): Seq[String] = {
+    val df = preStage(df0, root, mapNames, identityFill)
     // a Hive-partitioned table's values live in the PATH; flat staging
     // would commit files whose partition columns read back NULL (and a
     // partition filter would silently prune the new rows away). Refuse
-    // loudly — partitioned tables take the partitioned writers; the
+    // loudly — partitioned tables stage through stagePartitioned; the
     // COW rewrites (delete/update/merge/applyChanges/replaceWhere)
     // stage through stageAuto, which lays partitions back out.
     require(partitionSchema(root).isEmpty,
       s"table at $root is Hive-partitioned: flat staging would lose the " +
-        "partition values — use appendPartitionedWithStats/" +
-        "overwritePartitionedWithStats")
+        "partition values — overwrite with Write(partitionBy = ...) " +
+        "to re-lay it out")
     val nonce = java.util.UUID.randomUUID().toString.take(8)
     val staging = new File(root, s"_staging_v$v-$nonce")
-    df.write.mode(SaveMode.Overwrite).parquet(staging.getPath)
+    // a failed write job (a CHECK constraint fired) leaves no staging dir
+    try df.write.mode(SaveMode.Overwrite).parquet(staging.getPath)
+    catch { case e: Throwable => Lake.deleteRecursively(staging); throw e }
     dataDir(root).mkdirs()
     val moved = staging.listFiles()
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
@@ -1307,10 +1310,10 @@ object VersionedTable {
     * written without foresight still gets [[countRows]], plan-time
     * pruning, and the metadata-only profile fold from [[scan]], the
     * Delta stance where the first 32 columns collect stats unless told
-    * otherwise. Explicit `*WithStats` calls keep full control (their
+    * otherwise. An explicit `Write.stats` keeps full control (its
     * column list is recorded verbatim, nothing else); blooms stay
-    * opt-in. One small aggregation over just-staged files, same cost
-    * shape `overwriteWithStats` always paid. */
+    * opt-in. One small aggregation over just-staged files (or none:
+    * see [[footerStatLines]]). */
   private[sources] val MaxAutoStatsCols = 8
 
   private def autoStatsCols(df: DataFrame): Seq[String] =
@@ -1396,18 +1399,210 @@ object VersionedTable {
     }
   }
 
+  /** How [[append]] and [[overwrite]] lay out, describe and guard one
+    * batch; `Write()` is the plain write.
+    *  - `stats`: per-file manifest stat columns. `None` records the
+    *    default set ([[autoStatsCols]] minus partition columns, or the
+    *    z-order columns of a z-ordered write); `Some(cols)` records
+    *    exactly `cols` (empty: row and byte counts only).
+    *  - `sums`: per-file column sums, cast to long per row
+    *    ([[sumTotal]]).
+    *  - `bloom`: a per-file bloom filter of one column, which the scan
+    *    consults for equality and IN predicates.
+    *  - `partitionBy`: Hive-layout partition columns. An append always
+    *    takes the table's own (its `_partition_schema.json`); an
+    *    overwrite lays out exactly these.
+    *  - `zorder`: cluster the batch on a 2..6-column Morton key first.
+    *  - `onto`: append only — the committed content is this base
+    *    version plus the batch, never whatever is latest.
+    *  - `txn`: `(appId, n)` stamped into the same atomic commit; a
+    *    replay (`n` ≤ the recorded latest for `appId`) is a no-op, and
+    *    an empty append batch commits nothing.
+    *  - `expect`: named boolean AGGREGATE predicates over the batch, all
+    *    evaluated in one job ([[Write.everyRow]] encodes a row CHECK).
+    *  - `unique`: key columns that must be unique within the batch and
+    *    absent from the current snapshot.
+    * A failed `expect`/`unique` check rejects the whole batch before
+    * anything is staged and names what failed. */
+  final case class Write(
+      stats: Option[Seq[String]] = None,
+      sums: Seq[String] = Seq.empty,
+      bloom: Option[Write.Bloom] = None,
+      partitionBy: Seq[String] = Seq.empty,
+      zorder: Option[Write.ZOrder] = None,
+      onto: Option[Long] = None,
+      txn: Option[(String, Long)] = None,
+      expect: Seq[(String, org.apache.spark.sql.Column)] = Seq.empty,
+      unique: Seq[String] = Seq.empty)
+
+  object Write {
+    /** A write recording exactly `cols` as per-file stats (no
+      * columns: row and byte counts only). */
+    def stats(cols: String*): Write = Write(stats = Some(cols))
+
+    /** Bloom filter of `col`, sized for `expectedPerFile` distinct
+      * values at a 1% false-positive rate. */
+    final case class Bloom(col: String, expectedPerFile: Long = 200000)
+
+    /** Morton clustering on `cols` into `numFiles` files; `buckets <= 0`
+      * picks `min(1024, 2^(63/k - 1))` quantile buckets per column. */
+    final case class ZOrder(cols: Seq[String], numFiles: Int, buckets: Int = 0)
+
+    /** A row-level CHECK as an aggregate expectation: true iff every
+      * row satisfies `c` (NULL violates, like SQL CHECK; a zero-row
+      * batch passes). */
+    def everyRow(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+      coalesce(bool_and(coalesce(c, lit(false))), lit(true))
+  }
+
   /** Full overwrite → new version referencing only the new files.
     * Overwrite carries no read-dependency on the previous state, so a
     * commit conflict only means renumbering — the staged files are
-    * reused as-is. Records [[autoStatsCols]] stats by default. */
-  def overwrite(df: DataFrame, root: String): Long = {
-    val staged = stageDataFiles(df, root, nextVersion(root), mapNames = false)
-    val lines = statLines(df.sparkSession, staged, autoStatsCols(df), root)
-    val v = commitWithRetry(root, maxRetries = 5)(_ => lines)
-    if (staged.isEmpty) writeEmptySchemaSidecar(root, v, df.schema)
+    * reused as-is. It is a declaration boundary: the batch stages
+    * un-mapped and lays out `w.partitionBy` (flat when empty). */
+  def overwrite(df: DataFrame, root: String, w: Write = Write()): Long =
+    commit(df, root, w, overwrite = true, () => ())
+
+  /** Append → new version inheriting the previous file list plus the
+    * new files; existing data is not rewritten. The previous file list
+    * is re-read inside the retry loop: losing a commit race means the
+    * winner's files must appear in ours (append-vs-append commutes, so
+    * retrying with the fresh manifest is always safe). A plain append
+    * to a GENERATED ALWAYS AS IDENTITY table fills the column; any
+    * other [[Write]] refuses there. `beforeCommit` is the
+    * race-injection seam (fires between stage and CAS). */
+  def append(df: DataFrame, root: String, w: Write = Write(),
+             beforeCommit: () => Unit = () => ()): Long = {
+    // Marker-gated: the common (no-identity) table pays zero IO here.
+    if (w == Write()) identityColumnIfMarked(df.sparkSession, root) match {
+      case Some(f) if df.columns.exists(_.equalsIgnoreCase(f.name)) =>
+        sys.error(s"column ${f.name} is GENERATED ALWAYS AS IDENTITY — " +
+          "the engine assigns it; drop it from the batch")
+      case Some(f) => return appendIdentity(df, root, f.name, beforeCommit)
+      case None => ()
+    }
+    commit(df, root, w, overwrite = false, beforeCommit)
+  }
+
+  /** The one commit path of [[append]] and [[overwrite]]. */
+  private def commit(df0: DataFrame, root: String, w: Write,
+                     overwrite: Boolean, beforeCommit: () => Unit): Long = {
+    val spark = df0.sparkSession
+    val txnLines = w.txn.map { case (a, n) => txnLine(a, n) } // validates appId
+    // txn replay: the batch already landed, or (append) has no rows
+    for ((appId, n) <- w.txn)
+      if (latestTxn(root, appId).exists(_ >= n) || (!overwrite && df0.isEmpty))
+        return latestVersion(root).getOrElse(-1L)
+    require(w.onto.isEmpty || !overwrite,
+      "an overwrite cannot build onto a base version")
+    w.onto.foreach(b => require(b >= 0 && manifestFile(root, b).exists(),
+      s"base version $b does not exist at $root"))
+    checkBatch(df0, root, w)
+    val df = w.zorder.fold(df0)(z =>
+      zClusterK(df0, z.cols, z.numFiles, z.buckets))
+    // an append keeps the table's recorded partitioning (a new table
+    // takes the Write's)
+    val tableParts = partitionSchema(root).fieldNames.toSeq
+    val partCols =
+      if (overwrite || tableParts.isEmpty) w.partitionBy else tableParts
+    require(w.partitionBy.isEmpty || w.partitionBy == partCols,
+      s"an append lays out the table's own partitions ($partCols), " +
+        s"not ${w.partitionBy}")
+    val statsCols = w.stats.getOrElse(w.zorder.map(_.cols).getOrElse(
+      autoStatsCols(df0).filterNot(partCols.contains)))
+    require(!statsCols.exists(partCols.contains),
+      "stats columns must be non-partition columns (partition values " +
+        "prune from the path)")
+    val wasPartitioned = tableParts.nonEmpty
+    val staged =
+      try {
+        if (partCols.isEmpty)
+          stageDataFiles(df, root, nextVersion(root), mapNames = !overwrite)
+        else stagePartitioned(df, root, partCols, mapNames = !overwrite)
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          throw brokenConstraints(df0, root).getOrElse(e)
+      }
+    val withSums = sumLines(spark, statLines(spark, staged, statsCols, root),
+      w.sums, root)
+    val lines = w.bloom.fold(withSums)(b =>
+      bloomLines(spark, withSums, b.col, b.expectedPerFile, root))
+    beforeCommit()
+    val v = commitWithRetry(root, maxRetries = 5) { v =>
+      if (partCols.nonEmpty)
+        requireFirstPartitionedAtZero(root, v, wasPartitioned)
+      // append: a delta (O(batch) bytes regardless of accumulated file
+      // count); onto a base that is no longer latest: a full listing
+      val content = w.onto match {
+        case _ if overwrite => lines
+        case Some(b) if v != b + 1 => readListing(root, b) ++ lines
+        case _ => if (v == 0) lines else deltaContent(Seq.empty, lines)
+      }
+      // the v0 birth commit of a partitioned table records the
+      // `partitioning` reader feature
+      content ++ txnLines ++
+        (if (partCols.nonEmpty && v == 0) Seq(featureLine("r", "partitioning"))
+         else Nil)
+    }
+    if (staged.isEmpty && (overwrite || v == 0))
+      writeEmptySchemaSidecar(root, v, df0.schema)
+    maybeCheckpoint(root, v)
     v
   }
 
+  /** The pre-stage checks of a [[Write]]: every expectation in one
+    * aggregation job, then the key check. */
+  private def checkBatch(df: DataFrame, root: String, w: Write): Unit = {
+    if (w.expect.nonEmpty) {
+      val row = df.agg(
+        w.expect.head._2.cast("boolean").as(w.expect.head._1),
+        w.expect.tail.map { case (n, c) => c.cast("boolean").as(n) }: _*)
+        .collect().head
+      val failed = w.expect.map(_._1).zipWithIndex.collect {
+        case (n, i) if row.isNullAt(i) || !row.getBoolean(i) => n
+      }
+      if (failed.nonEmpty)
+        throw new IllegalArgumentException(
+          s"expectations failed for batch: ${failed.mkString(", ")}")
+    }
+    if (w.unique.nonEmpty) {
+      // enforced against the snapshot read at check time — single
+      // writer per key domain; concurrent writers of one key race
+      val kc = w.unique.map(col)
+      val dup = df.groupBy(kc: _*).agg(count(lit(1)).as("__n"))
+        .filter(col("__n") > 1).limit(1).collect()
+      require(dup.isEmpty,
+        s"unique key: batch duplicates key ${dup.head.mkString("(", ",", ")")}")
+      if (latestVersion(root).isDefined) {
+        val hit = read(df.sparkSession, root).select(kc: _*)
+          .join(df.select(kc: _*), w.unique, "left_semi").limit(1).collect()
+        require(hit.isEmpty,
+          s"unique key: key already present ${hit.head.mkString("(", ",", ")")}")
+      }
+    }
+  }
+
+  /** After a failed staging pass: the stored constraints the batch
+    * breaks, all evaluated in ONE aggregation (SQL CHECK semantics —
+    * NULL violates), as one error naming every broken one. `None` when
+    * the table has no constraints or the batch breaks none (the
+    * staging failure had another cause). */
+  private def brokenConstraints(df: DataFrame,
+                                root: String): Option[IllegalArgumentException] = {
+    val cs = constraintsOf(root)
+    if (cs.isEmpty) return None
+    val failed = scala.util.Try {
+      val aggs = cs.map { case (n, e) =>
+        min(coalesce(expr(e), lit(false)).cast("long")).as(n) }
+      val row = df.agg(aggs.head, aggs.tail: _*).collect().head
+      cs.map(_._1).zipWithIndex.collect {
+        case (n, i) if !row.isNullAt(i) && row.getLong(i) == 0L => n
+      }
+    }.getOrElse(Seq.empty)
+    if (failed.isEmpty) None
+    else Some(new IllegalArgumentException(
+      s"stored constraints violated by batch: ${failed.mkString(", ")}"))
+  }
   /** The `_schema.v{v}.json` sidecar, decoded — ONE reader for the
     * convention shared by the scan's cache, the empty-version path,
     * and the incremental-schema shortcut. */
@@ -2277,47 +2472,6 @@ object VersionedTable {
     }
   }
 
-  /** As [[overwrite]], recording per-file [min, max] of `statsCol` in
-    * the manifest so [[readWhere]] can skip files from the listing
-    * alone. Cluster the data on `statsCol` first (`repartitionByRange`
-    * + sortWithinPartitions, or `Lake.writeClustered`'s layout) or the
-    * ranges overlap and nothing skips. */
-  def overwriteWithStats(df: DataFrame, root: String,
-                         statsCols: String*): Long = {
-    val staged = stageDataFiles(df, root, nextVersion(root), mapNames = false)
-    val lines = statLines(df.sparkSession, staged, statsCols, root)
-    commitWithRetry(root, maxRetries = 5)(_ => lines)
-  }
-
-  /** As [[append]], with stats on the new files (inherited lines keep
-    * whatever stats they already carry). */
-  def appendWithStats(df: DataFrame, root: String,
-                      statsCols: String*): Long = {
-    val staged = stageDataFiles(df, root, nextVersion(root))
-    val lines = statLines(df.sparkSession, staged, statsCols, root)
-    val v = commitWithRetry(root, maxRetries = 5) { v =>
-      if (v == 0) lines else deltaContent(Seq.empty, lines)
-    }
-    maybeCheckpoint(root, v)
-    v
-  }
-
-  /** As [[appendWithStats]], additionally recording per-file SUMS of
-    * each `sumCols` entry (cast to long per row — pre-quantize
-    * non-integral measures) so [[sumTotal]] can answer SUM/AVG from
-    * the manifest alone. */
-  def appendWithSums(df: DataFrame, root: String, sumCols: Seq[String],
-                     statsCols: Seq[String] = Seq.empty): Long = {
-    val spark = df.sparkSession
-    val staged = stageDataFiles(df, root, nextVersion(root))
-    val lines = sumLines(spark, statLines(spark, staged, statsCols, root), sumCols, root)
-    val v = commitWithRetry(root, maxRetries = 5) { v =>
-      if (v == 0) lines else deltaContent(Seq.empty, lines)
-    }
-    maybeCheckpoint(root, v)
-    v
-  }
-
   // -------------------------------------------------------------------
   // Hive-layout PARTITIONED tables under the manifest log: data files
   // live in `data/<col>=<value>/...` directories, a `_partition_schema
@@ -2351,23 +2505,7 @@ object VersionedTable {
                                partCols: Seq[String],
                                mapNames: Boolean = true,
                                identityFill: Boolean = false): Seq[String] = {
-    // pre-stage fence + constraint-set mark + identity guard, as in
-    // stageDataFiles
-    latestVersion(root).foreach(b => requireWritable(root, b))
-    stagedConstraintSet.get()(root) = constraints(root)
-    if (mapNames && !identityFill)
-      identityColumnIfMarked(df0.sparkSession, root).foreach { f =>
-        if (df0.columns.exists(_.equalsIgnoreCase(f.name)))
-          refuseIdentitySurface(df0.sparkSession, root,
-            s"supplying ${f.name} in an appended batch")
-        else sys.error(
-          s"table at $root declares identity column ${f.name}: write " +
-            "through append()/INSERT (the engine assigns the keys)")
-      }
-    val df1 = enforceConstraints(df0, root)
-    // partition columns are never mapped (ALTER refuses them), so the
-    // partitionBy names below stay valid after the rename
-    val df = if (mapNames) toPhysicalStage(df1, root) else df1
+    val df = preStage(df0, root, mapNames, identityFill)
     require(partCols.nonEmpty, "partitioned write needs partition columns")
     partCols.foreach { c =>
       val dt = df.schema(c).dataType
@@ -2382,8 +2520,9 @@ object VersionedTable {
       partCols.map(c => df.schema(c).copy(nullable = true)))
     val nonce = java.util.UUID.randomUUID().toString.take(8)
     val staging = new File(root, s"_staging_p-$nonce")
-    df.write.mode(SaveMode.Overwrite).partitionBy(partCols: _*)
+    try df.write.mode(SaveMode.Overwrite).partitionBy(partCols: _*)
       .parquet(staging.getPath)
+    catch { case e: Throwable => Lake.deleteRecursively(staging); throw e }
     dataDir(root).mkdirs()
     def walk(f: File): Seq[File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
@@ -2445,52 +2584,6 @@ object VersionedTable {
     moved
   }
 
-  /** Partitioned overwrite: Hive `col=value` layout under `data/`,
-    * partition columns recorded in the `_partition_schema.json`
-    * sidecar (not in the files), per-file [min, max] stats on
-    * `statsCols` (non-partition columns — the partition dimension
-    * prunes from the path, the stats prune within it). Read through
-    * [[scan]] for combined partition + stats + bloom plan-time
-    * pruning. */
-  def overwritePartitionedWithStats(df: DataFrame, root: String,
-                                    partCols: Seq[String],
-                                    statsCols: String*): Long = {
-    require(!statsCols.exists(partCols.contains),
-      "statsCols must be non-partition columns (partition values prune " +
-        "from the path)")
-    val wasPartitioned = partitionSchema(root).nonEmpty
-    val staged = stagePartitioned(df, root, partCols, mapNames = false)
-    val lines = statLines(df.sparkSession, staged, statsCols, root)
-    val v = commitWithRetry(root, maxRetries = 5) { v =>
-      requireFirstPartitionedAtZero(root, v, wasPartitioned)
-      // the v0 birth commit records the `partitioning` reader feature
-      if (v == 0) lines :+ featureLine("r", "partitioning") else lines
-    }
-    // an EMPTY partitioned overwrite records its schema like the flat
-    // path does — the version stays readable (zero rows, full schema)
-    if (staged.isEmpty) writeEmptySchemaSidecar(root, v, df.schema)
-    v
-  }
-
-  /** As [[overwritePartitionedWithStats]], appending (delta commit). */
-  def appendPartitionedWithStats(df: DataFrame, root: String,
-                                 partCols: Seq[String],
-                                 statsCols: String*): Long = {
-    require(!statsCols.exists(partCols.contains),
-      "statsCols must be non-partition columns (partition values prune " +
-        "from the path)")
-    val wasPartitioned = partitionSchema(root).nonEmpty
-    val staged = stagePartitioned(df, root, partCols)
-    val lines = statLines(df.sparkSession, staged, statsCols, root)
-    val v = commitWithRetry(root, maxRetries = 5) { v =>
-      requireFirstPartitionedAtZero(root, v, wasPartitioned)
-      if (v == 0) lines :+ featureLine("r", "partitioning")
-      else deltaContent(Seq.empty, lines)
-    }
-    maybeCheckpoint(root, v)
-    v
-  }
-
   /** The FIRST partitioned commit must be version 0: the sidecar check
     * in [[stagePartitioned]] is check-then-act, so a concurrent FLAT
     * writer can land version 0 inside the window — committing the
@@ -2507,16 +2600,6 @@ object VersionedTable {
         "this FIRST partitioned write staged: committing would mix " +
         "flat and partitioned versions under one partition sidecar — " +
         "aborting")
-
-  /** As [[overwriteWithStats]] with per-file sums — see
-    * [[appendWithSums]]. */
-  def overwriteWithSums(df: DataFrame, root: String, sumCols: Seq[String],
-                        statsCols: Seq[String] = Seq.empty): Long = {
-    val spark = df.sparkSession
-    val staged = stageDataFiles(df, root, nextVersion(root), mapNames = false)
-    val lines = sumLines(spark, statLines(spark, staged, statsCols, root), sumCols, root)
-    commitWithRetry(root, maxRetries = 5)(_ => lines)
-  }
 
   /** METADATA-ONLY `SUM(sumCol)` — folded from the per-file sums in
     * the listing, zero data reads (the [[countRows]] story for the
@@ -2539,16 +2622,20 @@ object VersionedTable {
 
   /** Per-staged-file BLOOM of `bloomCol`, appended to the stat lines as
     * [[BloomPrefix]] triples. One aggregation over just the staged
-    * files; the hash domain is `xxhash64(bloomCol)` — [[readWhereEq]]
-    * probes with the identical expression, so write and read agree by
-    * construction. Sized for `expectedPerFile` items at `fpp` (bits =
-    * -n·ln p / ln²2, the standard optimum); the whole sketch lands
+    * files; the hash domain is `xxhash64(bloomCol)` — the scan's
+    * equality probe ([[org.apache.spark.sql.graft.GraftScan]]) hashes
+    * the identical way, so write and read agree by construction. Sized
+    * for `expectedPerFile` items at [[BloomFpp]] (bits = -n·ln p / ln²2,
+    * the standard optimum); the whole sketch lands
     * inline on the manifest line (compact at these settings — a
     * production table with万-file listings would side-file them, as
     * Delta does, without changing the read contract). */
+  /** False-positive rate every per-file bloom is sized for. */
+  private val BloomFpp = 0.01
+
   private def bloomLines(spark: SparkSession, lines: Seq[String],
                          bloomCol0: String, expectedPerFile: Long,
-                         fpp: Double, root: String): Seq[String] = {
+                         root: String): Seq[String] = {
     if (lines.isEmpty) return lines
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
@@ -2559,7 +2646,7 @@ object VersionedTable {
         spark.read.parquet(lines.map(pathOf): _*).schema,
         Seq(bloomCol0), root).head
     val numBits = math.max(64L, math.ceil(
-      -expectedPerFile * math.log(fpp) / (math.log(2) * math.log(2))).toLong)
+      -expectedPerFile * math.log(BloomFpp) / (math.log(2) * math.log(2))).toLong)
     val agg = ColumnBridge.column(new BloomFilterAggregate(
       ColumnBridge.expression(xxhash64(col(bloomCol))),
       Literal(expectedPerFile), Literal(numBits)).toAggregateExpression())
@@ -2579,218 +2666,6 @@ object VersionedTable {
     }
   }
 
-  /** As [[appendWithStats]], additionally recording a per-file BLOOM
-    * FILTER of `bloomCol` in the manifest — point-lookup file skipping
-    * for columns min/max ranges can't serve (string keys, UUIDs, URLs:
-    * high-cardinality identity columns whose values interleave across
-    * files). [[readWhereEq]] consults it. */
-  def appendWithBloomIndex(df: DataFrame, root: String, bloomCol: String,
-                           expectedPerFile: Long = 200000,
-                           fpp: Double = 0.01,
-                           statsCols: Seq[String] = Seq.empty): Long = {
-    val spark = df.sparkSession
-    val staged = stageDataFiles(df, root, nextVersion(root))
-    val lines = bloomLines(spark, statLines(spark, staged, statsCols, root),
-      bloomCol, expectedPerFile, fpp, root)
-    val v = commitWithRetry(root, maxRetries = 5) { v =>
-      if (v == 0) lines else deltaContent(Seq.empty, lines)
-    }
-    maybeCheckpoint(root, v)
-    v
-  }
-
-  /** As [[overwriteWithStats]], with a per-file bloom on `bloomCol` —
-    * the OPTIMIZE/recluster commit for bloom-indexed tables: rewrite
-    * the whole table (typically range-clustered on the key) so the
-    * blooms converge to near-disjoint key sets and [[readWhereEq]]'s
-    * listing prune approaches the true file set. */
-  def overwriteWithBloomIndex(df: DataFrame, root: String, bloomCol: String,
-                              expectedPerFile: Long = 200000,
-                              fpp: Double = 0.01,
-                              statsCols: Seq[String] = Seq.empty): Long = {
-    val spark = df.sparkSession
-    val staged = stageDataFiles(df, root, nextVersion(root), mapNames = false)
-    val lines = bloomLines(spark, statLines(spark, staged, statsCols, root),
-      bloomCol, expectedPerFile, fpp, root)
-    commitWithRetry(root, maxRetries = 5)(_ => lines)
-  }
-
-  /** As [[append]], but the committed version's content derives from
-    * the explicit BASE version `baseV` plus `df` — NEVER from whatever
-    * is latest at commit time. An optimistic pointer-CAS protocol
-    * (e.g. [[graft.operators.TextIndex.append]]) reads its base
-    * version from the pointer, stages table commits, then publishes the
-    * pointer iff unchanged; if the staged commit built on *latest*
-    * instead, a concurrent writer's not-yet-published version landing
-    * between the base read and the commit would be silently absorbed —
-    * the winner's pointer stats would exclude those rows and the
-    * loser's retry would re-append them (duplicates). Here the
-    * committed listing is exactly `readListing(baseV) ++ newFiles`:
-    * concurrent versions above `baseV` stay invisible orphans, and a
-    * staged version is deterministic from the base the caller recorded.
-    * O(batch) delta bytes on the uncontended fast path (target version
-    * == baseV + 1); a full listing (manifest bytes only, no data
-    * rewrite) otherwise. */
-  def appendOnto(df: DataFrame, root: String, baseV: Long,
-                 statsCols: String*): Long = {
-    val staged = stageDataFiles(df, root, nextVersion(root))
-    appendOntoLines(root, baseV, statLines(df.sparkSession, staged,
-      if (statsCols.isEmpty) autoStatsCols(df) else statsCols, root))
-  }
-
-  /** [[appendOnto]] with a per-file bloom on `bloomCol` — see
-    * [[appendWithBloomIndex]]. */
-  def appendOntoWithBloomIndex(df: DataFrame, root: String, baseV: Long,
-                               bloomCol: String,
-                               expectedPerFile: Long = 200000,
-                               fpp: Double = 0.01,
-                               statsCols: Seq[String] = Seq.empty): Long = {
-    val spark = df.sparkSession
-    val staged = stageDataFiles(df, root, nextVersion(root))
-    appendOntoLines(root, baseV,
-      bloomLines(spark, statLines(spark, staged, statsCols, root),
-        bloomCol, expectedPerFile, fpp, root))
-  }
-
-  private def appendOntoLines(root: String, baseV: Long,
-                              lines: Seq[String]): Long = {
-    require(baseV >= 0 && manifestFile(root, baseV).exists(),
-      s"appendOnto base version $baseV does not exist at $root")
-    val v = commitWithRetry(root, maxRetries = 5) { v =>
-      if (v == baseV + 1) deltaContent(Seq.empty, lines)
-      else readListing(root, baseV) ++ lines
-    }
-    maybeCheckpoint(root, v)
-    v
-  }
-
-  /** EQUALITY read with bloom-index file skipping: a file is opened
-    * only if (a) its recorded numeric [min, max] for `eqCol` admits at
-    * least one probe value AND (b) its bloom for `eqCol` reports
-    * possibly-present for at least one probe — either stat missing on
-    * a line degrades that test to "keep" (conservative; false
-    * positives only cost an open, false negatives are impossible).
-    * Result = `read(...).filter(eqCol IN values)` exactly. Probe
-    * values must carry the COLUMN's type (xxhash64 is type-sensitive:
-    * an Int probe against a Long column would hash differently).
-    *
-    * The 100 TB shape: "was this URL / doc id ever ingested?" against
-    * an identity-keyed corpus answers from the listing + a handful of
-    * file opens instead of a full scan — the Delta bloom-index /
-    * Iceberg point-lookup role. */
-  def readWhereEq(spark: SparkSession, root: String, eqCol: String,
-                  values: Seq[Any], atVersion: Option[Long] = None): DataFrame = {
-    require(values.nonEmpty, "readWhereEq needs at least one value")
-    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
-    val v = atVersion.getOrElse(
-      latestVersion(root).getOrElse(sys.error(s"no versions at $root")))
-    val lines = readListing(root, v)
-    // same hash as bloomLines' xxhash64 column (seed 42), driver-side
-    val hashes = values.map(x =>
-      new XxHash64(Seq(Literal(x))).eval(null).asInstanceOf[Long])
-    val longs = values.collect { case n: Long => n
-                                 case n: Int => n.toLong }
-    val kept = lines.filter { ln =>
-      val rangeOk = statsOf(ln).get(eqCol) match {
-        case Some((flo, fhi)) if longs.length == values.length =>
-          longs.exists(x => x >= flo && x <= fhi)
-        case _ => true
-      }
-      val bloomOk = bloomsOf(ln).get(eqCol) match {
-        case Some(bytes) =>
-          val bf = org.apache.spark.util.sketch.BloomFilter
-            .readFrom(new java.io.ByteArrayInputStream(bytes))
-          hashes.exists(bf.mightContainLong)
-        case None => true
-      }
-      rangeOk && bloomOk
-    }
-    // all files skipped → conservative full listing for the schema
-    // (footer reads only; the IN filter still returns zero rows)
-    val paths = (if (kept.nonEmpty) kept else lines).map(pathOf)
-    readParquetMerged(spark, paths)
-      .filter(col(eqCol).isin(values: _*))
-  }
-
-  /** Z-ORDER clustered overwrite: both columns are quantile-bucketed
-    * (approx-quantile boundaries — skew-proof) and bit-interleaved
-    * ([[graft.plans.ZOrder64]]); range-partitioning on the Morton key
-    * yields files tight in BOTH dimensions, and the manifest records
-    * both columns' per-file [min, max] — so [[readWhere]] prunes
-    * selective predicates on EITHER column from the listing alone (the
-    * Delta `OPTIMIZE ZORDER BY` role). */
-  def overwriteZOrdered(df: DataFrame, root: String, colA: String,
-                        colB: String, numFiles: Int,
-                        buckets: Int = 1024): Long =
-    overwriteWithStats(zCluster(df, colA, colB, numFiles, buckets),
-      root, colA, colB)
-
-  /** Quantile-bucket both columns (one multi-column approxQuantile
-    * scan — skew-proof boundaries), bit-interleave the bucket ids
-    * ([[graft.plans.ZOrder64]]), and range-partition + sort on the
-    * Morton key so the resulting files are tight in BOTH dimensions. */
-  private def zCluster(df: DataFrame, colA: String, colB: String,
-                       numFiles: Int, buckets: Int): DataFrame = {
-    // fanOutPinned: three passes consume the input (quantile scan,
-    // range sampling, shuffle map) — each would otherwise re-run the
-    // single-task scan stage of a single-file input (guide §2.5);
-    // pass-through (no repartition, no materialization) on a
-    // parallel input
-    val dfp = graft.core.FanOut.fanOutPinned(df)
-    val probs = (1 until buckets).map(_.toDouble / buckets).toArray
-    val Array(boundsA, boundsB) = dfp
-      .select(col(colA).cast("double").as("__qa"),
-        col(colB).cast("double").as("__qb"))
-      .stat.approxQuantile(Array("__qa", "__qb"), probs, 1.0 / (4 * buckets))
-      .map(_.map(_.toLong).distinct.toSeq)
-    val z = graft.plans.ZOrder64(col(colA).cast("long"),
-      col(colB).cast("long"), boundsA, boundsB)
-    dfp.withColumn("__z", z)
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-  }
-
-  /** k-dimensional Z-ORDER clustered overwrite ([[graft.plans.ZOrderK]]
-    * — [[overwriteZOrdered]] past two columns): all k columns are
-    * quantile-bucketed in ONE multi-column approxQuantile scan and
-    * bit-interleaved round-robin (floor(63/k) bits per dimension);
-    * range-partitioning on the Morton key yields files tight in EVERY
-    * dimension, and the manifest records each column's per-file
-    * [min, max] — so a k-bound [[readWhereBox]] prunes multiplicatively
-    * from the listing alone. The real 100 TB pruning keys are 3-4
-    * columns (date × tenant × key); `buckets` defaults to the most the
-    * per-dimension bit budget allows, capped at 1024. */
-  def overwriteZOrderedK(df: DataFrame, root: String, cols: Seq[String],
-                         numFiles: Int, buckets: Int = 0): Long =
-    overwriteWithStats(zClusterK(df, cols, numFiles, buckets),
-      root, cols: _*)
-
-  /** As [[overwriteZOrderedK]] for APPEND-style ingestion (the
-    * [[appendZOrdered]] k-dim twin): the batch is clustered with its
-    * own boundaries and stats-recorded; previous lines are inherited
-    * untouched, and [[readWhereBox]] prunes across all batches.
-    * `txn` ≥ 0 stamps (`appId`, txn) into the same atomic commit —
-    * exactly-once clustered ingestion for the streaming door (a
-    * replayed batch no-ops; an empty batch commits nothing). */
-  def appendZOrderedK(df: DataFrame, root: String, cols: Seq[String],
-                      numFiles: Int, buckets: Int = 0,
-                      appId: String = "", txn: Long = -1L): Long = {
-    if (txn >= 0 && latestTxn(root, appId).exists(_ >= txn))
-      return latestVersion(root).getOrElse(-1L)
-    if (txn >= 0 && df.isEmpty)
-      return latestVersion(root).getOrElse(-1L)
-    val clustered = zClusterK(df, cols, numFiles, buckets)
-    val staged = stageDataFiles(clustered, root, nextVersion(root))
-    val lines = statLines(df.sparkSession, staged, cols, root)
-    val tl = if (txn >= 0) Seq(txnLine(appId, txn)) else Seq.empty
-    val v = commitWithRetry(root, maxRetries = 5) { v =>
-      (if (v == 0) lines else deltaContent(Seq.empty, lines)) ++ tl
-    }
-    maybeCheckpoint(root, v)
-    v
-  }
-
   /** k-column quantile bucketing (one approxQuantile scan — skew-proof
     * boundaries), round-robin bit-interleave ([[graft.plans.ZOrderK]]),
     * range-partition + sort on the Morton key. `buckets <= 0` picks
@@ -2802,7 +2677,11 @@ object VersionedTable {
     val nb =
       if (buckets > 0) buckets
       else math.min(1024, 1 << (63 / cols.length - 1))
-    // fanOutPinned for the three input passes — see zCluster
+    // fanOutPinned: three passes consume the input (quantile scan,
+    // range sampling, shuffle map) — each would otherwise re-run the
+    // single-task scan stage of a single-file input (guide §2.5);
+    // pass-through (no repartition, no materialization) on a
+    // parallel input
     val dfp = graft.core.FanOut.fanOutPinned(df)
     val probs = (1 until nb).map(_.toDouble / nb).toArray
     val qNames = cols.indices.map(i => s"__q$i")
@@ -2817,75 +2696,6 @@ object VersionedTable {
       .repartitionByRange(numFiles, col("__z"))
       .sortWithinPartitions(col("__z"))
       .drop("__z")
-  }
-
-  /** As [[overwriteZOrdered]] for APPEND-style ingestion: the incoming
-    * batch is z-clustered and stats-recorded on its own (boundaries
-    * from the batch — day-over-day drift is fine, each file's recorded
-    * [min, max] is exact regardless of how it was clustered), previous
-    * manifest lines are inherited untouched. A [[readWhere]] prunes
-    * across ALL batches; periodic [[overwriteZOrdered]] compaction
-    * tightens inter-batch overlap when it accumulates. */
-  def appendZOrdered(df: DataFrame, root: String, colA: String,
-                     colB: String, numFiles: Int,
-                     buckets: Int = 1024): Long = {
-    val clustered = zCluster(df, colA, colB, numFiles, buckets)
-    val staged = stageDataFiles(clustered, root, nextVersion(root))
-    val lines = statLines(df.sparkSession, staged, Seq(colA, colB), root)
-    val v = commitWithRetry(root, maxRetries = 5) { v =>
-      if (v == 0) lines else deltaContent(Seq.empty, lines)
-    }
-    maybeCheckpoint(root, v)
-    v
-  }
-
-  /** Range read with manifest-level data skipping: only files whose
-    * recorded `statsCol` [min, max] intersects [lo, hi] are opened
-    * (stats-less lines and other-column stats are conservatively kept);
-    * the row-level filter is applied on top, so the result is exactly
-    * `read(...).filter(statsCol BETWEEN lo AND hi)` — rows with null
-    * `statsCol` drop, per BETWEEN semantics. `df.inputFiles` on the
-    * result shows the pruned file list. */
-  def readWhere(spark: SparkSession, root: String, statsCol: String,
-                lo: Long, hi: Long): DataFrame = {
-    val v = latestVersion(root).getOrElse(sys.error(s"no versions at $root"))
-    val lines = readListing(root, v)
-    val kept = lines.filter { ln =>
-      statsOf(ln).get(statsCol) match {
-        case Some((flo, fhi)) => fhi >= lo && flo <= hi
-        case None => true // no stats for this column → cannot skip
-      }
-    }
-    // all files skipped → still answer with the right schema (footer
-    // reads only; parquet stats keep the scan trivial)
-    val paths = (if (kept.nonEmpty) kept else lines).map(pathOf)
-    readParquetMerged(spark, paths)
-      .filter(col(statsCol) >= lit(lo) && col(statsCol) <= lit(hi))
-  }
-
-  /** [[readWhere]] for a STRING stats column (recorded under the
-    * [[StrPrefix]] grammar by the same `statsCols` argument): BETWEEN
-    * semantics on Spark's binary string ordering — the shape of every
-    * ISO-date / tenant / category slice a 100 TB lake serves. Files
-    * whose recorded [min, max] misses `[lo, hi]` never open; missing
-    * stats keep the file (conservative). */
-  def readWhereString(spark: SparkSession, root: String, statsCol: String,
-                      lo: String, hi: String): DataFrame = {
-    val v = latestVersion(root).getOrElse(sys.error(s"no versions at $root"))
-    val lines = readListing(root, v)
-    // UTF-8 BYTE order throughout ([[Utf8Order]]): the stats were
-    // written by Spark min/max, which compares bytes — Java String
-    // order disagrees beyond the BMP and would wrongly skip files
-    val kept = lines.filter { ln =>
-      strStatsOf(ln).get(statsCol) match {
-        case Some((flo, fhi)) =>
-          Utf8Order.lteq(lo, fhi) && Utf8Order.lteq(flo, hi)
-        case None => true // no stats for this column → cannot skip
-      }
-    }
-    val paths = (if (kept.nonEmpty) kept else lines).map(pathOf)
-    readParquetMerged(spark, paths)
-      .filter(col(statsCol) >= lit(lo) && col(statsCol) <= lit(hi))
   }
 
   /** METADATA-ONLY `(min, max)` of a STRING stats column — the
@@ -2903,58 +2713,6 @@ object VersionedTable {
           Some((rs.map(_._1).reduce(Utf8Order.min),
             rs.map(_._2).reduce(Utf8Order.max)))
         } else None
-    }
-  }
-
-  /** IN-list read with manifest-stat file skipping: only files whose
-    * recorded `[min, max]` for `statsCol` contains AT LEAST ONE of
-    * `values` are opened (missing stats keep the file, conservative) —
-    * the IVF-list seek shape: a cell-clustered table serves "cells IN
-    * (probe set)" from the listing alone. Result = `read(...)`
-    * filtered by the IN list. */
-  def readWhereIn(spark: SparkSession, root: String, statsCol: String,
-                  values: Seq[Long],
-                  version: Option[Long] = None): DataFrame = {
-    require(values.nonEmpty, "readWhereIn needs at least one value")
-    val v = version.orElse(latestVersion(root))
-      .getOrElse(sys.error(s"no versions at $root"))
-    val lines = readListing(root, v)
-    val sorted = values.distinct.sorted
-    val kept = lines.filter { ln =>
-      statsOf(ln).get(statsCol) match {
-        case Some((flo, fhi)) => sorted.exists(x => x >= flo && x <= fhi)
-        case None => true
-      }
-    }
-    val paths = (if (kept.nonEmpty) kept else lines).map(pathOf)
-    readParquetMerged(spark, paths)
-      .filter(col(statsCol).isin(sorted: _*))
-  }
-
-  /** Conjunctive multi-column range read (the 2-D z-order box query):
-    * only files whose recorded stats intersect EVERY `(col, lo, hi)`
-    * bound are opened — on a [[overwriteZOrdered]]/[[appendZOrdered]]
-    * layout both dimensions prune multiplicatively, the point of the
-    * Morton clustering. Missing stats for a bound's column keep the
-    * file (conservative). Result = `read(...)` filtered by all bounds
-    * (BETWEEN semantics per column). */
-  def readWhereBox(spark: SparkSession, root: String,
-                   bounds: Seq[(String, Long, Long)]): DataFrame = {
-    require(bounds.nonEmpty, "readWhereBox needs at least one bound")
-    val v = latestVersion(root).getOrElse(sys.error(s"no versions at $root"))
-    val lines = readListing(root, v)
-    val kept = lines.filter { ln =>
-      val st = statsOf(ln)
-      bounds.forall { case (c, lo, hi) =>
-        st.get(c) match {
-          case Some((flo, fhi)) => fhi >= lo && flo <= hi
-          case None => true
-        }
-      }
-    }
-    val paths = (if (kept.nonEmpty) kept else lines).map(pathOf)
-    bounds.foldLeft(readParquetMerged(spark, paths)) {
-      case (df, (c, lo, hi)) => df.filter(col(c) >= lit(lo) && col(c) <= lit(hi))
     }
   }
 
@@ -2984,8 +2742,8 @@ object VersionedTable {
     * through a manifest-backed FileIndex (numeric AND string stats),
     * and the manifest's byte total feeds Catalyst's auto-broadcast
     * decision; the physical scan stays a normal vectorized parquet
-    * read. Prefer this over `readWhere*` when the predicate arrives
-    * from query text rather than engine code.
+    * read. Equality and IN predicates additionally prune on per-file
+    * blooms (`Write.bloom`).
     *
     * MERGE-ON-READ aware (the Delta reader-understands-DVs contract): a
     * LATEST-state scan of a table with pending [[Tombstones]] deletes
@@ -3526,26 +3284,6 @@ object VersionedTable {
         t > nowMillis - retainMillis)
     }
 
-  /** CHECK-constraint append (the Delta `ALTER TABLE ADD CONSTRAINT
-    * CHECK` role): the batch commits only if EVERY row satisfies
-    * `constraint` — a null result counts as a violation, like SQL
-    * CHECK enforcement at write time (the constraint must be TRUE).
-    * On violation nothing is staged and nothing commits; the exception
-    * carries one offending row for the pipeline log. The quality gate
-    * at the TABLE boundary: a buggy upstream cannot land rows the
-    * contract forbids, no matter which job wrote them. One extra
-    * filter-take(1) pass over the batch (cheap next to the write);
-    * stats/row counts are recorded as [[appendWithStats]]. */
-  def appendChecked(df: DataFrame, root: String,
-                    constraint: org.apache.spark.sql.Column,
-                    statsCols: String*): Long = {
-    val bad = df.filter(!coalesce(constraint, lit(false))).take(1)
-    if (bad.nonEmpty)
-      throw new IllegalArgumentException(
-        s"CHECK constraint violated by batch row: ${bad.head}")
-    appendWithStats(df, root, statsCols: _*)
-  }
-
   /** PERSISTED table constraints (the Delta `ALTER TABLE ... ADD
     * CONSTRAINT` role), the ADMIN surface: replace the table's WHOLE
     * constraint set in one write — no existing-row validation (the
@@ -3572,54 +3310,6 @@ object VersionedTable {
     * name-ordered — the unified store, both surfaces' entries. */
   def constraintsOf(root: String): Seq[(String, String)] =
     constraints(root).toSeq.sortBy(_._1)
-
-  /** Append enforcing every STORED constraint (all evaluated in ONE
-    * aggregation; SQL CHECK semantics — NULL violates, like
-    * [[appendChecked]]): a batch breaking any constraint is rejected
-    * whole, naming every broken one — a friendlier failure than the
-    * stage-time per-row assert (which also guards this path, as it
-    * guards every writer). */
-  def appendConstrained(df: DataFrame, root: String,
-                        statsCols: String*): Long = {
-    val cs = constraintsOf(root)
-    if (cs.isEmpty) return appendWithStats(df, root, statsCols: _*)
-    val aggs = cs.map { case (n, e) =>
-      min(coalesce(expr(e), lit(false)).cast("long")).as(n) }
-    val row = df.agg(aggs.head, aggs.tail: _*).collect().head
-    val failed = cs.map(_._1).zipWithIndex.collect {
-      // NULL aggregate = zero-row batch → vacuously satisfied
-      case (n, i) if !row.isNullAt(i) && row.getLong(i) == 0L => n
-    }
-    if (failed.nonEmpty)
-      throw new IllegalArgumentException(
-        s"stored constraints violated by batch: ${failed.mkString(", ")}")
-    appendWithStats(df, root, statsCols: _*)
-  }
-
-  /** Append guarded by AGGREGATE expectations (the Delta Live Tables
-    * `expect_or_fail` role, one level up from [[appendChecked]]'s
-    * row-level CHECK): each expectation is a boolean AGGREGATE
-    * predicate over the whole batch (null-rate ceilings, distinct-count
-    * floors, volume sanity bands — the things a per-row constraint
-    * cannot express). ALL expectations evaluate in ONE aggregation
-    * job; any false one rejects the batch whole, before any file is
-    * staged, naming every failed expectation. */
-  def appendExpecting(df: DataFrame, root: String,
-                      expectations: Seq[(String, org.apache.spark.sql.Column)],
-                      statsCols: String*): Long = {
-    require(expectations.nonEmpty, "no expectations given")
-    val row = df.agg(
-      expectations.head._2.cast("boolean").as(expectations.head._1),
-      expectations.tail.map { case (n, c) => c.cast("boolean").as(n) }: _*)
-      .collect().head
-    val failed = expectations.map(_._1).zipWithIndex.collect {
-      case (n, i) if row.isNullAt(i) || !row.getBoolean(i) => n
-    }
-    if (failed.nonEmpty)
-      throw new IllegalArgumentException(
-        s"expectations failed for batch: ${failed.mkString(", ")}")
-    appendWithStats(df, root, statsCols: _*)
-  }
 
   /** REPLACE WHERE (the Delta `overwrite` + `replaceWhere` option):
     * atomically swap the rows matching `predicate` for the rows of
@@ -3682,63 +3372,6 @@ object VersionedTable {
       }
     }
     -1L // unreachable
-  }
-
-  /** Append → new version inheriting the previous file list plus the
-    * new files; existing data is not rewritten. The previous file list
-    * is re-read inside the retry loop: losing a commit race means the
-    * winner's files must appear in ours (append-vs-append commutes, so
-    * retrying with the fresh manifest is always safe). Records
-    * [[autoStatsCols]] stats by default. */
-  def append(df: DataFrame, root: String,
-             beforeCommit: () => Unit = () => ()): Long = {
-    // GENERATED ALWAYS AS IDENTITY tables route through the
-    // transactional fill; batches may not supply the column themselves.
-    // Marker-gated: the common (no-identity) table pays zero IO here.
-    identityColumnIfMarked(df.sparkSession, root) match {
-      case Some(f) if df.columns.exists(_.equalsIgnoreCase(f.name)) =>
-        sys.error(s"column ${f.name} is GENERATED ALWAYS AS IDENTITY — " +
-          "the engine assigns it; drop it from the batch")
-      case Some(f) => return appendIdentity(df, root, f.name, beforeCommit)
-      case None => ()
-    }
-    val staged = stageDataFiles(df, root, nextVersion(root))
-    val lines = statLines(df.sparkSession, staged, autoStatsCols(df), root)
-    beforeCommit() // race-injection seam (fires between stage and CAS)
-    // delta commit: O(batch) bytes regardless of accumulated file count
-    // (append-vs-append commutes by construction — the delta carries no
-    // copy of the previous listing to go stale on a lost race)
-    val v = commitWithRetry(root, maxRetries = 5) { v =>
-      if (v == 0) lines else deltaContent(Seq.empty, lines)
-    }
-    if (staged.isEmpty && v == 0) writeEmptySchemaSidecar(root, v, df.schema)
-    maybeCheckpoint(root, v)
-    v
-  }
-
-  /** [[append]] with an AUTO-COMPACTION policy (the Delta
-    * auto-compaction role, hoisted from the TextIndex door to the base
-    * table format): when the committed listing holds ≥
-    * `autoCompactFiles` files after the append, [[compact]] runs in
-    * the same call — small per-batch files from a steady trickle of
-    * appends are folded back to ~`targetBytes` files before the
-    * small-files problem compounds (every reader's listing, footer
-    * round-trips, and task count track file count). Row content is
-    * untouched (compact packs, never edits); `statsCols` keeps
-    * [[readWhere]] skipping tight across the fold, exactly as in
-    * [[compact]]. Returns the latest committed version (the
-    * compaction's, when it fired). */
-  def appendAutoCompact(df: DataFrame, root: String,
-                        autoCompactFiles: Int,
-                        targetBytes: Long = 128L << 20,
-                        statsCols: Seq[String] = Seq.empty): Long = {
-    require(autoCompactFiles > 1, "autoCompactFiles must be > 1")
-    val v =
-      if (statsCols.isEmpty) append(df, root)
-      else appendWithStats(df, root, statsCols: _*)
-    if (readListing(root, v).size >= autoCompactFiles)
-      compact(df.sparkSession, root, targetBytes, statsCols)
-    else v
   }
 
   // -------------------------------------------------------------------
@@ -3995,104 +3628,10 @@ object VersionedTable {
     None
   }
 
-  /** [[append]] stamped with (`appId`, `txn`) atomically in the same
-    * manifest commit; a replay (`txn` ≤ the recorded latest for
-    * `appId`) is a NO-OP returning the current version. An empty table
-    * bootstraps as version 0 (full listing), so foreachBatch writers
-    * need no overwrite-vs-append branch. An EMPTY batch commits
-    * nothing (returns the current version, −1 on a still-empty
-    * table): recording its txn would buy nothing — replaying an empty
-    * batch is already a no-op — and an all-empty version 0 would make
-    * every later read throw on a fileless manifest. */
-  def appendTxn(df: DataFrame, root: String, appId: String,
-                txn: Long): Long = {
-    val line = txnLine(appId, txn)
-    if (latestTxn(root, appId).exists(_ >= txn))
-      return latestVersion(root).getOrElse(
-        sys.error(s"txn recorded but no versions at $root"))
-    if (df.isEmpty) return latestVersion(root).getOrElse(-1L)
-    val staged = stageDataFiles(df, root, nextVersion(root))
-    val v = commitWithRetry(root, maxRetries = 5) { v =>
-      if (v == 0) staged :+ line
-      else deltaContent(Seq.empty, staged) :+ line
-    }
-    maybeCheckpoint(root, v)
-    v
-  }
-
-  /** [[appendTxn]] with per-file [min, max] stats on `statsCols` (the
-    * [[appendWithStats]] twin): exactly-once streaming ingestion into
-    * a stats-pruned table — the data files, their stats, AND the txn
-    * marker land in one atomic manifest commit. */
-  def appendTxnWithStats(df: DataFrame, root: String, appId: String,
-                         txn: Long, statsCols: String*): Long = {
-    val line = txnLine(appId, txn)
-    if (latestTxn(root, appId).exists(_ >= txn))
-      return latestVersion(root).getOrElse(
-        sys.error(s"txn recorded but no versions at $root"))
-    if (df.isEmpty) return latestVersion(root).getOrElse(-1L)
-    val staged = stageDataFiles(df, root, nextVersion(root))
-    val lines = statLines(df.sparkSession, staged, statsCols, root)
-    val v = commitWithRetry(root, maxRetries = 5) { v =>
-      if (v == 0) lines :+ line
-      else deltaContent(Seq.empty, lines) :+ line
-    }
-    maybeCheckpoint(root, v)
-    v
-  }
-
-  /** [[appendTxnWithStats]] for Hive-partitioned tables: the
-    * exactly-once streaming append whose files land in the table's
-    * `col=value` layout — data files, stats, AND the txn marker in one
-    * atomic manifest commit. The [[appendPartitionedWithStats]] twin
-    * of the flat-table txn path (the native streaming sink routes
-    * through whichever matches the table's layout). */
-  def appendPartitionedTxn(df: DataFrame, root: String,
-                           partCols: Seq[String], appId: String,
-                           txn: Long, statsCols: Seq[String] = Seq.empty): Long = {
-    val line = txnLine(appId, txn)
-    if (latestTxn(root, appId).exists(_ >= txn))
-      return latestVersion(root).getOrElse(
-        sys.error(s"txn recorded but no versions at $root"))
-    if (df.isEmpty) return latestVersion(root).getOrElse(-1L)
-    val wasPartitioned = partitionSchema(root).nonEmpty
-    val staged = stagePartitioned(df, root, partCols)
-    val lines = statLines(df.sparkSession, staged, statsCols, root)
-    val v = commitWithRetry(root, maxRetries = 5) { v =>
-      // the same per-attempt re-check as appendPartitionedWithStats:
-      // a concurrent flat writer landing version 0 inside the staging
-      // window must fail THIS commit, not read back NULL partitions
-      requireFirstPartitionedAtZero(root, v, wasPartitioned)
-      if (v == 0) lines ++ Seq(line, featureLine("r", "partitioning"))
-      else deltaContent(Seq.empty, lines) :+ line
-    }
-    maybeCheckpoint(root, v)
-    v
-  }
-
-  /** [[overwriteWithStats]] stamped with (`appId`, `txn`) atomically in
-    * the same manifest commit — the exactly-once BOOTSTRAP commit a
-    * streaming door's first micro-batch needs when it builds a table
-    * (or index) rather than appending to one: a replayed build
-    * (`txn` ≤ the recorded latest) is a NO-OP returning the current
-    * version instead of re-overwriting. */
-  def overwriteTxnWithStats(df: DataFrame, root: String, appId: String,
-                            txn: Long, statsCols: String*): Long = {
-    if (latestTxn(root, appId).exists(_ >= txn))
-      return latestVersion(root).getOrElse(
-        sys.error(s"txn recorded but no versions at $root"))
-    val staged = stageDataFiles(df, root, nextVersion(root), mapNames = false)
-    val lines = statLines(df.sparkSession, staged, statsCols, root)
-    val v = commitWithRetry(root, maxRetries = 5)(_ =>
-      lines :+ txnLine(appId, txn))
-    maybeCheckpoint(root, v)
-    v
-  }
-
   /** OPTIMIZE-style k-dim Z-order compaction: fold the CURRENT
-    * snapshot — however fragmented by [[appendZOrderedK]] batches with
+    * snapshot — however fragmented by z-ordered appends with
     * batch-local boundaries — into ONE freshly clustered layout
-    * ([[overwriteZOrderedK]] over the live rows, a new version; time
+    * (a `Write.zorder` overwrite of the live rows, a new version; time
     * travel keeps the old layout readable). Inter-batch overlap is
     * what accumulates under incremental z-ordered ingestion; this is
     * the maintenance pass that restores tight per-file boxes, run on
@@ -4933,7 +4472,7 @@ object VersionedTable {
     * feed's net upserts INCLUDING their sequence. Same prune /
     * rewrite / optimistic-commit mechanics as [[applyChanges]].
     *
-    * `txnAppId`/`txn` (the [[appendTxn]] protocol): when given, the
+    * `txnAppId`/`txn` (the `Write.txn` protocol): when given, the
     * writer's progress marker lands INSIDE this same atomic commit,
     * and a replay (`txn` ≤ the recorded latest) returns without
     * writing — exactly-once for a streaming apply door in one
@@ -5166,7 +4705,7 @@ object VersionedTable {
 
   /** [[delete]] pinned at BASE version `baseV`: the committed version's
     * content derives from `baseV`'s listing minus the matching rows —
-    * never from latest (the [[appendOnto]] stance for the COW delete).
+    * never from latest (the `Write.onto` stance for the COW delete).
     * An optimistic pointer-CAS caller ([[graft.operators.TextIndex.delete]])
     * must stage a rewrite that is deterministic from the version it
     * recorded: acting on latest could absorb a concurrent writer's
@@ -5526,7 +5065,7 @@ object VersionedTable {
     *
     * With `statsCols` the packed rows are range-clustered and sorted on
     * those columns and the new manifest lines carry recomputed
-    * [min, max] stats, so [[readWhere]] skipping stays tight across the
+    * [min, max] stats, so [[scan]] pruning stays tight across the
     * compaction (inter-batch overlap from many appends TIGHTENS, the
     * OPTIMIZE ZORDER-lite effect). File sizes come from the filesystem
     * listing — O(files) driver-side stat calls, the same cost class as
@@ -5639,42 +5178,6 @@ object VersionedTable {
     } finally if (!torn) intent.foreach(Files.deleteIfExists)
   }
 
-  /** VACUUM: drop manifests older than the last `retainVersions` and
-    * delete data files no retained manifest references. The oldest
-    * RETAINED version gets a checkpoint first — a retained delta
-    * manifest must stay resolvable once the older manifests it would
-    * walk back through are gone. (Like the commit protocol, vacuum is
-    * documented single-JVM: a reader that began a walk-back BEFORE the
-    * checkpoint existed and reaches a just-deleted manifest fails and
-    * retries its read — on an object store the same role is played by
-    * a retention grace period, as in Delta's VACUUM.) Returns the
-    * number of data files deleted. */
-  /** PRIMARY-KEY-enforced append (the uniqueness member of the
-    * write-time contract family next to [[appendChecked]]'s row CHECK):
-    * the batch commits only if its `keys` are unique WITHIN the batch
-    * and ABSENT from the current snapshot — otherwise nothing stages,
-    * nothing commits, and the exception names an offending key. Cost:
-    * one group-count over the batch + one key-projected semi-join
-    * against the table (with a key-clustered layout the semi-join
-    * prunes through the manifest). Uniqueness is enforced against the
-    * snapshot READ AT CHECK TIME — single writer per key domain, like
-    * the materialized-view refreshers; concurrent unique-appends of
-    * the same key race check-then-commit. */
-  def appendUnique(df: DataFrame, root: String, keys: Seq[String]): Long = {
-    val kc = keys.map(col)
-    val dup = df.groupBy(kc: _*).agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > 1).limit(1).collect()
-    require(dup.isEmpty,
-      s"appendUnique: batch duplicates key ${dup.head.mkString("(", ",", ")")}")
-    if (latestVersion(root).isDefined) {
-      val hit = read(df.sparkSession, root).select(kc: _*)
-        .join(df.select(kc: _*), keys, "left_semi").limit(1).collect()
-      require(hit.isEmpty,
-        s"appendUnique: key already present ${hit.head.mkString("(", ",", ")")}")
-    }
-    append(df, root)
-  }
-
   /** Integrity audit (the fsck / Delta FSCK role): cross-check every
     * version's listing against the data directory.
     *  - `missing`: paths some version references but the disk lacks —
@@ -5696,7 +5199,18 @@ object VersionedTable {
     (referenced.filterNot(diskSet).sorted, onDisk.filterNot(refSet).sorted)
   }
 
-  /** `retainMillis` is the RETENTION HORIZON (the Delta
+  /** VACUUM: drop manifests older than the last `retainVersions` and
+    * delete data files no retained manifest references. The oldest
+    * RETAINED version gets a checkpoint first — a retained delta
+    * manifest must stay resolvable once the older manifests it would
+    * walk back through are gone. (Like the commit protocol, vacuum is
+    * documented single-JVM: a reader that began a walk-back BEFORE the
+    * checkpoint existed and reaches a just-deleted manifest fails and
+    * retries its read — on an object store the same role is played by
+    * a retention grace period, as in Delta's VACUUM.) Returns the
+    * number of data files deleted.
+    *
+    * `retainMillis` is the RETENTION HORIZON (the Delta
     * `deletedFileRetentionDuration` role, here applied to whole
     * versions): a version committed within the last `retainMillis` is
     * NEVER reclaimed, regardless of `retainVersions` — the rule that

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
+import graft.sources.VersionedTable.Write
 
 /** Structured Streaming jobs over the events table — the engine's
   * incremental-ingestion story (SURVEY.md §2.10: the reference's
@@ -314,8 +315,8 @@ object StreamingJobs {
         // corpus first: the index's exact rescore resolves ids here; a
         // crash between the two commits leaves corpus-only rows the
         // replay completes into the index (both appends txn-guarded)
-        VersionedTable.appendTxnWithStats(batch.toDF(), corpusRoot,
-          "ivfpq_ingest", batchId, "vec_id")
+        VersionedTable.append(batch.toDF(), corpusRoot,
+          Write(stats = Some(Seq("vec_id")), txn = Some("ivfpq_ingest" -> batchId)))
         if (!ix.exists(indexRoot))
           ix.build(VersionedTable.read(spark, corpusRoot), indexRoot,
             dim, nlist, m, ksub, txn = batchId)
@@ -336,7 +337,7 @@ object StreamingJobs {
   }
 
   /** Z-ORDERED ingest door — incremental clustered ingestion: each
-    * micro-batch lands [[graft.sources.VersionedTable.appendZOrderedK]]
+    * micro-batch lands as a `Write.zorder` append,
     * k-dim clustered with BATCH-LOCAL boundaries (exact per-file
     * [min, max] regardless; a box read prunes across all batches) and
     * txn-stamped exactly-once. Inter-batch box overlap accumulates
@@ -360,8 +361,9 @@ object StreamingJobs {
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
                        batchId: Long) =>
         import graft.sources.VersionedTable
-        VersionedTable.appendZOrderedK(batch.toDF(), root, cols, numFiles,
-          appId = "zorder_ingest", txn = batchId)
+        VersionedTable.append(batch.toDF(), root,
+          Write(zorder = Some(Write.ZOrder(cols, numFiles)),
+            txn = Some("zorder_ingest" -> batchId)))
         // O(manifest) fragmentation probe — no relation build / footer
         // reads on the per-batch hot path
         if (autoCompactFiles > 0 &&
@@ -423,9 +425,9 @@ object StreamingJobs {
     // foreachBatch is at-least-once: Structured Streaming RE-RUNS a
     // failed micro-batch with the SAME batchId, and a blind append
     // would land its rows twice (and the additive view would absorb
-    // them twice). Exactly-once via [[graft.sources.VersionedTable
-    // .appendTxn]]: the batchId is stamped INSIDE the same atomic
-    // manifest commit as the data files, so a crash anywhere leaves
+    // them twice). Exactly-once via a `Write.txn` append: the batchId
+    // is stamped INSIDE the same atomic manifest commit as the data
+    // files, so a crash anywhere leaves
     // either no trace of the batch or the complete (data + marker)
     // commit — a replayed batchId is a no-op append. The txn log and
     // the stream's checkpoint share srcRoot's lifetime, so batchIds
@@ -437,7 +439,8 @@ object StreamingJobs {
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
                        batchId: Long) =>
-        VersionedTable.appendTxn(batch, srcRoot, "view_ingest", batchId)
+        VersionedTable.append(batch, srcRoot,
+          Write(txn = Some("view_ingest" -> batchId)))
         // refresh is idempotent per source version, so
         // running it on a replayed batch is a no-op, never a re-apply
         MaterializedView.refreshAdditive(spark, srcRoot, viewRoot,
@@ -493,11 +496,11 @@ object StreamingJobs {
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(col("user_id"))
             .orderBy(col("seq").desc, col("op").desc)
-          VersionedTable.appendTxn(
+          VersionedTable.append(
             batch.withColumn("__rn", row_number().over(w))
               .filter(col("__rn") === 1 && col("op") =!= "D")
               .drop("__rn", "op"),
-            tableRoot, "cdc", batchId)
+            tableRoot, Write(txn = Some("cdc" -> batchId)))
         } else
           // the batchId stamp rides INSIDE the apply's atomic commit;
           // a replayed batch returns before any write
@@ -544,7 +547,7 @@ object StreamingJobs {
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
                        batchId: Long) =>
         // replay guard BEFORE scoring: a replayed batch neither
-        // re-appends (appendTxn would no-op anyway) nor re-runs the KS
+        // re-appends (the txn append would no-op anyway) nor re-runs the KS
         // job — the txn probe is a manifest read, the KS stat a job
         if (!VersionedTable.latestTxn(monitorRoot, "drift").exists(_ >= batchId)) {
           val stat = graft.operators.Drift.ksStat(
@@ -554,7 +557,8 @@ object StreamingJobs {
             .withColumn("batch_id", lit(batchId))
             .select(col("batch_id"), col("n_a"), col("n_b"),
               col("d_num"), col("d_ppm"), col("at_value"))
-          VersionedTable.appendTxn(stat, monitorRoot, "drift", batchId)
+          VersionedTable.append(stat, monitorRoot,
+            Write(txn = Some("drift" -> batchId)))
         }
         ()
       }
@@ -573,7 +577,7 @@ object StreamingJobs {
     * durable data table and malformed raw lines to the durable
     * quarantine table, both [[graft.sources.VersionedTable]]s.
     * Exactly-once per TABLE via per-table txn-stamped commits
-    * ([[graft.sources.VersionedTable.appendTxn]]): the two appends
+    * (`VersionedTable.Write.txn`): the two appends
     * can't be made atomic together, but each batchId lands in the
     * same atomic manifest commit as its table's data — a crash
     * between them replays the batch, no-ops on the already-stamped
@@ -611,8 +615,10 @@ object StreamingJobs {
         // TOGETHER, but each is atomic WITH its own progress marker —
         // a crash between them replays the batch, no-ops on the
         // already-stamped table and lands only the missing one
-        VersionedTable.appendTxn(good, goodRoot, "quarantine_ingest", batchId)
-        VersionedTable.appendTxn(bad, badRoot, "quarantine_ingest", batchId)
+        VersionedTable.append(good, goodRoot,
+          Write(txn = Some("quarantine_ingest" -> batchId)))
+        VersionedTable.append(bad, badRoot,
+          Write(txn = Some("quarantine_ingest" -> batchId)))
         ()
       }
       .option("checkpointLocation",
@@ -631,8 +637,8 @@ object StreamingJobs {
     * [[graft.sources.MaterializedView.refreshJoin]]
     * folds the delta join against the right source into the view —
     * per batch the view gains O(|Δ ⋈ right|) rows, never a join
-    * recompute; a replayed batch is a no-op at BOTH layers (appendTxn
-    * skips the append; refreshJoin's (aV, bV) pair check
+    * recompute; a replayed batch is a no-op at BOTH layers (the txn
+    * append skips; refreshJoin's (aV, bV) pair check
     * skips the refresh). Returns the served view. */
   def runJoinViewMaintenanceAvailableNow(spark: SparkSession,
                                          inputDir: String, leftRoot: String,
@@ -651,7 +657,8 @@ object StreamingJobs {
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
                        batchId: Long) =>
-        VersionedTable.appendTxn(batch, leftRoot, "jv_ingest", batchId)
+        VersionedTable.append(batch, leftRoot,
+          Write(txn = Some("jv_ingest" -> batchId)))
         // idempotent per (leftV, rightV) — a replayed batch no-ops
         MaterializedView.refreshJoin(spark, leftRoot, rightRoot,
           viewRoot, joinCols)
@@ -731,7 +738,8 @@ object StreamingJobs {
         // per source version — so a crash after the append but before
         // the pointer move is healed by the replay's refresh+publish,
         // and readers meanwhile still resolve the last consistent pair
-        val fv = VersionedTable.appendTxn(batch, facts, "publish", batchId)
+        val fv = VersionedTable.append(batch, facts,
+          Write(txn = Some("publish" -> batchId)))
         // fv < 0 = empty batch against a not-yet-bootstrapped facts
         // table (no version 0 exists): nothing to refresh or publish —
         // refreshing would throw on the version-less table and crash
@@ -767,8 +775,8 @@ object StreamingJobs {
   }
 
   /** STREAMING expect-or-quarantine door (the DLT `expect_or_drop`
-    * role, streaming form of [[graft.sources.VersionedTable
-    * .appendExpecting]]): every micro-batch is judged against the
+    * role, streaming form of `VersionedTable.Write.expect`): every
+    * micro-batch is judged against the
     * AGGREGATE expectations in one aggregation job; a passing batch
     * appends to the MAIN table, a failing one lands WHOLE in the
     * quarantine table with the failed gate names attached — nothing
@@ -812,12 +820,13 @@ object StreamingJobs {
             case (n, i) if row.isNullAt(i) || !row.getBoolean(i) => n
           }
           if (failed.isEmpty)
-            VersionedTable.appendTxn(batch, mainRoot, "expect", batchId)
+            VersionedTable.append(batch, mainRoot,
+              Write(txn = Some("expect" -> batchId)))
           else
-            VersionedTable.appendTxn(
+            VersionedTable.append(
               batch.withColumn("failed_gates",
                 lit(failed.sorted.mkString(","))),
-              quarRoot, "expect", batchId)
+              quarRoot, Write(txn = Some("expect" -> batchId)))
         }
         ()
       }
@@ -859,11 +868,11 @@ object StreamingJobs {
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
                        batchId: Long) =>
-        VersionedTable.appendTxn(
+        VersionedTable.append(
           graft.operators.TimeSeries
             .ohlcPartials(batch, "grp", "t_us", "id", "v", widthSec)
             .withColumn("batch_id", lit(batchId)),
-          barsRoot, "ohlc", batchId)
+          barsRoot, Write(txn = Some("ohlc" -> batchId)))
         ()
       }
       .option("checkpointLocation",
@@ -893,10 +902,10 @@ object StreamingJobs {
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
                        batchId: Long) =>
-        VersionedTable.appendTxn(
+        VersionedTable.append(
           batch.groupBy(col("grp")).agg(partialAgg)
             .withColumn("batch_id", lit(batchId)),
-          sketchRoot, "rollup", batchId)
+          sketchRoot, Write(txn = Some("rollup" -> batchId)))
         ()
       }
       .option("checkpointLocation",
@@ -1245,8 +1254,8 @@ object StreamingJobs {
       .writeStream
       .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
                        batchId: Long) =>
-        VersionedTable.appendTxn(
-          b.filter(col("user_id") >= 0), tableRoot, "ssj_outer", batchId)
+        VersionedTable.append(b.filter(col("user_id") >= 0), tableRoot,
+          Write(txn = Some("ssj_outer" -> batchId)))
         ()
       }
       .option("checkpointLocation",

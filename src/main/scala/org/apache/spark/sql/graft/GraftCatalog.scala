@@ -952,11 +952,12 @@ private[graft] final class GraftV1Write(
 }
 
 /** The engine's own writers behind the DSv2 V1 fallback: atomic
-  * manifest commits, default stats, Hive layout preserved for
-  * partitioned tables. `committed` (nullable — only the staged RTAS
-  * path wires it) receives the exact version this write landed, so
-  * the staging catalog's abort can restore PRECISELY that commit and
-  * never revert an unrelated concurrent writer's version. */
+  * manifest commits, default stats (partition columns excluded), Hive
+  * layout preserved for partitioned tables. `committed` (nullable —
+  * only the staged RTAS path wires it) receives the exact version this
+  * write landed, so the staging catalog's abort can restore PRECISELY
+  * that commit and never revert an unrelated concurrent writer's
+  * version. */
 private[graft] final class GraftInsertableRelation(
     root: String, partCols: Seq[String], overwrite: Boolean,
     committed: java.util.concurrent.atomic.AtomicLong)
@@ -964,14 +965,11 @@ private[graft] final class GraftInsertableRelation(
 
   override def insert(data: DataFrame, ow: Boolean): Unit = {
     val full = overwrite || ow
-    val v = if (partCols.isEmpty) {
-      if (full) VersionedTable.overwrite(data, root)
+    // an append takes the table's own partitioning from its sidecar
+    val v =
+      if (full) VersionedTable.overwrite(data, root,
+        VersionedTable.Write(partitionBy = partCols))
       else VersionedTable.append(data, root)
-    } else {
-      if (full) VersionedTable.overwritePartitionedWithStats(
-        data, root, partCols)
-      else VersionedTable.appendPartitionedWithStats(data, root, partCols)
-    }
     if (committed != null) committed.set(v)
     ()
   }

@@ -22,7 +22,7 @@ import graft.sources.VersionedTable.ScanFile
 
 /** CATALYST-INTEGRATED scan of a [[graft.sources.VersionedTable]] —
   * the Delta `TahoeFileIndex` role: instead of asking callers to route
-  * predicates through `readWhere`/`readWhereString`, the table's
+  * predicates through special read methods, the table's
   * manifest becomes a planning-time [[FileIndex]] whose `listFiles`
   * receives the query's PUSHED-DOWN data filters from Catalyst and
   * prunes files against the per-file [min, max] stats — so an ordinary
@@ -46,7 +46,7 @@ import graft.sources.VersionedTable.ScanFile
 object GraftScan {
 
   /** The latest (or pinned) snapshot as a filter-pruning DataFrame.
-    * Tables written by `overwritePartitionedWithStats` additionally
+    * Tables written with `VersionedTable.Write(partitionBy = ...)` additionally
     * surface their Hive-layout partition columns through the index's
     * `partitionSchema` — Catalyst splits predicates into
     * partitionFilters (evaluated against the path-parsed values, whole
@@ -64,6 +64,24 @@ object GraftScan {
     PlanBridge.registerOptimization(spark, CountFromManifest)
     val raw = PlanBridge.ofRows(spark, LogicalRelation(relation, false))
     projectLogical(raw, dataSchema, logicalSchema, partSchema)
+  }
+
+  /** Files the plan of `df` reads: the `numFiles` metric of every
+    * file scan node (whose root paths contain `under`, when given),
+    * which the node fills when it lists its pruned files at plan
+    * time — no job runs. Unlike `inputFiles`, which lists the
+    * unfiltered relation, this honours plan-time file pruning; unlike
+    * distinct `input_file_name()`, it also counts opened files whose
+    * rows all filter out. */
+  def filesRead(df: DataFrame, under: String = ""): Long = {
+    val aqe = new org.apache.spark.sql.execution.adaptive
+      .AdaptiveSparkPlanHelper {}
+    aqe.collect(df.queryExecution.executedPlan) {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec
+          if f.relation.location.rootPaths.exists(_.toString.contains(under)) =>
+        f.selectedPartitions // lists the files and sets the metric
+        f.metrics("numFiles").value
+    }.sum
   }
 
   /** The column-mapping projection: PHYSICAL relation output →
@@ -585,8 +603,8 @@ object GraftScan {
     * answer isn't provably no — missing stats, unsupported shapes, and
     * non-literal operands all keep the file. Equality shapes
     * additionally consult the file's BLOOM sketch when the column
-    * carries one (the point-lookup prune `readWhereEq` does, now fed
-    * by Catalyst's own pushed filters). */
+    * carries one (`VersionedTable.Write.bloom`), fed by Catalyst's own
+    * pushed filters. */
   private def mayMatch(f: ScanFile, e: Expression): Boolean = e match {
     case And(l, r) => mayMatch(f, l) && mayMatch(f, r)
     case Or(l, r) => mayMatch(f, l) || mayMatch(f, r)

@@ -67,8 +67,8 @@ class GraftStreamProvider extends StreamSourceProvider
       GraftStreamSource.longOpt(parameters, "maxBytesPerTrigger"))
 
   /** NATIVE streaming WRITE (the DeltaSink role): every micro-batch
-    * lands as one exactly-once [[VersionedTable.appendTxn]]-family
-    * commit — data files, stats, and the `(appId, batchId)` txn marker
+    * lands as one exactly-once commit (`VersionedTable.Write.txn`) —
+    * data files, stats, and the `(appId, batchId)` txn marker
     * in ONE atomic manifest commit, so a kill-and-restart replay of
     * the last batch is recognized and skipped by the table itself, not
     * by sink-side bookkeeping. Routes:
@@ -117,7 +117,7 @@ class GraftStreamProvider extends StreamSourceProvider
     // option("mergeSchema", true) evolves the table instead
     val evolve = parameters.get("mergeSchema")
       .orElse(parameters.get("mergeschema")).exists(_.toBoolean)
-    new GraftStreamSink(root, appId, tableParts, statsCols,
+    new GraftStreamSink(root, appId, statsCols,
       complete = outputMode == OutputMode.Complete(), evolve = evolve)
   }
 }
@@ -128,7 +128,6 @@ class GraftStreamProvider extends StreamSourceProvider
   * the write — never re-planned, never double-computed beyond the
   * write's own passes. */
 private[graft] class GraftStreamSink(root: String, appId: String,
-                                     partCols: Seq[String],
                                      statsCols: Seq[String],
                                      complete: Boolean,
                                      evolve: Boolean = false) extends Sink {
@@ -165,18 +164,11 @@ private[graft] class GraftStreamSink(root: String, appId: String,
             f.name, f.dataType, nullable = true)).toSeq)
       }
     }
-    if (complete) {
-      require(partCols.isEmpty,
-        "Complete-mode overwrite of a partitioned table is not " +
-          "supported — use Append, or a foreachBatch door")
-      VersionedTable.overwriteTxnWithStats(
-        batch, root, appId, batchId, statsCols: _*)
-    } else if (partCols.isEmpty)
-      VersionedTable.appendTxnWithStats(
-        batch, root, appId, batchId, statsCols: _*)
-    else
-      VersionedTable.appendPartitionedTxn(
-        batch, root, partCols, appId, batchId, statsCols)
+    // an append lands in the table's own layout (flat or partitioned)
+    val w = VersionedTable.Write(stats = Some(statsCols),
+      txn = Some(appId -> batchId))
+    if (complete) VersionedTable.overwrite(batch, root, w)
+    else VersionedTable.append(batch, root, w)
     ()
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.execution.ExplainMode
+import graft.sources.VersionedTable.Write
 
 /** Physical-plan guards: the properties that make these queries hold up
   * at 100 TB must be visible in the plan, not assumed (builder prompt:
@@ -124,9 +125,9 @@ class PlanSpec extends SparkSuite {
     val root = java.nio.file.Files
       .createTempDirectory("graft_autobc").resolve("t").toString
     val dim = (1 to 50).map(i => (i.toLong, s"name_$i")).toDF("k", "name")
-    graft.sources.VersionedTable.appendWithStats(dim, root)
+    graft.sources.VersionedTable.append(dim, root, Write.stats())
     assert(graft.sources.VersionedTable.sizeBytes(root).exists(_ > 0),
-      "appendWithStats must record per-file bytes in the manifest")
+      "a stats-recording append must record per-file bytes in the manifest")
     val fact = spark.range(20000)
       .select((col("id") % 50 + 1).as("k"), col("id").as("v"))
     // disable Spark's own size-estimate broadcast so the MANIFEST is

@@ -34,8 +34,8 @@ class IvfIndexSpec extends SparkSuite {
     val allFiles = graft.sources.VersionedTable
       .read(spark, new java.io.File(root, "cells").getPath).inputFiles.length
     val one = emb.filter(col("vec_id") === 0)
-    val opened = IvfIndex.topK(spark, one, root, k = 5, nprobe = 2)
-      .inputFiles.count(_.contains("/cells/"))
+    val opened = org.apache.spark.sql.graft.GraftScan.filesRead(
+      IvfIndex.topK(spark, one, root, k = 5, nprobe = 2), under = "/cells/")
     info(s"opened $opened of $allFiles index files for one query (nprobe=2)")
     assert(opened < allFiles)
     assert(opened > 0)

@@ -39,8 +39,8 @@ class IvfPqIndexSpec extends SparkSuite {
     val allFiles = graft.sources.VersionedTable
       .read(spark, new java.io.File(root, "codes").getPath).inputFiles.length
     val one = emb.filter(col("vec_id") === 0)
-    val opened = IvfPqIndex.search(one, emb, root, k = 5, nprobe = 2)
-      .inputFiles.count(_.contains("/codes/"))
+    val opened = org.apache.spark.sql.graft.GraftScan.filesRead(
+      IvfPqIndex.search(one, emb, root, k = 5, nprobe = 2), under = "/codes/")
     info(s"opened $opened of $allFiles code files for one query (nprobe=2)")
     assert(opened < allFiles)
     assert(opened > 0)

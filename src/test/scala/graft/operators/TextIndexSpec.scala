@@ -3,8 +3,11 @@ package graft.operators
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftScan
 
 import graft.SparkSuite
+import graft.sources.VersionedTable
+import graft.sources.VersionedTable.Write
 
 class TextIndexSpec extends SparkSuite {
 
@@ -133,8 +136,10 @@ class TextIndexSpec extends SparkSuite {
     val orphan = postingsSet(TextIndex.postings(spark, root)).take(5)
       .map { case (d, t, f) => (d + 500000L, t, f) }.toSeq
     import spark.implicits._
-    graft.sources.VersionedTable.appendWithBloomIndex(
-      orphan.toDF("doc_id", "term", "tf"), s"$root/postings", "term")
+    graft.sources.VersionedTable.append(
+      orphan.toDF("doc_id", "term", "tf"),
+      s"$root/postings",
+      Write(stats = Some(Seq.empty), bloom = Some(Write.Bloom("term"))))
     // serving still answers from the committed pointer
     assert(TextIndex.searchBm25(spark, root, terms, 5)
       .collect().map(_.toSeq).toSeq == before)
@@ -171,15 +176,15 @@ class TextIndexSpec extends SparkSuite {
       .groupBy(col("term")).agg(count(lit(1)).as("df"))
       .orderBy(col("df").desc, col("term")).limit(1)
       .select("term").head().getString(0)
-    val before = graft.sources.VersionedTable
-      .readWhereEq(spark, s"$root/postings", "term", Seq(hot))
-      .inputFiles.length
+    val before = GraftScan.filesRead(
+      VersionedTable.scan(spark, s"$root/postings")
+        .filter(col("term").isin(hot)))
     val contentBefore = postingsSet(TextIndex.postings(spark, root))
     val statsBefore = TextIndex.stats(root)
     TextIndex.optimize(spark, root, targetFiles = 4)
-    val after = graft.sources.VersionedTable
-      .readWhereEq(spark, s"$root/postings", "term", Seq(hot))
-      .inputFiles.length
+    val after = GraftScan.filesRead(
+      VersionedTable.scan(spark, s"$root/postings")
+        .filter(col("term").isin(hot)))
     info(s"common term '$hot': opened $before files pre-optimize, $after post")
     // a common term matches every interleaved batch file pre-optimize;
     // range-clustered it lives in 1-2 contiguous files
@@ -231,12 +236,12 @@ class TextIndexSpec extends SparkSuite {
       .collect().map(_.toSeq).toList
     assert(a == m)
     // and the compacted layout actually narrows the hot-term probe
-    val openedAuto = graft.sources.VersionedTable
-      .readWhereEq(spark, s"$root/postings", "term", Seq(hot))
-      .inputFiles.length
-    val openedManual = graft.sources.VersionedTable
-      .readWhereEq(spark, s"$manual/postings", "term", Seq(hot))
-      .inputFiles.length
+    val openedAuto = GraftScan.filesRead(
+      VersionedTable.scan(spark, s"$root/postings")
+        .filter(col("term").isin(hot)))
+    val openedManual = GraftScan.filesRead(
+      VersionedTable.scan(spark, s"$manual/postings")
+        .filter(col("term").isin(hot)))
     info(s"hot term '$hot': auto-optimized opens $openedAuto vs " +
       s"fragmented $openedManual")
     assert(openedAuto < openedManual)
@@ -306,10 +311,10 @@ class TextIndexSpec extends SparkSuite {
     val rare = "xq_unique_probe_token"
     TextIndex.append(
       Seq((9999999L, s"$rare only here")).toDF("doc_id", "text"), root)
-    val pruned = graft.sources.VersionedTable
-      .readWhereEq(spark, s"$root/postings", "term", Seq(rare))
+    val pruned = graft.sources.VersionedTable.scan(spark, s"$root/postings")
+      .filter(col("term").isin(rare))
     val total = TextIndex.postings(spark, root).inputFiles.length
-    val opened = pruned.inputFiles.length
+    val opened = GraftScan.filesRead(pruned)
     info(s"files: opened $opened of $total for rare term '$rare'")
     assert(opened < total)
     assert(pruned.count() == 1)

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
+import graft.sources.VersionedTable.Write
 
 /** BlobStore lifecycle beyond the q288 round-trip: the exactly-once
   * streaming door, the pointer-is-the-publish-point crash window, and
@@ -74,8 +75,8 @@ class BlobStoreSpec extends SparkSuite {
         .select(col("media_id"), col("chunk_idx"), col("offset"),
           col("n_bytes"), col("chunk"))
     }
-    VersionedTable.appendTxnWithStats(chunks9, s"$root/chunks",
-      "media_ingest", 7L, "media_id")
+    VersionedTable.append(chunks9, s"$root/chunks",
+      Write(stats = Some(Seq("media_id")), txn = Some("media_ingest" -> 7L)))
     // no reader resolves the stranded asset
     assert(BlobStore.readAssembled(spark, root).filter(col("media_id") === 9L)
       .isEmpty)

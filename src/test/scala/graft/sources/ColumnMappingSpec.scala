@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
+import graft.sources.VersionedTable.Write
 
 /** ALTER TABLE DROP COLUMN / RENAME COLUMN — the column-mapping role:
   * metadata-only commits (zero files moved), logical names projected
@@ -52,7 +53,7 @@ class ColumnMappingSpec extends SparkSuite {
     val root = tmpRoot()
     val df = (1 to 100).map(i => (i.toLong, i * 10L)).toDF("k", "v")
       .repartitionByRange(4, col("k")).sortWithinPartitions("k")
-    VersionedTable.overwriteWithStats(df, root, "k")
+    VersionedTable.overwrite(df, root, Write.stats("k"))
     VersionedTable.alterRenameColumn(spark, root, "k", "id")
     val q = VersionedTable.scan(spark, root).filter(col("id") <= 10L)
     assert(q.count() == 10L)
@@ -142,12 +143,13 @@ class ColumnMappingSpec extends SparkSuite {
     val root = tmpRoot()
     val df = (1 to 50).map(i => (i.toLong, i * 2L)).toDF("k", "v")
       .repartitionByRange(2, col("k")).sortWithinPartitions("k")
-    VersionedTable.overwriteWithStats(df, root, "k")
+    VersionedTable.overwrite(df, root, Write.stats("k"))
     VersionedTable.alterRenameColumn(spark, root, "k", "id")
     // appendWithStats with the LOGICAL column name
-    VersionedTable.appendWithStats(
+    VersionedTable.append(
       (51 to 60).map(i => (i.toLong, i * 2L)).toDF("id", "v")
-        .repartitionByRange(1, col("id")), root, "id")
+        .repartitionByRange(1, col("id")),
+      root, Write.stats("id"))
     val q = VersionedTable.scan(spark, root).filter(col("id") >= 51L)
     assert(q.count() == 10L)
     val scans = q.queryExecution.executedPlan.collect {
@@ -162,9 +164,9 @@ class ColumnMappingSpec extends SparkSuite {
     "pending MOR, last data column, existing target name") {
     import spark.implicits._
     val root = tmpRoot()
-    VersionedTable.overwritePartitionedWithStats(
+    VersionedTable.overwrite(
       Seq((1L, 10L, "a"), (2L, 20L, "b")).toDF("k", "v", "p"),
-      root, Seq("p"))
+      root, Write(stats = Some(Seq.empty), partitionBy = Seq("p")))
     intercept[IllegalArgumentException](
       VersionedTable.alterRenameColumn(spark, root, "p", "q"))
     intercept[IllegalArgumentException](
@@ -259,7 +261,7 @@ class ColumnMappingSpec extends SparkSuite {
     val df = (1 to 40).map(i => (i.toLong, ('a' + i % 3).toChar.toString,
       i * 10L)).toDF("k", "s", "v")
       .repartitionByRange(2, col("k")).sortWithinPartitions("k")
-    VersionedTable.overwriteWithStats(df, root, "k")
+    VersionedTable.overwrite(df, root, Write.stats("k"))
     GraftSql.register(spark, name, root)
     GraftSql.execute(spark, s"ALTER TABLE $name RENAME COLUMN v TO amount")
     GraftSql.execute(spark, s"ALTER TABLE $name DROP COLUMN s")

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
+import graft.sources.VersionedTable.Write
 
 /** Table CHECK constraints — persisted in `_constraints.json`,
   * validated once against existing rows at ADD time, then enforced
@@ -87,19 +88,19 @@ class ConstraintsSpec extends SparkSuite {
   test("partitioned writers enforce through the same choke point") {
     import spark.implicits._
     val root = tmpRoot()
-    VersionedTable.overwritePartitionedWithStats(
+    VersionedTable.overwrite(
       Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("k", "p", "v"),
-      root, Seq("p"))
+      root, Write(stats = Some(Seq.empty), partitionBy = Seq("p")))
     VersionedTable.addConstraint(spark, root, "v_pos", "v > 0")
     val base = VersionedTable.latestVersion(root).get
     val e = intercept[Exception] {
-      VersionedTable.appendPartitionedWithStats(
-        Seq((3L, "c", -1L)).toDF("k", "p", "v"), root, Seq("p"))
+      VersionedTable.append(Seq((3L, "c", -1L)).toDF("k", "p", "v"), root,
+        Write(stats = Some(Seq.empty), partitionBy = Seq("p")))
     }
     assert(e.getMessage != null)
     assert(VersionedTable.latestVersion(root).contains(base))
-    VersionedTable.appendPartitionedWithStats(
-      Seq((3L, "c", 1L)).toDF("k", "p", "v"), root, Seq("p"))
+    VersionedTable.append(Seq((3L, "c", 1L)).toDF("k", "p", "v"), root,
+      Write(stats = Some(Seq.empty), partitionBy = Seq("p")))
     assert(VersionedTable.read(spark, root).count() == 3L)
   }
 
@@ -133,7 +134,7 @@ class ConstraintsSpec extends SparkSuite {
     assert(e.getMessage != null)
     assert(VersionedTable.latestVersion(root).contains(base),
       "a legacy-set constraint must bind EVERY writer, not only " +
-        "appendConstrained")
+        "the writes that pre-check them")
     // the two surfaces read one store
     VersionedTable.addConstraint(spark, root, "k_pos", "k > 0")
     assert(VersionedTable.constraintsOf(root).map(_._1) ==

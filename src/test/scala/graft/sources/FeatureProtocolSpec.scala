@@ -6,6 +6,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
+import graft.sources.VersionedTable.Write
 
 /** Table protocol / feature versioning (the Delta PROTOCOL.md
   * reader/writer table-feature role): manifests record required
@@ -112,10 +113,10 @@ class FeatureProtocolSpec extends SparkSuite {
     "reader feature; file resolution and counts stay unpolluted") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft_featp").resolve("t").toString
-    VersionedTable.overwritePartitionedWithStats(
+    VersionedTable.overwrite(
       (1 to 20).map(i => (i.toLong, (i % 3).toString, i * 2L))
         .toDF("k", "p", "v"),
-      root, Seq("p"), "k")
+      root, Write(stats = Some(Seq("k")), partitionBy = Seq("p")))
     val (r, w) = VersionedTable.requiredFeatures(root, 0L)
     assert(r == Set("partitioning") && w.isEmpty, s"$r / $w")
     assert(VersionedTable.scan(spark, root).count() == 20L)

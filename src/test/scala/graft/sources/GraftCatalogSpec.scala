@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftCatalog
 
 import graft.SparkSuite
+import graft.sources.VersionedTable.Write
 
 /** GraftCatalog — the DSv2 TableCatalog (read path): `spark.sql` plans
   * `graft.db.t` natively with the manifest-pruning index underneath,
@@ -37,7 +38,7 @@ class GraftCatalogSpec extends SparkSuite {
     val root = tmpRoot()
     val rows = (0L until 600L).map(i => (i, s"s${i % 3}", i * 2L))
       .toDF("k", "tag", "v").repartitionByRange(6, col("k"))
-    VersionedTable.overwriteWithStats(rows, root, "k")
+    VersionedTable.overwrite(rows, root, Write.stats("k"))
     GraftCatalog.register(spark, "db", "t", root)
     assert(spark.sql("SELECT count(*) AS n FROM graft.db.t")
       .head().getLong(0) == 600L)
@@ -58,10 +59,12 @@ class GraftCatalogSpec extends SparkSuite {
     "TIMESTAMP AS OF read pinned snapshots") {
     import spark.implicits._
     val root = tmpRoot()
-    VersionedTable.overwriteWithStats(
-      (0L until 100L).map(i => (i, i * 2L)).toDF("k", "v"), root, "k")
-    VersionedTable.appendWithStats(
-      (100L until 150L).map(i => (i, i * 2L)).toDF("k", "v"), root, "k")
+    VersionedTable.overwrite(
+      (0L until 100L).map(i => (i, i * 2L)).toDF("k", "v"),
+      root, Write.stats("k"))
+    VersionedTable.append(
+      (100L until 150L).map(i => (i, i * 2L)).toDF("k", "v"),
+      root, Write.stats("k"))
     GraftCatalog.register(spark, "db", "tt", root)
     assert(spark.sql("SELECT count(*) AS n FROM graft.db.tt")
       .head().getLong(0) == 150L)
@@ -169,7 +172,8 @@ class GraftCatalogSpec extends SparkSuite {
     val root = tmpRoot()
     val rows = (0L until 400L).map(i => (i, s"p${i % 4}", i * 3L))
       .toDF("k", "part", "v").repartitionByRange(2, col("k"))
-    VersionedTable.overwritePartitionedWithStats(rows, root, Seq("part"), "k")
+    VersionedTable.overwrite(rows, root,
+      Write(stats = Some(Seq("k")), partitionBy = Seq("part")))
     GraftCatalog.register(spark, "db", "pt", root)
     val one = spark.sql(
       "SELECT k, part FROM graft.db.pt WHERE part = 'p2'")
@@ -179,8 +183,8 @@ class GraftCatalogSpec extends SparkSuite {
       "a partition predicate must prune directories on the DSv2 path")
     // MOR safety: pending tombstones refuse the raw latest read
     val root2 = tmpRoot()
-    VersionedTable.overwriteWithStats(
-      (0L until 50L).map(i => (i, i)).toDF("k", "v"), root2, "k")
+    VersionedTable.overwrite((0L until 50L).map(i => (i, i)).toDF("k", "v"), root2,
+      Write.stats("k"))
     GraftCatalog.register(spark, "db", "mor", root2)
     Tombstones.deleteMor(spark, root2, Seq(1L, 2L).toDF("k"))
     val e = intercept[Exception] {
@@ -204,7 +208,7 @@ class GraftCatalogSpec extends SparkSuite {
     val root = tmpRoot()
     val rows = (0L until 600L).map(i => (i, s"s${i % 3}", i * 2L))
       .toDF("k", "tag", "v").repartitionByRange(6, col("k"))
-    VersionedTable.overwriteWithStats(rows, root, "k")
+    VersionedTable.overwrite(rows, root, Write.stats("k"))
     GraftCatalog.register(spark, "db", "del", root)
     val before = VersionedTable.read(spark, root)
       .select(col("_metadata.file_path")).distinct()
@@ -253,7 +257,7 @@ class GraftCatalogSpec extends SparkSuite {
     val root = tmpRoot()
     val rows = (0L until 300L).map(i => (i, i * 2L)).toDF("k", "v")
       .repartitionByRange(3, col("k"))
-    VersionedTable.overwriteWithStats(rows, root, "k")
+    VersionedTable.overwrite(rows, root, Write.stats("k"))
     GraftCatalog.register(spark, "db", "alt", root)
     val filesBefore = VersionedTable.scanListing(root, Some(0L))
       .map(_.path).toSet
@@ -306,12 +310,12 @@ class GraftCatalogSpec extends SparkSuite {
     "stream rides across the ALTER commit") {
     import spark.implicits._
     val root = tmpRoot()
-    VersionedTable.overwriteWithStats(
-      (0L until 100L).map(i => (i, i)).toDF("k", "v"), root, "k")
+    VersionedTable.overwrite((0L until 100L).map(i => (i, i)).toDF("k", "v"), root,
+      Write.stats("k"))
     (1 to 3).foreach { b =>
-      VersionedTable.appendWithStats(
+      VersionedTable.append(
         (0L until 50L).map(i => (b * 1000L + i, i)).toDF("k", "v"),
-        root, "k")
+        root, Write.stats("k"))
     }
     GraftCatalog.register(spark, "db", "altc", root)
     spark.sql("ALTER TABLE graft.db.altc ADD COLUMNS (score DOUBLE)")
@@ -411,5 +415,43 @@ class GraftCatalogSpec extends SparkSuite {
     intercept[Exception] {
       spark.sql("REPLACE TABLE graft.db.rtas_missing AS SELECT 1 AS k")
     }
+  }
+
+  test("partitioned INSERT records default stats on the non-partition " +
+    "columns: a filter on one prunes files inside each partition") {
+    val root = tmpRoot()
+    GraftCatalog.install(spark)
+    spark.sql(
+      s"""CREATE TABLE graft.db.wps (k BIGINT, v BIGINT, part STRING)
+          PARTITIONED BY (part) LOCATION '$root'""")
+    // three insert tasks: each partition gets three files whose k
+    // ranges are disjoint
+    spark.sql(
+      """INSERT INTO graft.db.wps
+         SELECT id AS k, id * 2 AS v,
+                concat('p', CAST(id % 3 AS STRING)) AS part
+         FROM range(0, 300, 1, 3)""")
+    val total = VersionedTable.fileCount(root)
+    assert(total == 9)
+    assert(VersionedTable.statsRange(root, "k").contains((0L, 299L)))
+    val q = VersionedTable.scan(spark, root).filter(col("k") < 50L)
+    assert(q.count() == 50L)
+    assert(org.apache.spark.sql.graft.GraftScan.filesRead(q) == 3L,
+      "the k stats must prune two of three files in every partition")
+  }
+
+  test("a catalog INSERT through a file: URI location leaves no " +
+    "cwd/file: directory") {
+    val root = tmpRoot()
+    val uri = new java.io.File(root).toURI.toString
+    assert(uri.startsWith("file:"))
+    GraftCatalog.install(spark)
+    spark.sql(s"CREATE TABLE graft.db.uri (k BIGINT) LOCATION '$uri'")
+    spark.sql("INSERT INTO graft.db.uri VALUES (1), (2)")
+    assert(VersionedTable.read(spark, root).count() == 2L)
+    val stray = new java.io.File(System.getProperty("user.dir"),
+      "file:" + new java.io.File(root).getPath)
+    assert(!stray.exists(), s"the location leaked into $stray")
+    spark.sql("DROP TABLE graft.db.uri")
   }
 }

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
+import graft.sources.VersionedTable.Write
 
 /** VersionedTable.scan — the Catalyst-integrated FileIndex: ordinary
   * filters (DataFrame or SQL) prune files at plan time against the
@@ -22,7 +23,7 @@ class GraftScanSpec extends SparkSuite {
       (i, f"2024-${i % 6 + 1}%02d-10", s"s${i % 7}", i.toDouble)
     }.toDF("k", "day", "tag", "v")
       .repartitionByRange(6, col("k"))
-    VersionedTable.overwriteWithStats(rows, root, "k", "day")
+    VersionedTable.overwrite(rows, root, Write.stats("k", "day"))
     root
   }
 
@@ -33,13 +34,8 @@ class GraftScanSpec extends SparkSuite {
     * [[openedFiles]] (distinct input_file_name over surviving rows),
     * this cannot be satisfied vacuously by parquet row-group filtering
     * when the data is clustered, so it is the honest prune measure. */
-  private def selectedFiles(df: org.apache.spark.sql.DataFrame): Long = {
-    val aqe = new org.apache.spark.sql.execution.adaptive
-      .AdaptiveSparkPlanHelper {}
-    aqe.collect(df.queryExecution.executedPlan) {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.map(_.selectedPartitions.totalNumberOfFiles).sum
-  }
+  private def selectedFiles(df: org.apache.spark.sql.DataFrame): Long =
+    org.apache.spark.sql.graft.GraftScan.filesRead(df)
 
   test("plan-time pruning: DataFrame filters on numeric and string " +
     "stats open only intersecting files; answers match readWhere") {
@@ -51,7 +47,8 @@ class GraftScanSpec extends SparkSuite {
       .filter(col("k") >= 100L && col("k") <= 199L)
     assert(openedFiles(num) < total, "numeric filter must prune files")
     assert(num.count() ==
-      VersionedTable.readWhere(spark, root, "k", 100L, 199L).count())
+      VersionedTable.scan(spark, root)
+        .filter(col("k").between(100L, 199L)).count())
     // string range (day is clustered incidentally by k; still prunes
     // when the band structure allows — correctness is the hard assert)
     val str = VersionedTable.scan(spark, root)
@@ -94,9 +91,9 @@ class GraftScanSpec extends SparkSuite {
     import spark.implicits._
     val root = mkTable()
     val v0 = VersionedTable.latestVersion(root).get
-    VersionedTable.appendWithStats(
+    VersionedTable.append(
       Seq((9999L, "2025-01-01", "zz", 0.0)).toDF("k", "day", "tag", "v"),
-      root, "k", "day")
+      root, Write.stats("k", "day"))
     assert(VersionedTable.scan(spark, root, Some(v0)).count() == 600L,
       "a pinned scan must not see later appends")
     assert(VersionedTable.scan(spark, root).count() == 601L)
@@ -116,12 +113,13 @@ class GraftScanSpec extends SparkSuite {
     val root = tmpRoot()
     val rows = (0L until 4096L).map(i => (i % 64L, i / 64L, i))
       .toDF("a", "b", "v")
-    VersionedTable.overwriteZOrdered(rows, root, "a", "b", numFiles = 16)
+    VersionedTable.overwrite(rows, root,
+      Write(zorder = Some(Write.ZOrder(Seq("a", "b"), 16))))
     val boxed = VersionedTable.scan(spark, root)
       .filter(col("a") >= 10L && col("a") <= 20L &&
         col("b") >= 10L && col("b") <= 20L)
-    val viaApi = VersionedTable.readWhereBox(spark, root,
-      Seq(("a", 10L, 20L), ("b", 10L, 20L)))
+    val viaApi = VersionedTable.scan(spark, root)
+      .filter(col("a").between(10L, 20L) && col("b").between(10L, 20L))
     assert(boxed.count() == viaApi.count() && boxed.count() == 121L)
     val opened = openedFiles(boxed)
     assert(opened <= openedFiles(viaApi),
@@ -139,8 +137,10 @@ class GraftScanSpec extends SparkSuite {
     (0 until 4).foreach { b =>
       val batch = (0L until 200L).map(i => (b * 1000L + i, s"v$b"))
         .toDF("id", "s").coalesce(1)
-      if (b == 0) VersionedTable.overwriteWithBloomIndex(batch, root, "id")
-      else VersionedTable.appendWithBloomIndex(batch, root, "id")
+      if (b == 0) VersionedTable.overwrite(batch, root,
+        Write(stats = Some(Seq.empty), bloom = Some(Write.Bloom("id"))))
+      else VersionedTable.append(batch, root,
+        Write(stats = Some(Seq.empty), bloom = Some(Write.Bloom("id"))))
     }
     val hit = VersionedTable.scan(spark, root).filter(col("id") === 2005L)
     assert(hit.count() == 1L)
@@ -211,7 +211,8 @@ class GraftScanSpec extends SparkSuite {
     val root = tmpRoot()
     val rows = (1L to 100L).map(i => (i, i * 3L)).toDF("k", "v")
       .repartitionByRange(4, col("k"))
-    VersionedTable.overwriteWithSums(rows, root, Seq("v"), Seq("k"))
+    VersionedTable.overwrite(rows, root,
+      Write(stats = Some(Seq("k")), sums = Seq("v")))
     val agg = VersionedTable.scan(spark, root)
       .agg(sum(col("v")).as("s"), count(lit(1)).as("n"),
         min(col("k")).as("lo"))
@@ -222,7 +223,7 @@ class GraftScanSpec extends SparkSuite {
       "sum over sum:-stat files must answer from the manifest")
     // the q297-style table records NO sum stats → sums still scan
     val root2 = tmpRoot()
-    VersionedTable.overwriteWithStats(rows, root2, "k")
+    VersionedTable.overwrite(rows, root2, Write.stats("k"))
     val agg2 = VersionedTable.scan(spark, root2).agg(sum(col("v")).as("s"))
     assert(agg2.head().getLong(0) == 3L * 5050L)
     assert(agg2.queryExecution.executedPlan.toString.contains("FileScan"))
@@ -241,7 +242,7 @@ class GraftScanSpec extends SparkSuite {
         java.sql.Date.valueOf(f"2024-$m%02d-15"),
         i / 40.0)
     }.toDF("k", "ts", "d", "v").repartitionByRange(4, col("k"))
-    VersionedTable.overwriteWithStats(rows, root, "k", "ts", "d", "v")
+    VersionedTable.overwrite(rows, root, Write.stats("k", "ts", "d", "v"))
     val total = selectedFiles(VersionedTable.scan(spark, root))
     assert(total == 4L)
     // the canonical 100 TB slice: a timestamp range opens only the
@@ -289,7 +290,7 @@ class GraftScanSpec extends SparkSuite {
     val root2 = tmpRoot()
     val nan = Seq((1L, 0.5), (2L, Double.NaN), (3L, 2.5))
       .toDF("k", "v").coalesce(1)
-    VersionedTable.overwriteWithStats(nan, root2, "k", "v")
+    VersionedTable.overwrite(nan, root2, Write.stats("k", "v"))
     // Spark orders NaN above every value: v > 100.0 RETURNS the NaN
     // row — the skipped stat keeps the file, so the answer is right
     val nq = VersionedTable.scan(spark, root2).filter(col("v") > 100.0)
@@ -317,7 +318,7 @@ class GraftScanSpec extends SparkSuite {
       (i.toLong,
         java.sql.Timestamp.valueOf(f"2024-${i / 100 + 1}%02d-10 12:30:00"))
     }.toDF("k", "ts").repartitionByRange(4, col("k"))
-    VersionedTable.overwriteWithStats(rows, root, "k")
+    VersionedTable.overwrite(rows, root, Write.stats("k"))
     // doctor the manifest into the pre-typed-stats shape: a long-cast
     // triple under the BARE column name carrying epoch SECONDS — a
     // reader comparing micros literals against it would skip every file
@@ -353,15 +354,14 @@ class GraftScanSpec extends SparkSuite {
       java.nio.charset.StandardCharsets.UTF_8)
     // footer-fold path: (k, ts) only — all columns footer-exact
     val rootF = tmpRoot()
-    VersionedTable.overwriteWithStats(
-      ntzRows.drop("s"), rootF, "k", "ts")
+    VersionedTable.overwrite(ntzRows.drop("s"), rootF, Write.stats("k", "ts"))
     // job path: the string stats column disqualifies the footer fold;
     // a non-UTC session zone pins zone-independence of the probe
     val rootJ = tmpRoot()
     val savedTz = spark.conf.get("spark.sql.session.timeZone")
     try {
       spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-      VersionedTable.overwriteWithStats(ntzRows, rootJ, "k", "ts", "s")
+      VersionedTable.overwrite(ntzRows, rootJ, Write.stats("k", "ts", "s"))
     } finally spark.conf.set("spark.sql.session.timeZone", savedTz)
     for (root <- Seq(rootF, rootJ)) {
       assert(VersionedTable.read(spark, root).schema("ts").dataType ==
@@ -381,7 +381,7 @@ class GraftScanSpec extends SparkSuite {
     // stats-less NTZ table doctored with an everything-excluding __ts_
     // bound must keep all files and the full answer
     val rootN = tmpRoot()
-    VersionedTable.overwriteWithStats(ntzRows.drop("s"), rootN, "k")
+    VersionedTable.overwrite(ntzRows.drop("s"), rootN, Write.stats("k"))
     val mfN = new java.io.File(rootN, "_log/000000000000.manifest")
     java.nio.file.Files.write(mfN.toPath, manifestText(rootN)
       .linesIterator.map(_ + "\t__ts_ts\t0\t1").mkString("\n")
@@ -397,7 +397,7 @@ class GraftScanSpec extends SparkSuite {
       (i.toLong,
         java.sql.Timestamp.valueOf(f"2024-${i / 100 + 1}%02d-10 12:30:00"))
     }.toDF("k", "ts").repartitionByRange(4, col("k"))
-    VersionedTable.overwriteWithStats(tzRows, rootR, "k")
+    VersionedTable.overwrite(tzRows, rootR, Write.stats("k"))
     val mfR = new java.io.File(rootR, "_log/000000000000.manifest")
     java.nio.file.Files.write(mfR.toPath, manifestText(rootR)
       .linesIterator.map(_ + "\t__ntz_ts\t0\t1").mkString("\n")
@@ -414,7 +414,7 @@ class GraftScanSpec extends SparkSuite {
     val root = tmpRoot()
     val rows = (0L until 600L).map(i => (i, s"p${i % 5}", i * 2L))
       .toDF("k", "grp", "v").repartitionByRange(6, col("k"))
-    VersionedTable.overwriteWithStats(rows, root, "k")
+    VersionedTable.overwrite(rows, root, Write.stats("k"))
     val v0 = VersionedTable.latestVersion(root).get
     // MOR update then MOR delete — the triad's read side
     Tombstones.updateMor(spark, root, Seq("k"),
@@ -475,8 +475,8 @@ class GraftScanSpec extends SparkSuite {
       (i, s"s${i % 4}", f"2024-${i % 3 + 1}%02d", i * 2L)
     }.toDF("k", "status", "month", "v")
       .repartitionByRange(4, col("k"))
-    VersionedTable.overwritePartitionedWithStats(
-      rows, root, Seq("status"), "k")
+    VersionedTable.overwrite(rows, root,
+      Write(stats = Some(Seq("k")), partitionBy = Seq("status")))
     // values parsed from the path are injected into the rows
     val all = VersionedTable.scan(spark, root)
     assert(all.count() == 1200L)
@@ -513,24 +513,31 @@ class GraftScanSpec extends SparkSuite {
       "SELECT count(*) AS n FROM graft_part_v WHERE status = 's1'")
       .head().getLong(0) == 300L)
     // appends keep the layout; new files join their partitions
-    VersionedTable.appendPartitionedWithStats(
+    VersionedTable.append(
       Seq((5000L, "s2", "2024-04", 1L)).toDF("k", "status", "month", "v"),
-      root, Seq("status"), "k")
+      root, Write(stats = Some(Seq("k")), partitionBy = Seq("status")))
     assert(VersionedTable.scan(spark, root)
       .filter(col("status") === "s2").count() == 301L)
     // bare count(*) still folds from the manifest (partition-blind)
     val bare = VersionedTable.scan(spark, root).groupBy().count()
     assert(bare.head().getLong(0) == 1201L)
     assert(!bare.queryExecution.executedPlan.toString.contains("FileScan"))
-    // flat writers REFUSE a partitioned table: flat staging would
+    // a flat write REFUSES a partitioned table: flat staging would
     // commit files whose partition values read back NULL (and a
-    // partition filter would silently prune the new rows away)
+    // partition filter would silently prune the new rows away) — a
+    // flat overwrite is refused, a plain append takes the table's own
+    // partitioning
     val e = intercept[IllegalArgumentException] {
-      VersionedTable.append(
+      VersionedTable.overwrite(
         Seq((1L, "sX", "2024-01", 1L)).toDF("k", "status", "month", "v"),
         root)
     }
     assert(e.getMessage.contains("Hive-partitioned"))
+    VersionedTable.append(
+      Seq((1L, "sX", "2024-01", 1L)).toDF("k", "status", "month", "v"),
+      root)
+    assert(VersionedTable.scan(spark, root)
+      .filter(col("status") === "sX").count() == 1L)
   }
 
   test("partitioned DML: delete/update/merge rewrite Hive-layout " +
@@ -542,8 +549,8 @@ class GraftScanSpec extends SparkSuite {
     val rows = (0L until 800L).map { i =>
       (i, s"s${i % 4}", i * 2L)
     }.toDF("k", "status", "v").repartitionByRange(4, col("k"))
-    VersionedTable.overwritePartitionedWithStats(
-      rows, root, Seq("status"), "k")
+    VersionedTable.overwrite(rows, root,
+      Write(stats = Some(Seq("k")), partitionBy = Seq("status")))
     // DELETE with a predicate ON the partition column
     VersionedTable.delete(spark, root,
       col("status") === "s3" && col("k") < 400L)
@@ -594,15 +601,13 @@ class GraftScanSpec extends SparkSuite {
     VersionedTable.overwrite(
       Seq((1L, "a", 2L)).toDF("k", "status", "v"), root)
     val e = intercept[IllegalArgumentException] {
-      VersionedTable.overwritePartitionedWithStats(
-        Seq((1L, "a", 2L)).toDF("k", "status", "v"), root,
-        Seq("status"), "k")
+      VersionedTable.overwrite(Seq((1L, "a", 2L)).toDF("k", "status", "v"), root,
+        Write(stats = Some(Seq("k")), partitionBy = Seq("status")))
     }
     assert(e.getMessage.contains("flat-file versions"))
     val e2 = intercept[IllegalArgumentException] {
-      VersionedTable.appendPartitionedWithStats(
-        Seq((1L, "b", 3L)).toDF("k", "status", "v"), root,
-        Seq("status"), "k")
+      VersionedTable.append(Seq((1L, "b", 3L)).toDF("k", "status", "v"), root,
+        Write(stats = Some(Seq("k")), partitionBy = Seq("status")))
     }
     assert(e2.getMessage.contains("flat-file versions"))
     // the flat table is untouched and fully readable
@@ -622,7 +627,8 @@ class GraftScanSpec extends SparkSuite {
     val threads = Seq(Seq("a"), Seq("b")).map { pc =>
       new Thread(() => {
         try {
-          VersionedTable.overwritePartitionedWithStats(df2, root2, pc, "k")
+          VersionedTable.overwrite(df2, root2,
+            Write(stats = Some(Seq("k")), partitionBy = pc))
           ()
         } catch { case t: Throwable => errs.add(t); () }
       })

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
+import graft.sources.VersionedTable.Write
 
 /** GraftSql — the SQL DML router: INSERT/DELETE/UPDATE/MERGE text hits
   * the SAME engine paths as the Scala API (file-pruned COW, atomic
@@ -310,11 +311,12 @@ class GraftSqlSpec extends SparkSuite {
     import spark.implicits._
     val root = tmpRoot()
     val name = s"gmx_${math.abs(root.hashCode)}"
-    VersionedTable.overwriteWithStats(
-      (0L until 200L).map(i => (i, i * 2L)).toDF("k", "v"), root, "k")
-    (1 to 3).foreach(b => VersionedTable.appendWithStats(
+    VersionedTable.overwrite(
+      (0L until 200L).map(i => (i, i * 2L)).toDF("k", "v"),
+      root, Write.stats("k"))
+    (1 to 3).foreach(b => VersionedTable.append(
       (0L until 100L).map(i => (b * 1000L + i, i)).toDF("k", "v"),
-      root, "k"))
+      root, Write.stats("k")))
     GraftSql.register(spark, name, root)
     val h0 = GraftSql.execute(spark, s"DESCRIBE HISTORY $name").collect()
     assert(h0.map(_.getLong(0)).toSeq == Seq(0L, 1L, 2L, 3L))
@@ -385,10 +387,10 @@ class GraftSqlSpec extends SparkSuite {
     import spark.implicits._
     val root = tmpRoot()
     val name = s"gmeta_${math.abs(root.hashCode)}"
-    VersionedTable.overwritePartitionedWithStats(
+    VersionedTable.overwrite(
       Seq((1L, 10L, "a"), (2L, 20L, "b"), (3L, 30L, "a"))
         .toDF("k", "v", "tag"),
-      root, Seq("tag"))
+      root, Write(stats = Some(Seq.empty), partitionBy = Seq("tag")))
     GraftSql.register(spark, name, root)
     // SHOW TABLES lists the registered name with its location+version
     val st = GraftSql.execute(spark, "SHOW TABLES").collect()

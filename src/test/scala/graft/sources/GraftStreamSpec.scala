@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSuite
+import graft.sources.VersionedTable.Write
 
 /** VersionedTable.scanStream — version-pinned micro-batches through
   * the pruning FileIndex: filters prune per batch, offsets are table
@@ -20,8 +21,8 @@ class GraftStreamSpec extends SparkSuite {
     import spark.implicits._
     val rows = (lo until hi).map(i => (i, s"s${i % 3}", i * 2L))
       .toDF("k", "tag", "v").repartitionByRange(3, col("k"))
-    if (overwrite) VersionedTable.overwriteWithStats(rows, root, "k")
-    else VersionedTable.appendWithStats(rows, root, "k")
+    if (overwrite) VersionedTable.overwrite(rows, root, Write.stats("k"))
+    else VersionedTable.append(rows, root, Write.stats("k"))
     ()
   }
 
@@ -33,7 +34,8 @@ class GraftStreamSpec extends SparkSuite {
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
                        id: Long) =>
         if (!batch.isEmpty)
-          VersionedTable.appendTxn(batch.toDF(), out, "graft_stream_spec", id)
+          VersionedTable.append(batch.toDF(), out,
+            Write(txn = Some("graft_stream_spec" -> id)))
         ()
       }
       .option("checkpointLocation", ckpt)
@@ -94,8 +96,8 @@ class GraftStreamSpec extends SparkSuite {
     val ckpt = Files.createTempDirectory("graft_stream_ck3").toString
     val rows = (0L until 400L).map(i => (i, s"p${i % 4}", i * 3L))
       .toDF("k", "part", "v").repartitionByRange(2, col("k"))
-    VersionedTable.overwritePartitionedWithStats(
-      rows, root, Seq("part"), "k")
+    VersionedTable.overwrite(rows, root,
+      Write(stats = Some(Seq("k")), partitionBy = Seq("part")))
     var got = Seq.empty[(Long, String)]
     val q = VersionedTable.scanStream(spark, root)
       .filter(col("part") === "p2")
@@ -157,7 +159,8 @@ class GraftStreamSpec extends SparkSuite {
       .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
                        id: Long) =>
         if (!b.isEmpty)
-          VersionedTable.appendTxn(b.toDF(), out, "graft_stream_sv", id)
+          VersionedTable.append(b.toDF(), out,
+            Write(txn = Some("graft_stream_sv" -> id)))
         ()
       }
       .option("checkpointLocation", ckpt)
@@ -268,9 +271,9 @@ class GraftStreamSpec extends SparkSuite {
     val ckpt = Files.createTempDirectory("graft_sink_ck2").toString
     mkTable(src, 0L, 30L, overwrite = true)
     // catalog table, Hive-partitioned by tag
-    VersionedTable.overwritePartitionedWithStats(
+    VersionedTable.overwrite(
       Seq.empty[(Long, Long, String)].toDF("k", "v", "tag"),
-      out, Seq("tag"))
+      out, Write(stats = Some(Seq.empty), partitionBy = Seq("tag")))
     org.apache.spark.sql.graft.GraftCatalog.register(
       spark, "snk", "t", out)
     val q = VersionedTable.scanStream(spark, src)
@@ -304,9 +307,10 @@ class GraftStreamSpec extends SparkSuite {
     VersionedTable.overwrite(
       Seq((1L, 2L, "x")).toDF("k", "v", "tag"), flat)
     intercept[Exception] {
-      VersionedTable.appendPartitionedTxn(
-        Seq((2L, 3L, "y")).toDF("k", "v", "tag"),
-        flat, Seq("tag"), "app", 0L)
+      VersionedTable.append(Seq((2L, 3L, "y")).toDF("k", "v", "tag"), flat,
+        Write(stats = Some(Seq.empty),
+              partitionBy = Seq("tag"),
+              txn = Some("app" -> 0L)))
     }
     // Complete mode into a partitioned table refuses at SINK
     // CONSTRUCTION (before any batch runs)

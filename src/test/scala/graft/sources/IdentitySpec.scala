@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 import graft.SparkSuite
+import graft.sources.VersionedTable.Write
 
 /** IDENTITY columns (the Delta GENERATED ALWAYS AS IDENTITY role — the
   * transactional fix for the reference's max-key continuation
@@ -47,7 +48,7 @@ class IdentitySpec extends SparkSuite {
     assert(e.getMessage.contains("GENERATED ALWAYS"), e.getMessage)
     // the stats-path append without the column refuses with guidance
     val e2 = intercept[RuntimeException] {
-      VersionedTable.appendWithStats(Seq(("w")).toDF("s"), root)
+      VersionedTable.append(Seq(("w")).toDF("s"), root, Write.stats())
     }
     assert(e2.getMessage.contains("identity column k"), e2.getMessage)
     // refusal matrix: non-integral, second identity, rename, widen
@@ -210,8 +211,8 @@ class IdentitySpec extends SparkSuite {
     // manual keys would leave the mark behind and a later fill would
     // collide (the silent-acceptance hole this test pins shut)
     val e1 = intercept[RuntimeException] {
-      VersionedTable.appendWithStats(
-        Seq((6L, "manual")).toDF("k", "s"), root, "k")
+      VersionedTable.append(Seq((6L, "manual")).toDF("k", "s"), root,
+        Write.stats("k"))
     }
     assert(e1.getMessage.contains("GENERATED ALWAYS"), e1.getMessage)
     // UPDATE may not rewrite the key

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
 import graft.sources.VersionedTable.MergeClause._
+import graft.sources.VersionedTable.Write
 
 /** Conflict-aware commit reconciliation (the Delta conflict-class
   * role): a MERGE that loses its commit race to a PURE APPEND whose
@@ -20,9 +21,10 @@ class MergeRebaseSpec extends SparkSuite {
   private def freshTable(): String = {
     import spark.implicits._
     val root = Files.createTempDirectory("graft_rebase").resolve("t").toString
-    VersionedTable.overwriteWithStats(
+    VersionedTable.overwrite(
       (1L to 20L).map(i => (i, s"s$i", i * 10L)).toDF("k", "s", "v")
-        .repartitionByRange(2, col("k")), root, "k")
+        .repartitionByRange(2, col("k")),
+      root, Write.stats("k"))
     root
   }
 
@@ -42,8 +44,10 @@ class MergeRebaseSpec extends SparkSuite {
         beforeCommit = () => {
           computes += 1
           if (computes == 1)
-            VersionedTable.appendWithStats( // keys 100.. disjoint of 5
-              Seq((100L, "r", 1L)).toDF("k", "s", "v"), root, "k")
+            VersionedTable.append(
+              // keys 100.. disjoint of 5
+              Seq((100L, "r", 1L)).toDF("k", "s", "v"),
+              root, Write.stats("k"))
         })
     }
     assert(computes == 1,
@@ -67,8 +71,10 @@ class MergeRebaseSpec extends SparkSuite {
       beforeCommit = () => {
         computes += 1
         if (computes == 1)
-          VersionedTable.appendWithStats( // key 30 INSIDE [5, 30]
-            Seq((30L, "r", 100L)).toDF("k", "s", "v"), root, "k")
+          VersionedTable.append(
+            // key 30 INSIDE [5, 30]
+            Seq((30L, "r", 100L)).toDF("k", "s", "v"),
+            root, Write.stats("k"))
       })
     assert(computes == 2,
       s"an overlapping append must recompute ($computes)")
@@ -108,15 +114,18 @@ class MergeRebaseSpec extends SparkSuite {
     val root = Files.createTempDirectory("graft_rebase_c")
       .resolve("t").toString
     // one BIG file (keys 1-50, the merge's target) + two small ones
-    VersionedTable.overwriteWithStats(
+    VersionedTable.overwrite(
       (1L to 50L).map(i => (i, s"s$i", i * 10L)).toDF("k", "s", "v")
-        .coalesce(1), root, "k")
-    VersionedTable.appendWithStats(
+        .coalesce(1),
+      root, Write.stats("k"))
+    VersionedTable.append(
       (100L to 110L).map(i => (i, s"s$i", i)).toDF("k", "s", "v")
-        .coalesce(1), root, "k")
-    VersionedTable.appendWithStats(
+        .coalesce(1),
+      root, Write.stats("k"))
+    VersionedTable.append(
       (200L to 210L).map(i => (i, s"s$i", i)).toDF("k", "s", "v")
-        .coalesce(1), root, "k")
+        .coalesce(1),
+      root, Write.stats("k"))
     val sizes = VersionedTable.listingPaths(
       root, VersionedTable.latestVersion(root).get)
       .map(p => new java.io.File(p).length()).sorted
@@ -254,8 +263,10 @@ class MergeRebaseSpec extends SparkSuite {
       beforeCommit = () => {
         computes += 1
         if (computes == 1)
-          VersionedTable.appendWithStats( // k=50: predicate-free
-            Seq((50L, "r", 1L)).toDF("k", "s", "v"), root, "k")
+          VersionedTable.append(
+            // k=50: predicate-free
+            Seq((50L, "r", 1L)).toDF("k", "s", "v"),
+            root, Write.stats("k"))
       })
     assert(computes == 1, s"predicate-free append must rebase ($computes)")
     val st1 = stateOf(root)
@@ -266,8 +277,8 @@ class MergeRebaseSpec extends SparkSuite {
       beforeCommit = () => {
         computes2 += 1
         if (computes2 == 1)
-          VersionedTable.appendWithStats(
-            Seq((60L, "m", 1L)).toDF("k", "s", "v"), root, "k")
+          VersionedTable.append(Seq((60L, "m", 1L)).toDF("k", "s", "v"), root,
+            Write.stats("k"))
       })
     assert(computes2 == 2, s"a matching append must recompute ($computes2)")
     val st2 = stateOf(root)
@@ -285,8 +296,8 @@ class MergeRebaseSpec extends SparkSuite {
       beforeCommit = () => {
         computes += 1
         if (computes == 1)
-          VersionedTable.appendWithStats(
-            Seq((70L, "r", 1L)).toDF("k", "s", "v"), root, "k")
+          VersionedTable.append(Seq((70L, "r", 1L)).toDF("k", "s", "v"), root,
+            Write.stats("k"))
       })
     assert(computes == 1, s"predicate-free append must rebase ($computes)")
     assert(stateOf(root)(2L) == ("s2", 999L))
@@ -296,8 +307,8 @@ class MergeRebaseSpec extends SparkSuite {
       beforeCommit = () => {
         computes2 += 1
         if (computes2 == 1)
-          VersionedTable.appendWithStats(
-            Seq((80L, "m", 1L)).toDF("k", "s", "v"), root, "k")
+          VersionedTable.append(Seq((80L, "m", 1L)).toDF("k", "s", "v"), root,
+            Write.stats("k"))
       })
     assert(computes2 == 2, s"a matching append must recompute ($computes2)")
     val st = stateOf(root)
@@ -317,8 +328,8 @@ class MergeRebaseSpec extends SparkSuite {
       beforeCommit = () => {
         computes += 1
         if (computes == 1)
-          VersionedTable.appendWithStats(
-            Seq((100L, "r", 1L)).toDF("k", "s", "v"), root, "k")
+          VersionedTable.append(Seq((100L, "r", 1L)).toDF("k", "s", "v"), root,
+            Write.stats("k"))
       })
     assert(computes == 2,
       s"by-source semantics must recompute ($computes)")

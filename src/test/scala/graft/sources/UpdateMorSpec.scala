@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
+import graft.sources.VersionedTable.Write
 
 /** VersionedTable.update (COW UPDATE WHERE) and Tombstones
   * (merge-on-read delete): SQL semantics, file pruning, laziness,
@@ -63,8 +64,9 @@ class UpdateMorSpec extends SparkSuite {
   test("tombstones: MOR delete leaves files untouched; purge ≡ COW") {
     import spark.implicits._
     val root = freshRoot("mor")
-    VersionedTable.overwriteWithStats(
-      (1L to 100L).map(i => (i, s"s$i", i * 1.0)).toDF("k", "s", "v"), root)
+    VersionedTable.overwrite(
+      (1L to 100L).map(i => (i, s"s$i", i * 1.0)).toDF("k", "s", "v"),
+      root, Write.stats())
     val filesBefore = VersionedTable.read(spark, root).inputFiles.toSet
     Tombstones.deleteMor(spark, root,
       spark.range(1, 101).filter(col("id") % 3 === 0).select(col("id").as("k")))
@@ -93,14 +95,16 @@ class UpdateMorSpec extends SparkSuite {
     val gates = Seq(
       "no_nulls" -> (sum(col("v").isNull.cast("long")) === 0L),
       "min_rows" -> (count(lit(1)) >= 2L))
-    VersionedTable.appendExpecting(
-      Seq((2L, "b", 2.0), (3L, "c", 3.0)).toDF("k", "s", "v"), root, gates)
+    VersionedTable.append(
+      Seq((2L, "b", 2.0), (3L, "c", 3.0)).toDF("k", "s", "v"),
+      root, Write(stats = Some(Seq.empty), expect = gates))
     assert(VersionedTable.read(spark, root).count() == 3L)
     val err = intercept[IllegalArgumentException] {
-      VersionedTable.appendExpecting(
+      VersionedTable.append(
         Seq((4L, "d", null.asInstanceOf[java.lang.Double]))
           .toDF("k", "s", "v")
-          .select(col("k"), col("s"), col("v").cast("double")), root, gates)
+          .select(col("k"), col("s"), col("v").cast("double")),
+        root, Write(stats = Some(Seq.empty), expect = gates))
     }
     assert(err.getMessage.contains("no_nulls") &&
       err.getMessage.contains("min_rows"),
@@ -135,12 +139,13 @@ class UpdateMorSpec extends SparkSuite {
     VersionedTable.setConstraints(root, Seq(
       "v_pos" -> "v > 0", "s_nonnull" -> "s IS NOT NULL"))
     VersionedTable.overwrite(Seq((1L, "a", 1.0)).toDF("k", "s", "v"), root)
-    VersionedTable.appendConstrained(
-      Seq((2L, "b", 2.0)).toDF("k", "s", "v"), root)
+    VersionedTable.append(Seq((2L, "b", 2.0)).toDF("k", "s", "v"), root,
+      Write.stats())
     assert(VersionedTable.read(spark, root).count() == 2L)
     val err = intercept[IllegalArgumentException] {
-      VersionedTable.appendConstrained(
-        Seq((3L, null.asInstanceOf[String], -1.0)).toDF("k", "s", "v"), root)
+      VersionedTable.append(
+        Seq((3L, null.asInstanceOf[String], -1.0)).toDF("k", "s", "v"),
+        root, Write.stats())
     }
     assert(err.getMessage.contains("v_pos") &&
       err.getMessage.contains("s_nonnull"))
@@ -152,8 +157,9 @@ class UpdateMorSpec extends SparkSuite {
     // tables without a contract append freely
     val root2 = freshRoot("nocons")
     VersionedTable.overwrite(Seq((1L, "a", 1.0)).toDF("k", "s", "v"), root2)
-    VersionedTable.appendConstrained(
-      Seq((2L, null.asInstanceOf[String], -5.0)).toDF("k", "s", "v"), root2)
+    VersionedTable.append(
+      Seq((2L, null.asInstanceOf[String], -5.0)).toDF("k", "s", "v"),
+      root2, Write.stats())
     assert(VersionedTable.read(spark, root2).count() == 2L)
     // the unified JSON store ESCAPES separators — an expression
     // carrying a newline round-trips intact instead of corrupting the

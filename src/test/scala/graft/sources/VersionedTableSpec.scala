@@ -3,8 +3,10 @@ package graft.sources
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftScan
 
 import graft.SparkSuite
+import graft.sources.VersionedTable.Write
 
 class VersionedTableSpec extends SparkSuite {
 
@@ -37,8 +39,8 @@ class VersionedTableSpec extends SparkSuite {
     // a concurrent/crashed writer lands an unpublished version on top
     VersionedTable.append(Seq((99L, "rogue")).toDF("k", "v"), root)
     // appendOnto(base): committed content = base + batch, rogue excluded
-    val v2 = VersionedTable.appendOnto(
-      Seq((3L, "c")).toDF("k", "v"), root, base)
+    val v2 = VersionedTable.append(Seq((3L, "c")).toDF("k", "v"), root,
+      Write(onto = Some(base)))
     assert(VersionedTable.readVersion(spark, root, v2)
       .collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L))
     // the rogue version itself still time-travels (orphan, not erased)
@@ -54,46 +56,29 @@ class VersionedTableSpec extends SparkSuite {
     // uncontended fast path: appendOnto(latest) == plain append content
     val root2 = tmpRoot()
     val b2 = VersionedTable.overwrite(Seq((1L, "a")).toDF("k", "v"), root2)
-    val n2 = VersionedTable.appendOnto(
-      Seq((2L, "b")).toDF("k", "v"), root2, b2)
+    val n2 = VersionedTable.append(Seq((2L, "b")).toDF("k", "v"), root2,
+      Write(onto = Some(b2)))
     assert(n2 == b2 + 1)
     assert(VersionedTable.read(spark, root2).count() == 2)
     // bloom variant keeps the point-probe prune on the new files
     val root3 = tmpRoot()
-    val b3 = VersionedTable.overwriteWithBloomIndex(
-      (0L until 100L).map(i => (i, s"x$i")).toDF("id", "s"), root3, "id")
-    VersionedTable.appendWithBloomIndex(
-      Seq((777L, "rogue")).toDF("id", "s"), root3, "id")
-    val v3 = VersionedTable.appendOntoWithBloomIndex(
-      (100L until 200L).map(i => (i, s"x$i")).toDF("id", "s"), root3, b3, "id")
-    val probed = VersionedTable.readWhereEq(spark, root3, "id",
-      Seq(150L), atVersion = Some(v3))
+    val b3 = VersionedTable.overwrite(
+      (0L until 100L).map(i => (i, s"x$i")).toDF("id", "s"),
+      root3, Write(stats = Some(Seq.empty), bloom = Some(Write.Bloom("id"))))
+    VersionedTable.append(Seq((777L, "rogue")).toDF("id", "s"), root3,
+      Write(stats = Some(Seq.empty), bloom = Some(Write.Bloom("id"))))
+    val v3 = VersionedTable.append(
+      (100L until 200L).map(i => (i, s"x$i")).toDF("id", "s"),
+      root3,
+      Write(stats = Some(Seq.empty),
+            bloom = Some(Write.Bloom("id")),
+            onto = Some(b3)))
+    val probed = VersionedTable.scan(spark, root3, Some(v3))
+      .filter(col("id").isin(150L))
     assert(probed.count() == 1L)
-    assert(probed.inputFiles.length <
+    assert(GraftScan.filesRead(probed) <
       VersionedTable.readVersion(spark, root3, v3).inputFiles.length)
     assert(VersionedTable.readVersion(spark, root3, v3).count() == 200L)
-  }
-
-  test("appendAutoCompact: the file-count trigger folds small files, " +
-    "rows unchanged, reads open fewer files") {
-    import spark.implicits._
-    val root = tmpRoot()
-    // 6 one-row appends under a 5-file trigger: the 5th append fires
-    // the inline compaction, the 6th starts accumulating again
-    for (i <- 1 to 6)
-      VersionedTable.appendAutoCompact(
-        Seq((i.toLong, s"v$i")).toDF("k", "v"), root,
-        autoCompactFiles = 5, statsCols = Seq("k"))
-    val lines = VersionedTable.read(spark, root)
-    assert(lines.count() == 6, "compaction must never change rows")
-    assert(lines.collect().map(_.getAs[Long]("k")).sorted.toSeq
-      == (1L to 6L))
-    // listing after: 1 packed file (from the trigger at 5) + 1 new
-    val opened = lines.inputFiles.length
-    assert(opened <= 2, s"expected <= 2 files after auto-compaction, got $opened")
-    // stats survive the fold: metadata count + range still answer
-    assert(VersionedTable.countRows(root).contains(6L))
-    assert(VersionedTable.statsRange(root, "k").contains((1L, 6L)))
   }
 
   test("txn state survives manifest expiry: checkpoints carry the " +
@@ -101,10 +86,11 @@ class VersionedTableSpec extends SparkSuite {
     import spark.implicits._
     val root = tmpRoot()
     // two idempotent writers; "cold" stamps early then goes quiet
-    VersionedTable.appendTxn(Seq((0, "z")).toDF("k", "v"), root, "cold", 7L)
+    VersionedTable.append(Seq((0, "z")).toDF("k", "v"), root,
+      Write(txn = Some("cold" -> 7L)))
     for (i <- 0L to 4L)
-      VersionedTable.appendTxn(
-        Seq((i.toInt, "a")).toDF("k", "v"), root, "hot", i)
+      VersionedTable.append(Seq((i.toInt, "a")).toDF("k", "v"), root,
+        Write(txn = Some("hot" -> i)))
     // many non-stamped commits push cold's manifest deep into history
     for (i <- 0 until 20)
       VersionedTable.append(Seq((100 + i, "p")).toDF("k", "v"), root)
@@ -120,11 +106,12 @@ class VersionedTableSpec extends SparkSuite {
     assert(VersionedTable.latestTxn(root, "never").isEmpty)
     // the exactly-once contract holds post-vacuum: replays still no-op
     val v = VersionedTable.latestVersion(root).get
-    assert(VersionedTable.appendTxn(
-      Seq((0, "z")).toDF("k", "v"), root, "cold", 7L) == v)
+    assert(VersionedTable.append(Seq((0, "z")).toDF("k", "v"), root,
+      Write(txn = Some("cold" -> 7L))) == v)
     assert(VersionedTable.latestVersion(root).contains(v))
     // and genuinely new batches still commit + re-stamp
-    VersionedTable.appendTxn(Seq((1, "z2")).toDF("k", "v"), root, "cold", 8L)
+    VersionedTable.append(Seq((1, "z2")).toDF("k", "v"), root,
+      Write(txn = Some("cold" -> 8L)))
     assert(VersionedTable.latestTxn(root, "cold").contains(8L))
     // reads stay clean across all of it
     assert(VersionedTable.read(spark, root).count() == 27)
@@ -138,27 +125,30 @@ class VersionedTableSpec extends SparkSuite {
       ("2024-04-21", 4L), ("2024-05-09", 5L), ("2024-06-30", 6L))
       .toDF("day", "v").repartitionByRange(3, col("day"))
     // ONE statsCols argument covers string and numeric columns alike
-    VersionedTable.overwriteWithStats(rows, root, "day", "v")
+    VersionedTable.overwrite(rows, root, Write.stats("day", "v"))
     val total = VersionedTable.read(spark, root).inputFiles.length
-    val sliced = VersionedTable.readWhereString(spark, root, "day",
-      "2024-02-01", "2024-03-31")
+    val sliced = VersionedTable.scan(spark, root)
+      .filter(col("day").between("2024-02-01", "2024-03-31"))
     assert(sliced.collect().map(_.getLong(1)).sorted.toSeq == Seq(2L, 3L))
-    assert(sliced.inputFiles.length < total,
+    assert(GraftScan.filesRead(sliced) < total,
       "a string slice must open fewer files than the table holds")
     // metadata-only range over the string stats
     assert(VersionedTable.statsRangeString(root, "day")
       .contains(("2024-01-03", "2024-06-30")))
     // numeric stats on the same commit still serve
-    assert(VersionedTable.readWhere(spark, root, "v", 5L, 6L)
+    assert(VersionedTable.scan(spark, root)
+      .filter(col("v").between(5L, 6L))
       .count() == 2L)
     assert(VersionedTable.countRows(root).contains(6L))
     // oversized key: no stat for its file (a truncated max would lie);
     // reads keep the file conservatively and answers stay exact
     val root2 = tmpRoot()
-    VersionedTable.overwriteWithStats(
+    VersionedTable.overwrite(
       Seq(("x" * 80, 1L), ("abc", 2L)).toDF("k", "v")
-        .repartitionByRange(2, col("k")), root2, "k")
-    assert(VersionedTable.readWhereString(spark, root2, "k", "a", "b")
+        .repartitionByRange(2, col("k")),
+      root2, Write.stats("k"))
+    assert(VersionedTable.scan(spark, root2)
+      .filter(col("k").between("a", "b"))
       .collect().map(_.getLong(1)).toSeq == Seq(2L))
     assert(VersionedTable.statsRangeString(root2, "k").isEmpty,
       "an oversized value must force the conservative None")
@@ -172,9 +162,9 @@ class VersionedTableSpec extends SparkSuite {
     // bytes sort ABOVE — Java-order pruning would skip its file
     val rows = Seq(("😀", 1L), ("�", 2L), ("abc", 3L))
       .toDF("k", "v").repartitionByRange(3, col("k"))
-    VersionedTable.overwriteWithStats(rows, root, "k")
-    val got = VersionedTable.readWhereString(spark, root, "k",
-      "�", "😀")
+    VersionedTable.overwrite(rows, root, Write.stats("k"))
+    val got = VersionedTable.scan(spark, root)
+      .filter(col("k").between("�", "😀"))
     assert(got.collect().map(_.getLong(1)).sorted.toSeq == Seq(1L, 2L),
       "byte-order BETWEEN must keep the emoji row")
     // the metadata fold picks the byte-order extremum (Java order
@@ -194,7 +184,8 @@ class VersionedTableSpec extends SparkSuite {
     "stamps: the walk continues past them and re-aggregates") {
     import spark.implicits._
     val root = tmpRoot()
-    VersionedTable.appendTxn(Seq((0, "z")).toDF("k", "v"), root, "app", 9L)
+    VersionedTable.append(Seq((0, "z")).toDF("k", "v"), root,
+      Write(txn = Some("app" -> 9L)))
     // push past the checkpoint cadence so a checkpoint lands above the
     // stamp, then STRIP its #txn namespace — a pre-upgrade checkpoint
     for (i <- 0 until 12)
@@ -211,8 +202,8 @@ class VersionedTableSpec extends SparkSuite {
     assert(VersionedTable.latestTxn(root, "app").contains(9L),
       "legacy checkpoint must not hide an older txn stamp")
     val v = VersionedTable.latestVersion(root).get
-    assert(VersionedTable.appendTxn(
-      Seq((0, "z")).toDF("k", "v"), root, "app", 9L) == v, "replay no-op")
+    assert(VersionedTable.append(Seq((0, "z")).toDF("k", "v"), root,
+      Write(txn = Some("app" -> 9L))) == v, "replay no-op")
     // the NEXT txn-aware checkpoint re-aggregates the recovered state:
     // after it, even vacuuming away the stamped manifest keeps txn 9
     for (i <- 0 until 8)
@@ -227,19 +218,19 @@ class VersionedTableSpec extends SparkSuite {
     import spark.implicits._
     val root = tmpRoot()
     // fresh table: appendTxn bootstraps version 0 (full listing + stamp)
-    val v0 = VersionedTable.appendTxn(
-      Seq((1, "a")).toDF("k", "v"), root, "job", 0L)
+    val v0 = VersionedTable.append(Seq((1, "a")).toDF("k", "v"), root,
+      Write(txn = Some("job" -> 0L)))
     assert(v0 == 0L)
     assert(VersionedTable.latestTxn(root, "job").contains(0L))
     assert(VersionedTable.latestTxn(root, "other").isEmpty)
-    val v1 = VersionedTable.appendTxn(
-      Seq((2, "b")).toDF("k", "v"), root, "job", 1L)
+    val v1 = VersionedTable.append(Seq((2, "b")).toDF("k", "v"), root,
+      Write(txn = Some("job" -> 1L)))
     assert(v1 == 1L && VersionedTable.latestTxn(root, "job").contains(1L))
     // REPLAY of batch 1 (and of anything older): no version, no rows
-    assert(VersionedTable.appendTxn(
-      Seq((2, "b")).toDF("k", "v"), root, "job", 1L) == 1L)
-    assert(VersionedTable.appendTxn(
-      Seq((1, "a")).toDF("k", "v"), root, "job", 0L) == 1L)
+    assert(VersionedTable.append(Seq((2, "b")).toDF("k", "v"), root,
+      Write(txn = Some("job" -> 1L))) == 1L)
+    assert(VersionedTable.append(Seq((1, "a")).toDF("k", "v"), root,
+      Write(txn = Some("job" -> 0L))) == 1L)
     assert(VersionedTable.latestVersion(root).contains(1L))
     assert(VersionedTable.read(spark, root).count() == 2)
     // interleaved plain appends don't disturb the recorded txn
@@ -248,16 +239,16 @@ class VersionedTableSpec extends SparkSuite {
     // txn lines survive the checkpoint cadence: push past the
     // checkpoint interval, then read back listing + txn + time travel
     for (i <- 2L to 12L)
-      VersionedTable.appendTxn(
-        Seq((100 + i.toInt, "x")).toDF("k", "v"), root, "job", i)
+      VersionedTable.append(Seq((100 + i.toInt, "x")).toDF("k", "v"), root,
+        Write(txn = Some("job" -> i)))
     assert(VersionedTable.latestTxn(root, "job").contains(12L))
     assert(VersionedTable.read(spark, root).count() == 14)
     assert(VersionedTable.readVersion(spark, root, 1).count() == 2,
       "time travel across txn-stamped manifests")
     // appId validation: separators would corrupt the manifest grammar
     intercept[IllegalArgumentException] {
-      VersionedTable.appendTxn(
-        Seq((9, "z")).toDF("k", "v"), root, "bad\tapp", 99L)
+      VersionedTable.append(Seq((9, "z")).toDF("k", "v"), root,
+        Write(txn = Some("bad\tapp" -> 99L)))
     }
   }
 
@@ -477,16 +468,18 @@ class VersionedTableSpec extends SparkSuite {
     // 100 keys range-clustered into 5 disjoint files
     val df = spark.range(100).select(col("id").as("k"),
       (col("id") * 2).as("v")).repartitionByRange(5, col("k"))
-    VersionedTable.overwriteWithStats(df, root, "k")
+    VersionedTable.overwrite(df, root, Write.stats("k"))
     val all = VersionedTable.read(spark, root)
     assert(all.inputFiles.length == 5)
-    val narrow = VersionedTable.readWhere(spark, root, "k", 40, 45)
-    assert(narrow.inputFiles.length < 5, narrow.inputFiles.mkString(","))
+    val narrow = VersionedTable.scan(spark, root)
+      .filter(col("k").between(40, 45))
+    assert(GraftScan.filesRead(narrow) < 5)
     val expect = all.filter(col("k").between(40, 45))
       .as[(Long, Long)].collect().toSet
     assert(narrow.as[(Long, Long)].collect().toSet == expect && expect.size == 6)
     // out-of-range read: zero rows, and only the conservative fallback scan
-    assert(VersionedTable.readWhere(spark, root, "k", 1000, 2000).count() == 0)
+    assert(VersionedTable.scan(spark, root)
+      .filter(col("k").between(1000, 2000)).count() == 0)
   }
 
   test("countRows/statsRange: metadata-only answers; conservative None on gaps") {
@@ -494,15 +487,15 @@ class VersionedTableSpec extends SparkSuite {
     val root = tmpRoot()
     val df = spark.range(100).select(col("id").as("k"), (col("id") * 2).as("v"))
       .repartitionByRange(4, col("k"))
-    VersionedTable.overwriteWithStats(df, root, "k")
+    VersionedTable.overwrite(df, root, Write.stats("k"))
     assert(VersionedTable.countRows(root) == Some(100L))
     assert(VersionedTable.statsRange(root, "k") == Some((0L, 99L)))
     // no stats recorded for v → conservative None, never a guess
     assert(VersionedTable.statsRange(root, "v").isEmpty)
     // stats-recorded append: counts and ranges fold across versions
-    VersionedTable.appendWithStats(
+    VersionedTable.append(
       spark.range(100, 150).select(col("id").as("k"), lit(0L).as("v")),
-      root, "k")
+      root, Write.stats("k"))
     assert(VersionedTable.countRows(root) == Some(150L))
     assert(VersionedTable.statsRange(root, "k") == Some((0L, 149L)))
     // time travel: the old version still answers its own count
@@ -533,15 +526,16 @@ class VersionedTableSpec extends SparkSuite {
     val root = tmpRoot()
     val df = spark.range(100).select(col("id").as("k"), (col("id") * 3).as("v"))
       .repartitionByRange(4, col("k"))
-    VersionedTable.overwriteWithSums(df, root, Seq("v"))
+    VersionedTable.overwrite(df, root,
+      Write(stats = Some(Seq.empty), sums = Seq("v")))
     assert(VersionedTable.sumTotal(root, "v") == Some(3L * 99 * 100 / 2))
     assert(VersionedTable.countRows(root) == Some(100L)) // rows still recorded
     // sums fold across append commits; a zero-row batch contributes 0
-    VersionedTable.appendWithSums(
+    VersionedTable.append(
       spark.range(100, 150).select(col("id").as("k"), lit(10L).as("v")),
-      root, Seq("v"))
-    VersionedTable.appendWithSums(
-      df.filter(col("k") < 0), root, Seq("v"))
+      root, Write(stats = Some(Seq.empty), sums = Seq("v")))
+    VersionedTable.append(df.filter(col("k") < 0), root,
+      Write(stats = Some(Seq.empty), sums = Seq("v")))
     assert(VersionedTable.sumTotal(root, "v")
       == Some(3L * 99 * 100 / 2 + 50L * 10))
     // time travel answers the old total
@@ -550,11 +544,11 @@ class VersionedTableSpec extends SparkSuite {
     assert(VersionedTable.sumTotal(root, "k").isEmpty)
     // an all-null file poisons the total (conservative)
     val rootN = tmpRoot()
-    VersionedTable.overwriteWithSums(
+    VersionedTable.overwrite(
       Seq((1L, Some(5L)), (2L, None)).toDF("k", "v").coalesce(1),
-      rootN, Seq("v"))
-    VersionedTable.appendWithSums(
-      Seq((3L, None: Option[Long])).toDF("k", "v"), rootN, Seq("v"))
+      rootN, Write(stats = Some(Seq.empty), sums = Seq("v")))
+    VersionedTable.append(Seq((3L, None: Option[Long])).toDF("k", "v"), rootN,
+      Write(stats = Some(Seq.empty), sums = Seq("v")))
     assert(VersionedTable.sumTotal(rootN, "v").isEmpty)
     assert(VersionedTable.sumTotal(rootN, "v", Some(0L)) == Some(5L))
     // a plain append (non-sum writer) poisons only from that version on
@@ -594,17 +588,18 @@ class VersionedTableSpec extends SparkSuite {
     val df = spark.range(400)
       .select(concat(lit("k"), col("id")).as("url"), col("id").as("v"))
       .repartition(8, col("id"))
-    VersionedTable.appendWithBloomIndex(df, root, "url",
-      expectedPerFile = 100, fpp = 0.01)
+    VersionedTable.append(df, root,
+      Write(stats = Some(Seq.empty), bloom = Some(Write.Bloom("url", 100))))
     val all = VersionedTable.read(spark, root)
     assert(all.inputFiles.length == 8)
-    val hit = VersionedTable.readWhereEq(spark, root, "url", Seq("k7", "k123"))
+    val hit = VersionedTable.scan(spark, root)
+      .filter(col("url").isin("k7", "k123"))
     // ≤ 2 true files + at most one 1%-fpp false positive
-    assert(hit.inputFiles.length <= 3, s"opened ${hit.inputFiles.length}/8")
+    assert(GraftScan.filesRead(hit) <= 3, s"opened ${GraftScan.filesRead(hit)}/8")
     assert(hit.collect().map(_.getString(0)).toSet == Set("k7", "k123"))
     // a missing key returns zero rows regardless of what gets opened
-    assert(VersionedTable.readWhereEq(spark, root, "url",
-      Seq("no-such-key")).count() == 0)
+    assert(VersionedTable.scan(spark, root)
+      .filter(col("url").isin("no-such-key")).count() == 0)
     // bloom lines coexist with __rows (the numeric-guard parse)
     assert(VersionedTable.countRows(root) == Some(400L))
     // a plain append without a bloom degrades that batch to
@@ -613,17 +608,18 @@ class VersionedTableSpec extends SparkSuite {
       spark.range(400, 410)
         .select(concat(lit("k"), col("id")).as("url"), col("id").as("v")),
       root)
-    val after = VersionedTable.readWhereEq(spark, root, "url", Seq("k405"))
+    val after = VersionedTable.scan(spark, root)
+      .filter(col("url").isin("k405"))
     assert(after.collect().map(_.getString(0)).toSet == Set("k405"))
   }
 
   test("history: metadata-only per-version (files, rows); appendChecked gates") {
     import spark.implicits._
     val root = tmpRoot()
-    VersionedTable.overwriteWithStats(
-      spark.range(10).select(col("id").as("k")), root)
-    VersionedTable.appendWithStats(
-      spark.range(10, 30).select(col("id").as("k")), root)
+    VersionedTable.overwrite(spark.range(10).select(col("id").as("k")), root,
+      Write.stats())
+    VersionedTable.append(spark.range(10, 30).select(col("id").as("k")), root,
+      Write.stats())
     // plain appends record default stats — the count stays knowable
     // (legacy stats-less lines keep the None path; pinned in the
     // countRows gap test)
@@ -636,8 +632,9 @@ class VersionedTableSpec extends SparkSuite {
     // CHECK constraint: violating batch rejected atomically
     val before = VersionedTable.latestVersion(root)
     val e = intercept[IllegalArgumentException] {
-      VersionedTable.appendChecked(
-        Seq(5L, -1L).toDF("k"), root, col("k") >= 0)
+      VersionedTable.append(Seq(5L, -1L).toDF("k"), root,
+        Write(stats = Some(Seq.empty),
+              expect = Seq("CHECK constraint" -> Write.everyRow(col("k") >= 0))))
     }
     assert(e.getMessage.contains("CHECK constraint"))
     assert(VersionedTable.latestVersion(root) == before,
@@ -645,11 +642,14 @@ class VersionedTableSpec extends SparkSuite {
     assert(VersionedTable.read(spark, root).count() == 31)
     // null constraint result counts as violation (SQL CHECK: must be TRUE)
     intercept[IllegalArgumentException] {
-      VersionedTable.appendChecked(
-        Seq(Some(5L), None).toDF("k"), root, col("k") >= 0)
+      VersionedTable.append(Seq(Some(5L), None).toDF("k"), root,
+        Write(stats = Some(Seq.empty),
+              expect = Seq("CHECK constraint" -> Write.everyRow(col("k") >= 0))))
     }
     // a clean batch passes and is row-counted
-    VersionedTable.appendChecked(Seq(7L).toDF("k"), root, col("k") >= 0)
+    VersionedTable.append(Seq(7L).toDF("k"), root,
+      Write(stats = Some(Seq.empty),
+            expect = Seq("CHECK constraint" -> Write.everyRow(col("k") >= 0))))
     assert(VersionedTable.read(spark, root).count() == 32)
   }
 
@@ -658,7 +658,7 @@ class VersionedTableSpec extends SparkSuite {
     val root = tmpRoot()
     val df = spark.range(100).select(col("id").as("k"), (col("id") * 2).as("v"))
       .repartitionByRange(4, col("k"))
-    VersionedTable.overwriteWithStats(df, root, "k")
+    VersionedTable.overwrite(df, root, Write.stats("k"))
     // delete 10 rows: survivors' files are re-statted with __rows only
     VersionedTable.delete(spark, root, col("k") < 10)
     assert(VersionedTable.countRows(root) == Some(90L))
@@ -676,24 +676,28 @@ class VersionedTableSpec extends SparkSuite {
   test("manifest stats: stats-less lines never skip; merge carries stats on untouched files") {
     import spark.implicits._
     val root = tmpRoot()
-    VersionedTable.overwriteWithStats(
+    VersionedTable.overwrite(
       spark.range(50).select(col("id").as("k"), lit("x").as("v"))
-        .repartitionByRange(5, col("k")), root, "k")
+        .repartitionByRange(5, col("k")),
+      root, Write.stats("k"))
     // append WITHOUT stats: new file must always be read
     VersionedTable.append(Seq((7L, "fresh")).toDF("k", "v"), root)
-    val got = VersionedTable.readWhere(spark, root, "k", 7, 7)
+    val got = VersionedTable.scan(spark, root)
+      .filter(col("k").between(7, 7))
       .as[(Long, String)].collect().toSet
     assert(got == Set((7L, "x"), (7L, "fresh")))
     // prune proof: 5 clustered + 1 stats-less appended → ≤ 2 files opened
-    assert(VersionedTable.readWhere(spark, root, "k", 7, 7).inputFiles.length <= 2)
+    assert(GraftScan.filesRead(VersionedTable.scan(spark, root)
+      .filter(col("k").between(7, 7))) <= 2)
     // merge touching one key: untouched files keep their stats lines —
     // the range read still skips the untouched non-intersecting files
     // (only the rewrite outputs, stats-less by design, always open)
     VersionedTable.merge(spark, root, Seq((7L, "merged")).toDF("k", "v"), Seq("k"))
     val total = VersionedTable.read(spark, root).inputFiles.length
-    val after = VersionedTable.readWhere(spark, root, "k", 40, 49)
-    assert(after.inputFiles.length < total,
-      s"$total -> ${after.inputFiles.mkString(",")}")
+    val after = VersionedTable.scan(spark, root)
+      .filter(col("k").between(40, 49))
+    assert(GraftScan.filesRead(after) < total,
+      s"$total -> ${GraftScan.filesRead(after)}")
     assert(after.as[(Long, String)].collect().toSet ==
       (40L until 50L).map(k => (k, "x")).toSet)
   }
@@ -706,14 +710,18 @@ class VersionedTableSpec extends SparkSuite {
     val grid = spark.range(64L * 64)
       .select((col("id") % 64).as("x"),
         floor(col("id") / 64).cast("long").as("y"))
-    VersionedTable.overwriteZOrdered(grid, root, "x", "y",
-      numFiles = 16, buckets = 64)
+    VersionedTable.overwrite(grid, root,
+      Write(zorder = Some(Write.ZOrder(Seq("x", "y"), 16, 64))))
     val total = VersionedTable.read(spark, root).inputFiles.length
     assert(total == 16)
-    val byX = VersionedTable.readWhere(spark, root, "x", 3, 6)
-    val byY = VersionedTable.readWhere(spark, root, "y", 60, 63)
-    assert(byX.inputFiles.length <= total / 2, s"x: ${byX.inputFiles.length}/$total")
-    assert(byY.inputFiles.length <= total / 2, s"y: ${byY.inputFiles.length}/$total")
+    val byX = VersionedTable.scan(spark, root)
+      .filter(col("x").between(3, 6))
+    val byY = VersionedTable.scan(spark, root)
+      .filter(col("y").between(60, 63))
+    assert(GraftScan.filesRead(byX) <= total / 2,
+      s"x: ${GraftScan.filesRead(byX)}/$total")
+    assert(GraftScan.filesRead(byY) <= total / 2,
+      s"y: ${GraftScan.filesRead(byY)}/$total")
     assert(byX.count() == 4 * 64 && byY.count() == 4 * 64)
     assert(byX.as[(Long, Long)].collect().forall(r => r._1 >= 3 && r._1 <= 6))
   }
@@ -725,21 +733,25 @@ class VersionedTableSpec extends SparkSuite {
       .select((col("id") % 64).as("x"),
         floor(col("id") / 64).cast("long").as("y"))
     // two disjoint halves appended as separately-clustered batches
-    VersionedTable.appendZOrdered(grid.filter(col("x") < 32), root,
-      "x", "y", numFiles = 8, buckets = 64)
-    VersionedTable.appendZOrdered(grid.filter(col("x") >= 32), root,
-      "x", "y", numFiles = 8, buckets = 64)
+    VersionedTable.append(grid.filter(col("x") < 32), root,
+      Write(zorder = Some(Write.ZOrder(Seq("x", "y"), 8, 64))))
+    VersionedTable.append(grid.filter(col("x") >= 32), root,
+      Write(zorder = Some(Write.ZOrder(Seq("x", "y"), 8, 64))))
     assert(VersionedTable.versions(root) == Seq(0L, 1L))
     val total = VersionedTable.read(spark, root).inputFiles.length
     assert(total == 16) // batch 2 inherited batch 1's files untouched
     // x-range inside batch 1 → batch 2's 8 files ALL pruned from the
     // manifest stats alone (strictly < 8 proves intra-batch pruning too)
-    val byX = VersionedTable.readWhere(spark, root, "x", 3, 6)
-    assert(byX.inputFiles.length < 8, s"x: ${byX.inputFiles.length}/$total")
+    val byX = VersionedTable.scan(spark, root)
+      .filter(col("x").between(3, 6))
+    assert(GraftScan.filesRead(byX) < 8,
+      s"x: ${GraftScan.filesRead(byX)}/$total")
     // y-range spans BOTH batches → pruning works per batch on the
     // second dimension, never dropping matching rows
-    val byY = VersionedTable.readWhere(spark, root, "y", 60, 63)
-    assert(byY.inputFiles.length <= total / 2, s"y: ${byY.inputFiles.length}/$total")
+    val byY = VersionedTable.scan(spark, root)
+      .filter(col("y").between(60, 63))
+    assert(GraftScan.filesRead(byY) <= total / 2,
+      s"y: ${GraftScan.filesRead(byY)}/$total")
     assert(byX.count() == 4 * 64 && byY.count() == 4 * 64)
     assert(byY.as[(Long, Long)].collect().forall(r => r._2 >= 60 && r._2 <= 63))
   }
@@ -827,8 +839,8 @@ class VersionedTableSpec extends SparkSuite {
     (0 to 3).foreach { b =>
       val df = (b * 100 + 1 to b * 100 + 100)
         .map(i => (i.toLong, s"v$i")).toDF("k", "v").repartition(2)
-      if (b == 0) VersionedTable.overwriteWithStats(df, root, "k")
-      else VersionedTable.appendWithStats(df, root, "k")
+      if (b == 0) VersionedTable.overwrite(df, root, Write.stats("k"))
+      else VersionedTable.append(df, root, Write.stats("k"))
     }
     val dataFiles = new java.io.File(root, "data").listFiles()
       .filter(_.getName.endsWith(".parquet"))
@@ -840,8 +852,9 @@ class VersionedTableSpec extends SparkSuite {
     val all = VersionedTable.read(spark, root)
     assert(all.inputFiles.length == 2 && all.count() == 400)
     // range-clustered on k → a selective range opens ONE of the two files
-    val pruned = VersionedTable.readWhere(spark, root, "k", 10, 20)
-    assert(pruned.inputFiles.length == 1)
+    val pruned = VersionedTable.scan(spark, root)
+      .filter(col("k").between(10, 20))
+    assert(GraftScan.filesRead(pruned) == 1)
     assert(pruned.count() == 11)
   }
 
@@ -851,8 +864,8 @@ class VersionedTableSpec extends SparkSuite {
     (0 to 3).foreach { b =>
       val df = (b * 50 + 1 to b * 50 + 50)
         .map(i => (i.toLong, s"v$i")).toDF("k", "v").repartition(2)
-      if (b == 0) VersionedTable.overwriteWithStats(df, root, "k")
-      else VersionedTable.appendWithStats(df, root, "k")
+      if (b == 0) VersionedTable.overwrite(df, root, Write.stats("k"))
+      else VersionedTable.append(df, root, Write.stats("k"))
     }
     VersionedTable.compact(spark, root, statsCols = Seq("k"))
     val packedFiles = VersionedTable.read(spark, root).inputFiles.toSet
@@ -863,8 +876,9 @@ class VersionedTableSpec extends SparkSuite {
       .filter(_.getName.endsWith(".parquet")).map(_.getPath).toSet
     assert(packedFiles.map(p => new java.net.URI(p).getPath) == survivors)
     assert(VersionedTable.read(spark, root).count() == 200)
-    val pruned = VersionedTable.readWhere(spark, root, "k", 5, 15)
-    assert(pruned.count() == 11 && pruned.inputFiles.length == 1)
+    val pruned = VersionedTable.scan(spark, root)
+      .filter(col("k").between(5, 15))
+    assert(pruned.count() == 11 && GraftScan.filesRead(pruned) == 1)
   }
 
   test("compact commutes with a concurrent append, aborts on a concurrent rewrite") {
@@ -963,14 +977,18 @@ class VersionedTableSpec extends SparkSuite {
     val df = (0 until 4096)
       .map(i => (i.toLong, ((i * 2654435761L) % 4096), i.toDouble))
       .toDF("a", "b", "x")
-    VersionedTable.overwriteZOrdered(df, root, "a", "b", numFiles = 16)
-    val box = VersionedTable.readWhereBox(spark, root,
-      Seq(("a", 100L, 500L), ("b", 100L, 500L)))
-    val oneA = VersionedTable.readWhere(spark, root, "a", 100, 500)
-    val oneB = VersionedTable.readWhere(spark, root, "b", 100, 500)
-    assert(box.inputFiles.length <= oneA.inputFiles.length)
-    assert(box.inputFiles.length <= oneB.inputFiles.length)
-    assert(box.inputFiles.length < 16)
+    VersionedTable.overwrite(df, root,
+      Write(zorder = Some(Write.ZOrder(Seq("a", "b"), 16))))
+    val box = VersionedTable.scan(spark, root)
+      .filter(col("a").between(100L, 500L) &&
+        col("b").between(100L, 500L))
+    val oneA = VersionedTable.scan(spark, root)
+      .filter(col("a").between(100, 500))
+    val oneB = VersionedTable.scan(spark, root)
+      .filter(col("b").between(100, 500))
+    assert(GraftScan.filesRead(box) <= GraftScan.filesRead(oneA))
+    assert(GraftScan.filesRead(box) <= GraftScan.filesRead(oneB))
+    assert(GraftScan.filesRead(box) < 16)
     // exactness: box read == full filter
     val expect = df.filter(col("a").between(100, 500) && col("b").between(100, 500))
       .select("a", "b").as[(Long, Long)].collect().toSet
@@ -988,24 +1006,29 @@ class VersionedTableSpec extends SparkSuite {
       .select((col("id") % 32).as("x"),
         (floor(col("id") / 32) % 32).cast("long").as("y"),
         floor(col("id") / 1024).cast("long").as("z"))
-    VersionedTable.overwriteZOrderedK(cube, root, Seq("x", "y", "z"),
-      numFiles = 64, buckets = 32)
+    VersionedTable.overwrite(cube, root,
+      Write(zorder = Some(Write.ZOrder(Seq("x", "y", "z"), 64, 32))))
     val total = VersionedTable.read(spark, root).inputFiles.length
     assert(total == 64)
-    val box3 = VersionedTable.readWhereBox(spark, root,
-      Seq(("x", 4L, 11L), ("y", 4L, 11L), ("z", 4L, 11L)))
-    val boxXY = VersionedTable.readWhereBox(spark, root,
-      Seq(("x", 4L, 11L), ("y", 4L, 11L)))
-    val boxXZ = VersionedTable.readWhereBox(spark, root,
-      Seq(("x", 4L, 11L), ("z", 4L, 11L)))
-    val boxYZ = VersionedTable.readWhereBox(spark, root,
-      Seq(("y", 4L, 11L), ("z", 4L, 11L)))
-    assert(box3.inputFiles.length < boxXY.inputFiles.length,
-      s"3d ${box3.inputFiles.length} vs xy ${boxXY.inputFiles.length}")
-    assert(box3.inputFiles.length < boxXZ.inputFiles.length,
-      s"3d ${box3.inputFiles.length} vs xz ${boxXZ.inputFiles.length}")
-    assert(box3.inputFiles.length < boxYZ.inputFiles.length,
-      s"3d ${box3.inputFiles.length} vs yz ${boxYZ.inputFiles.length}")
+    val box3 = VersionedTable.scan(spark, root)
+      .filter(col("x").between(4L, 11L) &&
+        col("y").between(4L, 11L) &&
+        col("z").between(4L, 11L))
+    val boxXY = VersionedTable.scan(spark, root)
+      .filter(col("x").between(4L, 11L) &&
+        col("y").between(4L, 11L))
+    val boxXZ = VersionedTable.scan(spark, root)
+      .filter(col("x").between(4L, 11L) &&
+        col("z").between(4L, 11L))
+    val boxYZ = VersionedTable.scan(spark, root)
+      .filter(col("y").between(4L, 11L) &&
+        col("z").between(4L, 11L))
+    assert(GraftScan.filesRead(box3) < GraftScan.filesRead(boxXY),
+      s"3d ${GraftScan.filesRead(box3)} vs xy ${GraftScan.filesRead(boxXY)}")
+    assert(GraftScan.filesRead(box3) < GraftScan.filesRead(boxXZ),
+      s"3d ${GraftScan.filesRead(box3)} vs xz ${GraftScan.filesRead(boxXZ)}")
+    assert(GraftScan.filesRead(box3) < GraftScan.filesRead(boxYZ),
+      s"3d ${GraftScan.filesRead(box3)} vs yz ${GraftScan.filesRead(boxYZ)}")
     // exactness: box read == full filter
     assert(box3.as[(Long, Long, Long)].collect().toSet ==
       (for (x <- 4L to 11L; y <- 4L to 11L; z <- 4L to 11L)
@@ -1020,17 +1043,19 @@ class VersionedTableSpec extends SparkSuite {
       .select((col("id") % 16).as("x"),
         (floor(col("id") / 16) % 16).cast("long").as("y"),
         floor(col("id") / 256).cast("long").as("z"))
-    VersionedTable.appendZOrderedK(cube.filter(col("z") < 8), root,
-      Seq("x", "y", "z"), numFiles = 8, buckets = 16)
-    VersionedTable.appendZOrderedK(cube.filter(col("z") >= 8), root,
-      Seq("x", "y", "z"), numFiles = 8, buckets = 16)
+    VersionedTable.append(cube.filter(col("z") < 8), root,
+      Write(zorder = Some(Write.ZOrder(Seq("x", "y", "z"), 8, 16))))
+    VersionedTable.append(cube.filter(col("z") >= 8), root,
+      Write(zorder = Some(Write.ZOrder(Seq("x", "y", "z"), 8, 16))))
     assert(VersionedTable.versions(root) == Seq(0L, 1L))
     val total = VersionedTable.read(spark, root).inputFiles.length
     assert(total == 16)
     // z-range inside batch 1 → batch 2's files all pruned
-    val box = VersionedTable.readWhereBox(spark, root,
-      Seq(("x", 0L, 7L), ("y", 0L, 7L), ("z", 0L, 3L)))
-    assert(box.inputFiles.length < 8, s"${box.inputFiles.length}/$total")
+    val box = VersionedTable.scan(spark, root)
+      .filter(col("x").between(0L, 7L) &&
+        col("y").between(0L, 7L) &&
+        col("z").between(0L, 3L))
+    assert(GraftScan.filesRead(box) < 8, s"${GraftScan.filesRead(box)}/$total")
     assert(box.count() == 8L * 8 * 4)
   }
 
@@ -1045,9 +1070,9 @@ class VersionedTableSpec extends SparkSuite {
     // four z-slabs appended with batch-local boundaries → 16 files
     // whose boxes overlap across batches
     (0 until 4).foreach { i =>
-      VersionedTable.appendZOrderedK(
-        cube.filter(col("z") >= i * 4 && col("z") < (i + 1) * 4), root,
-        Seq("x", "y", "z"), numFiles = 4, buckets = 16)
+      VersionedTable.append(
+        cube.filter(col("z") >= i * 4 && col("z") < (i + 1) * 4),
+        root, Write(zorder = Some(Write.ZOrder(Seq("x", "y", "z"), 4, 16))))
     }
     val before = VersionedTable.read(spark, root)
     assert(before.inputFiles.length == 16)
@@ -1057,9 +1082,11 @@ class VersionedTableSpec extends SparkSuite {
     val after = VersionedTable.read(spark, root)
     assert(after.inputFiles.length == 8)
     assert(after.as[(Long, Long, Long)].collect().toSet == rows)
-    val box = VersionedTable.readWhereBox(spark, root,
-      Seq(("x", 0L, 7L), ("y", 0L, 7L), ("z", 0L, 7L)))
-    assert(box.inputFiles.length < 8, s"${box.inputFiles.length}")
+    val box = VersionedTable.scan(spark, root)
+      .filter(col("x").between(0L, 7L) &&
+        col("y").between(0L, 7L) &&
+        col("z").between(0L, 7L))
+    assert(GraftScan.filesRead(box) < 8, s"${GraftScan.filesRead(box)}")
     assert(box.count() == 8L * 8 * 8)
   }
 
@@ -1146,9 +1173,10 @@ class VersionedTableSpec extends SparkSuite {
     "ALTER-declared column survives") {
     import spark.implicits._
     val src = tmpRoot(); val dst = tmpRoot() + "_pclone"
-    VersionedTable.overwritePartitionedWithStats(
+    VersionedTable.overwrite(
       Seq((1L, "x", 10L), (2L, "y", 20L), (3L, "x", 30L))
-        .toDF("k", "p", "v"), src, Seq("p"))
+        .toDF("k", "p", "v"),
+      src, Write(stats = Some(Seq.empty), partitionBy = Seq("p")))
     VersionedTable.addConstraint(spark, src, "v_pos", "v > 0")
     VersionedTable.alterAddColumns(spark, src,
       Seq(org.apache.spark.sql.types.StructField("note",
@@ -1166,10 +1194,10 @@ class VersionedTableSpec extends SparkSuite {
     assert(VersionedTable.constraints(dst) ==
       Map("v_pos" -> "v > 0"))
     val e = intercept[Exception] {
-      VersionedTable.appendPartitionedWithStats(
+      VersionedTable.append(
         Seq((9L, "z", -1L, "n")).toDF("k", "p", "v", "note")
           .select(col("k"), col("v"), col("note"), col("p")),
-        dst, Seq("p"))
+        dst, Write(stats = Some(Seq.empty), partitionBy = Seq("p")))
     }
     assert(e.getMessage != null)
     assert(VersionedTable.read(spark, dst).count() == 3L)
@@ -1246,5 +1274,24 @@ class VersionedTableSpec extends SparkSuite {
     intercept[Exception] {
       VersionedTable.read(spark, dst).collect()
     }
+  }
+
+  test("txn appends record the default stats of a plain append") {
+    import spark.implicits._
+    val root = tmpRoot()
+    VersionedTable.append(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), root,
+      Write(txn = Some("app" -> 0L)))
+    assert(VersionedTable.countRows(root) == Some(2L))
+    assert(VersionedTable.statsRange(root, "k").contains((1L, 2L)))
+  }
+
+  test("one write surface: append and overwrite are the only public " +
+    "writers, and no readWhere* read remains") {
+    val names = VersionedTable.getClass.getMethods.toSeq
+      .filter(m => java.lang.reflect.Modifier.isPublic(m.getModifiers))
+      .map(_.getName).filterNot(_.contains("$")).toSet
+    assert(names.filter(n => n.startsWith("append") ||
+      n.startsWith("overwrite")) == Set("append", "overwrite"))
+    assert(!names.exists(_.startsWith("readWhere")))
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkSuite
+import graft.sources.VersionedTable.Write
 
 /** ALTER COLUMN TYPE — metadata-only WIDENING (the Delta type-widening
   * role): the declaration sidecar carries the wider type, zero files
@@ -20,7 +21,7 @@ class WidenColumnSpec extends SparkSuite {
     val df = (1 to 600).map(i => (i, i.toFloat / 2, s"s$i"))
       .toDF("k", "f", "s")
       .repartitionByRange(6, col("k"))
-    VersionedTable.overwriteWithStats(df, root, "k")
+    VersionedTable.overwrite(df, root, Write.stats("k"))
     root
   }
 
@@ -40,8 +41,8 @@ class WidenColumnSpec extends SparkSuite {
     // the vectorized reader up-casts the INT32/FLOAT files in place
     assert(now.agg(sum(col("k"))).head().getLong(0) == 180300L)
     // append rows beyond Int range at the wide type
-    VersionedTable.appendWithStats(
-      Seq((5000000000L, 1.5d, "big")).toDF("k", "f", "s"), root, "k")
+    VersionedTable.append(Seq((5000000000L, 1.5d, "big")).toDF("k", "f", "s"), root,
+      Write.stats("k"))
     val mixed = VersionedTable.read(spark, root)
     assert(mixed.filter(col("k") > 4000000000L).count() == 1L)
     assert(mixed.count() == 601L)
@@ -108,10 +109,10 @@ class WidenColumnSpec extends SparkSuite {
     import spark.implicits._
     val root = freshTable()
     VersionedTable.alterWidenColumn(spark, root, "k", LongType)
-    VersionedTable.appendWithStats(
+    VersionedTable.append(
       Seq((5000000000L, 1.5d, "big")).toDF("k", "f", "s")
         .select(col("k"), col("f").cast(FloatType).as("f"), col("s")),
-      root, "k")
+      root, Write.stats("k"))
     // DELETE with a predicate spanning old INT files and the new LONG
     // file: the rewrite read mixes vintages
     VersionedTable.delete(spark, root,

@@ -27,7 +27,7 @@ class GraftStreamEvolveSpec extends SparkSuite {
   test("a new column REFUSES by default, loudly and actionably") {
     import spark.implicits._
     val root = freshTable()
-    val sink = new GraftStreamSink(root, "ev_app", Seq.empty, Seq.empty,
+    val sink = new GraftStreamSink(root, "ev_app", Seq.empty,
       complete = false, evolve = false)
     sink.addBatch(0L, Seq((3L, 30L)).toDF("k", "v")) // same schema: fine
     val e = intercept[IllegalArgumentException] {
@@ -43,7 +43,7 @@ class GraftStreamEvolveSpec extends SparkSuite {
     "old rows read NULL") {
     import spark.implicits._
     val root = freshTable()
-    val sink = new GraftStreamSink(root, "ev_app2", Seq.empty, Seq.empty,
+    val sink = new GraftStreamSink(root, "ev_app2", Seq.empty,
       complete = false, evolve = true)
     sink.addBatch(0L, Seq((3L, 30L, "x")).toDF("k", "v", "tag"))
     val df = VersionedTable.read(spark, root)
@@ -58,7 +58,7 @@ class GraftStreamEvolveSpec extends SparkSuite {
     "double-appends") {
     import spark.implicits._
     val root = freshTable()
-    val sink = new GraftStreamSink(root, "ev_app3", Seq.empty, Seq.empty,
+    val sink = new GraftStreamSink(root, "ev_app3", Seq.empty,
       complete = false, evolve = true)
     val evolving = Seq((3L, 30L, "x"), (4L, 40L, "y")).toDF("k", "v", "tag")
     sink.addBatch(0L, evolving)

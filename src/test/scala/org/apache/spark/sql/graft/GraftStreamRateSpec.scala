@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
 import graft.sources.VersionedTable
+import graft.sources.VersionedTable.Write
 
 /** GraftStreamSource admission control — the offset-level contract,
   * tested on the Source directly (deterministic: no trigger timing).
@@ -21,8 +22,8 @@ class GraftStreamRateSpec extends SparkSuite {
     import spark.implicits._
     val rows = (lo until hi).map(i => (i, i * 2L)).toDF("k", "v")
     if (VersionedTable.latestVersion(root).isEmpty)
-      VersionedTable.overwriteWithStats(rows, root, "k")
-    else VersionedTable.appendWithStats(rows, root, "k")
+      VersionedTable.overwrite(rows, root, Write.stats("k"))
+    else VersionedTable.append(rows, root, Write.stats("k"))
     ()
   }
 
@@ -102,7 +103,8 @@ class GraftStreamRateSpec extends SparkSuite {
           (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
            id: Long) =>
             if (!b.isEmpty)
-              VersionedTable.appendTxn(b.toDF(), out, "graft_rate", id)
+              VersionedTable.append(b.toDF(), out,
+                Write(txn = Some("graft_rate" -> id)))
             ()
         }
         .option("checkpointLocation", ckpt)
