@@ -1,14 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sources.VersionedTable.Write
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    graft.core.GraftSession.tune(spark)
+    val spark = graft.core.GraftSession.local(32, "graft-scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
     val base = graft.core.Tables(spark, "/root/testdata/sf0.1", "documents")
       .select(col("doc_id"), col("text"))

@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.{GraftScan, PlanBridge}
 
 /** Session factory for the engine (parity with the reference's
   * spark_config.py:5-25, minus the Delta/S3A wiring which is deployment
@@ -46,10 +47,17 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
 
   /** Apply engine-required runtime confs and register the engine's
-    * custom expressions on any externally-built session. */
+    * custom expressions, planner strategy and optimizer rules. This is
+    * the only place the engine sets a session up: operators and queries
+    * never register functions or set these confs per call. Idempotent:
+    * a second call leaves the session as the first left it. */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.ansi.enabled", "false")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    // the events fixture has shipped ts as parquet TIMESTAMP(NANOS),
+    // which the vectorized reader rejects unless read as raw int64;
+    // `Tables` and `StreamingJobs.readEvents` branch on the result
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // write timestamps as INT64 MICROS, not the legacy 12-byte INT96:
     // INT96 footers carry NO usable min/max (row-group pruning on a
     // timestamp predicate is impossible inside every staged file, and
@@ -61,10 +69,9 @@ object GraftSession {
       "TIMESTAMP_MICROS")
     spark.conf.set("spark.sql.codegen.useIdInClassName", "false")
     graft.plans.GraftFunctions.registerAll(spark)
-    org.apache.spark.sql.graft.PlanBridge
-      .registerStrategy(spark, graft.plans.AsOfJoinStrategy)
-    org.apache.spark.sql.graft.PlanBridge
-      .registerOptimization(spark, graft.plans.AsOfJoinFilterPushdown)
+    PlanBridge.registerStrategy(spark, graft.plans.AsOfJoinStrategy)
+    PlanBridge.registerOptimization(spark, graft.plans.AsOfJoinFilterPushdown)
+    PlanBridge.registerOptimization(spark, GraftScan.CountFromManifest)
     spark
   }
 

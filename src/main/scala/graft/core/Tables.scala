@@ -16,13 +16,12 @@ object Tables {
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {
-      // events.ts has shipped as both parquet TIMESTAMP(NANOS) — which
-      // Spark's vectorized reader rejects unless read as raw int64 —
-      // and plain TIMESTAMP(MICROS) (ntz). Branch on the footer schema:
+      // events.ts has shipped as both parquet TIMESTAMP(NANOS) — read
+      // as raw int64, since `GraftSession.tune` sets nanosAsLong — and
+      // plain TIMESTAMP(MICROS) (ntz). Branch on the footer schema:
       // nanos arrive as LongType (integer-divided to micros; a double
       // division would lose precision at ns scale), micros arrive as
       // timestamp_ntz and are reinterpreted in the UTC session zone.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = spark.read.parquet(s"$dir/$name.parquet")
       raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>

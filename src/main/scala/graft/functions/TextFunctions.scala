@@ -93,7 +93,8 @@ object TextFunctions {
     * Documents shorter than `n` words yield an empty array. Backed by
     * the native WordNgrams expression (graft.plans) — the equivalent
     * higher-order-function composition evaluates interpreted and was
-    * ~1000× slower; requires GraftSession.tune (function registry). */
+    * ~1000× slower; requires a session from GraftSession (function
+    * registry). */
   def wordShingles(text: Column, n: Int = 3): Column =
     call_function("word_ngrams", text, lit(n))
 

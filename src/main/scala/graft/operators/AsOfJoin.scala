@@ -109,10 +109,6 @@ object AsOfJoin {
         s"as-of direction must be backward|forward|nearest, got '$d'")
     }
     val spark = left.sparkSession
-    org.apache.spark.sql.graft.PlanBridge
-      .registerStrategy(spark, graft.plans.AsOfJoinStrategy)
-    org.apache.spark.sql.graft.PlanBridge
-      .registerOptimization(spark, graft.plans.AsOfJoinFilterPushdown)
     val lPlan = left.queryExecution.analyzed
     // Re-alias every right column through a Project so the custom node
     // references FRESH exprIds: when both sides derive from the same

@@ -98,7 +98,6 @@ object IvfIndex {
   private def cellRowsOf(vecs: DataFrame, centroids: Array[Array[Double]],
                          idCol: String, vecCol: String): DataFrame = {
     import graft.plans.VectorExpressions.dotProduct
-    graft.plans.VectorExpressions.register(vecs.sparkSession)
     vecs.select(col(idCol).as("id"), col(vecCol).as("vec"))
       .withColumn("cell",
         Similarity.nearestCentroid(col("vec"), centroids).cast(LongType))
@@ -218,7 +217,6 @@ object IvfIndex {
            nprobe: Int = 4, idCol: String = "vec_id",
            vecCol: String = "embedding"): DataFrame = {
     import graft.plans.VectorExpressions.dotProduct
-    graft.plans.VectorExpressions.register(spark)
     // pin the cells version FIRST, then resolve the model that
     // produced it — a concurrent recluster between the two reads can
     // never mix new centroids with old assignments (or vice versa)

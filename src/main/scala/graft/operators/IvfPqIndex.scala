@@ -123,7 +123,6 @@ object IvfPqIndex {
                          book: Array[Array[Array[Double]]],
                          idCol: String, vecCol: String): DataFrame = {
     import graft.plans.{PqExpressions => PQ}
-    graft.plans.VectorExpressions.register(vecs.sparkSession)
     Similarity.withNorm(
       vecs.select(col(idCol).as("id"), col(vecCol).as("cv")), "cv", "cn")
       .withColumn("cvn", transform(col("cv"),
@@ -152,7 +151,6 @@ object IvfPqIndex {
     if (txn >= 0 &&
         VersionedTable.latestTxn(codesRoot(root), appId).exists(_ >= txn))
       return VersionedTable.latestVersion(codesRoot(root)).getOrElse(-1L)
-    graft.plans.VectorExpressions.register(corpus.sparkSession)
     val cNorm = Similarity.withNorm(
       corpus.select(col(idCol).as("id"), col(vecCol).as("cv")), "cv", "cn")
       .withColumn("cvn", transform(col("cv"),
@@ -247,7 +245,6 @@ object IvfPqIndex {
              idCol: String = "vec_id",
              vecCol: String = "embedding"): DataFrame = {
     val spark = queries.sparkSession
-    graft.plans.VectorExpressions.register(spark)
     import graft.plans.VectorExpressions.dotProduct
     import graft.plans.{PqExpressions => PQ}
     // pin the codes version FIRST, then resolve the model that

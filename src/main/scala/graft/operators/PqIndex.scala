@@ -89,7 +89,6 @@ object PqIndex {
             idCol: String = "vec_id", vecCol: String = "embedding"): Long = {
     require(dim % m == 0, s"dim $dim must split into $m equal subspaces")
     new File(root).mkdirs()
-    graft.plans.VectorExpressions.register(corpus.sparkSession)
     val norm = normalized(corpus, idCol, vecCol)
     val book = Similarity.trainPqCodebook(norm, "cvn", "id", m, ksub, dim / m)
     // stage for the version this build WILL commit (single maintenance
@@ -107,7 +106,6 @@ object PqIndex {
     * periodic [[build]] — a new version, not a new table.) */
   def append(batch: DataFrame, root: String,
              idCol: String = "vec_id", vecCol: String = "embedding"): Long = {
-    graft.plans.VectorExpressions.register(batch.sparkSession)
     val pin = pinnedVersion(root)
     // drop orphan stages from a crashed re-train (see IvfIndex.append)
     IndexModelFiles.dropAbove(root, "codebook", pin)
@@ -126,7 +124,6 @@ object PqIndex {
              refine: Int = 4, idCol: String = "vec_id",
              vecCol: String = "embedding"): DataFrame = {
     val spark = queries.sparkSession
-    graft.plans.VectorExpressions.register(spark)
     import graft.plans.{PqExpressions => PQ}
     // pin the codes version FIRST, then resolve the codebook that
     // produced it — a concurrent re-train can never serve mixed state

@@ -30,10 +30,7 @@ object SetSimJoin {
   /** `sets`: (id: long, toks: array<string>). Output: (id_a, id_b,
     * jaccard) with id_a < id_b and jaccard ≥ threshold. */
   def jaccardSelfJoin(sets: DataFrame, threshold: Double): DataFrame = {
-    val spark = sets.sparkSession
     val (rankSets, candidates) = rankSetsAndCandidates(sets, threshold)
-
-    graft.plans.VectorExpressions.register(spark)
     val sides = rankSets.select(col("id"), col("ranks"), col("sz"))
     candidates
       .join(sides.select(col("id").as("id_a"), col("ranks").as("ranks_a"),
@@ -193,7 +190,6 @@ object SetSimJoin {
           col("r.sz") * threshold <= col("l.sz"))
       .select(col("id_l"), col("id_r"))
       .distinct()
-    graft.plans.VectorExpressions.register(spark)
     candidates
       .join(rankSets.filter(col("side") === 0).select(col("id").as("id_l"),
         col("ranks").as("ranks_l"), col("sz").as("sz_l")), Seq("id_l"))

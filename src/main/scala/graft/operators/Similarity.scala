@@ -38,7 +38,6 @@ object Similarity {
     graft.plans.VectorExpressions.dotProduct(av, bv) / (an * bn)
 
   private[operators] def withNorm(df: DataFrame, vec: String, norm: String): DataFrame = {
-    graft.plans.VectorExpressions.register(df.sparkSession)
     df.withColumn(norm,
       sqrt(graft.plans.VectorExpressions.dotProduct(col(vec), col(vec))))
   }
@@ -178,7 +177,6 @@ object Similarity {
               bits: Int = 32, bands: Int = 8,
               idCol: String = "vec_id",
               vecCol: String = "embedding"): DataFrame = {
-    graft.plans.VectorExpressions.register(queries.sparkSession)
     def banded(df: DataFrame, id: String, vec: String, norm: String) =
       withNorm(df.select(col(idCol).as(id), col(vecCol).as(vec)), vec, norm)
         .select(col(id), col(vec), col(norm),
@@ -286,7 +284,6 @@ object Similarity {
               nlist: Int = 16, nprobe: Int = 4,
               idCol: String = "vec_id",
               vecCol: String = "embedding"): DataFrame = {
-    graft.plans.VectorExpressions.register(queries.sparkSession)
     import graft.plans.VectorExpressions.dotProduct
 
     // deterministic seeds → one averaging pass → refined centroids
@@ -345,7 +342,6 @@ object Similarity {
                   nlist: Int = 16, nprobe: Int = 4,
                   idCol: String = "vec_id",
                   vecCol: String = "embedding"): DataFrame = {
-    graft.plans.VectorExpressions.register(corpus.sparkSession)
     import graft.plans.VectorExpressions.dotProduct
 
     val refined = trainCentroids(corpus, nlist, idCol, vecCol)
@@ -402,7 +398,6 @@ object Similarity {
              vecCol: String = "embedding"): DataFrame = {
     require(dim % m == 0, s"dim $dim must split into $m equal subspaces")
     val dsub = dim / m
-    graft.plans.VectorExpressions.register(queries.sparkSession)
     import graft.plans.{PqExpressions => PQ}
 
     // normalized corpus: ADC then approximates q·x̂, so cos ≈ adc/|q|
@@ -493,7 +488,6 @@ object Similarity {
                 vecCol: String = "embedding"): DataFrame = {
     require(dim % m == 0, s"dim $dim must split into $m equal subspaces")
     val dsub = dim / m
-    graft.plans.VectorExpressions.register(queries.sparkSession)
     import graft.plans.VectorExpressions.dotProduct
     import graft.plans.{PqExpressions => PQ}
 
@@ -577,7 +571,6 @@ object Similarity {
   def sq8TopK(queries: DataFrame, corpus: DataFrame, k: Int,
               refine: Int = 64, idCol: String = "vec_id",
               vecCol: String = "embedding"): DataFrame = {
-    graft.plans.VectorExpressions.register(queries.sparkSession)
     val stats = corpus
       .select(posexplode(col(vecCol)))
       .select(col("pos"), col("col").cast(DoubleType).as("v"))
@@ -660,7 +653,6 @@ object Similarity {
                             bits: Int = 32, bands: Int = 8,
                             idCol: String = "vec_id",
                             vecCol: String = "embedding"): DataFrame = {
-    graft.plans.VectorExpressions.register(corpus.sparkSession)
     // eagerly checkpointed: both sides of the bucket self-join and the
     // verify re-attach reference this subtree (see SetSimJoin note).
     // fanOut: the norm map, the band projection and the verify scoring

@@ -59,13 +59,8 @@ object RollingHash {
     h
   }
 
-  /** Column API — resolves through the function registry, so call
-    * `register(spark)` once per session first. */
+  /** Column API (SQL: `SELECT rolling_hash(text) FROM ...`) — resolves
+    * through the function registry; requires a session from
+    * `GraftSession`. */
   def rollingHash(c: Column): Column = call_function("rolling_hash", c)
-
-  /** Registration for SQL + Column use:
-    * `SELECT rolling_hash(text) FROM ...`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hash", exprs => RollingHash(exprs.head), "built-in")
 }

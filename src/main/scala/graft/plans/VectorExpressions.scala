@@ -123,36 +123,10 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 
 object VectorExpressions {
 
-  /** Column API — resolves through the function registry; call
-    * `register(spark)` once per session. */
+  /** Column API — resolves through the function registry; requires a
+    * session from `GraftSession`. */
   def dotProduct(a: Column, b: Column): Column = call_function("dot_product", a, b)
 
   def sortedIntersectCount(a: Column, b: Column): Column =
     call_function("sorted_intersect_count", a, b)
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    GraftFunctions.registerAll(spark)
-}
-
-/** One registration point for every custom graft expression; wired into
-  * GraftSession.tune so any engine session has them. */
-object GraftFunctions {
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "sorted_intersect_count",
-      exprs => SortedIntersectCount(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "word_ngrams", exprs => WordNgrams(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "word_ngrams_all", exprs => WordNgramsAll(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "rolling_hash", exprs => RollingHash(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => NfcNormalize(exprs.head), "built-in")
-  }
 }

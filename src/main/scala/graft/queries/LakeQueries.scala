@@ -2,6 +2,7 @@ package graft.queries
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -3579,24 +3580,20 @@ object LakeQueries extends QueryModule {
           Tables(s, dir, "nation")
             .select(col("n_nationkey"), col("n_name")),
           root, Write.stats())
-        val cust = Tables(s, dir, "customer")
+        def joined(p: SparkSession, thr: Long) = Tables(p, dir, "customer")
           .select(col("c_custkey"), col("c_nationkey"), col("c_acctbal"))
-        def joined(thr: Long) = cust.join(
-          graft.sources.VersionedTable.readAuto(s, root, thr),
-          col("c_nationkey") === col("n_nationkey"))
-        // plan flags computed with Spark's native size-estimate
-        // broadcast OFF, so the manifest is the only voice (restored
-        // immediately; planning is eager via executedPlan)
-        val saved = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        val (smallBc, largeBc) =
-          try {
-            s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            def bc(thr: Long): Long =
-              if (joined(thr).queryExecution.executedPlan.toString
-                .contains("BroadcastHashJoin")) 1L else 0L
-            (bc(10L << 20), bc(1L))
-          } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-        joined(10L << 20)
+          .join(graft.sources.VersionedTable.readAuto(p, root, thr),
+            col("c_nationkey") === col("n_nationkey"))
+        // plan flags computed on a private session with Spark's native
+        // size-estimate broadcast OFF, so the manifest is the only
+        // voice and the caller's session conf is never written
+        val priv = graft.core.GraftSession.tune(s.newSession())
+        priv.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        def bc(thr: Long): Long =
+          if (joined(priv, thr).queryExecution.executedPlan.toString
+            .contains("BroadcastHashJoin")) 1L else 0L
+        val (smallBc, largeBc) = (bc(10L << 20), bc(1L))
+        joined(s, 10L << 20)
           .groupBy(col("n_name"))
           .agg(count(lit(1)).as("n_cust"), dsum(col("c_acctbal")).as("bal"))
           .withColumn("small_bc", lit(smallBc))

@@ -414,7 +414,6 @@ object SimilarityQueries extends QueryModule {
     "q88_embedding_contamination" -> Q(
       run = (s, dir) => {
         val emb = Tables(s, dir, "embeddings")
-        graft.plans.VectorExpressions.register(s)
         val dot = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
           graft.plans.VectorExpressions.dotProduct(a, b)
         val bench = emb.filter(col("vec_id") < 10)

@@ -180,7 +180,6 @@ object TextQueries extends QueryModule {
     // RollingHashSpec.
     "q25_rolling_hash" -> Q(
       run = (s, dir) => {
-        RollingHash.register(s)
         Tables(s, dir, "documents")
           .select(col("doc_id"), RollingHash.rollingHash(col("text")).as("fp"))
           .groupBy()

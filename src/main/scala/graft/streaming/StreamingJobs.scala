@@ -33,7 +33,6 @@ object StreamingJobs {
     * driver-side metadata read) decides which ts layout this lake
     * shipped; both normalize to TimestampType in the UTC session zone. */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val tsType = spark.read.parquet(s"$dir/events.parquet")
       .schema("ts").dataType
     val stream = spark.readStream

@@ -61,7 +61,6 @@ object GraftScan {
     val relation = HadoopFsRelation(
       idx, partSchema, dataSchema, None,
       new ParquetFileFormat, Map("mergeSchema" -> "true"))(cs)
-    PlanBridge.registerOptimization(spark, CountFromManifest)
     val raw = PlanBridge.ofRows(spark, LogicalRelation(relation, false))
     projectLogical(raw, dataSchema, logicalSchema, partSchema)
   }
@@ -336,8 +335,9 @@ object GraftScan {
     * disqualifies — same conservatism as `statsRange`). The classic
     * table-profile `SELECT min(x), max(x), count(*)` at 100 TB
     * answers from the listing, zero file opens. Any Filter, grouping,
-    * DISTINCT, or other aggregate leaves the plan alone. */
-  private object CountFromManifest extends Rule[LogicalPlan] {
+    * DISTINCT, or other aggregate leaves the plan alone. Registered on
+    * every engine session by `GraftSession.tune`. */
+  object CountFromManifest extends Rule[LogicalPlan] {
 
     /** The manifest index under a chain of PURE-ATTRIBUTE Projects —
       * column selection/reorder only. A Project that ALIASES or

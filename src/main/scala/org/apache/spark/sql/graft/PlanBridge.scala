@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
@@ -46,4 +47,8 @@ object PlanBridge {
         exp.extraOptimizations = exp.extraOptimizations :+ rule
     }
   }
+
+  /** Block until every listener event posted so far has been delivered
+    * (`LiveListenerBus` is `private[spark]`). */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -25,6 +25,51 @@ class MetricsSpec extends SparkSuite {
     assert(agg.shuffleWriteBytes > mapOnly.shuffleWriteBytes * 10)
   }
 
+  test("measure: two concurrent calls each count only their own jobs") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    // shuffle-heavy: nearly every row is its own group, so partial
+    // aggregation cannot shrink the exchange (tens of MB); a computed
+    // key, since a bare `id` key is known-distinct and optimized away
+    def heavy(): Long = spark.range(2000000)
+      .groupBy((col("id") * 7) % 1999993).count().count()
+    val narrow = spark.range(100000).filter(col("id") % 2 === 0)
+    def mapOnly(): Long = narrow.count()
+    val (_, heavyAlone) = Metrics.measure(spark)(heavy())
+    val (_, mapAlone) = Metrics.measure(spark)(mapOnly())
+    assert(heavyAlone.shuffleWriteBytes > 1000000L, s"$heavyAlone")
+
+    // the map-only call's window encloses every job of the heavy call:
+    // it starts after the heavy action has begun and ends after it
+    val heavyStarted, heavyDone = new CountDownLatch(1)
+    def await(l: CountDownLatch): Unit =
+      assert(l.await(120, TimeUnit.SECONDS), "peer thread stalled")
+    @volatile var peer: Either[Throwable, Metrics.Run] =
+      Left(new IllegalStateException("heavy call did not finish"))
+    val t = new Thread(() =>
+      try {
+        peer = Right(Metrics.measure(spark) {
+          heavyStarted.countDown()
+          heavy()
+        }._2)
+      } catch { case e: Throwable => peer = Left(e) }
+      finally { heavyStarted.countDown(); heavyDone.countDown() })
+    t.start()
+    val (n, mapRun) = Metrics.measure(spark) {
+      await(heavyStarted)
+      val n = mapOnly()
+      await(heavyDone)
+      n
+    }
+    t.join(120000)
+    val heavyRun = peer.fold(throw _, identity)
+    assert(n == 50000L)
+    assert(mapRun.shuffleWriteBytes < 5000, s"map-only call saw a peer's shuffle: $mapRun")
+    def work(r: Metrics.Run) = (r.jobs, r.stages, r.tasks)
+    assert(work(mapRun) == work(mapAlone), s"$mapRun vs alone $mapAlone")
+    assert(work(heavyRun) == work(heavyAlone), s"$heavyRun vs alone $heavyAlone")
+    assert(heavyRun.shuffleWriteBytes > 1000000L, s"$heavyRun")
+  }
+
   test("measure: codegenCompiles counts fresh classes, none for a repeated plan") {
     // a literal codegen has not seen yet, so the first run must compile
     val df = spark.range(10).selectExpr(s"id * ${System.nanoTime()}")

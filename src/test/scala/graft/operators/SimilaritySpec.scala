@@ -362,33 +362,20 @@ class SimilaritySpec extends SparkSuite {
     // (the round-2 Lloyd refinement bug) trips this immediately.
     val big = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     val corpusBytes = big.count() * 64 * 4
-    val bytes = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null) bytes.addAndGet(t.taskMetrics.resultSize)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val n = Similarity
+    val (n, run) = graft.core.Metrics.measure(spark) {
+      Similarity
         .ivfTopK(big.filter(col("vec_id") < 32), big, 5, nlist = 16, nprobe = 4)
         .count()
-      assert(n == 32 * 5)
-      // listener events are posted async — wait for the byte count to
-      // go quiet before judging it
-      var last = -1L
-      var spins = 0
-      while (bytes.get() != last && spins < 50) {
-        last = bytes.get(); Thread.sleep(100); spins += 1
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
-    info(s"driver-bound task-result bytes: ${bytes.get()} (corpus ≈ $corpusBytes)")
+    }
+    assert(n == 32 * 5)
+    val bytes = run.resultSize
+    info(s"driver-bound task-result bytes: $bytes (corpus ≈ $corpusBytes)")
     // observed healthy value ≈ 54 KB; the round-2 bug (collecting every
     // vector as a Row of doubles) ships ≥ 2x the raw corpus bytes, so
     // < corpusBytes cleanly separates the two while tolerating
     // scheduler-overhead noise
-    assert(bytes.get() < corpusBytes,
-      s"driver received ${bytes.get()} B — corpus-sized collect suspected")
+    assert(bytes < corpusBytes,
+      s"driver received $bytes B — corpus-sized collect suspected")
   }
 
   test("cosineNearDupPairs is symmetric-free (a<b) and thresholded") {

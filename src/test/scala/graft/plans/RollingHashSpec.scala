@@ -8,7 +8,6 @@ class RollingHashSpec extends SparkSuite {
 
   test("codegen result matches the reference Scala loop") {
     import spark.implicits._
-    RollingHash.register(spark)
     val inputs = Seq("", "a", "abc", "the quick brown fox", "đường số 5")
     val got = inputs.toDF("t")
       .select(RollingHash.rollingHash(col("t"))).collect().map(_.getLong(0))
@@ -18,7 +17,6 @@ class RollingHashSpec extends SparkSuite {
 
   test("SQL registration + null propagation") {
     import spark.implicits._
-    RollingHash.register(spark)
     Seq(("x", "abc"), ("y", null)).toDF("k", "t").createOrReplaceTempView("rh_in")
     val rows = spark.sql("SELECT rolling_hash(t) FROM rh_in ORDER BY k").collect()
     assert(rows(0).getLong(0) == RollingHash.hashBytes("abc".getBytes("UTF-8")))
@@ -26,7 +24,6 @@ class RollingHashSpec extends SparkSuite {
   }
 
   test("participates in whole-stage codegen") {
-    RollingHash.register(spark)
     // a file-backed scan (a local relation would constant-fold away)
     val df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(RollingHash.rollingHash(col("text")).as("fp"))
@@ -36,7 +33,6 @@ class RollingHashSpec extends SparkSuite {
   }
 
   test("nfc_normalize is SQL-reachable and composes decomposed sequences") {
-    graft.plans.GraftFunctions.registerAll(spark)
     // 'e' + combining acute (U+0301) → precomposed é, one codepoint
     // less. NOTE: Spark SQL's chr() is ASCII-mod-256 (unlike DuckDB's
     // codepoint chr), so the combining char is embedded in the literal.
