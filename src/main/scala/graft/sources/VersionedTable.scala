@@ -74,11 +74,6 @@ object VersionedTable {
       .filter(v => manifestFile(root, v).lastModified() <= tsMillis)
       .lastOption
 
-  /** Read the snapshot [[versionAsOf]] `tsMillis` resolves to. */
-  def readAsOf(spark: SparkSession, root: String, tsMillis: Long): DataFrame =
-    readVersion(spark, root, versionAsOf(root, tsMillis)
-      .getOrElse(sys.error(s"no version at or before $tsMillis in $root")))
-
   /** Raw lines of one manifest FILE (full listing or delta directives —
     * use [[readListing]] for the resolved file list of a version). */
   private def readManifest(root: String, v: Long): Seq[String] = {
@@ -1265,6 +1260,87 @@ object VersionedTable {
       }
     }
     -1L // unreachable
+  }
+
+  /** A copy-on-write writer's plan for one base version: the listing
+    * lines it replaces, the rows that replace them, the columns whose
+    * stats the staged files record, and extra manifest lines (a `#txn`
+    * line). */
+  private final case class Rewrite(removed: Seq[String], rows: DataFrame,
+                                   statKeys: Seq[String] = Seq.empty,
+                                   extraLines: Seq[String] = Seq.empty)
+
+  /** The commit loop of every copy-on-write writer ([[replaceWhere]],
+    * [[merge]], [[mergeActions]], [[applyChanges]],
+    * [[applyChangesGuarded]], [[delete]], [[update]]): read the latest
+    * snapshot, run `plan(base, listing lines, declared-schema frame)` —
+    * None is a no-op and returns the base version — stage the rewrite
+    * in the table's own layout with its stats, fire `beforeCommit`
+    * (once per computed plan), and commit the delta `-removed +staged`
+    * at base + 1.
+    *
+    * A lost race counts one attempt. When `rebase(base, cur, removed
+    * paths)` proves the interleaved commits `(base, cur]` cannot change
+    * the plan, the SAME delta re-commits on the new head with the staged
+    * files kept; otherwise they are deleted and the plan recomputes
+    * against the winner's snapshot. Past `maxRetries` the staged files
+    * are deleted and the conflict rethrown. Appends, overwrites and
+    * metadata commits use the stage-once [[commitWithRetry]] instead. */
+  private def commitRewrite(spark: SparkSession, root: String,
+                            maxRetries: Int,
+                            beforeCommit: () => Unit = () => (),
+                            rebase: (Long, Long, Set[String]) => Boolean =
+                              (_, _, _) => false)
+                           (plan: (Long, Seq[String], DataFrame) => Option[Rewrite])
+      : Long = {
+    var attempt = 0
+    while (true) {
+      val base = latestVersion(root).getOrElse(sys.error(s"no versions at $root"))
+      val files = readListing(root, base) // listing LINES (stats kept on carry)
+      val rw = plan(base, files, readLinesDeclared(spark, root, base, files))
+      if (rw.isEmpty) return base
+      val Rewrite(removed, rows, statKeys, extraLines) = rw.get
+      val staged = statLines(spark, stageAuto(rows, root, base + 1), statKeys, root)
+      beforeCommit()
+      val removedPaths = removed.map(pathOf).toSet
+      var commitAt = base + 1
+      while (commitAt > 0) {
+        try {
+          // delta commit: O(touched + staged) bytes, not O(total files)
+          val committed = commitManifest(root, commitAt,
+            deltaContent(removed, staged) ++ extraLines)
+          maybeCheckpoint(root, committed)
+          return committed
+        } catch {
+          case e: java.nio.file.FileAlreadyExistsException =>
+            attempt += 1
+            val cur = latestVersion(root).getOrElse(-1L)
+            if (attempt <= maxRetries && cur >= commitAt &&
+                rebase(commitAt - 1, cur, removedPaths)) commitAt = cur + 1
+            else {
+              staged.foreach(p =>
+                Files.deleteIfExists(new File(pathOf(p)).toPath))
+              if (attempt > maxRetries) throw e
+              commitAt = -1L // recompute against the winner's snapshot
+            }
+        }
+      }
+    }
+    -1L // unreachable
+  }
+
+  /** Phase 1 (prune) of the copy-on-write writers: the lines of
+    * `files` whose data file holds a row of `probe(target)` — one pass
+    * over `target`, column-pruned to what the probe reads plus the file
+    * path. Only these files are re-read and rewritten; every other line
+    * carries into the next version as-is, stats included (at 100 TB a
+    * merge touching 0.1% of keys rewrites ~0.1% of files). */
+  private def touchedLines(files: Seq[String], target: DataFrame)
+                          (probe: DataFrame => DataFrame): Seq[String] = {
+    val names = probe(target.withColumn("__file", col("_metadata.file_path")))
+      .select(col("__file")).distinct()
+      .collect().map(_.getString(0).split('/').last).toSet
+    files.filter(f => names.contains(pathOf(f).split('/').last))
   }
 
   /** root → the constraint SET the CURRENT thread's latest staging
@@ -3336,18 +3412,8 @@ object VersionedTable {
         throw new IllegalArgumentException(
           s"replaceWhere batch row outside the predicate scope: ${leak.head}")
     }
-    var attempt = 0
-    while (true) {
-      val base = latestVersion(root).getOrElse(sys.error(s"no versions at $root"))
-      val files = readListing(root, base)
-      val target = readLinesDeclared(spark, root, base, files)
-      val touchedNames = target
-        .withColumn("__file", col("_metadata.file_path"))
-        .filter(predicate)
-        .select(col("__file")).distinct()
-        .collect().map(_.getString(0).split('/').last).toSet
-      val touched0 =
-        files.filter(f => touchedNames.contains(pathOf(f).split('/').last))
+    commitRewrite(spark, root, maxRetries) { (base, files, target) =>
+      val touched0 = touchedLines(files, target)(_.filter(predicate))
       val outCols = target.columns.toSeq
       val survivorsPlusBatch =
         if (touched0.isEmpty) batch.select(outCols.map(col): _*)
@@ -3356,22 +3422,8 @@ object VersionedTable {
           .unionByName(batch.select(outCols.map(col): _*),
             allowMissingColumns = true)
           .select(outCols.map(col): _*)
-      val v = base + 1
-      val staged = statLines(spark,
-        stageAuto(survivorsPlusBatch, root, v), Seq.empty, root)
-      try {
-        val committed = commitManifest(root, v, deltaContent(touched0, staged))
-        maybeCheckpoint(root, committed)
-        return committed
-      } catch {
-        case e: java.nio.file.FileAlreadyExistsException =>
-          staged.foreach(p =>
-            Files.deleteIfExists(new File(pathOf(p)).toPath))
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+      Some(Rewrite(touched0, survivorsPlusBatch))
     }
-    -1L // unreachable
   }
 
   // -------------------------------------------------------------------
@@ -3680,6 +3732,25 @@ object VersionedTable {
     readVersion(spark, root,
       latestVersion(root).getOrElse(sys.error(s"no versions at $root")))
 
+  /** `df` with every column it shares with `schema` CAST to the
+    * schema's type (SQL write semantics: values land in the TABLE's
+    * types). Without this, an insert-only MERGE/CDC batch — no touched
+    * files, so no union with stored rows to coerce it — would stage
+    * the source's own (possibly narrower) types and commit files whose
+    * footers break the snapshot's mergeSchema read (INT files in a
+    * BIGINT table). Columns absent from `schema` (schema evolution)
+    * keep their own type. */
+  private def alignTypes(df: DataFrame,
+                         schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    val want = schema.map(f => f.name -> f.dataType).toMap
+    df.select(df.columns.toSeq.map { c =>
+      want.get(c) match {
+        case Some(dt) if df.schema(c).dataType != dt => col(c).cast(dt).as(c)
+        case _ => col(c)
+      }
+    }: _*)
+  }
+
   /** Copy-on-write MERGE (upsert) with file-level pruning and
     * optimistic-commit retry — the Delta `DeltaTable.merge` role the
     * reference relies on (spark_config.py:20-24):
@@ -3703,25 +3774,6 @@ object VersionedTable {
     * attempt (lets a spec inject a racing writer deterministically).
     * Rows of `source` replace target rows sharing `keyCols`; unmatched
     * source rows are inserted. Returns the committed version. */
-  /** `df` with every column it shares with `schema` CAST to the
-    * schema's type (SQL write semantics: values land in the TABLE's
-    * types). Without this, an insert-only MERGE/CDC batch — no touched
-    * files, so no union with stored rows to coerce it — would stage
-    * the source's own (possibly narrower) types and commit files whose
-    * footers break the snapshot's mergeSchema read (INT files in a
-    * BIGINT table). Columns absent from `schema` (schema evolution)
-    * keep their own type. */
-  private def alignTypes(df: DataFrame,
-                         schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val want = schema.map(f => f.name -> f.dataType).toMap
-    df.select(df.columns.toSeq.map { c =>
-      want.get(c) match {
-        case Some(dt) if df.schema(c).dataType != dt => col(c).cast(dt).as(c)
-        case _ => col(c)
-      }
-    }: _*)
-  }
-
   def merge(spark: SparkSession, root: String, source: DataFrame,
             keyCols: Seq[String], maxRetries: Int = 5,
             beforeCommit: () => Unit = () => (),
@@ -3735,11 +3787,7 @@ object VersionedTable {
     // anti-join on every attempt; blocks free on GC (no CacheManager leak)
     val srcKeys = source.select(keyCols.map(col): _*).distinct()
       .localCheckpoint(true)
-    var attempt = 0
-    while (true) {
-      val base = latestVersion(root).getOrElse(sys.error(s"no versions at $root"))
-      val files = readListing(root, base) // listing LINES (stats kept on carry)
-      val target = readLinesDeclared(spark, root, base, files)
+    commitRewrite(spark, root, maxRetries, beforeCommit) { (base, files, target) =>
       // schema evolution (the Delta mergeSchema role): source-only
       // columns are appended to the table schema; untouched files simply
       // lack them and read back null via the mergeSchema snapshot read —
@@ -3749,18 +3797,10 @@ object VersionedTable {
           target.columns.toSeq ++
             source.columns.filterNot(target.columns.toSet)
         else target.columns.toSeq
-      val touchedNames = target
-        .withColumn("__file", col("_metadata.file_path"))
-        .join(srcKeys, keyCols, "left_semi")
-        .select(col("__file")).distinct()
-        .collect().map(_.getString(0).split('/').last).toSet
-      // select the touched LINES; untouched lines are never listed in
-      // the delta commit at all (they carry their stats implicitly);
-      // touched files are re-read by path (their rewrites get no stats —
-      // conservative, never-skipped)
+      // touched files are re-read by path; untouched lines are never
+      // listed in the delta commit at all (they carry their stats)
       val touched0 =
-        files.filter(f => touchedNames.contains(pathOf(f).split('/').last))
-      val touched = touched0.map(pathOf)
+        touchedLines(files, target)(_.join(srcKeys, keyCols, "left_semi"))
       // loud, actionable refusal (SQL's own UPDATE SET * stance): the
       // canonical merge REPLACES matched rows wholesale, so a source
       // lacking a table column — often one a metadata-only ALTER or an
@@ -3777,7 +3817,7 @@ object VersionedTable {
           "mergeActions with explicit SET/INSERT column maps")
       val src = alignTypes(source.select(outCols.map(col): _*), target.schema)
       val rewritten =
-        if (touched.isEmpty) src // pure insert — nothing to rewrite
+        if (touched0.isEmpty) src // pure insert — nothing to rewrite
         else readLinesDeclared(spark, root, base, touched0)
           .join(srcKeys, keyCols, "left_anti")
           // allowMissingColumns covers the KEPT side: outCols comes from
@@ -3786,32 +3826,14 @@ object VersionedTable {
           // (the source side is always complete — select(outCols) above)
           .unionByName(src, allowMissingColumns = true)
           .select(outCols.map(col): _*)
-      val v = base + 1
       // stats on the INTEGRAL merge keys (footer-exact, so small
       // batches fold driver-side): keeps countRows() metadata-
       // answerable AND lets a rival merge's rebase probe prove
       // key-disjointness against THIS commit's output from manifest
       // stats alone ([[rebaseKeyDisjoint]]); other columns stay
       // conservative (no stat, never wrong)
-      val staged = statLines(spark, stageAuto(rewritten, root, v),
-        integralStatKeys(target.schema, keyCols), root)
-      beforeCommit()
-      // delta commit: `-` the rewritten files, `+` the staged rewrite —
-      // O(touched + batch) bytes, not O(total files)
-      try {
-        val committed =
-          commitManifest(root, v, deltaContent(touched0, staged))
-        maybeCheckpoint(root, committed)
-        return committed
-      } catch {
-        case e: java.nio.file.FileAlreadyExistsException =>
-          staged.foreach(p =>
-            Files.deleteIfExists(new File(pathOf(p)).toPath))
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+      Some(Rewrite(touched0, rewritten, integralStatKeys(target.schema, keyCols)))
     }
-    -1L // unreachable
   }
 
   /** One MERGE action clause — the general (Delta-style) MERGE form
@@ -3938,11 +3960,24 @@ object VersionedTable {
     lazy val srcKeyRanges = integralKeyRanges(srcKeys, keyCols)
     def condOf(c: Option[org.apache.spark.sql.Column]) =
       c.map(x => coalesce(x, lit(false))).getOrElse(lit(true))
-    var attempt = 0
-    while (true) {
-      val base = latestVersion(root).getOrElse(sys.error(s"no versions at $root"))
-      val files = readListing(root, base)
-      val target = readLinesDeclared(spark, root, base, files)
+    // CONFLICT-AWARE RECONCILIATION (the Delta conflict-class role):
+    // a lost commit race does NOT automatically recompute phases
+    // 1-2. When every interleaved commit is a pure APPEND whose
+    // added files PROVABLY hold no source-key matches (manifest stat
+    // ranges disjoint from the source's key range — stronger than
+    // Delta's blind-append allowance: zero anomaly, not an accepted
+    // one), the SAME delta rebases onto the new head: removed files
+    // still exist (appends never remove), staged files are reused,
+    // appended rows carry through the interleaved commit itself. At
+    // 100 TB with streaming ingest + MERGE running concurrently,
+    // full recompute retries are the first thing that melts — this
+    // is what keeps them for the cases that genuinely need them
+    // (overlapping keys, rewrites, ALTERs, by-source clauses, which
+    // must SEE interleaved rows).
+    commitRewrite(spark, root, maxRetries, beforeCommit,
+      rebase = (base, cur, removed) => bySourceClauses.isEmpty &&
+        rebaseKeyDisjoint(root, base, cur, srcKeyRanges, removed)) {
+      (base, files, target) =>
       val outCols = target.columns.toSeq
       val schema = target.schema
       require(!outCols.contains("__graft_m"),
@@ -4020,15 +4055,11 @@ object VersionedTable {
       // rewrite files holding at least one row with NO source match —
       // so ONE combined outer-join pass computes both per-file flags
       // (two separate probes would double-read the table).
-      val (matchedNames, unmatchedNames): (Set[String], Set[String]) =
-        if (bySourceClauses.isEmpty) {
-          val m = target
-            .withColumn("__file", col("_metadata.file_path"))
-            .join(srcKeys, keyCols, "left_semi")
-            .select(col("__file")).distinct()
-            .collect().map(_.getString(0).split('/').last).toSet
-          (m, Set.empty)
-        } else {
+      val (touched0, unmatched): (Seq[String], Seq[String]) =
+        if (bySourceClauses.isEmpty)
+          (touchedLines(files, target)(_.join(srcKeys, keyCols, "left_semi")),
+            Seq.empty)
+        else {
           val rows = target
             .withColumn("__file", col("_metadata.file_path"))
             .join(srcKeys.withColumn("__graft_m", lit(true)),
@@ -4037,12 +4068,13 @@ object VersionedTable {
             .agg(max(col("__graft_m").isNotNull.cast("int")).as("__m"),
               max(col("__graft_m").isNull.cast("int")).as("__u"))
             .collect()
-          def names(i: Int) = rows.filter(_.getInt(i) == 1)
-            .map(_.getString(0).split('/').last).toSet
-          (names(1), names(2))
+          def flagged(i: Int) = {
+            val names = rows.filter(_.getInt(i) == 1)
+              .map(_.getString(0).split('/').last).toSet
+            files.filter(f => names.contains(pathOf(f).split('/').last))
+          }
+          (flagged(1), flagged(2))
         }
-      val touched0 =
-        files.filter(f => matchedNames.contains(pathOf(f).split('/').last))
       // matched keys for the insert anti-join: every matched key's
       // rows live in a touched file by construction, so the probe
       // reads only those files, key columns only
@@ -4065,11 +4097,9 @@ object VersionedTable {
       // phase 2 (rewrite) — skipped wholesale for insert-only merges;
       // the rewrite set is matched files (matched clauses) UNION
       // unmatched-row files (by-source clauses)
-      val rewriteNames =
-        (if (matchedClauses.isEmpty) Set.empty[String] else matchedNames) ++
-          (if (bySourceClauses.isEmpty) Set.empty[String] else unmatchedNames)
-      val rewriteFiles =
-        files.filter(f => rewriteNames.contains(pathOf(f).split('/').last))
+      val rewriteFiles = files.filter(
+        (if (matchedClauses.isEmpty) Set.empty[String] else touched0.toSet) ++
+          unmatched)
       val touchedPart: Option[DataFrame] =
         if (rewriteFiles.isEmpty) None
         else {
@@ -4156,61 +4186,16 @@ object VersionedTable {
           }.getOrElse(fillFor(c).as(c))
         }: _*)
       }
-      val parts = touchedPart.toSeq ++ insertPart.toSeq
-      if (parts.isEmpty) return base // no clause can have any effect
-      val rewritten = parts.reduce(_ unionByName _)
-      // complete no-op (nothing rewritten, nothing inserted): commit
-      // no version — DML that changes nothing must not churn history
-      if (rewriteFiles.isEmpty && rewritten.isEmpty) return base
-      val v = base + 1
-      // integral-key stats, as in merge(): countRows() stays
-      // metadata-answerable, rival rebase probes get provable
-      // key-disjointness, other columns stay conservative
-      val staged = statLines(spark, stageAuto(rewritten, root, v),
-        integralStatKeys(schema, keyCols), root)
-      beforeCommit()
-      // CONFLICT-AWARE RECONCILIATION (the Delta conflict-class role):
-      // a lost commit race does NOT automatically recompute phases
-      // 1-2. When every interleaved commit is a pure APPEND whose
-      // added files PROVABLY hold no source-key matches (manifest stat
-      // ranges disjoint from the source's key range — stronger than
-      // Delta's blind-append allowance: zero anomaly, not an accepted
-      // one), the SAME delta rebases onto the new head: removed files
-      // still exist (appends never remove), staged files are reused,
-      // appended rows carry through the interleaved commit itself. At
-      // 100 TB with streaming ingest + MERGE running concurrently,
-      // full recompute retries are the first thing that melts — this
-      // is what keeps them for the cases that genuinely need them
-      // (overlapping keys, rewrites, ALTERs, by-source clauses, which
-      // must SEE interleaved rows).
-      var commitAt = v
-      while (commitAt > 0) {
-        try {
-          val committed = commitManifest(root, commitAt,
-            deltaContent(rewriteFiles, staged))
-          maybeCheckpoint(root, committed)
-          return committed
-        } catch {
-          case e: java.nio.file.FileAlreadyExistsException =>
-            attempt += 1
-            if (attempt > maxRetries) {
-              staged.foreach(p =>
-                Files.deleteIfExists(new File(pathOf(p)).toPath))
-              throw e
-            }
-            val cur = latestVersion(root).getOrElse(-1L)
-            if (!bySourceClauses.isEmpty || cur < commitAt ||
-                !rebaseKeyDisjoint(root, commitAt - 1, cur,
-                  srcKeyRanges, rewriteFiles.map(pathOf).toSet)) {
-              // recompute against the winner's snapshot (outer loop)
-              staged.foreach(p =>
-                Files.deleteIfExists(new File(pathOf(p)).toPath))
-              commitAt = -1L
-            } else commitAt = cur + 1 // rebase, no recompute
-        }
-      }
+      // no clause can have any effect, or a complete no-op (nothing
+      // rewritten, nothing inserted): commit no version — DML that
+      // changes nothing must not churn history
+      (touchedPart.toSeq ++ insertPart.toSeq).reduceOption(_ unionByName _)
+        .filterNot(rewritten => rewriteFiles.isEmpty && rewritten.isEmpty)
+        // integral-key stats, as in merge(): countRows() stays
+        // metadata-answerable, rival rebase probes get provable
+        // key-disjointness, other columns stay conservative
+        .map(Rewrite(rewriteFiles, _, integralStatKeys(schema, keyCols)))
     }
-    -1L // unreachable
   }
 
   /** The merge keys eligible for rebase-probe (and pruning) stats:
@@ -4362,6 +4347,23 @@ object VersionedTable {
       case None => false
     }
 
+  /** A change feed's net effect: each key's latest row by `seqCol`,
+    * ties to the largest op (U > I > D), and the distinct keys the feed
+    * touches. Both are pinned once, so every commit retry folds the
+    * same rows (blocks free on GC, the merge() localCheckpoint
+    * discipline). */
+  private def netChanges(feed: DataFrame, keyCols: Seq[String],
+                         seqCol: String, opCol: String): (DataFrame, DataFrame) = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(keyCols.map(col): _*)
+      .orderBy(col(seqCol).desc, upper(col(opCol)).desc)
+    val latest = feed
+      .withColumn("__rn", org.apache.spark.sql.functions.row_number().over(w))
+      .filter(col("__rn") === 1).drop("__rn")
+      .localCheckpoint(true)
+    (latest, latest.select(keyCols.map(col): _*).distinct().localCheckpoint(true))
+  }
+
   /** APPLY CHANGES INTO (the Delta Live Tables `apply_changes` /
     * Debezium-sink role): fold an ORDERED change feed — rows tagged
     * I(nsert)/U(psert)/D(elete) in `opCol`, ordered per key by
@@ -4394,31 +4396,12 @@ object VersionedTable {
     // GENERATED ALWAYS: a CDC feed carries its own rows wholesale —
     // upserts would supply (or rewrite) the engine-assigned column
     refuseIdentitySurface(spark, root, "applyChanges (CDC upsert)")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCols.map(col): _*)
-      .orderBy(col(seqCol).desc, upper(col(opCol)).desc)
-    // net effect — computed once, reused across commit retries
-    // (blocks free on GC, the merge() localCheckpoint discipline)
-    val latest = feed
-      .withColumn("__rn", org.apache.spark.sql.functions.row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-      .localCheckpoint(true)
-    val affectedKeys = latest.select(keyCols.map(col): _*).distinct()
-      .localCheckpoint(true)
+    val (latest, affectedKeys) = netChanges(feed, keyCols, seqCol, opCol)
     val upserts = latest.filter(upper(col(opCol)) =!= "D")
       .drop(opCol).drop(seqCol)
-    var attempt = 0
-    while (true) {
-      val base = latestVersion(root).getOrElse(sys.error(s"no versions at $root"))
-      val files = readListing(root, base)
-      val target = readLinesDeclared(spark, root, base, files)
-      val touchedNames = target
-        .withColumn("__file", col("_metadata.file_path"))
-        .join(affectedKeys, keyCols, "left_semi")
-        .select(col("__file")).distinct()
-        .collect().map(_.getString(0).split('/').last).toSet
-      val touched0 =
-        files.filter(f => touchedNames.contains(pathOf(f).split('/').last))
+    commitRewrite(spark, root, maxRetries, beforeCommit) { (base, files, target) =>
+      val touched0 = touchedLines(files, target)(
+        _.join(affectedKeys, keyCols, "left_semi"))
       val outCols = target.columns.toSeq
       // merge()'s refusal, CDC-worded: a feed missing a table column
       // (ALTER-declared or evolution-appended after the feed's schema
@@ -4436,25 +4419,9 @@ object VersionedTable {
           .join(affectedKeys, keyCols, "left_anti")
           .unionByName(src, allowMissingColumns = true)
           .select(outCols.map(col): _*)
-      val v = base + 1
       // __rows-only stats: countRows() stays metadata-answerable
-      val staged = statLines(spark,
-        stageAuto(rewritten, root, v), Seq.empty, root)
-      beforeCommit()
-      try {
-        val committed =
-          commitManifest(root, v, deltaContent(touched0, staged))
-        maybeCheckpoint(root, committed)
-        return committed
-      } catch {
-        case e: java.nio.file.FileAlreadyExistsException =>
-          staged.foreach(p =>
-            Files.deleteIfExists(new File(pathOf(p)).toPath))
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+      Some(Rewrite(touched0, rewritten))
     }
-    -1L // unreachable
   }
 
   /** [[applyChanges]] with CROSS-BATCH sequence enforcement (the Delta
@@ -4486,7 +4453,9 @@ object VersionedTable {
     * the target schema) to persist deletes as TOMBSTONE rows — key +
     * sequence kept, payload columns nulled, flag true — so the stale
     * upsert loses the same seq race as any other stale row and the key
-    * stays dead. Read live rows via [[readLive]]; reclaim aged
+    * stays dead. Live rows are the latest snapshot filtered on
+    * `!coalesce(col(deletedCol), lit(false))` (a null flag, on rows
+    * written before the column existed, counts as live); reclaim aged
     * tombstones via [[vacuumTombstones]] (after which ordering
     * guarantees for those keys age out with them, the standard CDC
     * retention trade). */
@@ -4504,29 +4473,12 @@ object VersionedTable {
     val txnLines =
       if (txnAppId != null && txn >= 0) Seq(txnLine(txnAppId, txn))
       else Seq.empty
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCols.map(col): _*)
-      .orderBy(col(seqCol).desc, upper(col(opCol)).desc)
-    val latest = feed
-      .withColumn("__rn", org.apache.spark.sql.functions.row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-      .localCheckpoint(true)
-    val affectedKeys = latest.select(keyCols.map(col): _*).distinct()
-      .localCheckpoint(true)
-    var attempt = 0
-    while (true) {
-      val base = latestVersion(root).getOrElse(sys.error(s"no versions at $root"))
-      val files = readListing(root, base)
-      val target = readLinesDeclared(spark, root, base, files)
+    val (latest, affectedKeys) = netChanges(feed, keyCols, seqCol, opCol)
+    commitRewrite(spark, root, maxRetries, beforeCommit) { (base, files, target) =>
       require(target.columns.contains(seqCol),
         s"guarded apply needs the target to store '$seqCol'")
-      val touchedNames = target
-        .withColumn("__file", col("_metadata.file_path"))
-        .join(affectedKeys, keyCols, "left_semi")
-        .select(col("__file")).distinct()
-        .collect().map(_.getString(0).split('/').last).toSet
-      val touched0 =
-        files.filter(f => touchedNames.contains(pathOf(f).split('/').last))
+      val touched0 = touchedLines(files, target)(
+        _.join(affectedKeys, keyCols, "left_semi"))
       val outCols = target.columns.toSeq
       if (deletedCol != null)
         require(outCols.contains(deletedCol),
@@ -4584,33 +4536,9 @@ object VersionedTable {
             .select(outCols.map(col): _*)
             .unionByName(winners)
         }
-      val v = base + 1
-      val staged = statLines(spark,
-        stageAuto(rewritten, root, v), Seq.empty, root)
-      beforeCommit()
-      try {
-        val committed =
-          commitManifest(root, v, deltaContent(touched0, staged) ++ txnLines)
-        maybeCheckpoint(root, committed)
-        return committed
-      } catch {
-        case e: java.nio.file.FileAlreadyExistsException =>
-          staged.foreach(p =>
-            Files.deleteIfExists(new File(pathOf(p)).toPath))
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+      Some(Rewrite(touched0, rewritten, extraLines = txnLines))
     }
-    -1L // unreachable
   }
-
-  /** Live rows of a tombstone-retaining CDC table (the read companion
-    * of [[applyChangesGuarded]]'s `deletedCol` mode): the latest
-    * snapshot minus tombstone rows. Null flags (rows written before
-    * the column existed, via mergeSchema evolution) count as live. */
-  def readLive(spark: SparkSession, root: String,
-               deletedCol: String): DataFrame =
-    read(spark, root).filter(!coalesce(col(deletedCol), lit(false)))
 
   /** Reclaim tombstones with sequence ≤ `horizon` — the CDC retention
     * sweep (Delta's tombstone retention role). After it, out-of-order
@@ -4646,62 +4574,21 @@ object VersionedTable {
   def delete(spark: SparkSession, root: String,
              predicate: org.apache.spark.sql.Column,
              maxRetries: Int = 5,
-             beforeCommit: () => Unit = () => ()): Long = {
-    var attempt = 0
-    while (true) {
-      val base = latestVersion(root).getOrElse(sys.error(s"no versions at $root"))
-      val files = readListing(root, base)
-      val target = readLinesDeclared(spark, root, base, files)
-      val touchedNames = target
-        .withColumn("__file", col("_metadata.file_path"))
-        .filter(predicate)
-        .select(col("__file")).distinct()
-        .collect().map(_.getString(0).split('/').last).toSet
-      if (touchedNames.isEmpty) return base
-      val touched0 =
-        files.filter(f => touchedNames.contains(pathOf(f).split('/').last))
-      val survivors = readLinesDeclared(spark, root, base, touched0)
-        // keep when NOT(true): null-predicate rows survive, per SQL
-        .filter(!coalesce(predicate, lit(false)))
-      val v = base + 1
+             beforeCommit: () => Unit = () => ()): Long =
+    // conflict-aware reconciliation, as in mergeActions: a lost race
+    // against pure appends whose rows provably don't match the
+    // predicate (probed by reading ONLY the appended files) rebases
+    // the same delta onto the new head — no O(table) recompute
+    commitRewrite(spark, root, maxRetries, beforeCommit,
+      rebase = rebasePredicateFree(spark, root, _, _, predicate, _)) {
+      (base, files, target) =>
+      val touched0 = touchedLines(files, target)(_.filter(predicate))
+      // keep when NOT(true): null-predicate rows survive, per SQL;
       // __rows-only stats, as in merge: deletes stay metadata-countable
-      val staged = statLines(spark,
-        stageAuto(survivors, root, v), Seq.empty, root)
-      beforeCommit()
-      // conflict-aware reconciliation, as in mergeActions: a lost race
-      // against pure appends whose rows provably don't match the
-      // predicate (probed by reading ONLY the appended files) rebases
-      // the same delta onto the new head — no O(table) recompute
-      var commitAt = v
-      while (commitAt > 0) {
-        try {
-          val committed = commitManifest(root, commitAt,
-            deltaContent(touched0, staged))
-          maybeCheckpoint(root, committed)
-          return committed
-        } catch {
-          case e: java.nio.file.FileAlreadyExistsException =>
-            attempt += 1
-            if (attempt > maxRetries) {
-              staged.foreach(p =>
-                Files.deleteIfExists(new File(pathOf(p)).toPath))
-              throw e
-            }
-            val cur = latestVersion(root).getOrElse(-1L)
-            if (cur >= commitAt &&
-                rebasePredicateFree(spark, root, commitAt - 1, cur,
-                  predicate, touched0.map(pathOf).toSet))
-              commitAt = cur + 1
-            else {
-              staged.foreach(p =>
-                Files.deleteIfExists(new File(pathOf(p)).toPath))
-              commitAt = -1L
-            }
-        }
-      }
+      if (touched0.isEmpty) None
+      else Some(Rewrite(touched0, readLinesDeclared(spark, root, base, touched0)
+        .filter(!coalesce(predicate, lit(false)))))
     }
-    -1L // unreachable
-  }
 
   /** [[delete]] pinned at BASE version `baseV`: the committed version's
     * content derives from `baseV`'s listing minus the matching rows —
@@ -4720,22 +4607,15 @@ object VersionedTable {
     require(manifestFile(root, baseV).exists(),
       s"deleteAt base version $baseV does not exist at $root")
     val files = readListing(root, baseV)
-    val target = readLinesDeclared(spark, root, baseV, files)
-    val touchedNames = target
-      .withColumn("__file", col("_metadata.file_path"))
-      .filter(predicate)
-      .select(col("__file")).distinct()
-      .collect().map(_.getString(0).split('/').last).toSet
-    if (touchedNames.isEmpty) return baseV
-    val touched0 =
-      files.filter(f => touchedNames.contains(pathOf(f).split('/').last))
+    val touched0 = touchedLines(files,
+      readLinesDeclared(spark, root, baseV, files))(_.filter(predicate))
+    if (touched0.isEmpty) return baseV
     val survivors = readLinesDeclared(spark, root, baseV, touched0)
       .filter(!coalesce(predicate, lit(false)))
     val staged = statLines(spark,
       stageAuto(survivors, root, baseV + 1), Seq.empty, root)
     beforeCommit()
-    val untouched = files.filterNot(f =>
-      touchedNames.contains(pathOf(f).split('/').last))
+    val untouched = files.filterNot(touched0.toSet)
     val v = commitWithRetry(root, maxRetries = 5) { v =>
       if (v == baseV + 1) deltaContent(touched0, staged)
       else untouched ++ staged
@@ -4765,12 +4645,14 @@ object VersionedTable {
              predicate: org.apache.spark.sql.Column,
              set: Map[String, org.apache.spark.sql.Column],
              maxRetries: Int = 5,
-             beforeCommit: () => Unit = () => ()): Long = {
-    var attempt = 0
-    while (true) {
-      val base = latestVersion(root).getOrElse(sys.error(s"no versions at $root"))
-      val files = readListing(root, base)
-      val target = readLinesDeclared(spark, root, base, files)
+             beforeCommit: () => Unit = () => ()): Long =
+    // conflict-aware reconciliation (see delete/mergeActions): rows
+    // appended by a racing writer that match the predicate would
+    // belong to this UPDATE under serializable semantics — probe
+    // ONLY the appended files; a clean probe rebases, a hit recomputes
+    commitRewrite(spark, root, maxRetries, beforeCommit,
+      rebase = rebasePredicateFree(spark, root, _, _, predicate, _)) {
+      (base, files, target) =>
       require(set.keySet.subsetOf(target.columns.toSet),
         s"SET columns ${set.keySet.diff(target.columns.toSet)} not in table")
       // GENERATED ALWAYS: the engine-assigned key may not be rewritten
@@ -4778,16 +4660,10 @@ object VersionedTable {
         .filter(f => set.keys.exists(_.equalsIgnoreCase(f.name)))
         .foreach(f => refuseIdentitySurface(spark, root,
           s"UPDATE SET ${f.name}"))
-      val touchedNames = target
-        .withColumn("__file", col("_metadata.file_path"))
-        .filter(predicate)
-        .select(col("__file")).distinct()
-        .collect().map(_.getString(0).split('/').last).toSet
-      if (touchedNames.isEmpty) return base
-      val touched0 =
-        files.filter(f => touchedNames.contains(pathOf(f).split('/').last))
+      val touched0 = touchedLines(files, target)(_.filter(predicate))
       val hit = coalesce(predicate, lit(false))
-      val rewritten = readLinesDeclared(spark, root, base, touched0)
+      if (touched0.isEmpty) None
+      else Some(Rewrite(touched0, readLinesDeclared(spark, root, base, touched0)
         .select(target.columns.toSeq.map { c =>
           set.get(c) match {
             // cast back to the COLUMN's type (SQL UPDATE semantics):
@@ -4798,45 +4674,8 @@ object VersionedTable {
               .cast(target.schema(c).dataType).as(c)
             case None    => col(c)
           }
-        }: _*)
-      val v = base + 1
-      val staged = statLines(spark,
-        stageAuto(rewritten, root, v), Seq.empty, root)
-      beforeCommit()
-      // conflict-aware reconciliation (see delete/mergeActions): rows
-      // appended by a racing writer that match the predicate would
-      // belong to this UPDATE under serializable semantics — probe
-      // ONLY the appended files; a clean probe rebases, a hit recomputes
-      var commitAt = v
-      while (commitAt > 0) {
-        try {
-          val committed = commitManifest(root, commitAt,
-            deltaContent(touched0, staged))
-          maybeCheckpoint(root, committed)
-          return committed
-        } catch {
-          case e: java.nio.file.FileAlreadyExistsException =>
-            attempt += 1
-            if (attempt > maxRetries) {
-              staged.foreach(p =>
-                Files.deleteIfExists(new File(pathOf(p)).toPath))
-              throw e
-            }
-            val cur = latestVersion(root).getOrElse(-1L)
-            if (cur >= commitAt &&
-                rebasePredicateFree(spark, root, commitAt - 1, cur,
-                  predicate, touched0.map(pathOf).toSet))
-              commitAt = cur + 1
-            else {
-              staged.foreach(p =>
-                Files.deleteIfExists(new File(pathOf(p)).toPath))
-              commitAt = -1L
-            }
-        }
-      }
+        }: _*)))
     }
-    -1L // unreachable
-  }
 
   /** SHALLOW CLONE (the Delta `CREATE TABLE ... SHALLOW CLONE` role):
     * a new table at `dst` whose version 0 references the SOURCE's

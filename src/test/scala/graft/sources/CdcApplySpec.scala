@@ -172,7 +172,8 @@ class CdcApplySpec extends SparkSuite {
       Seq((1L, 5L, "a", 50.0, false), (2L, 5L, "b", 50.0, false))
         .toDF("k", "seq", "s", "v", "gone"), root)
     def live(): Set[(Long, Long, Double)] =
-      VersionedTable.readLive(spark, root, "gone").collect()
+      VersionedTable.read(spark, root)
+        .filter(!coalesce(col("gone"), lit(false))).collect()
         .map(r => (r.getAs[Long]("k"), r.getAs[Long]("seq"),
           r.getAs[Double]("v"))).toSet
     // batch 1: delete k=1 at seq 10

@@ -338,4 +338,128 @@ class MergeRebaseSpec extends SparkSuite {
       "the mirror merge must have deleted the interleaved unmatched row")
     assert(st.size == 20)
   }
+
+  // ---------------------------------------------------------------
+  // Every copy-on-write writer's retry paths, on a flat and on a
+  // partitioned table: (a) retries that run out leave the seed plus
+  // the racers' rows and no stray data file; (b) one racing append
+  // gives the serial result.
+  // ---------------------------------------------------------------
+
+  private val cowCols = Seq("k", "seq", "s", "v", "p")
+  private type CowRow = (Long, Long, String, Long, Int)
+
+  /** Keys 1-20 at stored sequence 5; `p` = k % 2 is the partition
+    * column of the partitioned layout. */
+  private val cowSeed: Seq[CowRow] =
+    (1L to 20L).map(i => (i, 5L, s"s$i", i * 10L, (i % 2).toInt))
+
+  private def cowTable(partitioned: Boolean): String = {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_cow").resolve("t").toString
+    VersionedTable.overwrite(cowSeed.toDF(cowCols: _*), root,
+      if (partitioned) Write(partitionBy = Seq("p")) else Write())
+    root
+  }
+
+  private def cowRows(root: String): Seq[CowRow] =
+    VersionedTable.read(spark, root).select(cowCols.map(col): _*).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3),
+        r.getInt(4))).toSeq.sorted
+
+  private def appendRow(root: String, r: CowRow): Unit = {
+    import spark.implicits._
+    VersionedTable.append(Seq(r).toDF(cowCols: _*), root)
+  }
+
+  /** (missing, orphan) data files, partition directories included:
+    * `fsck` lists `data/` one level deep only. */
+  private def strayFiles(root: String): (Seq[String], Seq[String]) = {
+    import scala.jdk.CollectionConverters._
+    val referenced = VersionedTable.versions(root)
+      .flatMap(v => VersionedTable.listingPaths(root, v)).toSet
+    val onDisk = Files.walk(java.nio.file.Paths.get(root, "data")).iterator
+      .asScala.map(_.toString).filter(_.endsWith(".parquet")).toSet
+    (referenced.diff(onDisk).toSeq.sorted, onDisk.diff(referenced).toSeq.sorted)
+  }
+
+  /** One writer acting on key 5 (partition p = 1): `run(root,
+    * maxRetries, beforeCommit)`. */
+  private final class CowWriter(val name: String,
+                                val run: (String, Int, () => Unit) => Long)
+
+  private def cowWriters: Seq[CowWriter] = {
+    import spark.implicits._
+    val upsert = Seq((5L, 9L, "u", 51L, 1))
+    Seq(
+      new CowWriter("merge", (root, n, hook) =>
+        VersionedTable.merge(spark, root, upsert.toDF(cowCols: _*), Seq("k"),
+          maxRetries = n, beforeCommit = hook)),
+      new CowWriter("mergeActions", (root, n, hook) =>
+        VersionedTable.mergeActions(spark, root, upsert.toDF(cowCols: _*),
+          Seq("k"), Seq(Update(None, Map("v" -> expr("t.v + s.v")))),
+          maxRetries = n, beforeCommit = hook)),
+      // `seq` is a data column here; the feed orders by `ord`
+      new CowWriter("applyChanges", (root, n, hook) =>
+        VersionedTable.applyChanges(spark, root,
+          Seq((5L, 9L, "u", 51L, 1, "U", 1L), (6L, 9L, "d", 0L, 0, "D", 1L))
+            .toDF(cowCols :+ "op" :+ "ord": _*),
+          Seq("k"), "ord", "op", maxRetries = n, beforeCommit = hook)),
+      new CowWriter("applyChangesGuarded", (root, n, hook) =>
+        VersionedTable.applyChangesGuarded(spark, root,
+          Seq((5L, 9L, "u", 51L, 1, "U"), (6L, 9L, "d", 0L, 0, "D"))
+            .toDF(cowCols :+ "op": _*),
+          Seq("k"), "seq", "op", maxRetries = n, beforeCommit = hook)),
+      new CowWriter("delete", (root, n, hook) =>
+        VersionedTable.delete(spark, root, col("k") === 5L,
+          maxRetries = n, beforeCommit = hook)),
+      new CowWriter("update", (root, n, hook) =>
+        VersionedTable.update(spark, root, col("k") === 5L,
+          Map("v" -> lit(51L)), maxRetries = n, beforeCommit = hook)))
+  }
+
+  for (w <- cowWriters; partitioned <- Seq(false, true)) {
+    val layout = if (partitioned) "partitioned" else "flat"
+
+    test(s"${w.name} on a $layout table: retries run out, leaving the " +
+      "seed plus the racers' rows and no stray file") {
+      val root = cowTable(partitioned)
+      val racers = Seq.newBuilder[CowRow]
+      var i = 0
+      intercept[java.nio.file.FileAlreadyExistsException] {
+        // each racer lands key 5 with a newer sequence: it conflicts
+        // with every writer, so no rebase can save the commit
+        w.run(root, 1, () => {
+          i += 1
+          val r = (5L, 100L + i, s"r$i", i.toLong, 1)
+          appendRow(root, r)
+          racers += r
+        })
+      }
+      assert(i == 2, s"maxRetries = 1 allows exactly one recompute ($i)")
+      assert(strayFiles(root) == ((Seq.empty, Seq.empty)))
+      if (!partitioned)
+        assert(VersionedTable.fsck(root) == ((Seq.empty, Seq.empty)))
+      assert(cowRows(root) == (cowSeed ++ racers.result()).sorted)
+    }
+
+    test(s"${w.name} on a $layout table: one racing append gives the " +
+      "serial result") {
+      // a conflicting racer (key 5, newer sequence) forces a recompute;
+      // a disjoint one (key 50, partition 0) may rebase
+      for (racer <- Seq[CowRow]((5L, 100L, "r", 7L, 1), (50L, 100L, "r", 7L, 0))) {
+        val raced = cowTable(partitioned)
+        var fired = false
+        w.run(raced, 5, () => if (!fired) { fired = true; appendRow(raced, racer) })
+        val serial = cowTable(partitioned)
+        appendRow(serial, racer)
+        w.run(serial, 5, () => ())
+        assert(cowRows(raced) == cowRows(serial), s"racer $racer")
+        assert(strayFiles(raced) == ((Seq.empty, Seq.empty)))
+        if (w.name == "applyChangesGuarded" && racer._1 == 5L)
+          // the stored sequence 100 beats the feed's 9 after the recompute
+          assert(cowRows(raced).filter(_._1 == 5L) == Seq(racer))
+      }
+    }
+  }
 }

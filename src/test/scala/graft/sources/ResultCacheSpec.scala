@@ -52,7 +52,7 @@ class ResultCacheSpec extends SparkSuite {
     assert(other.as[(String, Long)].collect().toSet == Set(("a", 2L)))
   }
 
-  test("readAsOf: manifest mtimes resolve a wall-clock snapshot") {
+  test("timestamp time travel: manifest mtimes resolve a wall-clock snapshot") {
     val root = tmp("graft_asof")
     VersionedTable.overwrite(Seq((1L, "a")).toDF("k", "v"), root)
     Thread.sleep(1100) // manifest mtime granularity is a full second
@@ -60,9 +60,10 @@ class ResultCacheSpec extends SparkSuite {
     Thread.sleep(1100)
     VersionedTable.append(Seq((2L, "b")).toDF("k", "v"), root)
     assert(VersionedTable.versionAsOf(root, between).contains(0L))
-    assert(VersionedTable.readAsOf(spark, root, between).count() == 1)
-    assert(VersionedTable
-      .readAsOf(spark, root, System.currentTimeMillis()).count() == 2)
+    def readAsOf(ts: Long) =
+      VersionedTable.readVersion(spark, root, VersionedTable.versionAsOf(root, ts).get)
+    assert(readAsOf(between).count() == 1)
+    assert(readAsOf(System.currentTimeMillis()).count() == 2)
     assert(VersionedTable.versionAsOf(root, 0L).isEmpty)
   }
 }
