@@ -242,20 +242,15 @@ object Dedup {
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize the persist and size the loop in one job: every
-    // round's join/agg shuffles at spark.sql.shuffle.partitions, and
-    // over a near-dup edge list of a few hundred rows the per-round
-    // task/checkpoint overhead tracks that count, not the data
-    // (round-15 driver: q66 5.33 s @32c vs 2.3 s @8c). The cap only
-    // ever LOWERS the setting (ShuffleScale), so production-sized
-    // edge lists pass through untouched (guide §2.2).
-    val edgeCount = edges.count()
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node"))
-      .localCheckpoint(true)
-    var changed = 1L
-    var i = 0
-    graft.core.ShuffleScale.withRowCap(pairs.sparkSession, edgeCount) {
+    // the eager labels checkpoint below reads `edges`, so it also
+    // materializes the persist; unpersist in `finally` so a loop that
+    // does not converge (or a round that throws) leaves no cache entry
+    try {
+      var labels = edges.select(col("src").as("node")).distinct()
+        .withColumn("lbl", col("node"))
+        .localCheckpoint(true)
+      var changed = 1L
+      var i = 0
       while (changed > 0 && i < maxIter) {
         val prop = edges.join(labels, edges("src") === labels("node"))
           .select(col("dst").as("node"), col("lbl"))
@@ -278,13 +273,11 @@ object Dedup {
         labels = next.select(col("node"), col("lbl"))
         i += 1
       }
-    }
-    require(changed == 0, s"connectedComponents did not converge in $maxIter rounds")
-    val out = nodes.select(col(nodes.columns.head).as("id"))
-      .join(labels, col("id") === col("node"), "left")
-      .select(col("id"), coalesce(col("lbl"), col("id")).as("component"))
-    edges.unpersist()
-    out
+      require(changed == 0, s"connectedComponents did not converge in $maxIter rounds")
+      nodes.select(col(nodes.columns.head).as("id"))
+        .join(labels, col("id") === col("node"), "left")
+        .select(col("id"), coalesce(col("lbl"), col("id")).as("component"))
+    } finally edges.unpersist()
   }
 
   /** Connected components by alternating LARGE-STAR / SMALL-STAR
@@ -354,10 +347,6 @@ object Dedup {
     var edgeCount = edges.count()
     var converged = edgeCount == 0
     var i = 0
-    // star rounds shuffle a few-hundred-row edge list at the session
-    // partition count; cap it to the data (lower-only — production
-    // edge lists pass through; see connectedComponents / guide §2.2)
-    graft.core.ShuffleScale.withRowCap(pairs.sparkSession, edgeCount) {
     while (!converged && i < maxIter) {
       // per-round localCheckpoint: persist does not truncate lineage and
       // an iterated join/agg plan doubles per round (see
@@ -378,7 +367,6 @@ object Dedup {
       edges = next
       edgeCount = nextCount
       i += 1
-    }
     }
     require(converged, s"connectedComponentsStar did not converge in $maxIter rounds")
     // at fixpoint every edge is (root, member)

@@ -56,65 +56,8 @@ object SetSimJoin {
   private[graft] def rankSetsAndCandidates(
       sets: DataFrame, threshold: Double): (DataFrame, DataFrame) = {
     require(threshold > 0 && threshold <= 1)
-
-    // cap the EAGER pipeline stages' shuffle width to the input size
-    // (guide §2.2): the dictionary ranking + rank-set builds below run
-    // their checkpoints at the session partition count, and over a
-    // few-MB gate corpus the 32-wide range-repartition + checkpoint
-    // rounds cost more than the data. Lower-only: unknown/production
-    // sizes pass through (ShuffleScale).
-    val capBytes = graft.core.ShuffleScale.statBytes(sets)
-
-    val tokens = sets.select(col("id"), explode(col("toks")).as("tok"))
-    val freq = tokens.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    // rarest-first global ORDER (dense ranks are not needed — only a
-    // long that is order-isomorphic to (df, tok)): after
-    // repartitionByRange the partition index is ordered by the key, and
-    // after sortWithinPartitions the local row order is too, so
-    // monotonically_increasing_id (pid << 33 | local) is itself
-    // order-isomorphic — no per-partition count pass, no offset window,
-    // no broadcast join (the PartitionOffsetKeyGen machinery this
-    // replaces cost ~2 extra jobs over the dictionary per run).
-    //
-    // MUST be eagerly checkpointed, not lazily persisted: mono_id is
-    // only consistent within ONE evaluation, and a lazily-cached
-    // subtree can materialize different partitions in different
-    // downstream stages (= separate evaluations with different AQE
-    // layouts), silently assigning a token two different ranks. The
-    // eager localCheckpoint freezes the tok→rank map before any
-    // consumer runs. (Found the hard way: one shared shingle of a
-    // near-dup pair ranked differently in the two docs' arrays.)
-    val ranked = graft.core.ShuffleScale.withBytesCap(
-      sets.sparkSession, capBytes) {
-      freq
-        .repartitionByRange(col("df"), col("tok"))
-        .sortWithinPartitions(col("df"), col("tok"))
-        .select(col("tok"), monotonically_increasing_id().as("rank"))
-        .localCheckpoint(true)
-    }
-
-    // eagerly checkpointed, NOT lazily persisted: the self-join and the
-    // two verify joins each reference this subtree, and Spark re-executes
-    // unshared lineage per reference (the sides aren't canonically equal,
-    // so ReusedExchange can't help). A CacheManager persist() here leaks —
-    // the operator returns a lazy plan, so there is no point where the
-    // caller could unpersist, and in a long-lived session the
-    // MEMORY_AND_DISK entries accumulate until they squeeze execution
-    // memory (shuffle spill everywhere). localCheckpoint materializes
-    // once, truncates lineage, and its RDD blocks are freed by the
-    // ContextCleaner as soon as the result DataFrame is dropped.
-    val rankSets = graft.core.ShuffleScale.withBytesCap(
-      sets.sparkSession, capBytes) {
-      tokens
-        .join(ranked, Seq("tok"))
-        .groupBy(col("id"))
-        .agg(sort_array(collect_list(col("rank"))).as("ranks"))
-        .withColumn("sz", size(col("ranks")))
-        // prefix length |x| − ⌈t·|x|⌉ + 1
-        .withColumn("plen",
-          (col("sz") - ceil(lit(threshold) * col("sz")) + 1).cast(IntegerType))
-        .localCheckpoint(true)
-    }
+    val rankSets = rankedSets(
+      sets.select(col("id"), explode(col("toks")).as("tok")), Seq("id"), threshold)
 
     // NOT checkpointed: both self-join sides re-derive this from the
     // checkpointed rankSets — the re-derivation is a map-local explode
@@ -152,33 +95,11 @@ object SetSimJoin {
   def jaccardJoin(left: DataFrame, right: DataFrame,
                   threshold: Double): DataFrame = {
     require(threshold > 0 && threshold <= 1)
-    val spark = left.sparkSession
     val tokens = left
       .select(lit(0).as("side"), col("id"), explode(col("toks")).as("tok"))
       .unionByName(right
         .select(lit(1).as("side"), col("id"), explode(col("toks")).as("tok")))
-    val freq = tokens.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    // shuffle width of the eager builds capped to the two inputs'
-    // combined size estimate — see rankSetsAndCandidates (guide §2.2)
-    val capBytes = graft.core.ShuffleScale.statBytes(left) +
-      graft.core.ShuffleScale.statBytes(right)
-    val ranked = graft.core.ShuffleScale.withBytesCap(spark, capBytes) {
-      freq
-        .repartitionByRange(col("df"), col("tok"))
-        .sortWithinPartitions(col("df"), col("tok"))
-        .select(col("tok"), monotonically_increasing_id().as("rank"))
-        .localCheckpoint(true)
-    }
-    val rankSets = graft.core.ShuffleScale.withBytesCap(spark, capBytes) {
-      tokens
-        .join(ranked, Seq("tok"))
-        .groupBy(col("side"), col("id"))
-        .agg(sort_array(collect_list(col("rank"))).as("ranks"))
-        .withColumn("sz", size(col("ranks")))
-        .withColumn("plen",
-          (col("sz") - ceil(lit(threshold) * col("sz")) + 1).cast(IntegerType))
-        .localCheckpoint(true)
-    }
+    val rankSets = rankedSets(tokens, Seq("side", "id"), threshold)
     def prefixes(side: Int, idName: String) = rankSets
       .filter(col("side") === side)
       .select(col("id").as(idName), col("sz"),
@@ -201,5 +122,53 @@ object SetSimJoin {
         col("common").cast(DoubleType) / (col("sz_l") + col("sz_r") - col("common")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_l"), col("id_r"), col("jaccard"))
+  }
+
+  /** Stages 1-2 of the AllPairs pipeline over `tokens` (`keys`…, tok):
+    * the rarest-first rank of every distinct token, then per key the
+    * sorted rank array `ranks`, its size `sz` and the prefix length
+    * `plen` = |x| − ⌈t·|x|⌉ + 1.
+    *
+    * Rarest-first global ORDER (dense ranks are not needed — only a
+    * long that is order-isomorphic to (df, tok)): after
+    * repartitionByRange the partition index is ordered by the key, and
+    * after sortWithinPartitions the local row order is too, so
+    * monotonically_increasing_id (pid << 33 | local) is itself
+    * order-isomorphic — no per-partition count pass, no offset window,
+    * no broadcast join.
+    *
+    * Both builds are EAGERLY checkpointed, not lazily persisted:
+    *  - mono_id is only consistent within ONE evaluation, and a
+    *    lazily-cached subtree can materialize different partitions in
+    *    different downstream stages (= separate evaluations with
+    *    different AQE layouts), silently assigning a token two
+    *    different ranks; the eager localCheckpoint freezes the
+    *    tok→rank map before any consumer runs. (Found the hard way: one
+    *    shared shingle of a near-dup pair ranked differently in the two
+    *    docs' arrays.)
+    *  - the rank sets have three consumers (the candidate self-join's
+    *    two prefix sides and the verify joins), and Spark re-executes
+    *    unshared lineage per reference (the sides aren't canonically
+    *    equal, so ReusedExchange can't help). A CacheManager persist()
+    *    here leaks — the operators return a lazy plan, so there is no
+    *    point where the caller could unpersist; localCheckpoint
+    *    materializes once, truncates lineage, and its RDD blocks are
+    *    freed by the ContextCleaner once the result DataFrame is
+    *    dropped. */
+  private def rankedSets(tokens: DataFrame, keys: Seq[String],
+                         threshold: Double): DataFrame = {
+    val ranked = tokens.groupBy(col("tok")).agg(count(lit(1)).as("df"))
+      .repartitionByRange(col("df"), col("tok"))
+      .sortWithinPartitions(col("df"), col("tok"))
+      .select(col("tok"), monotonically_increasing_id().as("rank"))
+      .localCheckpoint(true)
+    tokens
+      .join(ranked, Seq("tok"))
+      .groupBy(keys.map(col): _*)
+      .agg(sort_array(collect_list(col("rank"))).as("ranks"))
+      .withColumn("sz", size(col("ranks")))
+      .withColumn("plen",
+        (col("sz") - ceil(lit(threshold) * col("sz")) + 1).cast(IntegerType))
+      .localCheckpoint(true)
   }
 }

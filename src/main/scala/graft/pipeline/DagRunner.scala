@@ -32,9 +32,7 @@ import graft.audit.AuditLogger.AuditRecord
   *
   * Rule for task bodies: they run on pool threads, side by side, so
   * they must not change session-global config (`spark.conf.set`) and
-  * must not share unsynchronized mutable state. `ShuffleScale.withCap`
-  * still rewrites `spark.sql.shuffle.partitions` on the shared session
-  * and must stay out of task bodies until it is removed.
+  * must not share unsynchronized mutable state.
   *
   * Determinism for tests/gates: the wall clock and hostname are
   * injected, and results and audit rows come back in Kahn order (ties

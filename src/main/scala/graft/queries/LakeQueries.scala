@@ -1549,14 +1549,17 @@ object LakeQueries extends QueryModule {
     // durable state (drop_gone_ok) must all survive the wipe.
     "q324_durable_catalog" -> Q(
       bench = false,
-      run = (s, dir) => {
+      run = (caller, dir) => {
         val wh = tempRoot("graft_vt_dwh").toString
+        // the catalog is installed on a private session, so the
+        // caller's conf is never written and every run gets a fresh
+        // catalog instance on its own warehouse; the JVM-global
+        // registry may still bind a previous run's names — rerun-safe
+        // because these drops clear them
+        val s = graft.core.GraftSession.tune(caller.newSession())
         s.conf.set("spark.sql.catalog.graftdur",
           classOf[org.apache.spark.sql.graft.GraftCatalog].getName)
         s.conf.set("spark.sql.catalog.graftdur.warehouse", wh)
-        // the catalog INSTANCE is cached per session with its first
-        // warehouse — rerun-safe because these drops clear the
-        // instance's own store
         s.sql("DROP TABLE IF EXISTS graftdur.gate.dur_t")
         s.sql("DROP TABLE IF EXISTS graftdur.gate.tmp_t")
         Tables(s, dir, "orders").createOrReplaceTempView("q324_orders")

@@ -45,6 +45,16 @@ object VersionedTable {
   private def logDir(root: String) = new File(root, "_log")
   private def dataDir(root: String) = new File(root, "data")
 
+  /** Every `.parquet` file under `dir`, Hive partition directories
+    * included; paths keep the form staging records in a listing
+    * (`new File(parent, name).getPath`), so they compare as strings. */
+  private def parquetFilesUnder(dir: File): Seq[File] =
+    Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
+      if (f.isDirectory) parquetFilesUnder(f)
+      else if (f.getName.endsWith(".parquet")) Seq(f)
+      else Seq.empty
+    }
+
   private def manifestFile(root: String, v: Long): File =
     new File(logDir(root), f"$v%012d.manifest")
 
@@ -2600,9 +2610,7 @@ object VersionedTable {
       .parquet(staging.getPath)
     catch { case e: Throwable => Lake.deleteRecursively(staging); throw e }
     dataDir(root).mkdirs()
-    def walk(f: File): Seq[File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-    val moved = walk(staging).filter(_.getName.endsWith(".parquet"))
+    val moved = parquetFilesUnder(staging)
       .sortBy(_.getPath).zipWithIndex.map { case (f, i) =>
         val rel = staging.toPath.relativize(f.getParentFile.toPath).toString
         val dstDir = new File(dataDir(root), rel)
@@ -5024,15 +5032,15 @@ object VersionedTable {
     *  - `orphans`: `.parquet` files on disk no version references —
     *    crashed-writer leftovers, safe to reclaim (vacuum removes
     *    them along with expired versions).
-    * Metadata + one directory listing, zero data reads — the audit an
+    * Metadata + one recursive listing of `data/` (partition
+    * directories included), zero data reads — the audit an
     * operator runs before trusting a 100 TB table, priced O(manifest).
     * An empty/missing table reports clean (nothing referenced, nothing
     * on disk). */
   def fsck(root: String): (Seq[String], Seq[String]) = {
     val referenced = versions(root)
       .flatMap(v => readListing(root, v).map(pathOf)).distinct
-    val onDisk = Option(dataDir(root).listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".parquet")).map(_.getPath).toSeq
+    val onDisk = parquetFilesUnder(dataDir(root)).map(_.getPath)
     val diskSet = onDisk.toSet
     val refSet = referenced.toSet
     (referenced.filterNot(diskSet).sorted, onDisk.filterNot(refSet).sorted)
@@ -5093,8 +5101,7 @@ object VersionedTable {
           writeDeclaredSidecar(root, oldest, s))
     }
     val live = keep.flatMap(readListing(root, _).map(pathOf)).toSet
-    val dead = Option(dataDir(root).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.endsWith(".parquet") && !live.contains(f.getPath))
+    val dead = parquetFilesUnder(dataDir(root)).filterNot(f => live.contains(f.getPath))
     dead.foreach(_.delete())
     drop.foreach { v =>
       manifestFile(root, v).delete()

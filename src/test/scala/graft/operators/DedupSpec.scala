@@ -98,6 +98,21 @@ class DedupSpec extends SparkSuite {
     assert(got == Set(0L))
   }
 
+  test("connected components: a loop that does not converge leaves no " +
+    "cached edge list") {
+    import spark.implicits._
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache() // start from an empty cache
+    // a 40-link chain needs ~40 min-label rounds; 3 are allowed
+    val pairs = (0L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val e = intercept[IllegalArgumentException] {
+      Dedup.connectedComponents(pairs, (0L to 40L).toDF("id"), maxIter = 3)
+    }
+    assert(e.getMessage.contains("did not converge in 3 rounds"))
+    assert(cache.isEmpty, "the persisted edge list must be unpersisted")
+  }
+
   test("star connected components agree with min-label on mixed graphs") {
     import spark.implicits._
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (6L, 7L), (5L, 7L),

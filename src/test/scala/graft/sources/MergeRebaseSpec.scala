@@ -372,8 +372,8 @@ class MergeRebaseSpec extends SparkSuite {
     VersionedTable.append(Seq(r).toDF(cowCols: _*), root)
   }
 
-  /** (missing, orphan) data files, partition directories included:
-    * `fsck` lists `data/` one level deep only. */
+  /** (missing, orphan) data files, partition directories included — an
+    * independent walk of `data/` to check `fsck` against. */
   private def strayFiles(root: String): (Seq[String], Seq[String]) = {
     import scala.jdk.CollectionConverters._
     val referenced = VersionedTable.versions(root)
@@ -438,8 +438,7 @@ class MergeRebaseSpec extends SparkSuite {
       }
       assert(i == 2, s"maxRetries = 1 allows exactly one recompute ($i)")
       assert(strayFiles(root) == ((Seq.empty, Seq.empty)))
-      if (!partitioned)
-        assert(VersionedTable.fsck(root) == ((Seq.empty, Seq.empty)))
+      assert(VersionedTable.fsck(root) == ((Seq.empty, Seq.empty)))
       assert(cowRows(root) == (cowSeed ++ racers.result()).sorted)
     }
 

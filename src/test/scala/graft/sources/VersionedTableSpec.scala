@@ -579,6 +579,53 @@ class VersionedTableSpec extends SparkSuite {
     assert(VersionedTable.fsck(tmpRoot()) == ((Seq.empty, Seq.empty)))
   }
 
+  /** A Hive-partitioned table (files under `data/p=<v>/`) after an
+    * overwrite, a delete and an update: four versions, every one of
+    * which rewrote partition files. */
+  private def churnedPartitionedTable(): String = {
+    import spark.implicits._
+    val root = tmpRoot()
+    VersionedTable.overwrite(Seq((1L, 10L, 0), (2L, 20L, 1), (3L, 30L, 1))
+      .toDF("k", "v", "p"), root, Write(partitionBy = Seq("p")))
+    VersionedTable.overwrite(Seq((1L, 11L, 0), (2L, 21L, 1), (3L, 31L, 1),
+      (4L, 41L, 0)).toDF("k", "v", "p"), root, Write(partitionBy = Seq("p")))
+    VersionedTable.delete(spark, root, col("k") === 3L)
+    VersionedTable.update(spark, root, col("k") === 2L, Map("v" -> lit(99L)))
+    root
+  }
+
+  test("fsck on a partitioned table: clean after overwrite, delete and update") {
+    val root = churnedPartitionedTable()
+    assert(VersionedTable.versions(root) == Seq(0L, 1L, 2L, 3L))
+    assert(VersionedTable.listingPaths(root, 3L).forall(_.contains("/data/p=")))
+    assert(VersionedTable.fsck(root) == ((Seq.empty, Seq.empty)))
+  }
+
+  test("fsck on a partitioned table: reports a stray file in a partition directory") {
+    val root = churnedPartitionedTable()
+    val stray = new java.io.File(root, "data/p=1/p-dead0000-00000.parquet")
+    Files.write(stray.toPath, Array[Byte](1))
+    assert(VersionedTable.fsck(root) == ((Seq.empty, Seq(stray.getPath))))
+  }
+
+  test("vacuum on a partitioned table deletes exactly the dead partition files") {
+    import spark.implicits._
+    val root = churnedPartitionedTable()
+    def rows() = VersionedTable.read(spark, root).as[(Long, Long, Int)]
+      .collect().toSeq.sorted
+    val before = rows()
+    assert(before == Seq((1L, 11L, 0), (2L, 99L, 1), (4L, 41L, 0)))
+    val live = VersionedTable.listingPaths(root, 3L).toSet
+    val dead = VersionedTable.versions(root)
+      .flatMap(VersionedTable.listingPaths(root, _)).toSet -- live
+    assert(dead.nonEmpty && dead.forall(f => new java.io.File(f).exists()))
+    assert(VersionedTable.vacuum(root, retainVersions = 1) == dead.size)
+    assert(dead.forall(f => !new java.io.File(f).exists()))
+    assert(live.forall(f => new java.io.File(f).exists()))
+    assert(VersionedTable.fsck(root) == ((Seq.empty, Seq.empty)))
+    assert(rows() == before)
+  }
+
   test("bloom index: equality read opens only possibly-containing files") {
     import spark.implicits._
     val root = tmpRoot()
