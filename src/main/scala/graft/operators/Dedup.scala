@@ -90,26 +90,10 @@ object Dedup {
       math.abs(rnd.nextLong()) % MersennePrime))
   }
 
-  /** xxhash64 of each distinct shingle — materialize this as its own
-    * column before `minhashSignature` so each shingle is hashed once
-    * per row, not once per permutation (lambda bodies re-evaluate their
-    * subtree per element). */
+  /** xxhash64 of each distinct shingle, as one array column — the
+    * shingle stream [[minhashSignaturesAgg]] explodes and folds. */
   def shingleHashes(text: Column, n: Int = 3): Column =
     transform(wordShingles(text, n), s => xxhash64(s))
-
-  /** MinHash signature (array<bigint>, length `numHashes`) from
-    * pre-hashed shingles, as a Column expression. Fine for small/ad-hoc
-    * use, but higher-order functions evaluate interpreted — the pairs
-    * pipeline uses `minhashSignatures` (explode + codegen'd
-    * aggregates) instead, which is orders of magnitude faster. */
-  def minhashSignature(hashes: Column, numHashes: Int = 128): Column = {
-    val ps = perms(numHashes)
-    val permArr = arrays_zip(
-      lit(ps.map(_.a).toArray).as("a"), lit(ps.map(_.b).toArray).as("b"))
-    transform(permArr, p =>
-      array_min(transform(hashes, h =>
-        pmod(p.getField("a") * h + p.getField("b"), lit(MersennePrime)))))
-  }
 
   /** (id, sig) per document — map-local via the MinHashSig expression
     * (graft.plans.DocHashExpressions): the whole signature is a

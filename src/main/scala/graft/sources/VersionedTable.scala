@@ -963,16 +963,18 @@ object VersionedTable {
     * `base`, attempt the `#constraint +` commit at `base+1`; a CAS
     * win PROVES the validated snapshot was the immediately-pre-commit
     * state (nothing interleaved), a loss re-reads and re-validates
-    * against the winner's state. Data writers mirror it: enforcement
-    * at stage time, plus a pre-attempt revalidation when a constraint
-    * commit interleaved ([[commitWithRetry]]'s guard; the rebase
-    * classifiers already force recompute on any `#constraint`
-    * interleave). Either interleaving of ADD-vs-violating-append
-    * therefore refuses — never a committed violation. MOR overlay
-    * patches commit OUTSIDE this chain ([[Tombstones]] stores), so a
-    * post-commit overlay re-scan below closes their common window
-    * loudly (withdraw + error); an overlay landing after that re-scan
-    * remains the documented MOR residual. */
+    * against the winner's state. Data writers mirror it in the only
+    * two retry loops: [[commitWithRetry]] enforces at stage time and
+    * re-validates the call's own staged rows before any attempt a
+    * constraint commit interleaved with; [[commitRewrite]] re-stages
+    * (enforcing the current set) after every loss its rebase cannot
+    * prove harmless, and the rebase classifiers force that recompute
+    * on any `#constraint` interleave. Either interleaving of
+    * ADD-vs-violating-append therefore refuses — never a committed
+    * violation. MOR overlay patches commit OUTSIDE this chain
+    * ([[Tombstones]] stores), so a post-commit overlay re-scan below
+    * closes their common window loudly (withdraw + error); an overlay
+    * landing after that re-scan remains the documented MOR residual. */
   def addConstraint(spark: SparkSession, root: String, name: String,
                     exprText: String, maxRetries: Int = 64,
                     beforeCommit: () => Unit = () => ()): Unit = {
@@ -1020,42 +1022,34 @@ object VersionedTable {
       scan(spark, root)
         .filter(!coalesce(expr(exprText).cast("boolean"), lit(false)))
         .limit(1).count() != 0L
-    var attempt = 0
-    while (true) {
-      val base = latestVersion(root).get
-      val existing = constraintsAt(root, base)
-      existing.get(name).foreach { prev =>
-        if (prev == exprText) return
-        sys.error(s"constraint $name already exists as: $prev")
+    // a lost race re-plans: the interleaved writer's rows re-validate
+    var added = false
+    val v = commitWithRetry(root, maxRetries) { v =>
+      val base = v - 1
+      val prev = constraintsAt(root, base).get(name)
+      prev.filter(_ != exprText).foreach(p =>
+        sys.error(s"constraint $name already exists as: $p"))
+      added = prev.isEmpty
+      if (!added) None
+      else {
+        require(!violating(),
+          s"cannot add CHECK constraint $name: existing rows violate ($exprText)")
+        beforeCommit() // race-injection seam (post-validation, pre-CAS)
+        Some(deltaContent(Seq.empty, Seq.empty) ++
+          Seq(PreservingMarker, constraintAddLine(name, exprText)) ++
+          newFeatureLines(root, base, Seq(("w", "check-constraints"))))
       }
-      require(!violating(),
-        s"cannot add CHECK constraint $name: existing rows violate ($exprText)")
-      beforeCommit() // race-injection seam (post-validation, pre-CAS)
-      val won =
-        try {
-          commitManifest(root, base + 1,
-            deltaContent(Seq.empty, Seq.empty) ++
-              Seq(PreservingMarker, constraintAddLine(name, exprText)) ++
-              newFeatureLines(root, base, Seq(("w", "check-constraints"))))
-          true
-        } catch {
-          case e: java.nio.file.FileAlreadyExistsException =>
-            attempt += 1
-            if (attempt > maxRetries) throw e
-            false // a writer interleaved: re-validate its rows too
-        }
-      if (won) {
-        maybeCheckpoint(root, base + 1)
-        // MOR-overlay closer: an overlay patch staged pre-commit could
-        // carry violating rows past the chain-side guards — surface it
-        // instead of claiming a validated table
-        if (Tombstones.hasPending(root) && violating()) {
-          dropConstraint(root, name)
-          sys.error(s"CHECK constraint $name: a concurrent MOR overlay " +
-            "landed violating rows during ADD — constraint withdrawn, " +
-            s"re-run after cleaning ($exprText)")
-        }
-        return
+    }
+    if (added) {
+      maybeCheckpoint(root, v)
+      // MOR-overlay closer: an overlay patch staged pre-commit could
+      // carry violating rows past the chain-side guards — surface it
+      // instead of claiming a validated table
+      if (Tombstones.hasPending(root) && violating()) {
+        dropConstraint(root, name)
+        sys.error(s"CHECK constraint $name: a concurrent MOR overlay " +
+          "landed violating rows during ADD — constraint withdrawn, " +
+          s"re-run after cleaning ($exprText)")
       }
     }
   }
@@ -1070,27 +1064,19 @@ object VersionedTable {
       }
       return
     }
-    var attempt = 0
-    while (true) {
-      val base = latestVersion(root).get
-      if (!constraintsAt(root, base).contains(name)) return
-      try {
-        // the drop records the same writer feature the add does: its
-        // '-' op must never be dropped by a feature-blind build's
-        // checkpoint (a vacuum would then resurrect a dropped
-        // legacy-sidecar constraint)
-        commitManifest(root, base + 1,
-          deltaContent(Seq.empty, Seq.empty) ++
-            Seq(PreservingMarker, constraintDropLine(name)) ++
-            newFeatureLines(root, base, Seq(("w", "check-constraints"))))
-        maybeCheckpoint(root, base + 1)
-        return
-      } catch {
-        case e: java.nio.file.FileAlreadyExistsException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+    var dropped = false
+    val v = commitWithRetry(root, maxRetries) { v =>
+      dropped = constraintsAt(root, v - 1).contains(name)
+      // the drop records the same writer feature the add does: its
+      // '-' op must never be dropped by a feature-blind build's
+      // checkpoint (a vacuum would then resurrect a dropped
+      // legacy-sidecar constraint)
+      if (!dropped) None
+      else Some(deltaContent(Seq.empty, Seq.empty) ++
+        Seq(PreservingMarker, constraintDropLine(name)) ++
+        newFeatureLines(root, v - 1, Seq(("w", "check-constraints"))))
     }
+    if (dropped) maybeCheckpoint(root, v)
   }
 
   /** `df` with the table's CHECK constraints enforced PER ROW inside
@@ -1197,16 +1183,7 @@ object VersionedTable {
                              mapNames: Boolean = true,
                              identityFill: Boolean = false): Seq[String] = {
     val df = preStage(df0, root, mapNames, identityFill)
-    // a Hive-partitioned table's values live in the PATH; flat staging
-    // would commit files whose partition columns read back NULL (and a
-    // partition filter would silently prune the new rows away). Refuse
-    // loudly — partitioned tables stage through stagePartitioned; the
-    // COW rewrites (delete/update/merge/applyChanges/replaceWhere)
-    // stage through stageAuto, which lays partitions back out.
-    require(partitionSchema(root).isEmpty,
-      s"table at $root is Hive-partitioned: flat staging would lose the " +
-        "partition values — overwrite with Write(partitionBy = ...) " +
-        "to re-lay it out")
+    requireFlat(root)
     val nonce = java.util.UUID.randomUUID().toString.take(8)
     val staging = new File(root, s"_staging_v$v-$nonce")
     // a failed write job (a CHECK constraint fired) leaves no staging dir
@@ -1224,49 +1201,70 @@ object VersionedTable {
     moved
   }
 
-  /** Commit with optimistic retry: `manifest(v)` builds the file list
-    * for target version `v` from the then-current table state; on a
-    * version conflict (another writer landed first) the target version
-    * and file list are recomputed and the commit retried. Data files
-    * are version-independent (nonce-named), so losers re-commit without
-    * re-staging. */
-  private def commitWithRetry(root: String, maxRetries: Int)
-                             (manifest: Long => Seq[String]): Long = {
+  /** A Hive-partitioned table's values live in the PATH; flat staging
+    * would commit files whose partition columns read back NULL (and a
+    * partition filter would silently prune the new rows away). Refuse
+    * loudly — partitioned tables stage through [[stagePartitioned]];
+    * the COW rewrites stage through [[stageAuto]], which lays
+    * partitions back out. */
+  private def requireFlat(root: String): Unit =
+    require(partitionSchema(root).isEmpty,
+      s"table at $root is Hive-partitioned: flat staging would lose the " +
+        "partition values — overwrite with Write(partitionBy = ...) " +
+        "to re-lay it out")
+
+  /** The stage-once commit loop, one of the two retry loops every
+    * versioned commit after version 0 goes through ([[commitRewrite]]
+    * is the other): appends, overwrites, [[deleteAt]], [[compact]],
+    * [[compactZOrderedK]], [[restore]], the constraint, feature and
+    * ALTER commits. `staged` are the listing lines of the data files
+    * this call wrote (none for a metadata commit); they are
+    * version-independent (nonce-named), so a lost race re-plans
+    * without re-staging. `beforeCommit` fires once, before the first
+    * attempt. Each attempt runs `plan(v)` for target version `v` =
+    * latest + 1 — None is a no-op and returns the latest version —
+    * and CAS-commits its lines at `v`; a lost race counts one attempt.
+    *
+    * Constraint-race guard (the data-writer arm of the
+    * constraint-commit protocol): the staged rows were enforced
+    * against the constraint SET in force when this call staged; when
+    * the set in force at `v - 1` differs (a `#constraint` commit
+    * interleaved, or a pre-version sidecar landed on a table being
+    * created), the staged rows — and only those — are re-validated
+    * against it before the CAS. A win at `v` proves nothing further
+    * interleaved; losers loop back here, so every commit saw every
+    * earlier constraint.
+    *
+    * Giving up — retries exhausted, `plan` throws, or the guard
+    * refuses — deletes the staged files before rethrowing. */
+  private def commitWithRetry(root: String, maxRetries: Int,
+                              staged: Seq[String] = Seq.empty,
+                              beforeCommit: () => Unit = () => ())
+                             (plan: Long => Option[Seq[String]]): Long = {
+    // taken before `beforeCommit` runs: a writer nested in the seam
+    // stages and commits through its own entry
+    val enforced = stagedConstraintSet.get().remove(root)
+    def giveUp(e: Throwable): Nothing = {
+      staged.foreach(p => Files.deleteIfExists(new File(pathOf(p)).toPath))
+      throw e
+    }
+    beforeCommit()
     var attempt = 0
     while (true) {
       val v = nextVersion(root)
-      val lines = manifest(v)
-      // constraint-race guard (the append-family arm of the
-      // constraint-commit protocol): this writer's rows were enforced
-      // against the constraint SET captured at STAGE time; if the set
-      // in force now (a `#constraint` commit interleaved — or, for a
-      // table-CREATION race, a pre-version sidecar landed) differs,
-      // re-validate the staged rows against the CURRENT set BEFORE
-      // attempting the CAS. A win at v then proves nothing further
-      // interleaved; losers loop back here, so every eventual commit
-      // saw every earlier constraint. Comparing SETS (not versions)
-      // also covers v0 creation races and admin sidecar edits, and a
-      // stale thread-local entry is harmless (equal sets no-op). A
-      // refused batch deletes its staged files before surfacing.
-      stagedConstraintSet.get().get(root).foreach { enforced =>
+      val lines = try plan(v) catch { case e: Throwable => giveUp(e) }
+      if (lines.isEmpty) return v - 1
+      enforced.foreach { cs =>
         val now = if (v == 0) constraints(root) else constraintsAt(root, v - 1)
-        if (now != enforced)
-          try revalidateStaged(root, now, newContentOf(lines))
-          catch {
-            case e: Throwable =>
-              newContentOf(lines).foreach(p =>
-                Files.deleteIfExists(new File(pathOf(p)).toPath))
-              throw e
-          }
+        if (now != cs)
+          try revalidateStaged(root, now, staged)
+          catch { case e: Throwable => giveUp(e) }
       }
-      try {
-        val committed = commitManifest(root, v, lines)
-        stagedConstraintSet.get().remove(root)
-        return committed
-      } catch {
+      try return commitManifest(root, v, lines.get)
+      catch {
         case e: java.nio.file.FileAlreadyExistsException =>
           attempt += 1
-          if (attempt > maxRetries) throw e
+          if (attempt > maxRetries) giveUp(e)
       }
     }
     -1L // unreachable
@@ -1280,34 +1278,35 @@ object VersionedTable {
                                    statKeys: Seq[String] = Seq.empty,
                                    extraLines: Seq[String] = Seq.empty)
 
-  /** The commit loop of every copy-on-write writer ([[replaceWhere]],
-    * [[merge]], [[mergeActions]], [[applyChanges]],
-    * [[applyChangesGuarded]], [[delete]], [[update]]): read the latest
-    * snapshot, run `plan(base, listing lines, declared-schema frame)` —
-    * None is a no-op and returns the base version — stage the rewrite
-    * in the table's own layout with its stats, fire `beforeCommit`
-    * (once per computed plan), and commit the delta `-removed +staged`
-    * at base + 1.
+  /** The re-staging commit loop, one of the two retry loops every
+    * versioned commit after version 0 goes through
+    * ([[commitWithRetry]] is the other): every copy-on-write writer
+    * ([[replaceWhere]], [[merge]], [[mergeActions]], [[applyChanges]],
+    * [[applyChangesGuarded]], [[delete]], [[update]]) and the identity
+    * append. Read the latest snapshot, run `plan(base, listing lines)`
+    * — None is a no-op and returns the base version — stage the
+    * rewrite in the table's own layout with its stats, fire
+    * `beforeCommit` (once per computed plan), and commit the delta
+    * `-removed +staged` at base + 1.
     *
     * A lost race counts one attempt. When `rebase(base, cur, removed
     * paths)` proves the interleaved commits `(base, cur]` cannot change
     * the plan, the SAME delta re-commits on the new head with the staged
     * files kept; otherwise they are deleted and the plan recomputes
     * against the winner's snapshot. Past `maxRetries` the staged files
-    * are deleted and the conflict rethrown. Appends, overwrites and
-    * metadata commits use the stage-once [[commitWithRetry]] instead. */
+    * are deleted and the conflict rethrown. */
   private def commitRewrite(spark: SparkSession, root: String,
                             maxRetries: Int,
                             beforeCommit: () => Unit = () => (),
                             rebase: (Long, Long, Set[String]) => Boolean =
                               (_, _, _) => false)
-                           (plan: (Long, Seq[String], DataFrame) => Option[Rewrite])
+                           (plan: (Long, Seq[String]) => Option[Rewrite])
       : Long = {
     var attempt = 0
     while (true) {
       val base = latestVersion(root).getOrElse(sys.error(s"no versions at $root"))
       val files = readListing(root, base) // listing LINES (stats kept on carry)
-      val rw = plan(base, files, readLinesDeclared(spark, root, base, files))
+      val rw = plan(base, files)
       if (rw.isEmpty) return base
       val Rewrite(removed, rows, statKeys, extraLines) = rw.get
       val staged = statLines(spark, stageAuto(rows, root, base + 1), statKeys, root)
@@ -1355,23 +1354,13 @@ object VersionedTable {
 
   /** root → the constraint SET the CURRENT thread's latest staging
     * pass enforced (set by [[stageDataFiles]]/[[stagePartitioned]],
-    * consumed by [[commitWithRetry]]'s guard). Thread-local is sound
+    * taken and cleared by [[commitWithRetry]]). Thread-local is sound
     * because staging and committing are one driver-side flow on one
     * thread — the same assumption the optimistic loops themselves
     * make. */
   private val stagedConstraintSet
       : ThreadLocal[scala.collection.mutable.Map[String, Map[String, String]]] =
     ThreadLocal.withInitial(() => scala.collection.mutable.Map.empty)
-
-  /** The data lines a manifest commits (delta `+` tail, or the full
-    * listing minus state/marker lines) — the revalidation read set. */
-  private def newContentOf(lines: Seq[String]): Seq[String] =
-    if (isDelta(lines))
-      lines.tail.collect { case l if l.startsWith("+\t") => l.drop(2) }
-    else lines.filterNot(l => l.startsWith(TxnPrefix) ||
-      l.startsWith(FeaturePrefix) || l.startsWith(ConstraintPrefix) ||
-      l.startsWith(IdentityPrefix) ||
-      l == PreservingMarker || l == DeclaredMarker)
 
   /** Re-validate STAGED (not yet committed) lines against constraint
     * set `cs` — loud on the first violation, naming the constraint.
@@ -1613,8 +1602,7 @@ object VersionedTable {
       w.sums, root)
     val lines = w.bloom.fold(withSums)(b =>
       bloomLines(spark, withSums, b.col, b.expectedPerFile, root))
-    beforeCommit()
-    val v = commitWithRetry(root, maxRetries = 5) { v =>
+    val v = commitWithRetry(root, maxRetries = 5, lines, beforeCommit) { v =>
       if (partCols.nonEmpty)
         requireFirstPartitionedAtZero(root, v, wasPartitioned)
       // append: a delta (O(batch) bytes regardless of accumulated file
@@ -1626,9 +1614,9 @@ object VersionedTable {
       }
       // the v0 birth commit of a partitioned table records the
       // `partitioning` reader feature
-      content ++ txnLines ++
+      Some(content ++ txnLines ++
         (if (partCols.nonEmpty && v == 0) Seq(featureLine("r", "partitioning"))
-         else Nil)
+         else Nil))
     }
     if (staged.isEmpty && (overwrite || v == 0))
       writeEmptySchemaSidecar(root, v, df0.schema)
@@ -1829,6 +1817,82 @@ object VersionedTable {
           "(?![A-Za-z0-9_])").r.findFirstIn(t).isDefined => n
     }
 
+  /** The shared metadata-only ALTER commit cycle (rename/drop/add):
+    * `declare` recomputes the new FULL field list (and the physical
+    * names to retire; `None` = this verb never touches the registry)
+    * against each attempt's base version; the commit is an empty
+    * data-preserving delta, published through [[commitDeclaration]].
+    * The registry persists BEFORE the sidecar (a crash in between
+    * leaves mapping mode on with an identity mapping, harmless — the
+    * reverse order could let an append adopt a freed name). */
+  private def commitAlterDeclaration(root: String, maxRetries: Int,
+      features: Seq[(String, String)] = Seq.empty,
+      stateLines: Long => Seq[String] = _ => Seq.empty)(
+      declare: Long => (Seq[org.apache.spark.sql.types.StructField],
+        Option[Seq[String]])): Long = {
+    import org.apache.spark.sql.types.StructType
+    var retire: Option[Seq[String]] = None
+    val v = commitDeclaration(root, maxRetries,
+      () => retire.foreach(names => retireColumns(root, names))) { v =>
+      val base = v - 1
+      if (base < 0) sys.error(s"no versions at $root")
+      val (fields, r) = declare(base)
+      retire = r
+      // the feature requirement (column-mapping / type-widening /
+      // column-defaults / …) lands INSIDE the declaring commit — no
+      // window where the capability is in effect unrecorded
+      (deltaContent(Seq.empty, Seq.empty) ++
+        Seq(PreservingMarker, DeclaredMarker) ++
+        newFeatureLines(root, base, features) ++ stateLines(base),
+        StructType(fields))
+    }
+    maybeCheckpoint(root, v)
+    v
+  }
+
+  /** The one declaration publish of the ALTER verbs and [[restore]]:
+    * create the intent breadcrumb (see [[DeclIntentPrefix]]); commit
+    * `plan(v)`'s lines — which carry the [[DeclaredMarker]] — through
+    * [[commitWithRetry]], refreshing the intent's mtime before each
+    * attempt (`plan` can be arbitrarily slow, and vacuum's stale-intent
+    * reclamation keys on mtime); run `afterWin`; write the winning
+    * attempt's declaration to `_schema.v{v}.json` LOUDLY (no
+    * best-effort catch: a schema change that did not persist must
+    * fail); and delete the intent unless the declaration is torn.
+    *
+    * The sidecar lands AFTER the commit: a sidecar written first could
+    * land under a racing winner's version. Until it lands, anyone
+    * resolving this version's declaration (a racing ALTER's retry, an
+    * append's mappingFor) spins in [[declaredSchemaAt]] instead of
+    * walking back to the stale pre-commit sidecar; a crash in between
+    * is a TORN declaration, which keeps its intent (readers
+    * short-circuit on its absence) and fails reads loudly. */
+  private def commitDeclaration(root: String, maxRetries: Int,
+      afterWin: () => Unit = () => ())(
+      plan: Long => (Seq[String], org.apache.spark.sql.types.StructType))
+      : Long = {
+    val intent =
+      Files.createTempFile(new File(root).toPath, DeclIntentPrefix, "")
+    var declared: org.apache.spark.sql.types.StructType = null
+    var torn = false
+    try {
+      val v = commitWithRetry(root, maxRetries) { v =>
+        val (lines, schema) = plan(v)
+        declared = schema
+        intent.toFile.setLastModified(System.currentTimeMillis())
+        Some(lines)
+      }
+      torn = true // until the sidecar move below completes
+      afterWin()
+      val tmp = Files.createTempFile(new File(root).toPath, "_schema", ".tmp")
+      Files.write(tmp, declared.json.getBytes(StandardCharsets.UTF_8))
+      Files.move(tmp, new File(root, s"_schema.v$v.json").toPath,
+        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      torn = false
+      v
+    } finally if (!torn) Files.deleteIfExists(intent)
+  }
+
   /** Metadata-only ALTER TABLE RENAME COLUMN (the Delta column-mapping
     * role): commits a data-preserving empty delta whose schema sidecar
     * carries the new LOGICAL name with the original PHYSICAL name
@@ -1842,82 +1906,6 @@ object VersionedTable {
     * partition columns (path-derived — a rename would need a directory
     * rewrite), under pending MOR overlays (their frames carry the old
     * names), and for columns referenced by CHECK constraints. */
-  /** The shared metadata-only ALTER commit cycle (rename/drop/add):
-    * optimistic loop — `declare` recomputes the new FULL field list
-    * (and the physical names to retire; `None` = this verb never
-    * touches the registry) against the then-current base version; win
-    * an empty data-preserving delta; then persist registry-BEFORE-
-    * sidecar (a crash in between leaves mapping mode on with an
-    * identity mapping, harmless — the reverse order could let an
-    * append adopt a freed name) and LOUDLY (no best-effort catch: a
-    * schema change that didn't persist must fail, and the
-    * listing-identical manifest is harmless to leave behind). */
-  private def commitAlterDeclaration(root: String, maxRetries: Int,
-      features: Seq[(String, String)] = Seq.empty,
-      stateLines: Long => Seq[String] = _ => Seq.empty)(
-      declare: Long => (Seq[org.apache.spark.sql.types.StructField],
-        Option[Seq[String]])): Long = {
-    import org.apache.spark.sql.types.StructType
-    var attempt = 0
-    // the intent breadcrumb outlives the whole retry loop and is
-    // deleted only after the sidecar lands (or the ALTER gives up) —
-    // see [[DeclIntentPrefix]] for the reader-side contract
-    val intent =
-      Files.createTempFile(new File(root).toPath, DeclIntentPrefix, "")
-    // a marker committed whose sidecar then failed to land is a TORN
-    // declaration — the intent must survive it (readers short-circuit
-    // on its absence), so the finally below keys on this flag
-    var torn = false
-    try {
-      while (true) {
-        val base = latestVersion(root).getOrElse(sys.error(s"no versions at $root"))
-        val (fields, retire) = declare(base)
-        val v = base + 1
-        // declare() can be arbitrarily slow (footer sweeps on a huge
-        // table) and vacuum's stale-intent reclamation keys on mtime —
-        // keep the window that must stay fresh (intent→commit) tight
-        intent.toFile.setLastModified(System.currentTimeMillis())
-        val won =
-          try {
-            // DeclaredMarker makes the commit-then-sidecar pair safe
-            // against concurrent declaration readers: until the sidecar
-            // lands, anyone resolving this version's declaration (a
-            // racing ALTER's retry, an append's mappingFor) spins in
-            // declaredSchemaAt instead of walking back to the stale
-            // pre-ALTER sidecar
-            // the feature requirement (column-mapping / type-widening /
-            // column-defaults / …) lands INSIDE the declaring commit —
-            // no window where the capability is in effect unrecorded
-            commitManifest(root, v,
-              deltaContent(Seq.empty, Seq.empty) ++
-                Seq(PreservingMarker, DeclaredMarker) ++
-                newFeatureLines(root, base, features) ++
-                stateLines(base))
-            true
-          } catch {
-            case e: java.nio.file.FileAlreadyExistsException =>
-              // lost the race: recompute against the winner's schema
-              attempt += 1
-              if (attempt > maxRetries) throw e
-              false
-          }
-        if (won) {
-          torn = true // until the sidecar move below completes
-          retire.foreach(names => retireColumns(root, names))
-          val tmp = Files.createTempFile(new File(root).toPath, "_schema", ".tmp")
-          Files.write(tmp,
-            StructType(fields).json.getBytes(StandardCharsets.UTF_8))
-          Files.move(tmp, new File(root, s"_schema.v$v.json").toPath,
-            StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-          torn = false
-          maybeCheckpoint(root, v)
-          return v
-        }
-      }
-      -1L // unreachable
-    } finally if (!torn) Files.deleteIfExists(intent)
-  }
-
   def alterRenameColumn(spark: SparkSession, root: String,
                         from: String, to: String,
                         maxRetries: Int = 5): Long = {
@@ -2371,6 +2359,7 @@ object VersionedTable {
                              beforeCommit: () => Unit,
                              maxRetries: Int = 5): Long = {
     import org.apache.spark.sql.expressions.Window
+    requireFlat(root) // the numbering stages flat
     val spark = df0.sparkSession
     val declared = writeSchema(spark, root)
     val f = declared.fields.find(_.name.equalsIgnoreCase(c)).get
@@ -2383,10 +2372,9 @@ object VersionedTable {
     val n = counts.map(_._2).sum
     val offsets = counts.map(_._1)
       .zip(counts.scanLeft(0L)(_ + _._2).init).toMap
-    var attempt = 0
-    while (true) {
-      val base = latestVersion(root).getOrElse(
-        sys.error(s"no versions at $root"))
+    // the winner of a lost race may have advanced the mark: its plan's
+    // keys are void, so every loss re-stages against the new mark
+    commitRewrite(spark, root, maxRetries, beforeCommit) { (base, _) =>
       val hw = identityHighWater(root, base, f.name).getOrElse(sys.error(
         s"identity column ${f.name} at $root has no recorded high-water " +
           "mark — the declaring commit always seeds one; was the chain " +
@@ -2415,25 +2403,9 @@ object VersionedTable {
         s"identity column ${f.name} exhausts its declared " +
           s"${f.dataType.simpleString} range (mark $hw + $n new keys > " +
           s"$cap) — DROP IDENTITY, widen the column, re-SET IDENTITY")
-      val staged = stageDataFiles(filled, root, base + 1,
-        identityFill = true)
-      val lines = statLines(spark, staged, autoStatsCols(filled), root)
-      beforeCommit()
-      try {
-        val v = commitManifest(root, base + 1,
-          deltaContent(Seq.empty, lines) :+ identityLine(f.name, hw + n))
-        maybeCheckpoint(root, v)
-        return v
-      } catch {
-        case e: java.nio.file.FileAlreadyExistsException =>
-          // the winner may have advanced the mark — these keys are void
-          staged.foreach(p =>
-            Files.deleteIfExists(new File(pathOf(p)).toPath))
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+      Some(Rewrite(Nil, filled, autoStatsCols(filled),
+        Seq(identityLine(f.name, hw + n))))
     }
-    -1L // unreachable
   }
 
   /** `lowercased name -> DEFAULT expression text` of the current
@@ -2674,7 +2646,7 @@ object VersionedTable {
     * partitioned files as version 1 would put flat history under a
     * partition sidecar (NULL partition values on time travel). The
     * closure re-checks at each commit attempt; losers abort loudly
-    * (staged files become fsck-reclaimable orphans). A same-schema
+    * and delete their staged files. A same-schema
     * concurrent partitioned writer loses too — the Delta metadata-
     * conflict stance: first writers don't silently interleave. */
   private def requireFirstPartitionedAtZero(root: String, v: Long,
@@ -3420,7 +3392,8 @@ object VersionedTable {
         throw new IllegalArgumentException(
           s"replaceWhere batch row outside the predicate scope: ${leak.head}")
     }
-    commitRewrite(spark, root, maxRetries) { (base, files, target) =>
+    commitRewrite(spark, root, maxRetries) { (base, files) =>
+      val target = readLinesDeclared(spark, root, base, files)
       val touched0 = touchedLines(files, target)(_.filter(predicate))
       val outCols = target.columns.toSeq
       val survivorsPlusBatch =
@@ -3622,25 +3595,16 @@ object VersionedTable {
   def requireFeature(root: String, kind: String, name: String,
                      maxRetries: Int = 5): Long = {
     val line = featureLine(kind, name)
-    var attempt = 0
-    while (true) {
-      val base = latestVersion(root).getOrElse(
-        sys.error(s"no versions at $root"))
-      val (r, w) = requiredFeatures(root, base)
-      if (if (kind == "r") r.contains(name) else w.contains(name))
-        return base
-      try {
-        val v = commitManifest(root, base + 1,
-          deltaContent(Seq.empty, Seq.empty) :+ PreservingMarker :+ line)
-        maybeCheckpoint(root, v)
-        return v
-      } catch {
-        case e: java.nio.file.FileAlreadyExistsException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+    var required = false
+    val v = commitWithRetry(root, maxRetries) { v =>
+      if (v == 0) sys.error(s"no versions at $root")
+      val (r, w) = requiredFeatures(root, v - 1)
+      required = !(if (kind == "r") r.contains(name) else w.contains(name))
+      if (!required) None
+      else Some(deltaContent(Seq.empty, Seq.empty) :+ PreservingMarker :+ line)
     }
-    -1L // unreachable
+    if (required) maybeCheckpoint(root, v)
+    v
   }
 
   /** The feature lines a feature-introducing commit must carry: the
@@ -3699,24 +3663,23 @@ object VersionedTable {
   def compactZOrderedK(spark: SparkSession, root: String,
                        cols: Seq[String], numFiles: Int,
                        buckets: Int = 0): Long = {
-    // pinned base + single-shot commit (NOT commitWithRetry): the
-    // re-layout's content derives from `base`, and it claims
-    // data-preserving in the manifest — silently renumbering past a
-    // concurrent append would drop the appended rows while claiming
-    // nothing changed. Losing the race aborts; callers re-run against
-    // the new snapshot (the compact() stance).
+    // pinned base + single-shot commit: the re-layout's content
+    // derives from `base`, and it claims data-preserving in the
+    // manifest — silently renumbering past a concurrent append would
+    // drop the appended rows while claiming nothing changed. Losing the
+    // race aborts; callers re-run against the new snapshot (the
+    // compact() stance).
     val base = latestVersion(root).getOrElse(sys.error(s"no versions at $root"))
     val clustered = zClusterK(readVersion(spark, root, base), cols,
       numFiles, buckets)
-    val staged = stageDataFiles(clustered, root, base + 1)
-    val lines = statLines(spark, staged, cols, root)
-    try commitManifest(root, base + 1, lines :+ PreservingMarker)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        staged.foreach(p => Files.deleteIfExists(new File(p).toPath))
-        throw new java.util.ConcurrentModificationException(
-          s"a writer committed to $root during the z-order re-layout; " +
-            "aborting — re-run against the new snapshot")
+    val lines = statLines(spark, stageDataFiles(clustered, root, base + 1),
+      cols, root)
+    // the one retry only re-plans: the head is then past `base`
+    commitWithRetry(root, maxRetries = 1, lines) { v =>
+      if (v != base + 1) throw new java.util.ConcurrentModificationException(
+        s"a writer committed to $root during the z-order re-layout; " +
+          "aborting — re-run against the new snapshot")
+      Some(lines :+ PreservingMarker)
     }
   }
 
@@ -3795,7 +3758,8 @@ object VersionedTable {
     // anti-join on every attempt; blocks free on GC (no CacheManager leak)
     val srcKeys = source.select(keyCols.map(col): _*).distinct()
       .localCheckpoint(true)
-    commitRewrite(spark, root, maxRetries, beforeCommit) { (base, files, target) =>
+    commitRewrite(spark, root, maxRetries, beforeCommit) { (base, files) =>
+      val target = readLinesDeclared(spark, root, base, files)
       // schema evolution (the Delta mergeSchema role): source-only
       // columns are appended to the table schema; untouched files simply
       // lack them and read back null via the mergeSchema snapshot read —
@@ -3985,7 +3949,8 @@ object VersionedTable {
     commitRewrite(spark, root, maxRetries, beforeCommit,
       rebase = (base, cur, removed) => bySourceClauses.isEmpty &&
         rebaseKeyDisjoint(root, base, cur, srcKeyRanges, removed)) {
-      (base, files, target) =>
+      (base, files) =>
+      val target = readLinesDeclared(spark, root, base, files)
       val outCols = target.columns.toSeq
       val schema = target.schema
       require(!outCols.contains("__graft_m"),
@@ -4407,7 +4372,8 @@ object VersionedTable {
     val (latest, affectedKeys) = netChanges(feed, keyCols, seqCol, opCol)
     val upserts = latest.filter(upper(col(opCol)) =!= "D")
       .drop(opCol).drop(seqCol)
-    commitRewrite(spark, root, maxRetries, beforeCommit) { (base, files, target) =>
+    commitRewrite(spark, root, maxRetries, beforeCommit) { (base, files) =>
+      val target = readLinesDeclared(spark, root, base, files)
       val touched0 = touchedLines(files, target)(
         _.join(affectedKeys, keyCols, "left_semi"))
       val outCols = target.columns.toSeq
@@ -4482,7 +4448,8 @@ object VersionedTable {
       if (txnAppId != null && txn >= 0) Seq(txnLine(txnAppId, txn))
       else Seq.empty
     val (latest, affectedKeys) = netChanges(feed, keyCols, seqCol, opCol)
-    commitRewrite(spark, root, maxRetries, beforeCommit) { (base, files, target) =>
+    commitRewrite(spark, root, maxRetries, beforeCommit) { (base, files) =>
+      val target = readLinesDeclared(spark, root, base, files)
       require(target.columns.contains(seqCol),
         s"guarded apply needs the target to store '$seqCol'")
       val touched0 = touchedLines(files, target)(
@@ -4589,7 +4556,8 @@ object VersionedTable {
     // the same delta onto the new head — no O(table) recompute
     commitRewrite(spark, root, maxRetries, beforeCommit,
       rebase = rebasePredicateFree(spark, root, _, _, predicate, _)) {
-      (base, files, target) =>
+      (base, files) =>
+      val target = readLinesDeclared(spark, root, base, files)
       val touched0 = touchedLines(files, target)(_.filter(predicate))
       // keep when NOT(true): null-predicate rows survive, per SQL;
       // __rows-only stats, as in merge: deletes stay metadata-countable
@@ -4622,11 +4590,10 @@ object VersionedTable {
       .filter(!coalesce(predicate, lit(false)))
     val staged = statLines(spark,
       stageAuto(survivors, root, baseV + 1), Seq.empty, root)
-    beforeCommit()
     val untouched = files.filterNot(touched0.toSet)
-    val v = commitWithRetry(root, maxRetries = 5) { v =>
-      if (v == baseV + 1) deltaContent(touched0, staged)
-      else untouched ++ staged
+    val v = commitWithRetry(root, maxRetries = 5, staged, beforeCommit) { v =>
+      Some(if (v == baseV + 1) deltaContent(touched0, staged)
+           else untouched ++ staged)
     }
     maybeCheckpoint(root, v)
     v
@@ -4660,7 +4627,8 @@ object VersionedTable {
     // ONLY the appended files; a clean probe rebases, a hit recomputes
     commitRewrite(spark, root, maxRetries, beforeCommit,
       rebase = rebasePredicateFree(spark, root, _, _, predicate, _)) {
-      (base, files, target) =>
+      (base, files) =>
+      val target = readLinesDeclared(spark, root, base, files)
       require(set.keySet.subsetOf(target.columns.toSet),
         s"SET columns ${set.keySet.diff(target.columns.toSet)} not in table")
       // GENERATED ALWAYS: the engine-assigned key may not be rewritten
@@ -4954,34 +4922,18 @@ object VersionedTable {
     val staged = stageDataFiles(packed, root, base + 1,
       identityFill = true) // row-preserving: keys carry untouched
     val newLines = statLines(spark, staged, statsCols, root)
-    var attempt = 0
-    while (true) {
-      val cur = latestVersion(root).get
-      val curLines = readListing(root, cur)
-      if (!smallSet.subsetOf(curLines.map(pathOf).toSet)) {
-        staged.foreach(p => Files.deleteIfExists(new File(p).toPath))
+    val v = commitWithRetry(root, maxRetries, newLines) { v =>
+      if (!smallSet.subsetOf(listingPaths(root, v - 1).toSet))
         throw new java.util.ConcurrentModificationException(
           s"file compacted from $root was rewritten concurrently; " +
             "aborting compaction — re-run against the new snapshot")
-      }
       beforeCommit()
       // delta commit: `-` the packed small files, `+` their replacement;
       // marked data-preserving so version-offset streams skip it
-      try {
-        val committed = commitManifest(root, cur + 1,
-          deltaContent(smallLines, newLines) :+ PreservingMarker)
-        maybeCheckpoint(root, committed)
-        return committed
-      } catch {
-        case e: java.nio.file.FileAlreadyExistsException =>
-          attempt += 1
-          if (attempt > maxRetries) {
-            staged.foreach(p => Files.deleteIfExists(new File(p).toPath))
-            throw e
-          }
-      }
+      Some(deltaContent(smallLines, newLines) :+ PreservingMarker)
     }
-    -1L // unreachable
+    maybeCheckpoint(root, v)
+    v
   }
 
   /** RESTORE: commit a new version whose manifest is version `v`'s file
@@ -4994,35 +4946,13 @@ object VersionedTable {
     // the restored-to version's DECLARATION restores with it: the full
     // manifest blocks the sidecar walk-back, so without re-planting it
     // a column-mapped table would serve PHYSICAL names (and resurrect
-    // dropped columns) from the post-restore footer sweep. Loud write —
-    // a silently lost declaration here is silently wrong column names.
-    val declared = readSchemaSidecar(root, v).orElse(declaredSchemaAt(root, v))
-    // the sidecar stays AFTER the commit (a pre-commit sidecar written
-    // to the final path could land under a concurrent writer's version
-    // if this commit loses the race) — the DeclaredMarker inside the
-    // committed manifest closes the crash window instead: a reader
-    // that finds the marker without the sidecar spins briefly and then
-    // fails LOUDLY (declaredSchemaAt), never serving physical names or
-    // footer-swept retired columns from a torn restore
-    // intent breadcrumb (see [[DeclIntentPrefix]]): restore is the
-    // other DeclaredMarker writer, with the same commit-then-sidecar
-    // crash window — kept on a tear, deleted once the sidecar lands
-    val intent = declared.map(_ =>
-      Files.createTempFile(new File(root).toPath, DeclIntentPrefix, ""))
-    var torn = false
-    try {
-      val nv = commitManifest(root, nextVersion(root),
-        if (declared.isDefined) files :+ DeclaredMarker else files)
-      torn = declared.isDefined
-      declared.foreach { s =>
-        val tmp = Files.createTempFile(new File(root).toPath, "_schema", ".tmp")
-        Files.write(tmp, s.json.getBytes(StandardCharsets.UTF_8))
-        Files.move(tmp, new File(root, s"_schema.v$nv.json").toPath,
-          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-      }
-      torn = false
-      nv
-    } finally if (!torn) intent.foreach(Files.deleteIfExists)
+    // dropped columns) from the post-restore footer sweep. One attempt:
+    // a lost race surfaces as the raw version conflict.
+    readSchemaSidecar(root, v).orElse(declaredSchemaAt(root, v)) match {
+      case Some(s) =>
+        commitDeclaration(root, maxRetries = 0)(_ => (files :+ DeclaredMarker, s))
+      case None => commitWithRetry(root, maxRetries = 0)(_ => Some(files))
+    }
   }
 
   /** Integrity audit (the fsck / Delta FSCK role): cross-check every

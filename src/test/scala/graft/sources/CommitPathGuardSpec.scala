@@ -4,10 +4,12 @@ import java.nio.file.{Files, Path, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** `VersionedTable`'s copy-on-write writers share one commit loop
-  * (`commitRewrite`) and one phase-1 touched-file probe
-  * (`touchedLines`). A writer that stages and commits its own manifest,
-  * or a second copy of the `_metadata.file_path` probe, fails here. */
+/** Every `VersionedTable` commit after version 0 retries in one of two
+  * loops — `commitRewrite` (the copy-on-write writers and the identity
+  * append) or the stage-once `commitWithRetry` (everything else) — and
+  * the copy-on-write writers share one phase-1 touched-file probe
+  * (`touchedLines`). A writer that commits or retries on its own, or a
+  * second copy of the `_metadata.file_path` probe, fails here. */
 class CommitPathGuardSpec extends AnyFunSuite {
 
   private val cowWriters = Seq("replaceWhere", "merge", "mergeActions",
@@ -74,5 +76,33 @@ class CommitPathGuardSpec extends AnyFunSuite {
       if line.contains("_metadata.file_path") && !line.contains("\"__p\"")
     } yield name
     assert(probes == Seq("touchedLines", "mergeActions"), probes)
+  }
+
+  /** The members whose code lines match `pattern`, in file order. */
+  private def membersMatching(pattern: String): Seq[String] = {
+    val r = pattern.r
+    members.collect {
+      case (name, lines) if lines.exists(r.findFirstIn(_).isDefined) => name
+    }
+  }
+
+  test("only the two retry loops and the two version-0 commits call " +
+    "commitManifest") {
+    assert(membersMatching("""\bcommitManifest\(""").filterNot(
+      _ == "commitManifest") ==
+      Seq("commitWithRetry", "commitRewrite", "createEmpty", "shallowCloneAt"))
+  }
+
+  test("a lost commit race is caught only in the two retry loops; the " +
+    "other catches are createEmpty's and stagePartitioned's put-if-absent " +
+    "links") {
+    assert(membersMatching("""case \w+: (java\.nio\.file\.)?FileAlreadyExistsException""") ==
+      Seq("commitWithRetry", "commitRewrite", "createEmpty", "stagePartitioned"))
+    assert(membersMatching("""attempt \+= 1""") ==
+      Seq("commitWithRetry", "commitRewrite"))
+  }
+
+  test("the identity append is a commitRewrite plan") {
+    assert(bodyOf("appendIdentity").contains("commitRewrite("))
   }
 }

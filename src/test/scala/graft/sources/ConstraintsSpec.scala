@@ -347,4 +347,62 @@ class ConstraintsSpec extends SparkSuite {
         s"iteration $i: both sides failed — the race must have a winner")
     }
   }
+
+  // A commit built onto an older base writes a FULL listing: the base's
+  // files plus the call's own. A constraint added while such a call
+  // staged must re-validate only the call's own rows — the base's rows
+  // were committed before the constraint, like a restore's — and a
+  // refusal must never delete the base's (live) files.
+
+  test("a constraint added while an append ONTO an older base staged " +
+    "re-validates only the appended rows; every version stays readable") {
+    import spark.implicits._
+    val root = tmpRoot()
+    VersionedTable.overwrite(Seq(1L).toDF("k"), root) // v0
+    VersionedTable.append(Seq(-1L).toDF("k"), root) // v1
+    VersionedTable.delete(spark, root, col("k") < 0L) // v2
+    // a batch that breaks the new constraint is refused, and only its
+    // own file goes
+    val e = intercept[RuntimeException] {
+      VersionedTable.append(Seq(-7L).toDF("k"), root, Write(onto = Some(1L)),
+        beforeCommit = () =>
+          VersionedTable.addConstraint(spark, root, "k_gt", "k > -5")) // v3
+    }
+    assert(e.getMessage.contains("k_gt") &&
+      e.getMessage.contains("concurrently"), e.getMessage)
+    assert(VersionedTable.latestVersion(root).contains(3L))
+    assert(VersionedTable.fsck(root) == ((Seq.empty, Seq.empty)))
+    val v = VersionedTable.append(Seq(5L).toDF("k"), root,
+      Write(onto = Some(1L)),
+      beforeCommit = () =>
+        VersionedTable.addConstraint(spark, root, "k_pos", "k > 0")) // v4
+    assert(v == 5L)
+    assert(VersionedTable.constraints(root) ==
+      Map("k_gt" -> "k > -5", "k_pos" -> "k > 0"))
+    assert(VersionedTable.fsck(root) == ((Seq.empty, Seq.empty)))
+    // the committed content is base v1 plus the batch
+    assert(VersionedTable.read(spark, root).collect().map(_.getLong(0))
+      .sorted.toSeq == Seq(-1L, 1L, 5L))
+    (0L to 4L).foreach(i => VersionedTable.readVersion(spark, root, i).count())
+  }
+
+  test("a constraint added while deleteAt an older base staged " +
+    "re-validates only the rewritten survivors; every version stays " +
+    "readable") {
+    import spark.implicits._
+    val root = tmpRoot()
+    VersionedTable.overwrite(Seq(1L).toDF("k"), root) // v0
+    VersionedTable.append(Seq(2L, 3L).toDF("k").coalesce(1), root) // v1
+    VersionedTable.append(Seq(-1L).toDF("k"), root) // v2
+    VersionedTable.delete(spark, root, col("k") < 0L) // v3
+    val v = VersionedTable.deleteAt(spark, root, 2L, col("k") === 2L,
+      beforeCommit = () =>
+        VersionedTable.addConstraint(spark, root, "k_pos", "k > 0")) // v4
+    assert(v == 5L)
+    assert(VersionedTable.fsck(root) == ((Seq.empty, Seq.empty)))
+    // v2's listing minus k = 2: the survivor 3 is re-staged
+    assert(VersionedTable.read(spark, root).collect().map(_.getLong(0))
+      .sorted.toSeq == Seq(-1L, 1L, 3L))
+    (0L to 4L).foreach(i => VersionedTable.readVersion(spark, root, i).count())
+  }
 }

@@ -461,4 +461,104 @@ class MergeRebaseSpec extends SparkSuite {
       }
     }
   }
+
+  // ---------------------------------------------------------------
+  // The stage-once writers with a per-attempt seam (`addConstraint`,
+  // `compact`, the identity append): `beforeCommit` fires once per plan
+  // evaluation, so its count is the attempt count. (a) One racer: the
+  // writer commits right after it, with the serial result. (b) A racer
+  // on every attempt: the writer rethrows after exactly maxRetries + 1
+  // evaluations, leaving no file of its own and a readable table.
+  // ---------------------------------------------------------------
+
+  /** A writer over a (k, s) table: `fresh()` seeds a table, `racer(root,
+    * i)` is the i-th racing commit, `run(root, hook)` the writer with
+    * `maxRetries` retries. */
+  private final class SeamWriter(val name: String, val maxRetries: Int,
+                                 val fresh: () => String,
+                                 val racer: (String, Int) => Unit,
+                                 val run: (String, () => Unit) => Long,
+                                 val state: String => Any = _ => ())
+
+  private def ksRows(root: String): Seq[(Long, String)] =
+    VersionedTable.read(spark, root).select(col("k").cast("long"), col("s"))
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+
+  private def ksTable(files: Int): String = {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_seam").resolve("t").toString
+    VersionedTable.overwrite((1L to 6L).map(i => (i, s"s$i")).toDF("k", "s")
+      .repartition(files), root)
+    root
+  }
+
+  private def seamWriters: Seq[SeamWriter] = {
+    import spark.implicits._
+    val plainRacer: (String, Int) => Unit = (root, i) => {
+      VersionedTable.append(Seq((100L + i, s"r$i")).toDF("k", "s"), root); ()
+    }
+    Seq(
+      new SeamWriter("addConstraint", 2, () => ksTable(1), plainRacer,
+        (root, hook) => {
+          VersionedTable.addConstraint(spark, root, "k_pos", "k > 0",
+            maxRetries = 2, beforeCommit = hook)
+          VersionedTable.latestVersion(root).get
+        },
+        root => VersionedTable.constraints(root)),
+      new SeamWriter("compact", 2, () => ksTable(3), plainRacer,
+        (root, hook) => VersionedTable.compact(spark, root, maxRetries = 2,
+          beforeCommit = hook)),
+      // the identity append's retry budget is its fixed default, 5
+      new SeamWriter("identity append", 5,
+        () => {
+          val root = ksTable(1)
+          VersionedTable.alterSetIdentity(spark, root, "k")
+          root
+        },
+        (root, i) => {
+          VersionedTable.append(Seq(s"r$i").toDF("s"), root); ()
+        },
+        (root, hook) => VersionedTable.append(
+          Seq("a1", "a2").toDF("s").coalesce(1), root, beforeCommit = hook)))
+  }
+
+  for (w <- seamWriters) {
+    test(s"${w.name}: one racer, and the writer commits right after it " +
+      "with the serial result") {
+      val raced = w.fresh()
+      var evals = 0
+      var racerV = -1L
+      val v = w.run(raced, () => {
+        evals += 1
+        if (evals == 1) {
+          w.racer(raced, 1)
+          racerV = VersionedTable.latestVersion(raced).get
+        }
+      })
+      assert(evals == 2, s"one lost race re-plans once ($evals)")
+      assert(v == racerV + 1, s"committed at $v, the racer at $racerV")
+      val serial = w.fresh()
+      w.racer(serial, 1)
+      w.run(serial, () => ())
+      assert(ksRows(raced) == ksRows(serial))
+      assert(w.state(raced) == w.state(serial))
+      assert(VersionedTable.fsck(raced) == ((Seq.empty, Seq.empty)))
+    }
+
+    test(s"${w.name}: a racer on every attempt exhausts the retries " +
+      "and leaves no file of the writer's behind") {
+      val root = w.fresh()
+      val before = w.state(root)
+      var evals = 0
+      intercept[java.nio.file.FileAlreadyExistsException] {
+        w.run(root, () => { evals += 1; w.racer(root, evals) })
+      }
+      assert(evals == w.maxRetries + 1, s"plan evaluations: $evals")
+      assert(VersionedTable.fsck(root) == ((Seq.empty, Seq.empty)))
+      val serial = w.fresh()
+      (1 to evals).foreach(w.racer(serial, _))
+      assert(ksRows(root) == ksRows(serial))
+      if (w.name == "addConstraint") assert(w.state(root) == before)
+    }
+  }
 }
