@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -204,72 +204,85 @@ object Dedup {
         graft.plans.DocHashExpressions.simhash64(col(textCol)).as("sh"))
 
   /** Connected components over an undirected pair list — turns near-dup
-    * PAIRS into dedup GROUPS (keep one doc per component). Iterative
-    * min-label propagation: every node adopts the smallest label in its
-    * neighborhood until fixpoint, checked with a changed-label count per
-    * round and capped at `maxIter`.
+    * PAIRS into dedup GROUPS (keep one doc per component). Every node's
+    * label is the smallest id of its component.
     *
-    * Scale notes: each round is one join + one agg on the edge list —
-    * the classic BSP formulation; rounds ≈ graph diameter, and near-dup
-    * graphs are shallow (clusters are cliques-ish), so a handful of
-    * rounds suffices. For adversarially deep graphs swap the iteration
-    * body for large-star/small-star (Kiveris et al.), same interface.
-    * Each round's labels are `localCheckpoint`ed — persist alone does
-    * NOT truncate the logical plan, and an iterative union/join doubles
-    * it per round (exponential analyze/explain cost by round ~12).
+    * Two paths behind one front (`components`): the `(id_a, id_b)`
+    * pairs are materialized once and probed for at most
+    * [[LocalEdgeBound]] + 1 rows in one single-task job.
+    *  - Up to the bound, with integral ids: union-find on the driver
+    *    (the probe is the data fetch), labels returned as a local
+    *    relation — two Spark jobs in all, however deep the graph.
+    *    `maxIter` does not apply here: a 40-link chain with
+    *    `maxIter = 3` gets its labels instead of an error.
+    *  - Above the bound, or with non-integral ids: iterative min-label
+    *    propagation on the materialized pairs — every node adopts the
+    *    smallest label in its neighborhood until fixpoint, checked with
+    *    a changed-label count per round and capped at `maxIter`.
+    *
+    * Scale notes (the distributed path): each round is one join + one
+    * agg on the edge list — the classic BSP formulation; rounds ≈ graph
+    * diameter, and near-dup graphs are shallow (clusters are
+    * cliques-ish), so a handful of rounds suffices; adversarially deep
+    * graphs want [[connectedComponentsStar]]. Each round's labels are
+    * `localCheckpoint`ed (`checkpointRound`) — persist alone does NOT
+    * truncate the logical plan, and an iterative union/join doubles it
+    * per round (exponential analyze/explain cost by round ~12).
     *
     * Input: (id_a, id_b) pairs. Output: (id, component) for every id in
     * `nodes` (singletons map to themselves).
     */
   def connectedComponents(pairs: DataFrame, nodes: DataFrame,
-                          maxIter: Int = 25): DataFrame = {
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the eager labels checkpoint below reads `edges`, so it also
-    // materializes the persist; unpersist in `finally` so a loop that
-    // does not converge (or a round that throws) leaves no cache entry
-    try {
-      var labels = edges.select(col("src").as("node")).distinct()
-        .withColumn("lbl", col("node"))
-        .localCheckpoint(true)
-      var changed = 1L
-      var i = 0
-      while (changed > 0 && i < maxIter) {
-        val prop = edges.join(labels, edges("src") === labels("node"))
-          .select(col("dst").as("node"), col("lbl"))
-        // each node's previous label rides through the aggregation (it
-        // occurs exactly once per node, on the old-labels side; max
-        // ignores the propagated rows' nulls), so the convergence check
-        // is a scan of the checkpointed result — no extra join per round
-        val lblType = labels.schema("lbl").dataType
-        // LAZY mark + count: the convergence count is the materializing
-        // action (it scans every partition, so every block persists) —
-        // one job per round instead of checkpoint-then-count's two; the
-        // count runs before the previous round's blocks unpersist, the
-        // same ordering argument as connectedComponentsStar's loop
-        val next = labels.select(col("node"), col("lbl"), col("lbl").as("old"))
+                          maxIter: Int = 25): DataFrame =
+    minLabelComponents(pairs, nodes, maxIter, LocalEdgeBound)
+
+  /** [[connectedComponents]] with the local path's bound as a parameter
+    * — the spec seam (`bound = 0` always runs the distributed loop). */
+  private[graft] def minLabelComponents(pairs: DataFrame, nodes: DataFrame,
+                                        maxIter: Int, bound: Int): DataFrame =
+    components(pairs, nodes, bound)(minLabelRounds(_, maxIter))._1
+
+  private def minLabelRounds(ab: DataFrame, maxIter: Int): (DataFrame, Int) = {
+    // no persist: `ab` is already materialized, so both projections are
+    // block reads
+    val edges = ab.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .union(ab.select(col("id_b").as("src"), col("id_a").as("dst")))
+    var labels = edges.select(col("src").as("node")).distinct()
+      .withColumn("lbl", col("node"))
+      .localCheckpoint(true)
+    val lblType = labels.schema("lbl").dataType
+    var changed = 1L
+    var i = 0
+    while (changed > 0 && i < maxIter) {
+      val prop = edges.join(labels, edges("src") === labels("node"))
+        .select(col("dst").as("node"), col("lbl"))
+      // each node's previous label rides through the aggregation (it
+      // occurs exactly once per node, on the old-labels side; max
+      // ignores the propagated rows' nulls), so the convergence check
+      // is a scan of the checkpointed result — no extra join per round
+      val (next, c) = checkpointRound(labels,
+        labels.select(col("node"), col("lbl"), col("lbl").as("old"))
           .unionByName(prop.withColumn("old", lit(null).cast(lblType)))
-          .groupBy(col("node")).agg(min(col("lbl")).as("lbl"), max(col("old")).as("old"))
-          .localCheckpoint(false)
-        changed = next.filter(col("lbl") < col("old")).count()
-        labels.unpersist()
-        labels = next.select(col("node"), col("lbl"))
-        i += 1
-      }
-      require(changed == 0, s"connectedComponents did not converge in $maxIter rounds")
-      nodes.select(col(nodes.columns.head).as("id"))
-        .join(labels, col("id") === col("node"), "left")
-        .select(col("id"), coalesce(col("lbl"), col("id")).as("component"))
-    } finally edges.unpersist()
+          .groupBy(col("node"))
+          .agg(min(col("lbl")).as("lbl"), max(col("old")).as("old")))(
+        _.filter(col("lbl") < col("old")).count())
+      labels = next
+      changed = c
+      i += 1
+    }
+    require(changed == 0, s"connectedComponents did not converge in $maxIter rounds")
+    (labels.select(col("node"), col("lbl")), i)
   }
 
   /** Connected components by alternating LARGE-STAR / SMALL-STAR
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14) — same interface and output as `connectedComponents`, for
-    * adversarially DEEP graphs: min-label propagation needs rounds ≈
-    * diameter (a d-link chain costs d rounds), while the star operations
-    * contract tree height multiplicatively → O(log n) rounds.
+    * SoCC'14) — same interface, output and two paths as
+    * `connectedComponents` (up to [[LocalEdgeBound]] pairs of integral
+    * ids: union-find on the driver, where `maxIter` does not apply).
+    * The distributed path is for adversarially DEEP graphs: min-label
+    * propagation needs rounds ≈ diameter (a d-link chain costs d
+    * rounds), while the star operations contract tree height
+    * multiplicatively → O(log n) rounds.
     *
     * Per round, on the canonical (u < v) edge set:
     *  - LARGE-STAR: every node links its strictly-larger neighbors to
@@ -286,9 +299,20 @@ object Dedup {
     connectedComponentsStarWithRounds(pairs, nodes, maxIter)._1
 
   /** As `connectedComponentsStar`, also returning the round count (the
-    * O(log n) convergence claim is spec-asserted via this). */
+    * O(log n) convergence claim is spec-asserted via this); 0 on the
+    * local path, which runs no rounds. */
   def connectedComponentsStarWithRounds(pairs: DataFrame, nodes: DataFrame,
-                                        maxIter: Int = 50): (DataFrame, Int) = {
+                                        maxIter: Int = 50): (DataFrame, Int) =
+    starComponents(pairs, nodes, maxIter, LocalEdgeBound)
+
+  /** [[connectedComponentsStarWithRounds]] with the local path's bound
+    * as a parameter — the spec seam (`bound = 0` always runs the
+    * distributed loop). */
+  private[graft] def starComponents(pairs: DataFrame, nodes: DataFrame,
+                                    maxIter: Int, bound: Int): (DataFrame, Int) =
+    components(pairs, nodes, bound)(starRounds(_, maxIter))
+
+  private def starRounds(ab: DataFrame, maxIter: Int): (DataFrame, Int) = {
     def canon(e: DataFrame): DataFrame = e
       .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
       .filter(col("u") =!= col("v"))
@@ -326,40 +350,149 @@ object Dedup {
         .union(mins.select(col("m").as("u"), col("v"))))
     }
 
-    var edges = canon(pairs.select(col("id_a").as("u"), col("id_b").as("v")))
+    var edges = canon(ab.select(col("id_a").as("u"), col("id_b").as("v")))
       .localCheckpoint(true)
     var edgeCount = edges.count()
     var converged = edgeCount == 0
     var i = 0
     while (!converged && i < maxIter) {
-      // per-round localCheckpoint: persist does not truncate lineage and
-      // an iterated join/agg plan doubles per round (see
-      // connectedComponents) — this round RE-MEASURED that warning:
-      // fusing two alternations per materialization blew q103/q119 up
-      // 2.5× (each star references its input 4-8×, and only a
-      // materialized input makes those references cheap block reads).
-      // LAZY mark + count(): the count is the materializing action, so
-      // the round runs ONE job (an eager checkpoint ran its own
-      // materialization job and the count a second) — safe here
-      // because the count executes before the previous round's blocks
-      // unpersist.
-      val next = smallStar(largeStar(edges)).localCheckpoint(false)
-      val nextCount = next.count()
-      converged = nextCount == edgeCount &&
-        next.join(edges, Seq("u", "v"), "left_anti").isEmpty
-      edges.unpersist()
+      // one alternation per materialization — RE-MEASURED: fusing two
+      // alternations per checkpoint blew q103/q119 up 2.5× (each star
+      // references its input 4-8×, and only a materialized input makes
+      // those references cheap block reads)
+      val prevCount = edgeCount
+      val (next, (nextCount, same)) =
+        checkpointRound(edges, smallStar(largeStar(edges))) { n =>
+          val c = n.count()
+          (c, c == prevCount && n.join(edges, Seq("u", "v"), "left_anti").isEmpty)
+        }
+      converged = same
       edges = next
       edgeCount = nextCount
       i += 1
     }
     require(converged, s"connectedComponentsStar did not converge in $maxIter rounds")
     // at fixpoint every edge is (root, member)
-    val labels = edges.select(col("v").as("node"), col("u").as("lbl"))
-    val out = nodes.select(col(nodes.columns.head).as("id"))
-      .join(labels, col("id") === col("node"), "left")
-      .select(col("id"), coalesce(col("lbl"), col("id")).as("component"))
-    (out, i)
+    (edges.select(col("v").as("node"), col("u").as("lbl")), i)
   }
+
+  /** Most `(id_a, id_b)` pair rows the connected-components functions
+    * label on the driver instead of in Spark rounds: 2^18 = 262,144.
+    * Measured on random graphs (m pairs over m ids, one giant
+    * component; 4 cores, local[4], 3 GB driver heap, two runs each):
+    *  - at 262,144 pairs, union-find plus the label relation takes
+    *    0.38-0.45 s and peaks at 136-138 MB of heap; the whole local
+    *    path builds in 0.66-0.81 s (2 jobs), its first action takes
+    *    0.68-0.86 s, and heap use peaks 0.29-0.40 GB above the
+    *    baseline (garbage included) — about an eighth of the heap;
+    *  - the distributed loops at the same size build in 7.0-8.6 s
+    *    (star, 61 jobs) and 17.5-20.6 s (min-label, 115 jobs);
+    *  - at 2^20 pairs the local path still wins (3.3-4.0 s build plus a
+    *    4.2 s first action against star's 27-36 s), but its heap peak
+    *    reaches 0.9-1.1 GB, a third of the heap; hence the lower bound.
+    */
+  private[graft] val LocalEdgeBound = 1 << 18
+
+  private val IntegralIds: Seq[DataType] = Seq(ByteType, ShortType, IntegerType, LongType)
+
+  /** The front of both CC functions. Materializes `pairs`' `(id_a,
+    * id_b)` once (eager `localCheckpoint`) and reads at most `bound + 1`
+    * of its rows in one single-task job. At most `bound` rows of
+    * integral ids: [[unionFindLabels]] on the driver, 0 rounds.
+    * Otherwise `loop` runs on the materialization and returns its
+    * `(node, lbl)` labels — a round checkpoint, never a lazy read of
+    * the materialization, whose blocks are released when this returns
+    * or throws — and its round count. Every `nodes` row (first column)
+    * gets its label, or itself. */
+  private def components(pairs: DataFrame, nodes: DataFrame, bound: Int)
+                        (loop: DataFrame => (DataFrame, Int)): (DataFrame, Int) = {
+    val ab = pairs.select(col("id_a"), col("id_b")).localCheckpoint(true)
+    try {
+      val ranks = ab.schema.map(f => IntegralIds.indexOf(f.dataType))
+      val local =
+        if (bound <= 0 || ranks.contains(-1)) None
+        // coalesce(1): one task reads the blocks in turn and stops after
+        // bound + 1 rows; a bare limit scans partitions in growing waves,
+        // one job each
+        else Some(ab.coalesce(1).limit(bound + 1).collect()).filter(_.length <= bound)
+      val (labels, rounds) = local match {
+        case Some(rows) => (unionFindLabels(ab.sparkSession, rows, IntegralIds(ranks.max)), 0)
+        case None => loop(ab)
+      }
+      val out = nodes.select(col(nodes.columns.head).as("id"))
+        .join(labels, col("id") === col("node"), "left")
+        .select(col("id"), coalesce(col("lbl"), col("id")).as("component"))
+      (out, rounds)
+    } finally release(ab)
+  }
+
+  /** `(node, lbl)` of type `t` for every pair end whose component
+    * minimum is not itself — the others are their own label, which the
+    * caller's `coalesce(lbl, id)` supplies. Union-find over dense
+    * indexes of the sorted distinct ids, so index order is id order:
+    * linking the larger root under the smaller keeps every root its
+    * component's minimum. Pairs with a null end are skipped, as the
+    * loops never label through them. */
+  private def unionFindLabels(spark: SparkSession, rows: Array[Row],
+                              t: DataType): DataFrame = {
+    val ends = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+    val a = ends.map(_.getAs[Number](0).longValue)
+    val b = ends.map(_.getAs[Number](1).longValue)
+    val all = a ++ b
+    java.util.Arrays.sort(all)
+    var n = 0
+    for (v <- all) if (n == 0 || all(n - 1) != v) { all(n) = v; n += 1 }
+    val ids = java.util.Arrays.copyOf(all, n)
+    val parent = Array.range(0, n)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    def ix(v: Long): Int = java.util.Arrays.binarySearch(ids, v)
+    for (k <- a.indices) {
+      val (ra, rb) = (find(ix(a(k))), find(ix(b(k))))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val labels = new java.util.ArrayList[Row]()
+    for (i <- 0 until n) {
+      val r = find(i)
+      if (r != i) labels.add(Row(ids(i), ids(r)))
+    }
+    spark.createDataFrame(labels, StructType(Seq(
+      StructField("node", LongType), StructField("lbl", LongType))))
+      .select(col("node").cast(t), col("lbl").cast(t))
+  }
+
+  /** One round of a checkpointed BSP loop (both CC loops and
+    * `Graphs.bfsHops`): marks `body` for a LAZY `localCheckpoint`, runs
+    * `scan` on it, then releases `prev`. Returns the round and `scan`'s
+    * result. `scan` is the action that materializes the round, so the
+    * round costs one job instead of an eager checkpoint's job plus the
+    * action's. Two rules keep that sound:
+    *  - `scan` must read every partition (a count or a full aggregate,
+    *    never `isEmpty` or `limit`): any partition it skips is computed
+    *    by a second job Spark runs after it to complete the checkpoint;
+    *  - `prev` is released only after `scan` returns, since until every
+    *    block of the round exists it is computed from `prev`'s blocks
+    *    (and `scan` may read `prev` itself, as the star loop's
+    *    convergence anti-join does). */
+  private[operators] def checkpointRound[T](prev: DataFrame, body: DataFrame)
+                                           (scan: DataFrame => T): (DataFrame, T) = {
+    val next = body.localCheckpoint(false)
+    val out = scan(next)
+    release(prev)
+    (next, out)
+  }
+
+  /** Frees a `localCheckpoint`ed frame's blocks now. `Dataset.unpersist`
+    * only drops CacheManager entries, so on a checkpointed frame it does
+    * nothing and the blocks stay until the RDD is garbage-collected. */
+  private[operators] def release(checkpointed: DataFrame): Unit =
+    checkpointed.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 
   /** One-call dedup capstone: near-dup pairs → connected components
     * (star alternation — the faster variant on clique-heavy dedup

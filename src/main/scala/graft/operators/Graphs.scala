@@ -153,42 +153,43 @@ object Graphs {
     require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
     val UNSEEN = 999999L
     val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-    val ss = seeds.select(col(seeds.columns.head).as("node")).distinct()
-      .withColumn("__s", lit(1))
-    val flagged = nodes.join(ss, Seq("node"), "left")
-      .select(col("node"),
-        when(col("__s").isNotNull, lit(0L)).otherwise(lit(UNSEEN)).as("d"))
-      .localCheckpoint(true)
-    require(!flagged.filter(col("d") === 0L).isEmpty,
-      "bfsHops: no seed node appears in the graph")
-    var dist = flagged
-    var prevSum = dist.agg(sum(col("d"))).head().getLong(0)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val prop = e.join(dist, e("src") === dist("node"))
-        .select(col("dst"), (col("d") + 1L).as("pd"))
-        .groupBy(col("dst")).agg(min(col("pd")).as("pd"))
-      // LAZY checkpoint mark + the sum as the materializing action:
-      // one job per round instead of two (the Dedup.connectedComponents
-      // fusion) — safe because the sum runs before dist.unpersist()
-      val next = dist.join(prop, dist("node") === prop("dst"), "left")
+    try {
+      val nodes = e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node")))
+        .distinct()
+      val ss = seeds.select(col(seeds.columns.head).as("node")).distinct()
+        .withColumn("__s", lit(1))
+      val flagged = nodes.join(ss, Seq("node"), "left")
         .select(col("node"),
-          least(col("d"), coalesce(col("pd"), lit(UNSEEN))).as("d"))
-        .localCheckpoint(false)
-      val s = next.agg(sum(col("d"))).head().getLong(0)
-      converged = s == prevSum
-      prevSum = s
-      dist.unpersist()
-      dist = next
-      i += 1
-    }
-    e.unpersist()
-    dist.select(col("node"),
-      when(col("d") === UNSEEN, lit(-1L)).otherwise(col("d")).as("hops"))
+          when(col("__s").isNotNull, lit(0L)).otherwise(lit(UNSEEN)).as("d"))
+        .localCheckpoint(true)
+      // the first round releases `flagged` when all goes well; the
+      // finally covers the seed check and a round that throws
+      try {
+        require(!flagged.filter(col("d") === 0L).isEmpty,
+          "bfsHops: no seed node appears in the graph")
+        var dist = flagged
+        var prevSum = dist.agg(sum(col("d"))).head().getLong(0)
+        var converged = false
+        var i = 0
+        while (!converged && i < maxIter) {
+          val prop = e.join(dist, e("src") === dist("node"))
+            .select(col("dst"), (col("d") + 1L).as("pd"))
+            .groupBy(col("dst")).agg(min(col("pd")).as("pd"))
+          val (next, s) = Dedup.checkpointRound(dist,
+            dist.join(prop, dist("node") === prop("dst"), "left")
+              .select(col("node"),
+                least(col("d"), coalesce(col("pd"), lit(UNSEEN))).as("d")))(
+            _.agg(sum(col("d"))).head().getLong(0))
+          converged = s == prevSum
+          prevSum = s
+          dist = next
+          i += 1
+        }
+        dist.select(col("node"),
+          when(col("d") === UNSEEN, lit(-1L)).otherwise(col("d")).as("hops"))
+      } finally Dedup.release(flagged)
+    } finally Dedup.release(e)
   }
 
   /** Adamic-Adar link prediction over an UNDIRECTED edge list

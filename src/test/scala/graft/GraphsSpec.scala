@@ -134,10 +134,13 @@ class GraphsSpec extends SparkSuite {
     assert(hops(Seq("a", "d"), ("a", "b"), ("b", "c"), ("c", "d"),
       ("d", "c")) ==
       Map("a" -> 0L, "b" -> 1L, "c" -> 1L, "d" -> 0L))
-    // a seed set disjoint from the graph is a hard error
+    // a seed set disjoint from the graph is a hard error, and releases
+    // the two frames the function checkpointed before the check
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     intercept[IllegalArgumentException] {
       hops(Seq("zz"), ("a", "b"))
     }
+    assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(persisted))
   }
 
   test("rejects empty edges and bad knobs") {

@@ -141,7 +141,8 @@ class SessionGuardSpec extends SparkSuite {
     sampler.start()
     try {
       val chain = (0L until 12L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-      assert(Dedup.connectedComponents(chain, (0L to 12L).toDF("id"))
+      assert(Dedup.minLabelComponents(chain, (0L to 12L).toDF("id"),
+        maxIter = 25, bound = 0)
         .select("component").distinct().collect().length == 1)
       val sets = Seq((1L, Seq("a", "b", "c")), (2L, Seq("a", "b", "c", "d")),
         (3L, Seq("x", "y"))).toDF("id", "toks")

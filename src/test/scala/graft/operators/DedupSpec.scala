@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 import graft.SparkSuite
 
@@ -107,10 +108,19 @@ class DedupSpec extends SparkSuite {
     // a 40-link chain needs ~40 min-label rounds; 3 are allowed
     val pairs = (0L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val e = intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(pairs, (0L to 40L).toDF("id"), maxIter = 3)
+      Dedup.minLabelComponents(pairs, (0L to 40L).toDF("id"), maxIter = 3,
+        bound = 0)
     }
     assert(e.getMessage.contains("did not converge in 3 rounds"))
     assert(cache.isEmpty, "the persisted edge list must be unpersisted")
+  }
+
+  test("connected components: maxIter does not apply on the local path") {
+    import spark.implicits._
+    val pairs = (0L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val got = Dedup.connectedComponents(pairs, (0L to 40L).toDF("id"),
+      maxIter = 3).collect().map(_.getLong(1)).toSet
+    assert(got == Set(0L))
   }
 
   test("star connected components agree with min-label on mixed graphs") {
@@ -161,11 +171,115 @@ class DedupSpec extends SparkSuite {
     val pairs = (0L until 1000L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val nodes = (0L to 1000L).toDF("id")
     val (out, rounds) =
-      Dedup.connectedComponentsStarWithRounds(pairs, nodes, maxIter = 30)
+      Dedup.starComponents(pairs, nodes, maxIter = 30, bound = 0)
     assert(out.select("component").distinct().collect()
       .map(_.getLong(0)).toSeq == Seq(0L))
     assert(out.count() == 1001)
     assert(rounds <= 20, s"took $rounds rounds — not O(log n)")
+  }
+
+  // (id, component) rows of a CC result, sorted
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
+
+  /** A random pair list and node list mixing every shape the local path
+    * must label like the loops: a deep chain over shuffled ids, cliques,
+    * isolated nodes, self-pairs, duplicate and reversed pairs, pair ids
+    * missing from the nodes, and ids above Int.MaxValue. */
+  private val graphs: Gen[(Seq[(Long, Long)], Seq[Long])] = for {
+    chain <- Gen.choose(200, 230)
+    cliques <- Gen.listOfN(4, Gen.choose(2, 5))
+    isolated <- Gen.choose(0, 4)
+    seed <- Gen.choose(0L, Long.MaxValue)
+  } yield {
+    val rnd = new scala.util.Random(seed)
+    val total = chain + 1 + cliques.sum + isolated
+    val ids = Iterator.continually(
+      if (rnd.nextBoolean()) rnd.nextInt(100000).toLong
+      else Int.MaxValue.toLong + 1 + rnd.nextInt(Int.MaxValue))
+      .distinct.take(total).toVector
+    val path = ids.take(chain + 1)
+    var rest = ids.drop(chain + 1)
+    val groups = cliques.map { k => val g = rest.take(k); rest = rest.drop(k); g }
+    val edges = path.zip(path.tail) ++
+      groups.flatMap(g => for (a <- g; b <- g if a < b) yield (a, b))
+    val extra = Seq.fill(6)(edges(rnd.nextInt(edges.size)))
+    val selfs = Seq.fill(3)(ids(rnd.nextInt(ids.size))).map(i => (i, i))
+    val pairs = rnd.shuffle(edges ++ extra ++ extra.map(_.swap) ++ selfs)
+    // about one id in 20 leaves the nodes, so some pair ends are absent
+    val nodes = ids.filterNot(_ => rnd.nextInt(20) == 0)
+    (pairs, nodes)
+  }
+
+  test("local connected components equal both distributed loops on " +
+    "random graphs") {
+    import spark.implicits._
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(3)
+        .withInitialSeed(org.scalacheck.rng.Seed(7L)),
+      Prop.forAllNoShrink(graphs) { case (edgeList, nodeList) =>
+        val pairs = edgeList.toDF("id_a", "id_b")
+        val nodes = nodeList.toDF("id")
+        val local = rows(Dedup.connectedComponents(pairs, nodes))
+        val star = rows(Dedup.starComponents(pairs, nodes, 50, bound = 0)._1)
+        val label = rows(Dedup.minLabelComponents(pairs, nodes, 300, bound = 0))
+        local == star && local == label && local.size == nodeList.size
+      })
+    assert(res.passed, res.toString)
+  }
+
+  test("the local path takes exactly LocalEdgeBound pairs") {
+    val bound = Dedup.LocalEdgeBound
+    // a star around 0: one round for either loop
+    def jobs(edges: Int): Long = {
+      val pairs = spark.range(1, edges + 1L)
+        .select(lit(0L).as("id_a"), col("id").as("id_b")).localCheckpoint(true)
+      val (out, run) = graft.core.Metrics.measure(spark)(
+        Dedup.connectedComponents(pairs, spark.range(edges + 2L).toDF("id")))
+      assert(out.filter(col("component") =!= 0L).count() == 1) // the isolated node
+      run.jobs
+    }
+    assert(jobs(bound) <= 2)
+    assert(jobs(bound + 1) > 2)
+  }
+
+  test("string ids stay on the distributed path") {
+    import spark.implicits._
+    val pairs = Seq(("b", "c"), ("c", "d"), ("x", "y")).toDF("id_a", "id_b")
+      .localCheckpoint(true)
+    val nodes = Seq("b", "c", "d", "x", "y", "z").toDF("id")
+    val (out, run) = graft.core.Metrics.measure(spark)(
+      Dedup.connectedComponents(pairs, nodes))
+    assert(run.jobs > 2)
+    assert(out.collect().map(r => r.getString(0) -> r.getString(1)).toMap ==
+      Map("b" -> "b", "c" -> "b", "d" -> "b", "x" -> "x", "y" -> "x", "z" -> "z"))
+  }
+
+  test("the local path builds in two jobs and leaves no cached or " +
+    "persisted data") {
+    import spark.implicits._
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    // q119's shape: a checkpointed pair frame of int ids, Long nodes
+    val pairs = Seq((1, 2), (2, 3), (5, 6), (6, 7), (5, 7), (20, 11))
+      .toDF("id_a", "id_b").localCheckpoint(true)
+    val nodes = (1L to 21L).toDF("id")
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val outs = for (cc <- Seq[() => org.apache.spark.sql.DataFrame](
+                      () => Dedup.connectedComponents(pairs, nodes),
+                      () => Dedup.connectedComponentsStar(pairs, nodes))) yield {
+      val (out, run) = graft.core.Metrics.measure(spark)(cc())
+      assert(run.jobs <= 2, run)
+      assert(rows(out).toMap.filter { case (k, v) => k != v } ==
+        Map(2L -> 1L, 3L -> 1L, 6L -> 5L, 7L -> 5L, 20L -> 11L))
+      assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(persisted))
+      assert(cache.isEmpty)
+      out
+    }
+    // the loops' output schema: int labels widened to the Long nodes
+    val loop = Dedup.minLabelComponents(pairs, nodes, 25, bound = 0).schema
+    assert(outs.forall(_.schema == loop))
   }
 
   test("containmentPairs: directional, catches sub-document inclusion") {
