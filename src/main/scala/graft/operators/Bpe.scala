@@ -25,7 +25,8 @@ import org.apache.spark.sql.functions._
   *  - each iteration's chosen pair is a 1-row collect (dim-sized by
   *    construction) that enters the next plan as a literal; the merged
   *    symbol table is localCheckpoint'ed per iteration (truncates the
-  *    growing window lineage) and eagerly unpersisted when replaced.
+  *    growing window lineage) and released (`Dedup.release`) when
+  *    replaced.
   *
   * Merge application is leftmost non-overlapping, the standard BPE
   * scan: a run of consecutive matches (only possible when left = right,
@@ -119,13 +120,13 @@ object Bpe {
         rules += MergeRule(i, a, b, c)
         if (i < k) { // the last rule needs no application pass
           val next = applyMerge(syms, a, b).localCheckpoint(true)
-          syms.unpersist()
+          Dedup.release(syms)
           syms = next
         }
       }
       i += 1
     }
-    syms.unpersist()
+    Dedup.release(syms)
     rules.toList
   }
 }

@@ -61,12 +61,10 @@ object Dsir {
       .agg(count(lit(1)).as("__src"), sum(col("__tgt")).as("__tgtc"))
       .select(col("__b"),
         expr("(__tgtc * 1000000L) div __src").as("__r"))
-    val scored = tokens.join(broadcast(ratios), Seq("__b"))
+    tokens.join(broadcast(ratios), Seq("__b"))
       .groupBy(col("__id"))
       .agg(count(lit(1)).as("n_tokens"), sum(col("__r")).as("__rsum"))
       .select(col("__id").as(idCol), col("n_tokens"),
         expr("__rsum div n_tokens").as("dsir_score"))
-    tokens.unpersist()
-    scored
   }
 }

@@ -94,14 +94,14 @@ object Graphs {
         .selectExpr("node", "tele",
           s"tele * $baseS + ($dNum * coalesce(in_mass, 0)) div 100 AS pr_s")
         .localCheckpoint(true)
-      ranks.unpersist()
+      Dedup.release(ranks)
       ranks = next
       i += 1
     }
-    ew.unpersist()
-    // nodes is fully folded into the final ranks checkpoint — free it
-    // eagerly like ew/ranks instead of waiting for GC
-    nodes.unpersist()
+    // the result reads only the final ranks checkpoint: free the rest
+    // now instead of when GC collects their RDDs
+    Dedup.release(ew)
+    Dedup.release(nodes)
     ranks.select(col("node"), (col("pr_s") / lit(1.0e8)).as("pr"))
   }
 
@@ -379,11 +379,11 @@ object Graphs {
         .filter(col("__rn") === 1)
         .select(col("src").as("node"), col("label"))
         .localCheckpoint(true)
-      labels.unpersist()
+      Dedup.release(labels)
       labels = next
       i += 1
     }
-    e.unpersist()
+    Dedup.release(e)
     labels
   }
 }

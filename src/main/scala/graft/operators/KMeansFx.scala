@@ -85,9 +85,7 @@ object KMeansFx {
       centroids = next
       it += 1
     }
-    val out = q.select(col("__id").as(idCol),
+    q.select(col("__id").as(idCol),
       assignExpr(col("__qv"), centroids).cast(LongType).as("cluster"))
-    q.unpersist()
-    out
   }
 }

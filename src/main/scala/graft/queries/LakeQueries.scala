@@ -2033,7 +2033,6 @@ object LakeQueries extends QueryModule {
     // aggregate to exactly the whole table.
     "q171_changes_stream" -> Q(
       run = (s, dir) => {
-        import org.apache.spark.sql.streaming.{OutputMode, Trigger}
         val root = tempRoot("graft_vt_cdcstream").resolve("t").toString
         val orders = Tables(s, dir, "orders")
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
@@ -2044,17 +2043,11 @@ object LakeQueries extends QueryModule {
           orders.filter(b.between("5", "9")), root)
         graft.sources.VersionedTable.append(
           orders.filter(!b.between("0", "9")), root)
-        val q = graft.sources.VersionedTable.readChangesStream(s, root)
-          .groupBy(col("o_orderstatus"))
-          .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
-          .writeStream
-          .outputMode(OutputMode.Complete())
-          .format("memory")
-          .queryName("graft_changes_stream")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.processAllAvailable(); q.stop()
-        s.table("graft_changes_stream").orderBy("o_orderstatus")
+        graft.streaming.StreamingJobs.drainToMemory(
+          graft.sources.VersionedTable.readChangesStream(s, root)
+            .groupBy(col("o_orderstatus"))
+            .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total")),
+          "graft_changes_stream").orderBy("o_orderstatus")
       },
       oracle = Some("""
         SELECT o_orderstatus, COUNT(*) AS n,

@@ -2373,11 +2373,9 @@ object TextQueries extends QueryModule {
           .groupBy(col("word")).agg(count(lit(1)).as("wc"))
           .localCheckpoint(true) // shared by train (3 passes) + encode
         val rules = graft.operators.Bpe.train(vocab, 3)
-        val out = graft.operators.Bpe.encode(vocab, rules)
+        graft.operators.Bpe.encode(vocab, rules)
           .groupBy(col("sym")).agg(sum(col("wc")).as("total"))
           .orderBy(col("total").desc, col("sym")).limit(20)
-        vocab.unpersist()
-        out
       },
       oracle = Some("""
         WITH vocab AS (
@@ -2471,7 +2469,6 @@ object TextQueries extends QueryModule {
         val seg = graft.operators.Bpe.encode(vocab, rules)
           .groupBy(col("w")).agg(count(lit(1)).as("n_sub"))
           .withColumnRenamed("w", "word")
-        vocab.unpersist()
         docs.select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
           .filter(col("word") =!= "")
           .join(seg, Seq("word"))

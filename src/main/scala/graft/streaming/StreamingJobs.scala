@@ -4,16 +4,64 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
+import graft.sources.{MaterializedView, SnapshotGroup, VersionedTable}
 import graft.sources.VersionedTable.Write
 
 /** Structured Streaming jobs over the events table — the engine's
   * incremental-ingestion story (SURVEY.md §2.10: the reference's
   * Airflow-cron micro-batching, upgraded to the idiomatic
   * `Trigger.AvailableNow` + watermark pattern).
+  *
+  * Every `run*AvailableNow` door is a bounded run under one policy,
+  * held by [[drain]], [[drainBatches]], [[drainToMemory]] and
+  * [[readDrops]]:
+  *  - the `Trigger.AvailableNow` run processes everything the source
+  *    holds at start, then stops the query, also when a batch throws
+  *    (the error reaches the caller);
+  *  - a drop directory admits one file per micro-batch, so each
+  *    arriving file is its own batch and its own commit;
+  *  - a door whose commits carry the batch id as a txn stamp keeps its
+  *    checkpoint under the table root: batch ids stay stable across
+  *    restarts, so the txn replay guard sees the same file-to-batch
+  *    assignment a crashed run recorded (a temporary checkpoint would
+  *    re-enumerate the source and could silently skip a shifted batch);
+  *  - a memory sink's result stays registered under its query name.
   */
 object StreamingJobs {
+
+  /** Run `writer`'s query under the bounded-run policy: AvailableNow,
+    * wait until every available batch is processed, stop — in a
+    * `finally`, so a failed batch never leaves its query running. */
+  private[graft] def drain(writer: DataStreamWriter[_]): Unit = {
+    val q = writer.trigger(Trigger.AvailableNow()).start()
+    try q.processAllAvailable() finally q.stop()
+  }
+
+  /** [[drain]] `df` through `body`, once per micro-batch; `checkpoint`
+    * is the door's persisted checkpoint directory (None: a temporary
+    * one). */
+  private[graft] def drainBatches(df: DataFrame, checkpoint: Option[java.io.File])
+                                 (body: (DataFrame, Long) => Unit): Unit = {
+    val w = df.writeStream.foreachBatch(body)
+    drain(checkpoint.fold(w)(c => w.option("checkpointLocation", c.getPath)))
+  }
+
+  /** [[drain]] `ds` into a memory sink registered as `name` and return
+    * its table. */
+  private[graft] def drainToMemory(ds: Dataset[_], name: String,
+                                   mode: OutputMode = OutputMode.Complete()): DataFrame = {
+    drain(ds.writeStream.outputMode(mode).format("memory").queryName(name))
+    ds.sparkSession.table(name)
+  }
+
+  /** A drop directory as a stream of `format` files, one file per
+    * micro-batch. */
+  private[graft] def readDrops(spark: SparkSession, dir: String, schema: StructType,
+                               format: String = "parquet"): DataFrame =
+    spark.readStream.option("maxFilesPerTrigger", 1).schema(schema)
+      .format(format).load(dir)
 
   /** Events schema with `ts` as the given type — the fixture has
     * shipped ts both as nanos int64 (TIMESTAMP(NANOS), readable only as
@@ -61,18 +109,8 @@ object StreamingJobs {
     * the reference's "daily append" protocol done right: restartable,
     * checkpointable, exactly-once into the sink. */
   def runHourlyAvailableNow(spark: SparkSession, dir: String,
-                            queryName: String): DataFrame = {
-    val q = hourlyAgg(readEvents(spark, dir))
-      .writeStream
-      .outputMode(OutputMode.Complete())
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
-  }
+                            queryName: String): DataFrame =
+    drainToMemory(hourlyAgg(readEvents(spark, dir)), queryName)
 
   /** Sliding-window aggregation (2-hour windows every hour): each event
     * lands in two overlapping windows — the smoothing shape for rate
@@ -80,23 +118,15 @@ object StreamingJobs {
     * state is 2× (one open window per slide), still bounded. */
   def runSlidingAvailableNow(spark: SparkSession, dir: String,
                              queryName: String): DataFrame = {
-    val q = readEvents(spark, dir)
+    drainToMemory(readEvents(spark, dir)
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "2 hours", "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("val_sum"))
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm").as("win_start"),
-        col("event_type"), col("n"), col("val_sum"))
-      .writeStream
-      .outputMode(OutputMode.Complete())
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
+        col("event_type"), col("n"), col("val_sum")),
+      queryName)
   }
 
   /** Exactly-once over an at-least-once source: the input stream is the
@@ -108,21 +138,13 @@ object StreamingJobs {
                            queryName: String): DataFrame = {
     val once = readEvents(spark, dir)
     val atLeastOnce = once.union(readEvents(spark, dir))
-    val q = atLeastOnce
+    drainToMemory(atLeastOnce
       .withWatermark("ts", "24 hours")
       .dropDuplicates("event_id")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("val_sum"))
-      .writeStream
-      .outputMode(OutputMode.Complete())
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
+        sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("val_sum")),
+      queryName)
   }
 
   /** [[runDedupAvailableNow]] with BOUNDED state:
@@ -139,21 +161,13 @@ object StreamingJobs {
                                           queryName: String): DataFrame = {
     val once = readEvents(spark, dir)
     val atLeastOnce = once.union(readEvents(spark, dir))
-    val q = atLeastOnce
+    drainToMemory(atLeastOnce
       .withWatermark("ts", "24 hours")
       .dropDuplicatesWithinWatermark("event_id")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("val_sum"))
-      .writeStream
-      .outputMode(OutputMode.Complete())
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
+        sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("val_sum")),
+      queryName)
   }
 
   /** STREAMING retrieval-index maintenance — the
@@ -171,31 +185,12 @@ object StreamingJobs {
   def runTextIndexIngestAvailableNow(spark: SparkSession, inputDir: String,
                                      indexRoot: String): Unit = {
     new java.io.File(indexRoot).mkdirs()
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    val q = spark.readStream
-      .option("maxFilesPerTrigger", 1)
-      .schema(schema)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        graft.operators.TextIndex.append(batch.toDF(), indexRoot,
-          txn = batchId)
-      }
-      // persisted checkpoint: batchIds stay stable across restarts, so
-      // the txn replay guard sees the SAME file-to-batch assignment a
-      // crashed run recorded — a temp checkpoint would re-enumerate
-      // from scratch and can silently skip a shifted batch
-      .option("checkpointLocation",
-        new java.io.File(indexRoot, "_ingest_ckpt").getPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    val schema = StructType(Seq(
+      StructField("doc_id", LongType), StructField("text", StringType)))
+    drainBatches(readDrops(spark, inputDir, schema),
+        Some(new java.io.File(indexRoot, "_ingest_ckpt"))) { (batch, batchId) =>
+      graft.operators.TextIndex.append(batch, indexRoot, txn = batchId)
+    }
   }
 
   /** [[graft.sources.BlobStore]] ingest door: media assets arrive
@@ -209,32 +204,21 @@ object StreamingJobs {
   def runMediaIngestAvailableNow(spark: SparkSession, inputDir: String,
                                  root: String, chunkBytes: Int,
                                  autoCompactFiles: Int = 0): Unit = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("media_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("kind",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("payload",
-        org.apache.spark.sql.types.BinaryType)))
-    val q = spark.readStream
-      .option("maxFilesPerTrigger", 1)
-      .schema(schema)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        graft.sources.BlobStore.appendTxn(batch.toDF(), root, chunkBytes,
-          appId = "media_ingest", txn = batchId,
-          autoCompactFiles = autoCompactFiles)
-      }
-      // stable batchIds across restarts (see runTextIndexIngest note)
-      .option("checkpointLocation",
-        new java.io.File(root, "_ingest_ckpt").getPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    val schema = StructType(Seq(StructField("media_id", LongType),
+      StructField("kind", StringType), StructField("payload", BinaryType)))
+    drainBatches(readDrops(spark, inputDir, schema),
+        Some(new java.io.File(root, "_ingest_ckpt"))) { (batch, batchId) =>
+      graft.sources.BlobStore.appendTxn(batch, root, chunkBytes,
+        appId = "media_ingest", txn = batchId,
+        autoCompactFiles = autoCompactFiles)
+    }
   }
+
+  /** The (vec_id, embedding) drop-file schema BOTH ANN ingest doors
+    * read — one definition, or the doors could silently diverge. */
+  private val embeddingStreamSchema = StructType(Seq(
+    StructField("vec_id", LongType),
+    StructField("embedding", ArrayType(FloatType))))
 
   /** [[graft.operators.IvfIndex]] ingest door — the full ANN lifecycle
     * through streaming: the first micro-batch BUILDS the index (train
@@ -245,41 +229,19 @@ object StreamingJobs {
     * reaches `driftThreshold` the centroids retrain on the stored
     * vectors and the table rewrites cell-clustered, so recall never
     * silently decays under a drifting stream. */
-  /** The (vec_id, embedding) drop-file schema BOTH ANN ingest doors
-    * read — one definition, or the doors could silently diverge. */
-  private val embeddingStreamSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("vec_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("embedding",
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.FloatType))))
-
   def runAnnIngestAvailableNow(spark: SparkSession, inputDir: String,
                                indexRoot: String, nlist: Int = 16,
                                driftThreshold: Double = 0.5): Unit = {
     new java.io.File(indexRoot).mkdirs()
-    val q = spark.readStream
-      .option("maxFilesPerTrigger", 1)
-      .schema(embeddingStreamSchema)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        val ix = graft.operators.IvfIndex
-        if (!ix.exists(indexRoot))
-          ix.build(batch.toDF(), indexRoot, nlist, txn = batchId)
-        else
-          ix.append(batch.toDF(), indexRoot, txn = batchId)
-        ix.reclusterIfDrifted(spark, indexRoot, driftThreshold)
-        ()
-      }
-      // stable batchIds across restarts (see runTextIndexIngest note)
-      .option("checkpointLocation",
-        new java.io.File(indexRoot, "_ingest_ckpt").getPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    drainBatches(readDrops(spark, inputDir, embeddingStreamSchema),
+        Some(new java.io.File(indexRoot, "_ingest_ckpt"))) { (batch, batchId) =>
+      val ix = graft.operators.IvfIndex
+      if (!ix.exists(indexRoot))
+        ix.build(batch, indexRoot, nlist, txn = batchId)
+      else
+        ix.append(batch, indexRoot, txn = batchId)
+      ix.reclusterIfDrifted(spark, indexRoot, driftThreshold)
+    }
   }
 
   /** [[graft.operators.IvfPqIndex]] ingest door — the COMPOSITE-index
@@ -299,40 +261,26 @@ object StreamingJobs {
                                  root: String, dim: Int, nlist: Int = 16,
                                  m: Int = 8, ksub: Int = 16,
                                  driftThreshold: Double = 0.5): Unit = {
-    import graft.sources.VersionedTable
     val corpusRoot = new java.io.File(root, "corpus").getPath
     val indexRoot = new java.io.File(root, "index").getPath
     new java.io.File(indexRoot).mkdirs()
-    val q = spark.readStream
-      .option("maxFilesPerTrigger", 1)
-      .schema(embeddingStreamSchema)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        val ix = graft.operators.IvfPqIndex
-        // corpus first: the index's exact rescore resolves ids here; a
-        // crash between the two commits leaves corpus-only rows the
-        // replay completes into the index (both appends txn-guarded)
-        VersionedTable.append(batch.toDF(), corpusRoot,
-          Write(stats = Some(Seq("vec_id")), txn = Some("ivfpq_ingest" -> batchId)))
-        if (!ix.exists(indexRoot))
-          ix.build(VersionedTable.read(spark, corpusRoot), indexRoot,
-            dim, nlist, m, ksub, txn = batchId)
-        else {
-          ix.append(batch.toDF(), indexRoot, txn = batchId)
-          ix.reclusterIfDrifted(VersionedTable.read(spark, corpusRoot),
-            indexRoot, driftThreshold)
-        }
-        ()
+    drainBatches(readDrops(spark, inputDir, embeddingStreamSchema),
+        Some(new java.io.File(root, "_ingest_ckpt"))) { (batch, batchId) =>
+      val ix = graft.operators.IvfPqIndex
+      // corpus first: the index's exact rescore resolves ids here; a
+      // crash between the two commits leaves corpus-only rows the
+      // replay completes into the index (both appends txn-guarded)
+      VersionedTable.append(batch, corpusRoot,
+        Write(stats = Some(Seq("vec_id")), txn = Some("ivfpq_ingest" -> batchId)))
+      if (!ix.exists(indexRoot))
+        ix.build(VersionedTable.read(spark, corpusRoot), indexRoot,
+          dim, nlist, m, ksub, txn = batchId)
+      else {
+        ix.append(batch, indexRoot, txn = batchId)
+        ix.reclusterIfDrifted(VersionedTable.read(spark, corpusRoot),
+          indexRoot, driftThreshold)
       }
-      // stable batchIds across restarts (see runTextIndexIngest note)
-      .option("checkpointLocation",
-        new java.io.File(root, "_ingest_ckpt").getPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    }
   }
 
   /** Z-ORDERED ingest door — incremental clustered ingestion: each
@@ -348,37 +296,22 @@ object StreamingJobs {
     * dial, manifest-pruned reads throughout. */
   def runZOrderIngestAvailableNow(spark: SparkSession, inputDir: String,
                                   root: String, cols: Seq[String],
-                                  schema: org.apache.spark.sql.types.StructType,
+                                  schema: StructType,
                                   numFiles: Int = 4,
                                   autoCompactFiles: Int = 0,
-                                  compactTargetFiles: Int = 16): Unit = {
-    val q = spark.readStream
-      .option("maxFilesPerTrigger", 1)
-      .schema(schema)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        import graft.sources.VersionedTable
-        VersionedTable.append(batch.toDF(), root,
-          Write(zorder = Some(Write.ZOrder(cols, numFiles)),
-            txn = Some("zorder_ingest" -> batchId)))
-        // O(manifest) fragmentation probe — no relation build / footer
-        // reads on the per-batch hot path
-        if (autoCompactFiles > 0 &&
-            VersionedTable.fileCount(root) >= autoCompactFiles)
-          VersionedTable.compactZOrderedK(spark, root, cols,
-            compactTargetFiles)
-        ()
-      }
-      // stable batchIds across restarts (see runTextIndexIngest note)
-      .option("checkpointLocation",
-        new java.io.File(root, "_ingest_ckpt").getPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
+                                  compactTargetFiles: Int = 16): Unit =
+    drainBatches(readDrops(spark, inputDir, schema),
+        Some(new java.io.File(root, "_ingest_ckpt"))) { (batch, batchId) =>
+      VersionedTable.append(batch, root,
+        Write(zorder = Some(Write.ZOrder(cols, numFiles)),
+          txn = Some("zorder_ingest" -> batchId)))
+      // O(manifest) fragmentation probe — no relation build / footer
+      // reads on the per-batch hot path
+      if (autoCompactFiles > 0 &&
+          VersionedTable.fileCount(root) >= autoCompactFiles)
+        VersionedTable.compactZOrderedK(spark, root, cols,
+          compactTargetFiles)
+    }
 
   /** Streaming upsert sink: foreachBatch → VersionedTable.merge — the
     * idiomatic upgrade of the reference's blind daily appends
@@ -390,22 +323,14 @@ object StreamingJobs {
     * and every batch is an atomic, time-travelable table version. */
   def runUpsertAvailableNow(spark: SparkSession, dir: String,
                             tableRoot: String): DataFrame = {
-    import graft.sources.VersionedTable
     val atLeastOnce = readEvents(spark, dir).union(readEvents(spark, dir))
-    val q = atLeastOnce.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       _: Long) =>
-        val deduped = batch.dropDuplicates("event_id")
-        if (VersionedTable.latestVersion(tableRoot).isEmpty)
-          VersionedTable.overwrite(deduped, tableRoot)
-        else
-          VersionedTable.merge(spark, tableRoot, deduped, Seq("event_id"))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    drainBatches(atLeastOnce, None) { (batch, _) =>
+      val deduped = batch.dropDuplicates("event_id")
+      if (VersionedTable.latestVersion(tableRoot).isEmpty)
+        VersionedTable.overwrite(deduped, tableRoot)
+      else
+        VersionedTable.merge(spark, tableRoot, deduped, Seq("event_id"))
+    }
     VersionedTable.read(spark, tableRoot)
   }
 
@@ -420,7 +345,6 @@ object StreamingJobs {
   def runViewMaintenanceAvailableNow(spark: SparkSession, dir: String,
                                      srcRoot: String,
                                      viewRoot: String): DataFrame = {
-    import graft.sources.{MaterializedView, VersionedTable}
     // foreachBatch is at-least-once: Structured Streaming RE-RUNS a
     // failed micro-batch with the SAME batchId, and a blind append
     // would land its rows twice (and the additive view would absorb
@@ -432,26 +356,17 @@ object StreamingJobs {
     // the stream's checkpoint share srcRoot's lifetime, so batchIds
     // stay monotonic per table — a fresh table starts both at zero.
     new java.io.File(srcRoot).mkdirs()
-    val q = readEvents(spark, dir)
-      .withColumn("hour_start",
-        date_format(date_trunc("hour", col("ts")), "yyyy-MM-dd HH:mm"))
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
+    val hourly = readEvents(spark, dir).withColumn("hour_start",
+      date_format(date_trunc("hour", col("ts")), "yyyy-MM-dd HH:mm"))
+    drainBatches(hourly, Some(new java.io.File(srcRoot, "_ingest_ckpt"))) {
+      (batch, batchId) =>
         VersionedTable.append(batch, srcRoot,
           Write(txn = Some("view_ingest" -> batchId)))
         // refresh is idempotent per source version, so
         // running it on a replayed batch is a no-op, never a re-apply
         MaterializedView.refreshAdditive(spark, srcRoot, viewRoot,
           Seq("hour_start", "event_type"), "value")
-        ()
-      }
-      .option("checkpointLocation",
-        new java.io.File(srcRoot, "_ingest_ckpt").getPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    }
     VersionedTable.read(spark, viewRoot)
   }
 
@@ -479,16 +394,14 @@ object StreamingJobs {
     * never the table. */
   def runCdcApplyAvailableNow(spark: SparkSession, dir: String,
                               tableRoot: String): DataFrame = {
-    import graft.sources.VersionedTable
     new java.io.File(tableRoot).mkdirs()
-    val q = readEvents(spark, dir)
+    val changes = readEvents(spark, dir)
       .select(col("user_id"), col("event_id").as("seq"),
         when(col("event_type") === "error", lit("D")).otherwise(lit("U"))
           .as("op"),
         col("event_type"), col("value"))
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
+    drainBatches(changes, Some(new java.io.File(tableRoot, "_cdc_ckpt"))) {
+      (batch, batchId) =>
         if (VersionedTable.latestVersion(tableRoot).isEmpty) {
           // bootstrap: the first batch's net upserts ARE version 0,
           // sequence kept — later feeds guard against it
@@ -505,14 +418,7 @@ object StreamingJobs {
           // a replayed batch returns before any write
           VersionedTable.applyChangesGuarded(spark, tableRoot, batch,
             Seq("user_id"), "seq", "op", txnAppId = "cdc", txn = batchId)
-        ()
-      }
-      .option("checkpointLocation",
-        new java.io.File(tableRoot, "_cdc_ckpt").getPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    }
     VersionedTable.read(spark, tableRoot)
   }
 
@@ -537,36 +443,26 @@ object StreamingJobs {
   def runDriftMonitorAvailableNow(spark: SparkSession, dir: String,
                                   reference: DataFrame,
                                   monitorRoot: String): DataFrame = {
-    import graft.sources.VersionedTable
     new java.io.File(monitorRoot).mkdirs()
     val ref = reference.select(col("x").cast("long").as("v"),
       lit(1).as("side"))
-    val q = readEvents(spark, dir)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        // replay guard BEFORE scoring: a replayed batch neither
-        // re-appends (the txn append would no-op anyway) nor re-runs the KS
-        // job — the txn probe is a manifest read, the KS stat a job
-        if (!VersionedTable.latestTxn(monitorRoot, "drift").exists(_ >= batchId)) {
-          val stat = graft.operators.Drift.ksStat(
-            ref.unionByName(batch
-              .select(col("value").cast("long").as("v"), lit(0).as("side"))),
-            valueCol = col("v"), isA = col("side") === 1)
-            .withColumn("batch_id", lit(batchId))
-            .select(col("batch_id"), col("n_a"), col("n_b"),
-              col("d_num"), col("d_ppm"), col("at_value"))
-          VersionedTable.append(stat, monitorRoot,
-            Write(txn = Some("drift" -> batchId)))
-        }
-        ()
+    drainBatches(readEvents(spark, dir),
+        Some(new java.io.File(monitorRoot, "_monitor_ckpt"))) { (batch, batchId) =>
+      // replay guard BEFORE scoring: a replayed batch neither
+      // re-appends (the txn append would no-op anyway) nor re-runs the KS
+      // job — the txn probe is a manifest read, the KS stat a job
+      if (!VersionedTable.latestTxn(monitorRoot, "drift").exists(_ >= batchId)) {
+        val stat = graft.operators.Drift.ksStat(
+          ref.unionByName(batch
+            .select(col("value").cast("long").as("v"), lit(0).as("side"))),
+          valueCol = col("v"), isA = col("side") === 1)
+          .withColumn("batch_id", lit(batchId))
+          .select(col("batch_id"), col("n_a"), col("n_b"),
+            col("d_num"), col("d_ppm"), col("at_value"))
+        VersionedTable.append(stat, monitorRoot,
+          Write(txn = Some("drift" -> batchId)))
       }
-      .option("checkpointLocation",
-        new java.io.File(monitorRoot, "_monitor_ckpt").getPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    }
     VersionedTable.read(spark, monitorRoot).orderBy("batch_id")
   }
 
@@ -583,22 +479,17 @@ object StreamingJobs {
     * table and lands only the missing one. Scale: the split is
     * map-local from_json; each commit is O(batch). */
   def runQuarantineIngestAvailableNow(spark: SparkSession, inputDir: String,
-                                      schema: org.apache.spark.sql.types.StructType,
+                                      schema: StructType,
                                       goodRoot: String,
                                       badRoot: String): (DataFrame, DataFrame) = {
-    import graft.sources.VersionedTable
     new java.io.File(goodRoot).mkdirs()
     new java.io.File(badRoot).mkdirs()
     val corrupt = "_corrupt_record"
-    val full = schema.add(
-      org.apache.spark.sql.types.StructField(corrupt,
-        org.apache.spark.sql.types.StringType, nullable = true))
-    val q = spark.readStream
-      .option("maxFilesPerTrigger", 1)
-      .text(inputDir)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
+    val full = schema.add(StructField(corrupt, StringType, nullable = true))
+    val lines = readDrops(spark, inputDir,
+      StructType(Seq(StructField("value", StringType))), "text")
+    drainBatches(lines, Some(new java.io.File(goodRoot, "_ingest_ckpt"))) {
+      (batch, batchId) =>
         val parsed = batch.select(col("value"),
           from_json(col("value"), full, Map(
             "mode" -> "PERMISSIVE",
@@ -618,14 +509,7 @@ object StreamingJobs {
           Write(txn = Some("quarantine_ingest" -> batchId)))
         VersionedTable.append(bad, badRoot,
           Write(txn = Some("quarantine_ingest" -> batchId)))
-        ()
-      }
-      .option("checkpointLocation",
-        new java.io.File(goodRoot, "_ingest_ckpt").getPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    }
     (VersionedTable.read(spark, goodRoot), VersionedTable.read(spark, badRoot))
   }
 
@@ -643,32 +527,17 @@ object StreamingJobs {
                                          inputDir: String, leftRoot: String,
                                          rightRoot: String, viewRoot: String,
                                          joinCols: Seq[String]): DataFrame = {
-    import graft.sources.{MaterializedView, VersionedTable}
     new java.io.File(leftRoot).mkdirs()
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("grp",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("item",
-        org.apache.spark.sql.types.DoubleType)))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        VersionedTable.append(batch, leftRoot,
-          Write(txn = Some("jv_ingest" -> batchId)))
-        // idempotent per (leftV, rightV) — a replayed batch no-ops
-        MaterializedView.refreshJoin(spark, leftRoot, rightRoot,
-          viewRoot, joinCols)
-        ()
-      }
-      .option("checkpointLocation",
-        new java.io.File(leftRoot, "_jv_ckpt").getPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    val schema = StructType(Seq(
+      StructField("grp", LongType), StructField("item", DoubleType)))
+    drainBatches(readDrops(spark, inputDir, schema),
+        Some(new java.io.File(leftRoot, "_jv_ckpt"))) { (batch, batchId) =>
+      VersionedTable.append(batch, leftRoot,
+        Write(txn = Some("jv_ingest" -> batchId)))
+      // idempotent per (leftV, rightV) — a replayed batch no-ops
+      MaterializedView.refreshJoin(spark, leftRoot, rightRoot,
+        viewRoot, joinCols)
+    }
     MaterializedView.readJoin(spark, viewRoot)
   }
 
@@ -722,15 +591,13 @@ object StreamingJobs {
     * Exactly-once via the txn-stamped facts commit. */
   def runAtomicPublishAvailableNow(spark: SparkSession, dir: String,
                                    groupRoot: String): DataFrame = {
-    import graft.sources.{MaterializedView, SnapshotGroup, VersionedTable}
     val facts = new java.io.File(groupRoot, "facts").getPath
     val view = new java.io.File(groupRoot, "summary").getPath
     new java.io.File(groupRoot).mkdirs()
-    val q = readEvents(spark, dir)
+    val rows = readEvents(spark, dir)
       .select(col("event_id"), col("event_type"), col("value"))
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
+    drainBatches(rows, Some(new java.io.File(groupRoot, "_pub_ckpt"))) {
+      (batch, batchId) =>
         // the facts append is txn-stamped (data + batchId in one atomic
         // manifest commit → a replayed batch appends nothing); refresh
         // and publish run UNCONDITIONALLY because both are idempotent
@@ -749,27 +616,15 @@ object StreamingJobs {
           val vv = VersionedTable.latestVersion(view).get
           SnapshotGroup.publish(groupRoot, Map(facts -> fv, view -> vv))
         }
-        ()
-      }
-      .option("checkpointLocation",
-        new java.io.File(groupRoot, "_pub_ckpt").getPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    }
     // an all-empty input never bootstraps the facts table, so nothing
     // was ever published — return the (empty) view shape instead of
     // failing the publish-group resolution
     if (SnapshotGroup.current(groupRoot).isEmpty)
       spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("event_type",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("n",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("total",
-            org.apache.spark.sql.types.DecimalType(18, 2)))))
+        StructType(Seq(StructField("event_type", StringType),
+          StructField("n", LongType), StructField("total", DecimalType(18, 2)))))
     else SnapshotGroup.readAt(spark, groupRoot, view)
   }
 
@@ -788,7 +643,6 @@ object StreamingJobs {
       spark: SparkSession, inputDir: String, mainRoot: String,
       quarRoot: String,
       gates: Seq[(String, org.apache.spark.sql.Column)]): DataFrame = {
-    import graft.sources.VersionedTable
     // a batch lands in exactly ONE of the two tables, so the replay
     // check is the MAX of both tables' recorded txns (a crash after
     // the quarantine append must not re-judge the batch into main)
@@ -797,44 +651,28 @@ object StreamingJobs {
         VersionedTable.latestTxn(quarRoot, "expect"))
         .foldLeft(-1L)(math.max)
     new java.io.File(mainRoot).mkdirs()
-    val q = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("event_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("event_type",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.DoubleType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        if (batchId > lastCommitted) {
-          val row = batch.agg(
-            gates.head._2.cast("boolean").as(gates.head._1),
-            gates.tail.map { case (n, c) => c.cast("boolean").as(n) }: _*)
-            .collect().head
-          val failed = gates.map(_._1).zipWithIndex.collect {
-            case (n, i) if row.isNullAt(i) || !row.getBoolean(i) => n
-          }
-          if (failed.isEmpty)
-            VersionedTable.append(batch, mainRoot,
-              Write(txn = Some("expect" -> batchId)))
-          else
-            VersionedTable.append(
-              batch.withColumn("failed_gates",
-                lit(failed.sorted.mkString(","))),
-              quarRoot, Write(txn = Some("expect" -> batchId)))
+    val schema = StructType(Seq(StructField("event_id", LongType),
+      StructField("event_type", StringType), StructField("value", DoubleType)))
+    drainBatches(readDrops(spark, inputDir, schema),
+        Some(new java.io.File(mainRoot, "_exp_ckpt"))) { (batch, batchId) =>
+      if (batchId > lastCommitted) {
+        val row = batch.agg(
+          gates.head._2.cast("boolean").as(gates.head._1),
+          gates.tail.map { case (n, c) => c.cast("boolean").as(n) }: _*)
+          .collect().head
+        val failed = gates.map(_._1).zipWithIndex.collect {
+          case (n, i) if row.isNullAt(i) || !row.getBoolean(i) => n
         }
-        ()
+        if (failed.isEmpty)
+          VersionedTable.append(batch, mainRoot,
+            Write(txn = Some("expect" -> batchId)))
+        else
+          VersionedTable.append(
+            batch.withColumn("failed_gates",
+              lit(failed.sorted.mkString(","))),
+            quarRoot, Write(txn = Some("expect" -> batchId)))
       }
-      .option("checkpointLocation",
-        new java.io.File(mainRoot, "_exp_ckpt").getPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    }
     VersionedTable.read(spark, mainRoot)
   }
 
@@ -850,36 +688,18 @@ object StreamingJobs {
   def runOhlcRollupAvailableNow(spark: SparkSession, inputDir: String,
                                 barsRoot: String,
                                 widthSec: Long): DataFrame = {
-    import graft.sources.VersionedTable
     new java.io.File(barsRoot).mkdirs()
-    val q = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("grp",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("t_us",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("v",
-          org.apache.spark.sql.types.DoubleType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        VersionedTable.append(
-          graft.operators.TimeSeries
-            .ohlcPartials(batch, "grp", "t_us", "id", "v", widthSec)
-            .withColumn("batch_id", lit(batchId)),
-          barsRoot, Write(txn = Some("ohlc" -> batchId)))
-        ()
-      }
-      .option("checkpointLocation",
-        new java.io.File(barsRoot, "_bars_ckpt").getPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    val schema = StructType(Seq(StructField("grp", StringType),
+      StructField("t_us", LongType), StructField("id", LongType),
+      StructField("v", DoubleType)))
+    drainBatches(readDrops(spark, inputDir, schema),
+        Some(new java.io.File(barsRoot, "_bars_ckpt"))) { (batch, batchId) =>
+      VersionedTable.append(
+        graft.operators.TimeSeries
+          .ohlcPartials(batch, "grp", "t_us", "id", "v", widthSec)
+          .withColumn("batch_id", lit(batchId)),
+        barsRoot, Write(txn = Some("ohlc" -> batchId)))
+    }
     VersionedTable.read(spark, barsRoot)
   }
 
@@ -888,31 +708,16 @@ object StreamingJobs {
   private def runPartialRollupAvailableNow(
       spark: SparkSession, inputDir: String, sketchRoot: String,
       partialAgg: org.apache.spark.sql.Column): DataFrame = {
-    import graft.sources.VersionedTable
     new java.io.File(sketchRoot).mkdirs()
-    val q = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("grp",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("item",
-          org.apache.spark.sql.types.StringType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        VersionedTable.append(
-          batch.groupBy(col("grp")).agg(partialAgg)
-            .withColumn("batch_id", lit(batchId)),
-          sketchRoot, Write(txn = Some("rollup" -> batchId)))
-        ()
-      }
-      .option("checkpointLocation",
-        new java.io.File(sketchRoot, "_sketch_ckpt").getPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    val schema = StructType(Seq(
+      StructField("grp", StringType), StructField("item", StringType)))
+    drainBatches(readDrops(spark, inputDir, schema),
+        Some(new java.io.File(sketchRoot, "_sketch_ckpt"))) { (batch, batchId) =>
+      VersionedTable.append(
+        batch.groupBy(col("grp")).agg(partialAgg)
+          .withColumn("batch_id", lit(batchId)),
+        sketchRoot, Write(txn = Some("rollup" -> batchId)))
+    }
     VersionedTable.read(spark, sketchRoot)
   }
 
@@ -932,19 +737,10 @@ object StreamingJobs {
     * dimension table, aggregated per dim attribute. */
   def runStaticJoinAvailableNow(spark: SparkSession, dir: String,
                                 dim: DataFrame, queryName: String): DataFrame = {
-    val q = readEvents(spark, dir)
+    drainToMemory(readEvents(spark, dir)
       .join(broadcast(dim), col("user_id") === col("c_custkey"))
       .groupBy(col("c_mktsegment"))
-      .agg(count(lit(1)).as("n"))
-      .writeStream
-      .outputMode(OutputMode.Complete())
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
+      .agg(count(lit(1)).as("n")), queryName)
   }
 
   final case class Event(event_id: Long, ts: Timestamp, user_id: Long,
@@ -1077,16 +873,7 @@ object StreamingJobs {
         col("event_type"), col("value"))
       .as[Event]
 
-    val q = sessionize(events, gapMinutes)
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
+    drainToMemory(sessionize(events, gapMinutes), queryName, OutputMode.Append())
       .select(col("user_id"),
         date_format(col("session_start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
         date_format(col("session_end"), "yyyy-MM-dd HH:mm:ss").as("session_end"),
@@ -1145,16 +932,7 @@ object StreamingJobs {
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
       .as[Event]
-    val q = asOfEnrich(events)
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
+    drainToMemory(asOfEnrich(events), queryName, OutputMode.Append())
   }
 
   /** Stream-stream event-time interval join: each `view` matched to the
@@ -1174,22 +952,14 @@ object StreamingJobs {
       .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
         col("event_id").as("purchase_id"))
       .withWatermark("p_ts", "1 hour")
-    val q = views
+    drainToMemory(views
       .join(purchases,
         col("user_id") === col("p_user") &&
           col("p_ts") >= col("view_ts") &&
           col("p_ts") <= col("view_ts") + expr("INTERVAL 1 HOUR"))
       .select(col("user_id"), col("view_id"), col("purchase_id"),
-        (unix_micros(col("p_ts")) - unix_micros(col("view_ts"))).as("lag_us"))
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
+        (unix_micros(col("p_ts")) - unix_micros(col("view_ts"))).as("lag_us")),
+      queryName, OutputMode.Append())
   }
 
   /** LEFT OUTER stream-stream interval join — the watermark-EVICTION
@@ -1212,7 +982,6 @@ object StreamingJobs {
     * batch LEFT interval join. */
   def runStreamStreamLeftOuterAvailableNow(spark: SparkSession, dir: String,
                                            tableRoot: String): DataFrame = {
-    import graft.sources.VersionedTable
     val batch = graft.core.Tables(spark, dir, "events")
     val maxUs = batch.agg(max(unix_micros(col("ts")))).head().getLong(0)
     val sentinelNanos = (maxUs + 100L * 3600L * 1000000L) * 1000L
@@ -1242,7 +1011,7 @@ object StreamingJobs {
         col("event_id").as("purchase_id"))
       .withWatermark("p_ts", "1 hour")
     new java.io.File(tableRoot).mkdirs()
-    val q = views
+    val joined = views
       .join(purchases,
         col("user_id") === col("p_user") &&
           col("p_ts") >= col("view_ts") &&
@@ -1250,19 +1019,11 @@ object StreamingJobs {
         "left_outer")
       .select(col("user_id"), col("view_id"), col("purchase_id"),
         (unix_micros(col("p_ts")) - unix_micros(col("view_ts"))).as("lag_us"))
-      .writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
+    drainBatches(joined, Some(new java.io.File(tableRoot, "_ssj_ckpt"))) {
+      (b, batchId) =>
         VersionedTable.append(b.filter(col("user_id") >= 0), tableRoot,
           Write(txn = Some("ssj_outer" -> batchId)))
-        ()
-      }
-      .option("checkpointLocation",
-        new java.io.File(tableRoot, "_ssj_ckpt").getPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    }
     VersionedTable.read(spark, tableRoot)
   }
 
@@ -1288,23 +1049,16 @@ object StreamingJobs {
     * exact-verify the candidate SLIVER surfaced by the band join
     * (LshIndex's semi-join rescore pattern). Near-dup recall is the
     * banding recall (128/32 default: ≥ 1-1e-10 at J 0.8); the exact
-    * path is unchanged.
-    *
-    * Set `maxFilesPerTrigger` on the source dir so each arriving file
-    * is its own batch (done here). */
+    * path is unchanged. */
   def runIngestDedupAvailableNow(spark: SparkSession, docsDir: String,
                                  tableRoot: String, indexRoot: String,
                                  threshold: Double = 0.8): DataFrame = {
-    import graft.sources.VersionedTable
     import graft.operators.LshIndex
     val digestsRoot = new java.io.File(indexRoot, "digests").getPath
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
+    drainBatches(readDrops(spark, docsDir, schema), None) {
+      (batch, _) =>
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("__md5")).orderBy(col("doc_id"))
         val inBatch = batch
@@ -1370,12 +1124,7 @@ object StreamingJobs {
                 survivors.select(md5(col("text")).as("__md5")), digestsRoot)
             }
         }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    }
     VersionedTable.read(spark, tableRoot)
   }
 
@@ -1393,14 +1142,10 @@ object StreamingJobs {
                                      tableRoot: String, indexRoot: String,
                                      w: Int = 8): DataFrame = {
     import graft.operators.SpanIndex
-    import graft.sources.VersionedTable
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
+    drainBatches(readDrops(spark, docsDir, schema), None) {
+      (batch, _) =>
         val in = batch.localCheckpoint(true)
         if (VersionedTable.latestVersion(tableRoot).isEmpty) {
           if (!in.isEmpty) {
@@ -1417,12 +1162,7 @@ object StreamingJobs {
             SpanIndex.append(stripped, indexRoot)
           }
         }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    }
     VersionedTable.read(spark, tableRoot)
   }
 }

@@ -97,31 +97,39 @@ class GraftCatalog extends TableCatalog
     warehouse.map(w =>
       new java.io.File(GraftCatalog.localPath(w), "_catalog"))
 
-  private def sync(): Unit = storeDir.foreach(GraftCatalog.syncStore)
+  private def sync(): Unit = storeDir.foreach(GraftCatalog.syncStore(catName, _))
 
   private def rootOf(ident: Identifier): String = {
     sync()
-    val r = GraftCatalog.registry.get(GraftCatalog.key(ident))
+    val r = GraftCatalog.registry.get(bound(ident))
     if (r == null) throw new NoSuchTableException(ident)
     r
   }
 
-  override def listTables(namespace: Array[String]): Array[Identifier] = {
+  /** This catalog's bound names (`db.t`), synced from its store. */
+  private def boundNames(): Seq[String] = {
     sync()
-    val db = namespace.mkString(".")
     import scala.jdk.CollectionConverters._
-    val found = GraftCatalog.registry.keySet.asScala.toSeq.sorted.collect {
+    val prefix = GraftCatalog.key(catName, "")
+    GraftCatalog.registry.keySet.asScala.toSeq
+      .collect { case k if k.startsWith(prefix) => k.stripPrefix(prefix) }
+  }
+
+  override def listTables(namespace: Array[String]): Array[Identifier] = {
+    val db = namespace.mkString(".")
+    val names = boundNames()
+    val found = names.sorted.collect {
       case k if k.stripSuffix("." + k.split('.').last) == db =>
         Identifier.of(namespace, k.split('.').last)
     }
-    if (found.isEmpty && !GraftCatalog.registry.isEmpty)
+    if (found.isEmpty && names.nonEmpty)
       throw new NoSuchNamespaceException(namespace)
     found.toArray
   }
 
   override def tableExists(ident: Identifier): Boolean = {
     sync()
-    GraftCatalog.registry.containsKey(GraftCatalog.key(ident))
+    GraftCatalog.registry.containsKey(bound(ident))
   }
 
   // -------------------------------------------------------------
@@ -131,12 +139,8 @@ class GraftCatalog extends TableCatalog
   // no-ops-by-refusal: a namespace exists iff a table uses it.
   // -------------------------------------------------------------
 
-  private def allNamespaces(): Seq[Array[String]] = {
-    sync()
-    import scala.jdk.CollectionConverters._
-    GraftCatalog.registry.keySet.asScala.toSeq
-      .map(_.split('.').dropRight(1)).distinct.sortBy(_.mkString("."))
-  }
+  private def allNamespaces(): Seq[Array[String]] =
+    boundNames().map(_.split('.').dropRight(1)).distinct.sortBy(_.mkString("."))
 
   override def listNamespaces(): Array[Array[String]] =
     allNamespaces().toArray
@@ -278,7 +282,7 @@ class GraftCatalog extends TableCatalog
       if (!graft.sources.CatalogStore.createExclusive(d, key(ident), root))
         throw new TableAlreadyExistsException(ident)
     }
-    GraftCatalog.registry.put(key(ident), root)
+    GraftCatalog.registry.put(bound(ident), root)
     ()
   }
 
@@ -390,7 +394,12 @@ class GraftCatalog extends TableCatalog
       })
   }
 
-  private def key(ident: Identifier): String = GraftCatalog.key(ident)
+  /** `db.t`: the table's name inside this catalog and its key in the
+    * durable store. */
+  private def key(ident: Identifier): String = GraftCatalog.name(ident)
+
+  /** The table's registry key, which carries this catalog's name. */
+  private def bound(ident: Identifier): String = GraftCatalog.key(catName, key(ident))
 
   /** Metadata-only ALTERs (the Delta column-lifecycle role):
     * `ADD COLUMNS (c TYPE, ...)` appends NULLABLE declarations
@@ -456,16 +465,16 @@ class GraftCatalog extends TableCatalog
   override def dropTable(ident: Identifier): Boolean = {
     val durable = storeDir.exists(d =>
       graft.sources.CatalogStore.remove(d, key(ident)))
-    val cached = GraftCatalog.registry.remove(key(ident)) != null
+    val cached = GraftCatalog.registry.remove(bound(ident)) != null
     durable || cached
   }
 
   override def renameTable(oldIdent: Identifier,
                            newIdent: Identifier): Unit = {
     sync()
-    val r = GraftCatalog.registry.get(key(oldIdent))
+    val r = GraftCatalog.registry.get(bound(oldIdent))
     if (r == null) throw new NoSuchTableException(oldIdent)
-    if (GraftCatalog.registry.containsKey(key(newIdent)))
+    if (GraftCatalog.registry.containsKey(bound(newIdent)))
       throw new TableAlreadyExistsException(newIdent)
     storeDir match {
       case Some(d) if graft.sources.CatalogStore.load(d)._2
@@ -479,14 +488,14 @@ class GraftCatalog extends TableCatalog
             throw new TableAlreadyExistsException(newIdent)
           else throw new NoSuchTableException(oldIdent)
         }
-        GraftCatalog.registry.put(key(newIdent), r)
-        GraftCatalog.registry.remove(key(oldIdent))
+        GraftCatalog.registry.put(bound(newIdent), r)
+        GraftCatalog.registry.remove(bound(oldIdent))
       case _ =>
         // session-local binding (the register() helper on a durable
         // catalog, or no warehouse at all): memory-only rename
-        if (GraftCatalog.registry.putIfAbsent(key(newIdent), r) != null)
+        if (GraftCatalog.registry.putIfAbsent(bound(newIdent), r) != null)
           throw new TableAlreadyExistsException(newIdent)
-        GraftCatalog.registry.remove(key(oldIdent))
+        GraftCatalog.registry.remove(bound(oldIdent))
     }
     ()
   }
@@ -498,32 +507,37 @@ class GraftCatalog extends TableCatalog
 
 object GraftCatalog {
 
+  // keyed by `key(catalog, "db.t")`: two catalogs that bind the same
+  // `db.t` hold two entries
   private val registry =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  // durable-store merge state, per store directory: the generation the
-  // cache reflects and the key set that CAME from the store (so a name
-  // dropped by another JVM leaves the cache on the next sync, while
-  // session-local register() bindings are never swept)
+  // durable-store merge state, per (catalog, store directory): the
+  // generation the cache reflects and the registry keys that CAME from
+  // the store (so a name dropped by another JVM leaves the cache on the
+  // next sync, while session-local register() bindings are never swept)
   private val storeGens =
-    new java.util.concurrent.ConcurrentHashMap[String, Long]()
+    new java.util.concurrent.ConcurrentHashMap[(String, String), Long]()
   private val storeOwned =
-    new java.util.concurrent.ConcurrentHashMap[String, Set[String]]()
+    new java.util.concurrent.ConcurrentHashMap[(String, String), Set[String]]()
 
   /** Merge a durable registry into the in-memory cache when its
     * generation moved (one directory listing when it didn't — the
     * cheap per-resolution staleness probe). Names the store no longer
     * carries are evicted from the cache; everything it carries wins
     * over stale cached roots. */
-  private[graft] def syncStore(dir: java.io.File): Unit = this.synchronized {
-    val p = dir.getPath
+  private[graft] def syncStore(catalog: String,
+                                dir: java.io.File): Unit = this.synchronized {
+    val p = (catalog, dir.getPath)
     val g = graft.sources.CatalogStore.gen(dir)
     if (storeGens.getOrDefault(p, -1L) == g) return
     val (g2, m) = graft.sources.CatalogStore.load(dir)
-    (storeOwned.getOrDefault(p, Set.empty) -- m.keySet)
+    // the store keeps `db.t`; the catalog prefix is added only here
+    val loaded = m.map { case (k, v) => key(catalog, k) -> v }
+    (storeOwned.getOrDefault(p, Set.empty) -- loaded.keySet)
       .foreach(registry.remove)
-    m.foreach { case (k, v) => registry.put(k, v) }
-    storeOwned.put(p, m.keySet)
+    loaded.foreach { case (k, v) => registry.put(k, v) }
+    storeOwned.put(p, loaded.keySet)
     storeGens.put(p, g2)
     ()
   }
@@ -549,8 +563,12 @@ object GraftCatalog {
       else loc
     } catch { case _: Exception => loc }
 
-  private def key(ident: Identifier): String =
+  private def name(ident: Identifier): String =
     (ident.namespace() :+ ident.name()).mkString(".").toLowerCase
+
+  /** The registry key of `catalog`'s binding of `name` (`db.t`). */
+  private def key(catalog: String, name: String): String =
+    s"$catalog.${name.toLowerCase}"
 
   /** Install the catalog in the session without registering a table —
     * what a CREATE TABLE-first workflow needs (catalog instances are
@@ -572,12 +590,12 @@ object GraftCatalog {
       table.matches("[A-Za-z_][A-Za-z0-9_]*"),
       s"db and table must be bare identifiers, got '$db'.'$table'")
     install(spark, catalog)
-    registry.put(s"$db.$table".toLowerCase, root)
+    registry.put(key(catalog, s"$db.$table"), root)
     ()
   }
 
-  def unregister(db: String, table: String): Unit = {
-    registry.remove(s"$db.$table".toLowerCase)
+  def unregister(db: String, table: String, catalog: String = "graft"): Unit = {
+    registry.remove(key(catalog, s"$db.$table"))
     ()
   }
 

@@ -186,6 +186,33 @@ class GraphsSpec extends SparkSuite {
     }
   }
 
+  test("pageRank, labelPropagation and Bpe.train free every checkpoint " +
+    "their result does not read") {
+    // Dataset.unpersist frees nothing on a localCheckpoint'ed frame, so
+    // each replaced round would stay persisted until GC
+    def newPersisted[T](f: => T): (T, Int) = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val out = f
+      (out, spark.sparkContext.getPersistentRDDs.keySet.count(!before(_)))
+    }
+    val (pr, prHeld) = newPersisted(Graphs.weightedPageRank(edges(
+      ("a", "b", 2L), ("b", "a", 2L), ("b", "c", 1L), ("c", "b", 1L)),
+      iters = 5))
+    assert(prHeld == 1, "only the final ranks checkpoint may stay")
+    assert(math.abs(pr.collect().map(_.getDouble(1)).sum - 1.0) < 1e-5)
+    val (lp, lpHeld) = newPersisted(Graphs.labelPropagation(edges(
+      ("a", "b", 1L), ("b", "c", 1L), ("a", "c", 1L), ("x", "y", 1L),
+      ("y", "z", 1L), ("x", "z", 1L), ("c", "x", 1L)), rounds = 3))
+    assert(lpHeld == 1, "only the final labels checkpoint may stay")
+    assert(lp.collect().map(x => x.getString(0) -> x.getString(1)).toMap ==
+      Map("a" -> "a", "b" -> "a", "c" -> "a", "x" -> "c", "y" -> "c", "z" -> "c"))
+    val vocab = Seq(("aaab", 2L), ("ab", 1L)).toDF("word", "wc")
+    val (rules, bpeHeld) = newPersisted(graft.operators.Bpe.train(vocab, 3))
+    assert(bpeHeld == 0)
+    assert(rules.map(r => (r.left, r.right, r.cnt)) ==
+      Seq(("a", "a", 4L), ("a", "b", 3L), ("aa", "ab", 2L)))
+  }
+
   test("kCorePeel: cascade removal reaches the true core") {
     import spark.implicits._
     // K4 clique {a,b,c,d} + a pendant chain e-f hanging off d via e:

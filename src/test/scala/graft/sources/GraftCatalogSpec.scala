@@ -454,4 +454,23 @@ class GraftCatalogSpec extends SparkSuite {
     assert(!stray.exists(), s"the location leaked into $stray")
     spark.sql("DROP TABLE graft.db.uri")
   }
+
+  test("two catalogs binding the same db.t hold separate entries: " +
+    "CREATE in one, DROP in one, the other keeps its root") {
+    import spark.implicits._
+    val (rootA, rootB) = (tmpRoot(), tmpRoot())
+    VersionedTable.overwrite(Seq(1L, 2L).toDF("k"), rootA)
+    GraftCatalog.register(spark, "twocat", "t", rootA)
+    GraftCatalog.install(spark, "graft2")
+    spark.sql(s"CREATE TABLE graft2.twocat.t (k BIGINT) LOCATION '$rootB'")
+    spark.sql("INSERT INTO graft2.twocat.t VALUES (7)")
+    def ks(t: String) =
+      spark.sql(s"SELECT k FROM $t").as[Long].collect().sorted.toSeq
+    assert(ks("graft.twocat.t") == Seq(1L, 2L))
+    assert(ks("graft2.twocat.t") == Seq(7L))
+    spark.sql("DROP TABLE graft2.twocat.t")
+    assert(ks("graft.twocat.t") == Seq(1L, 2L))
+    intercept[org.apache.spark.sql.AnalysisException](ks("graft2.twocat.t"))
+    GraftCatalog.unregister("twocat", "t")
+  }
 }

@@ -1,6 +1,9 @@
 package graft.streaming
 
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
@@ -11,6 +14,75 @@ import graft.streaming.StreamingJobs.Event
 class StreamingSpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
+
+  /** Every code line of src/main (comment lines dropped) as
+    * (file, nearest enclosing def, line). */
+  private lazy val mainCode: Seq[(String, String, String)] = {
+    // `<project>/target/scala-x/classes` holds the engine's classes
+    val classes = Paths.get(StreamingJobs.getClass.getProtectionDomain
+      .getCodeSource.getLocation.toURI)
+    val src = classes.getParent.getParent.getParent.resolve("src/main/scala")
+    assert(Files.isDirectory(src), s"no sources at $src")
+    val Def = """.*\bdef\s+(\w+).*""".r
+    Files.walk(src).iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .toSeq.flatMap { p =>
+        var enclosing = ""
+        Files.readAllLines(p).asScala.toSeq.flatMap { line =>
+          val t = line.trim
+          if (t.isEmpty || t.startsWith("//") || t.startsWith("*") ||
+              t.startsWith("/*")) None
+          else {
+            line match { case Def(d) => enclosing = d; case _ => }
+            Some((p.getFileName.toString, enclosing, line))
+          }
+        }
+      }
+  }
+
+  private def sitesOf(needle: String): Seq[String] =
+    mainCode.collect { case (f, d, l) if l.contains(needle) => s"$f:$d" }
+
+  test("the bounded-run policy is written once, in StreamingJobs' helpers") {
+    assert(sitesOf("processAllAvailable(") == Seq("StreamingJobs.scala:drain"))
+    assert(sitesOf("format(\"memory\")") ==
+      Seq("StreamingJobs.scala:drainToMemory"))
+    assert(sitesOf("\"maxFilesPerTrigger\", 1") ==
+      Seq("StreamingJobs.scala:readDrops"))
+  }
+
+  test(".unpersist( is called only where it frees blocks: Dedup.release, " +
+    "Bench.dropAllBlocks and ScaleProbe") {
+    // Dataset.unpersist frees nothing on a localCheckpoint'ed frame
+    assert(sitesOf(".unpersist(").filterNot(_.startsWith("ScaleProbe.scala:"))
+      .toSet == Set("Dedup.scala:release", "Bench.scala:dropAllBlocks"))
+  }
+
+  test("a batch that throws fails the caller and leaves no query running") {
+    import spark.implicits._
+    val in = Files.createTempDirectory("graft_drain_fail").resolve("in").toString
+    Seq((1L, "view", 1.0)).toDF("event_id", "event_type", "value")
+      .coalesce(1).write.parquet(in)
+    val root = Files.createTempDirectory("graft_drain_fail_t").toString
+    val gates = Seq("boom" ->
+      (count(lit(1)) > 0 && raise_error(lit("gate blew up")).isNull))
+    val e = intercept[Exception] {
+      StreamingJobs.runExpectOrQuarantineAvailableNow(spark, in,
+        s"$root/main", s"$root/quar", gates)
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(x => Option(x.getMessage).exists(_.contains("gate blew up"))), e)
+    assert(spark.streams.active.isEmpty)
+  }
+
+  test("a memory-sink run stays registered as a temp view under its " +
+    "query name (q171)") {
+    val out = graft.SparkEntry.queries("q171_changes_stream")(spark, sf)
+    val views = spark.catalog.listTables().collect()
+      .filter(_.isTemporary).map(_.name)
+    assert(views.contains("graft_changes_stream"))
+    assert(spark.table("graft_changes_stream").count() == out.count())
+    assert(out.count() > 0)
+  }
 
   test("AvailableNow hourly agg equals the batch aggregation") {
     val streamed = StreamingJobs
