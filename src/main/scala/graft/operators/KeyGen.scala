@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
@@ -11,6 +11,17 @@ import org.apache.spark.sql.types.IntegerType
   */
 trait KeyGen {
   def assign(df: DataFrame, keyCol: String, offset: Long): DataFrame
+}
+
+object KeyGen {
+
+  /** `offset` as a column that generated code does not inline. Codegen
+    * compiles a literal into the class body, so every new offset (each
+    * day of the daily job) would compile classes no earlier day
+    * produced; a deterministic zero-argument UDF is passed to the class
+    * as a reference, so one class serves every offset. */
+  private[operators] def offsetCol(offset: Long): Column =
+    udf(() => offset).asNonNullable()()
 }
 
 /** Reference-parity implementation: `monotonically_increasing_id` then
@@ -24,7 +35,8 @@ object GlobalRowNumberKeyGen extends KeyGen {
   override def assign(df: DataFrame, keyCol: String, offset: Long): DataFrame =
     df.withColumn("__tmp_id", monotonically_increasing_id())
       .withColumn(keyCol,
-        (row_number().over(Window.orderBy(col("__tmp_id"))) + lit(offset))
+        (row_number().over(Window.orderBy(col("__tmp_id"))) +
+          KeyGen.offsetCol(offset))
           .cast(IntegerType))
       .drop("__tmp_id")
 }
@@ -59,7 +71,7 @@ object PartitionOffsetKeyGen extends KeyGen {
       .withColumn(keyCol,
         (row_number().over(
           Window.partitionBy(col("__pid")).orderBy(col("__mid")))
-          + col("__poff") + lit(offset)).cast(IntegerType))
+          + col("__poff") + KeyGen.offsetCol(offset)).cast(IntegerType))
       .drop("__pid", "__mid", "__poff")
   }
 }

@@ -43,7 +43,10 @@ object DagRunner {
   final case class Task(id: String, deps: Seq[String],
                         run: () => Unit, maxTries: Int = 1)
 
-  final case class TaskResult(id: String, state: String, tries: Int)
+  /** `error`: the last failed try's exception, for a task that ended
+    * "failed". */
+  final case class TaskResult(id: String, state: String, tries: Int,
+                              error: Option[String] = None)
 
   private final case class Ended(res: TaskResult, audit: AuditRecord)
 
@@ -81,9 +84,9 @@ object DagRunner {
       s"cyclic dependencies among ${tasks.map(_.id).toSet -- order.toSet}")
 
     def ended(id: String, state: String, tries: Int, start: String,
-              t0: Long): Ended =
-      Ended(TaskResult(id, state, tries), AuditRecord(start, dagId, id,
-        state, start, clock(), (System.nanoTime() - t0) / 1e9, tries,
+              t0: Long, error: Option[String] = None): Ended =
+      Ended(TaskResult(id, state, tries, error), AuditRecord(start, dagId,
+        id, state, start, clock(), (System.nanoTime() - t0) / 1e9, tries,
         hostname))
 
     def attempt(t: Task): Ended = {
@@ -91,17 +94,18 @@ object DagRunner {
       val t0 = System.nanoTime()
       var tries = 0
       var ok = false
+      var error = Option.empty[String]
       while (!ok && tries < t.maxTries) {
         tries += 1
-        try { t.run(); ok = true }
+        try { t.run(); ok = true; error = None }
         catch {
-          // the failure lands in the audit row; the DAG continues
-          // so independent pipelines still complete (Airflow
+          // the failure lands in the audit row and the result; the DAG
+          // continues so independent pipelines still complete (Airflow
           // behavior — only DOWNSTREAM of the failure is skipped)
-          case scala.util.control.NonFatal(_) => ()
+          case scala.util.control.NonFatal(e) => error = Some(e.toString)
         }
       }
-      ended(t.id, if (ok) "success" else "failed", tries, start, t0)
+      ended(t.id, if (ok) "success" else "failed", tries, start, t0, error)
     }
 
     // execution repeats the walk; a task becomes ready once its last

@@ -2768,7 +2768,7 @@ object LakeQueries extends QueryModule {
         val orders = Tables(s, dir, "orders")
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
         graft.sources.Lake.writePartitioned(orders, root, Seq("o_orderstatus"))
-        val table = s.read.parquet(root)
+        val table = Lake.read(s, root)
         // inputFiles ignores pruning (it lists the unfiltered
         // relation); _metadata.file_path records what the scan READ
         val one = table.filter(col("o_orderstatus") === "F")
@@ -2865,7 +2865,7 @@ object LakeQueries extends QueryModule {
           Task("ticket_silver", Seq("ticket_bronze"),
             () => {
               if (flaky.incrementAndGet() < 3) sys.error("transient")
-              sink("ts")(s.read.parquet(work.resolve("tb").toString))
+              sink("ts")(Lake.read(s, work.resolve("tb").toString))
             }, maxTries = 3),
           Task("facility_bronze", Seq.empty,
             () => sink("fb")(orders.limit(50))),
@@ -2874,11 +2874,11 @@ object LakeQueries extends QueryModule {
           Task("review_gold", Seq("review_silver"),
             () => sink("rg")(orders.limit(1))),
           Task("gold", Seq("ticket_silver", "facility_bronze"),
-            () => sink("g")(s.read.parquet(work.resolve("ts").toString)
+            () => sink("g")(Lake.read(s, work.resolve("ts").toString)
               .agg(count(lit(1)).as("n")))))
         graft.pipeline.DagRunner.run(s, "vexere_dag", tasks, auditPath,
           clock = () => "2026-01-01T00:00:00Z", hostname = "gate")
-        graft.sources.Lake.read(s, auditPath)
+        Lake.read(s, auditPath)
           .select(col("dag_id"), col("task_id"), col("state"),
             col("try_number").cast(LongType).as("tries"))
           .orderBy("task_id")

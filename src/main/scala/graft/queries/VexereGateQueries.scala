@@ -8,6 +8,7 @@ import graft.core.Tables
 import graft.gold.GoldQueries
 import graft.operators.PartitionOffsetKeyGen
 import graft.silver.Silver
+import graft.sources.Lake
 
 /** The reference's 8 gold queries (to_gold.py:28-218) as GATE queries
   * on VEXERE-SHAPED data — closing the gap between the star-schema
@@ -321,9 +322,6 @@ object VexereGateQueries extends QueryModule {
             busName(ck).as("Bus_Name"),
             ((ck % 100).cast("double") / 100.0).as("POS"),
             ((ck % 50).cast("double") / 100.0).as("NEG"))
-        def readIf(path: String): Option[DataFrame] =
-          if (new java.io.File(path).exists()) Some(s.read.parquet(path))
-          else None
         // tasks run on pool threads: shared state must be thread-safe
         val flakyCalls = new java.util.concurrent.atomic.AtomicInteger(0)
         def goldTask(name: String, deps: Seq[String], tries: Int = 1)
@@ -343,8 +341,9 @@ object VexereGateQueries extends QueryModule {
             for (b <- Seq("t0", "t1")) {
               // the reference's continuation: probe max Bus_Key BEFORE
               // transforming each day batch (to_silver.py:104-108)
-              val maxId = Silver.maxKey(readIf(p("slv/ticket")), "Bus_Key")
-              Silver.ticket(s.read.parquet(p(s"brz/$b")), bus, maxId)
+              val maxId =
+                Silver.maxKey(Lake.readIfExists(s, p("slv/ticket")), "Bus_Key")
+              Silver.ticket(Lake.read(s, p(s"brz/$b")), bus, maxId)
                 .write.mode("append").parquet(p("slv/ticket"))
             }),
           Task("brz_reviews", Seq.empty, () => {
@@ -354,9 +353,9 @@ object VexereGateQueries extends QueryModule {
           Task("slv_reviews", Seq("brz_reviews"), () =>
             for (lang <- Seq("vi", "en")) {
               val maxId = math.max(
-                Silver.maxKey(readIf(p("slv/vi")), "Review_Key"),
-                Silver.maxKey(readIf(p("slv/en")), "Review_Key"))
-              Silver.review(s.read.parquet(p(s"brz/$lang")), bus, maxId)
+                Silver.maxKey(Lake.readIfExists(s, p("slv/vi")), "Review_Key"),
+                Silver.maxKey(Lake.readIfExists(s, p("slv/en")), "Review_Key"))
+              Silver.review(Lake.read(s, p(s"brz/$lang")), bus, maxId)
                 .write.mode("overwrite").parquet(p(s"slv/$lang"))
             }),
           Task("brz_facility", Seq.empty, () => {
@@ -365,68 +364,70 @@ object VexereGateQueries extends QueryModule {
             names.write.mode("overwrite").parquet(p("brz/facname"))
           }),
           Task("slv_facility", Seq("brz_facility"), () => {
-            s.read.parquet(p("brz/fac"))
+            Lake.read(s, p("brz/fac"))
               .write.mode("overwrite").parquet(p("slv/fac"))
-            s.read.parquet(p("brz/facname"))
+            Lake.read(s, p("brz/facname"))
               .write.mode("overwrite").parquet(p("slv/facname"))
           }),
           goldTask("cau_1", Seq("slv_ticket"))(() =>
-            GoldQueries.q1(s.read.parquet(p("slv/ticket")))),
+            GoldQueries.q1(Lake.read(s, p("slv/ticket")))),
           goldTask("cau_2", Seq("slv_ticket", "slv_reviews"))(() =>
-            GoldQueries.q2(s.read.parquet(p("slv/ticket")),
-              s.read.parquet(p("slv/vi")), s.read.parquet(p("slv/en")))),
+            GoldQueries.q2(Lake.read(s, p("slv/ticket")),
+              Lake.read(s, p("slv/vi")), Lake.read(s, p("slv/en")))),
           goldTask("cau_3", Seq("slv_ticket"))(() =>
-            GoldQueries.q3(s.read.parquet(p("slv/ticket")))),
+            GoldQueries.q3(Lake.read(s, p("slv/ticket")))),
           goldTask("cau_4", Seq("slv_ticket"))(() =>
-            GoldQueries.q4(s.read.parquet(p("slv/ticket")))),
+            GoldQueries.q4(Lake.read(s, p("slv/ticket")))),
           goldTask("cau_5", Seq("slv_reviews"), tries = 2)(() =>
-            GoldQueries.q5(s.read.parquet(p("slv/vi")))),
+            GoldQueries.q5(Lake.read(s, p("slv/vi")))),
           goldTask("cau_6", Seq("slv_reviews"))(() =>
-            GoldQueries.q6(s.read.parquet(p("slv/vi")),
-              s.read.parquet(p("slv/en")))),
+            GoldQueries.q6(Lake.read(s, p("slv/vi")),
+              Lake.read(s, p("slv/en")))),
           goldTask("cau_7", Seq("slv_ticket"))(() =>
-            GoldQueries.q7(s.read.parquet(p("slv/ticket")))),
+            GoldQueries.q7(Lake.read(s, p("slv/ticket")))),
           goldTask("cau_8", Seq("slv_facility"))(() =>
-            GoldQueries.q8(s.read.parquet(p("slv/fac")),
-              s.read.parquet(p("slv/facname")))))
+            GoldQueries.q8(Lake.read(s, p("slv/fac")),
+              Lake.read(s, p("slv/facname")))))
         val results = DagRunner.run(s, "vexere_e2e", tasks, p("audit"),
           clock = () => "2024-01-01T00:00:00Z", hostname = "gate")
         val nOrders = Tables(s, dir, "orders").count()
         val nCust = Tables(s, dir, "customer").count()
-        val auditRows = s.read.parquet(p("audit")).count()
+        val auditRows = Lake.read(s, p("audit")).count()
         val dagOk =
           if (results.forall(_.state == "success") &&
             results.find(_.id == "gold_cau_5").exists(_.tries == 2) &&
-            Silver.maxKey(readIf(p("slv/ticket")), "Bus_Key") == nOrders &&
-            (Silver.maxKey(readIf(p("slv/vi")), "Review_Key") max
-              Silver.maxKey(readIf(p("slv/en")), "Review_Key")) == nCust &&
+            Silver.maxKey(Lake.readIfExists(s, p("slv/ticket")), "Bus_Key") ==
+              nOrders &&
+            (Silver.maxKey(Lake.readIfExists(s, p("slv/vi")), "Review_Key") max
+              Silver.maxKey(Lake.readIfExists(s, p("slv/en")), "Review_Key")) ==
+              nCust &&
             auditRows == tasks.size) 1L
           else 0L
         def ser(name: String, df: DataFrame, cols: Seq[Column]): DataFrame =
           df.select(lit(name).as("q"),
             concat_ws("|", cols.map(c =>
               coalesce(c.cast(StringType), lit("NULL"))): _*).as("row"))
-        val g1 = s.read.parquet(p("gold/cau_1"))
+        val g1 = Lake.read(s, p("gold/cau_1"))
           .withColumn("depart_time_ranges",
             array_join(array_sort(split(col("depart_time_ranges"), ", ")), ", "))
         val out = Seq(
           ser("cau_1", g1, Seq(col("Route"), col("Bus_Name"),
             col("Total_Trips"), col("Avg_Price_Per_Day"),
             col("depart_time_ranges"))),
-          ser("cau_2", s.read.parquet(p("gold/cau_2")),
+          ser("cau_2", Lake.read(s, p("gold/cau_2")),
             Seq(col("start_date"), col("route"), col("bus_name"),
               col("price"))),
-          ser("cau_3", s.read.parquet(p("gold/cau_3")),
+          ser("cau_3", Lake.read(s, p("gold/cau_3")),
             Seq(col("Route"), col("total_bus_operators"))),
-          ser("cau_4", s.read.parquet(p("gold/cau_4")),
+          ser("cau_4", Lake.read(s, p("gold/cau_4")),
             Seq(col("Start_Date"), col("avg_price_per_day"))),
-          ser("cau_5", s.read.parquet(p("gold/cau_5")),
+          ser("cau_5", Lake.read(s, p("gold/cau_5")),
             Seq(col("Bus_Name"), col("total_reviews"))),
-          ser("cau_6", s.read.parquet(p("gold/cau_6")),
+          ser("cau_6", Lake.read(s, p("gold/cau_6")),
             Seq(col("avg_rating_10pt"))),
-          ser("cau_7", s.read.parquet(p("gold/cau_7")),
+          ser("cau_7", Lake.read(s, p("gold/cau_7")),
             Seq(col("bus_name"), col("hour"), col("has_departure"))),
-          ser("cau_8", s.read.parquet(p("gold/cau_8")),
+          ser("cau_8", Lake.read(s, p("gold/cau_8")),
             Seq(col("bus_name"), col("facility_id"), col("has_facility"),
               col("facility_name"))))
           .reduce(_ unionByName _)

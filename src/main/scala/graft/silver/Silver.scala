@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType}
 
 import graft.functions.VexereFunctions._
 import graft.operators.{GlobalRowNumberKeyGen, KeyGen}
+import graft.sources.Lake
 
 /** Silver-layer transforms (bronze → silver), mirroring the reference's
   * to_silver.py:92-210 as pure `DataFrame => DataFrame` functions —
@@ -30,14 +31,18 @@ object Silver {
   }
 
   /** Max existing surrogate key, or 0 for an empty/absent table
-    * (to_silver.py:104-108). */
+    * (to_silver.py:104-108). A bare scan of a flat parquet table
+    * (`Lake.read`/`readIfExists` of the silver directory) with an INT32
+    * key is answered on the driver from the footers' row-group
+    * statistics, with no Spark job (`Lake.footerMaxInt`); any other
+    * frame, or a footer that cannot answer, runs the `max` aggregate. */
   def maxKey(existing: Option[DataFrame], keyCol: String): Int =
-    existing match {
-      case None => 0
-      case Some(df) =>
+    existing.flatMap { df =>
+      Lake.footerMaxInt(df, keyCol).getOrElse {
         val row = df.agg(max(col(keyCol).cast(IntegerType))).head()
-        if (row.isNullAt(0)) 0 else row.getInt(0)
-    }
+        if (row.isNullAt(0)) None else Some(row.getInt(0))
+      }
+    }.getOrElse(0)
 
   /** Raw daily ticket batch → silver ticket fact (to_silver.py:92-135):
     * typing, normalization (native Column ports of the 3 Python UDFs),
@@ -91,10 +96,10 @@ object Silver {
     *  - `appendSilver`: append one transformed day.
     * Returns the number of days actually processed.
     *
-    * Scale: the per-day max-key probe is an O(table) aggregate the
-    * reference re-runs per day — at 100 TB the caller swaps
-    * [[maxKey]]'s full scan for the silver table's column stats
-    * (VersionedTable manifest max) without touching this loop. */
+    * Scale: the reference re-runs the max-key probe per day as an
+    * O(table) aggregate; [[maxKey]] answers it from file footers
+    * instead when `readSilver` returns a bare `Lake.read` of a flat
+    * table of at most 64 files, and otherwise still aggregates. */
   def backfillRange(start: java.time.LocalDate, end: java.time.LocalDate,
                     readDay: java.time.LocalDate => Option[DataFrame],
                     busIds: DataFrame,

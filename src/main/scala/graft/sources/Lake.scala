@@ -122,9 +122,79 @@ object Lake {
 
   // ---- table read / probes -----------------------------------------
 
-  /** S4: table scan. */
+  /** S4: table scan. Building the frame starts no Spark job: Spark's
+    * own (non-merging) inference runs a one-task job per read to open
+    * ONE footer, that of the first data file in path order; here that
+    * same footer is read on the driver and converted exactly as
+    * inference converts it (`ParquetFileFormat.readSchemaFromFooter`,
+    * the session's parquet conf). Whatever inference would treat
+    * differently reads through plain `spark.read.parquet(path)`, so it
+    * reads, or fails, exactly as that does: no data file, schema
+    * merging on, a glob, summary files or a streaming sink's log, a
+    * partition column also stored in the files, or a footer that will
+    * not read. */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  /** The schema non-merging parquet inference would give `path`, read
+    * from one footer on the driver; `None` wherever [[read]] must let
+    * Spark infer. */
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val conf = spark.sessionState.conf
+    if (conf.isParquetSchemaMergingEnabled || path.exists("{}[]*?\\".contains(_)))
+      return None
+    // Spark's file-index rule for names it skips while listing
+    def hidden(n: String) =
+      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+        n.endsWith("._COPYING_")
+    try {
+      val hadoopConf = spark.sessionState.newHadoopConf()
+      val root = new Path(path)
+      val fs = root.getFileSystem(hadoopConf)
+      val top = fs.getFileStatus(root)
+      val leaves = scala.collection.mutable.ArrayBuffer.empty[FileStatus]
+      // false: a name inference treats specially (parquet summary files,
+      // a streaming sink's log) — let Spark decide
+      def walk(dir: Path): Boolean = fs.listStatus(dir).forall { st =>
+        val n = st.getPath.getName
+        if (n.startsWith("_metadata") || n.startsWith("_common_metadata") ||
+            n == "_spark_metadata") false
+        else if (hidden(n)) true
+        else if (st.isDirectory) walk(st.getPath)
+        else { leaves += st; true }
+      }
+      val first =
+        if (!top.isDirectory) Some(top).filterNot(t => hidden(t.getPath.getName))
+        else if (walk(top.getPath)) leaves.minByOption(_.getPath.toString)
+        else None
+      first.flatMap { file =>
+        // partition directories between the root and the file
+        val partCols = file.getPath.toString.stripPrefix(top.getPath.toString)
+          .split('/').dropRight(1).filter(_.contains("="))
+          .map(_.takeWhile(_ != '=').toLowerCase).toSet
+        val converter = new ParquetToSparkSchemaConverter(
+          assumeBinaryIsString = conf.isParquetBinaryAsString,
+          assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+          inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+          nanosAsLong = conf.legacyParquetNanosAsLong,
+          respectUnknownTypeAnnotation =
+            conf.parquetReaderRespectUnknownTypeAnnotation)
+        val schema = VersionedTable.withFooter(file.getPath, hadoopConf)(m =>
+          ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, m),
+            converter))
+        // a partition column stored in the files too: inference keeps
+        // its data position, a declared schema would not
+        Some(schema).filterNot(_.fieldNames.exists(f => partCols(f.toLowerCase)))
+      }
+    } catch { case scala.util.control.NonFatal(_) => None }
+  }
 
   /** S10: table-existence probe (the reference reached into py4j
     * internals for `catalog().tableExists`; here: does the directory
@@ -139,6 +209,50 @@ object Lake {
     * around first-run reads, to_silver.py:104-108). */
   def readIfExists(spark: SparkSession, path: String): Option[DataFrame] =
     if (isTable(spark, path)) Some(read(spark, path)) else None
+
+  /** The max of INT32 column `column` over `df`, folded on the driver
+    * from the footers' row-group statistics when `df` is a bare scan of
+    * a flat parquet table ([[read]] of a directory): `Some(None)` when
+    * no row holds a value. `None` when the footers cannot answer and
+    * the caller must aggregate: any plan above the scan (a filter, a
+    * projection), a partitioned table, a column that is not INT32 in
+    * the table or in some file, more than
+    * [[VersionedTable.FooterFoldMaxFiles]] files, a row group without
+    * statistics, or any read error. */
+  private[graft] def footerMaxInt(df: DataFrame, column: String): Option[Option[Int]] = {
+    import org.apache.spark.sql.execution.datasources.{
+      HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT32
+    val files = df.queryExecution.analyzed match {
+      case l: LogicalRelation => l.relation match {
+        case HadoopFsRelation(i: InMemoryFileIndex, part, data, _,
+            _: ParquetFileFormat, _) if part.isEmpty &&
+            data.exists(f => f.name == column && f.dataType == IntegerType) =>
+          i.allFiles()
+        case _ => return None
+      }
+      case _ => return None
+    }
+    if (files.length > VersionedTable.FooterFoldMaxFiles) return None
+    try {
+      val conf = df.sparkSession.sessionState.newHadoopConf()
+      val maxima = files.map { f =>
+        VersionedTable.withFooter(f.getPath, conf) { footer =>
+          val schema = footer.getFileMetaData.getSchema
+          if (!schema.containsField(column)) return None
+          val t = schema.getType(schema.getFieldIndex(column))
+          if (!VersionedTable.footerKind(t).contains('i') ||
+              t.asPrimitiveType.getPrimitiveTypeName != INT32) return None
+          VersionedTable.footerRanges(footer.getBlocks.asScala.toSeq, column)
+            .getOrElse(return None)
+            .map(_._2.asInstanceOf[java.lang.Integer].intValue).maxOption
+        }
+      }
+      Some(maxima.flatten.maxOption)
+    } catch { case scala.util.control.NonFatal(_) => None }
+  }
 
   /** S12: cheap emptiness guard (no full count). */
   def isEmpty(df: DataFrame): Boolean = df.isEmpty

@@ -53,6 +53,6 @@ object ResultCache {
     val dir = new File(cacheRoot, key)
     if (!new File(dir, "_SUCCESS").exists())
       df.write.mode("overwrite").parquet(dir.getPath)
-    spark.read.parquet(dir.getPath)
+    Lake.read(spark, dir.getPath)
   }
 }

@@ -463,35 +463,90 @@ object VersionedTable {
       if (staged.fieldNames.contains(c)) c else m.getOrElse(c.toLowerCase, c))
   }
 
+  /** Most files a driver-side footer fold opens: above it one Spark
+    * job amortizes the per-file footer reads ([[footerStatLines]],
+    * `Lake.footerMaxInt`). */
+  private[graft] val FooterFoldMaxFiles = 64
+
+  /** Read `file`'s parquet footer on the driver and apply `f` to it. */
+  private[graft] def withFooter[T](file: org.apache.hadoop.fs.Path,
+                                   conf: org.apache.hadoop.conf.Configuration)
+                                  (f: org.apache.parquet.hadoop.metadata.ParquetMetadata => T): T = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+    try f(r.getFooter) finally r.close()
+  }
+
+  /** What a top-level footer column's min/max stats fold as: 'i'
+    * integral (signed), 't' / 'n' MICROS timestamp (UTC-adjusted /
+    * NTZ), 'd' date, 'f' float or double. `None` for every kind whose
+    * footer stats are not exact values of the column: strings (parquet
+    * may truncate binary stats), INT96 and NANOS timestamps, unsigned
+    * annotations (they would fold mis-ordered as signed values),
+    * nested and other types. */
+  private[graft] def footerKind(t: org.apache.parquet.schema.Type): Option[Char] = {
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    import org.apache.parquet.schema.LogicalTypeAnnotation._
+    if (!t.isPrimitive) return None
+    val pt = t.asPrimitiveType()
+    (pt.getPrimitiveTypeName, pt.getLogicalTypeAnnotation) match {
+      // NTZ MICROS: the footer long IS the unadjusted wall-clock micros
+      // — exactly the __ntz_ unit (the job path's to_utc_timestamp
+      // reinterpretation reads out the same value)
+      case (INT64, ts: TimestampLogicalTypeAnnotation)
+          if ts.getUnit == TimeUnit.MICROS =>
+        Some(if (ts.isAdjustedToUTC) 't' else 'n')
+      case (INT32, _: DateLogicalTypeAnnotation) => Some('d')
+      case (INT64 | INT32, null) => Some('i')
+      case (INT64 | INT32, it: IntLogicalTypeAnnotation) if it.isSigned => Some('i')
+      case (DOUBLE | FLOAT, _) => Some('f')
+      case _ => None
+    }
+  }
+
+  /** Column `c`'s (min, max) per row group of one file, from footer
+    * statistics; row groups with no non-null value contribute nothing.
+    * `None` when a row group lacks the column chunk, its statistics or
+    * its null count, so the caller falls back to reading the data. */
+  private[graft] def footerRanges(blocks: Seq[org.apache.parquet.hadoop.metadata.BlockMetaData],
+                                  c: String): Option[Seq[(Any, Any)]] = {
+    import scala.jdk.CollectionConverters._
+    val perBlock = blocks.map { b =>
+      val st = b.getColumns.asScala.find(_.getPath.toDotString == c)
+        .getOrElse(return None).getStatistics
+      if (st == null || st.getNumNulls < 0) return None // no stats / unknown nulls
+      if (b.getRowCount == 0L || st.getNumNulls == b.getRowCount)
+        None // all-null block contributes nothing
+      else if (!st.hasNonNullValue) return None // stats absent
+      else Some((st.genericGetMin, st.genericGetMax))
+    }
+    Some(perBlock.flatten)
+  }
+
   /** Driver-side FOOTER fold for [[statLines]] — the commit-dense
     * fast path: a small staged set whose stats columns are all
-    * exactly-footer-representable (integral, date, MICROS timestamp,
-    * float/double) answers rows/bytes/min-max from the parquet footers
-    * already on disk, eliminating the per-commit stats JOB entirely.
-    * Every COW rewrite (empty stats cols) and every small
-    * materialized-view refresh hits this. `None` → the Spark-job path,
-    * on ANY doubt: >64 files (the job amortizes), a string column
-    * (parquet binary stats may be truncated), INT96 timestamps (no
-    * reliable stats — falling back keeps the stat recorded rather than
-    * silently losing pruning), or any footer surprise. Semantics are
+    * exactly-footer-representable ([[footerKind]]) answers
+    * rows/bytes/min-max from the parquet footers already on disk,
+    * eliminating the per-commit stats JOB entirely. Every COW rewrite
+    * (empty stats cols) and every small materialized-view refresh hits
+    * this. `None` → the Spark-job path, on ANY doubt: more than
+    * [[FooterFoldMaxFiles]] files (the job amortizes), a column
+    * [[footerKind]] refuses (INT96 timestamps included — falling back
+    * keeps the stat recorded rather than silently losing pruning), a
+    * row group without stats, or any footer surprise. Semantics are
     * byte-identical to the job path: same key prefixes, same
     * all-null-skip, same NaN-skip, same zero-row handling. */
   private[sources] def footerStatLines(staged: Seq[String], cols0: Seq[String],
                                        mapping: Map[String, String])
       : Option[Seq[String]] = {
-    if (staged.length > 64) return None
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import org.apache.parquet.schema.LogicalTypeAnnotation
+    if (staged.length > FooterFoldMaxFiles) return None
     import scala.jdk.CollectionConverters._
     try {
       val conf = new org.apache.hadoop.conf.Configuration()
       val lines = staged.map { p =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new org.apache.hadoop.fs.Path(p), conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          val schema = r.getFooter.getFileMetaData.getSchema
-          val blocks = r.getFooter.getBlocks.asScala.toSeq
+        withFooter(new org.apache.hadoop.fs.Path(p), conf) { footer =>
+          val schema = footer.getFileMetaData.getSchema
+          val blocks = footer.getBlocks.asScala.toSeq
           val rows = blocks.map(_.getRowCount).sum
           // the remapToPhysical rule over footer fields: a name the
           // file carries passes through (unmapped tables, overwrite
@@ -500,62 +555,12 @@ object VersionedTable {
             if (schema.containsField(c0)) c0
             else mapping.getOrElse(c0.toLowerCase, c0)
           }
-          // per requested column: (manifest key, lo, hi) or skip
+          // per requested column: (manifest key, lo, hi) or skip; any
+          // column the fold cannot answer bails the WHOLE batch
           val colParts = cols.map { c =>
             if (!schema.containsField(c)) return None
-            val t = schema.getFields.asScala.find(_.getName == c)
-              .getOrElse(return None)
-            if (!t.isPrimitive) return None
-            val pt = t.asPrimitiveType()
-            val ann = pt.getLogicalTypeAnnotation
-            // exactly-representable kinds only; anything else bails
-            // the WHOLE batch to the job path
-            val kind: Char = pt.getPrimitiveTypeName match {
-              case INT64 => ann match {
-                case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
-                    if ts.getUnit ==
-                      LogicalTypeAnnotation.TimeUnit.MICROS &&
-                      ts.isAdjustedToUTC => 't'
-                // NTZ MICROS: the footer long IS the unadjusted
-                // wall-clock micros — exactly the __ntz_ unit (the job
-                // path's to_utc_timestamp reinterpretation reads out
-                // the same value, so the two paths stay byte-identical)
-                case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
-                    if ts.getUnit ==
-                      LogicalTypeAnnotation.TimeUnit.MICROS &&
-                      !ts.isAdjustedToUTC => 'n'
-                case _: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-                  return None
-                case null => 'i'
-                // unsigned annotations (never written by Spark, legal
-                // in foreign files) would fold min/max as SIGNED longs
-                // — mis-ordered bounds, wrong pruning; bail
-                case it: LogicalTypeAnnotation.IntLogicalTypeAnnotation
-                    if it.isSigned => 'i'
-                case _ => return None
-              }
-              case INT32 => ann match {
-                case _: LogicalTypeAnnotation.DateLogicalTypeAnnotation => 'd'
-                case null => 'i'
-                case it: LogicalTypeAnnotation.IntLogicalTypeAnnotation
-                    if it.isSigned => 'i'
-                case _ => return None
-              }
-              case DOUBLE | FLOAT => 'f'
-              case _ => return None
-            }
-            val perBlock = blocks.map { b =>
-              val cc = b.getColumns.asScala.find(
-                _.getPath.toDotString == c).getOrElse(return None)
-              val st = cc.getStatistics
-              if (st == null) return None
-              if (st.getNumNulls < 0) return None // unknown null count
-              if (b.getRowCount == 0L || st.getNumNulls == b.getRowCount)
-                None // all-null block contributes nothing
-              else if (!st.hasNonNullValue) return None // stats absent
-              else Some((st.genericGetMin, st.genericGetMax))
-            }
-            val present = perBlock.flatten
+            val kind = footerKind(schema.getType(schema.getFieldIndex(c))).getOrElse(return None)
+            val present = footerRanges(blocks, c).getOrElse(return None)
             if (present.isEmpty) "" // all-null column in this file: skip
             else kind match {
               case 'f' =>
@@ -588,7 +593,7 @@ object VersionedTable {
           val bytes = new File(p).length()
           p + s"\t$RowsKey\t$rows\t$rows" + colParts.mkString +
             s"\t$BytesKey\t$bytes\t$bytes"
-        } finally r.close()
+        }
       }
       Some(lines)
     } catch { case scala.util.control.NonFatal(_) => None }
@@ -602,7 +607,7 @@ object VersionedTable {
     // footer-exact stat columns never pay the stats job. Columns are
     // remapped against the first footer's field set (staged files of
     // one batch share a schema).
-    if (staged.length <= 64) {
+    if (staged.length <= FooterFoldMaxFiles) {
       val m = if (isColumnMapped(root)) mappingFor(root)
               else Map.empty[String, String]
       footerStatLines(staged, statsCols0, m).foreach(return _)
@@ -2040,7 +2045,7 @@ object VersionedTable {
               a.fields.exists(_.name.equalsIgnoreCase(fb.name)))
               .map(_.copy(nullable = true)))
         val merged =
-          try paths.map(p => spark.read.parquet(p).schema)
+          try paths.map(p => Lake.read(spark, p).schema)
             .reduceLeft(widenMerge)
           catch { case scala.util.control.NonFatal(_) => throw e }
         spark.read.schema(merged).parquet(paths: _*)

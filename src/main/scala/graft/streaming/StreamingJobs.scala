@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
-import graft.sources.{MaterializedView, SnapshotGroup, VersionedTable}
+import graft.sources.{Lake, MaterializedView, SnapshotGroup, VersionedTable}
 import graft.sources.VersionedTable.Write
 
 /** Structured Streaming jobs over the events table — the engine's
@@ -77,12 +77,11 @@ object StreamingJobs {
   private val nanosSchema = rawSchema(LongType)
 
   /** Streaming source over the events parquet. A streaming source needs
-    * a declared schema, so the batch reader's footer inference (one
-    * driver-side metadata read) decides which ts layout this lake
+    * a declared schema, so the footer schema `Lake.read` reads on the
+    * driver (no Spark job) decides which ts layout this lake
     * shipped; both normalize to TimestampType in the UTC session zone. */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    val tsType = spark.read.parquet(s"$dir/events.parquet")
-      .schema("ts").dataType
+    val tsType = Lake.read(spark, s"$dir/events.parquet").schema("ts").dataType
     val stream = spark.readStream
       .schema(rawSchema(tsType))
       .option("pathGlobFilter", "events.parquet")
@@ -855,29 +854,31 @@ object StreamingJobs {
     val maxUs = batch.agg(max(unix_micros(col("ts")))).head().getLong(0)
     val sentinelNanos = (maxUs + (gapMinutes + 1) * 60000000L) * 1000L
     val sentinelDir = java.nio.file.Files
-      .createTempDirectory("graft_sessionize_sentinels").toString
-    batch.select(col("user_id")).distinct()
-      .select(
-        lit(FlushSentinelId).as("event_id"), lit(sentinelNanos).as("ts"),
-        col("user_id"), lit("flush").as("event_type"),
-        lit(0.0).as("value"), lit("{}").as("props"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(sentinelDir)
+      .createTempDirectory("graft_sessionize_sentinels").toFile
+    // the memory sink holds the rows once the drain returns
+    val sessions = try {
+      batch.select(col("user_id")).distinct()
+        .select(
+          lit(FlushSentinelId).as("event_id"), lit(sentinelNanos).as("ts"),
+          col("user_id"), lit("flush").as("event_type"),
+          lit(0.0).as("value"), lit("{}").as("props"))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(sentinelDir.getPath)
 
-    val sentinels = spark.readStream
-      .schema(nanosSchema)
-      .parquet(sentinelDir)
-      .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    val events = readEvents(spark, dir).union(sentinels)
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value"))
-      .as[Event]
-
-    drainToMemory(sessionize(events, gapMinutes), queryName, OutputMode.Append())
-      .select(col("user_id"),
-        date_format(col("session_start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
-        date_format(col("session_end"), "yyyy-MM-dd HH:mm:ss").as("session_end"),
-        col("n_events"))
+      val sentinels = spark.readStream
+        .schema(nanosSchema)
+        .parquet(sentinelDir.getPath)
+        .withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      val events = readEvents(spark, dir).union(sentinels)
+        .select(col("event_id"), col("ts"), col("user_id"),
+          col("event_type"), col("value"))
+        .as[Event]
+      drainToMemory(sessionize(events, gapMinutes), queryName, OutputMode.Append())
+    } finally Lake.deleteRecursively(sentinelDir)
+    sessions.select(col("user_id"),
+      date_format(col("session_start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
+      date_format(col("session_end"), "yyyy-MM-dd HH:mm:ss").as("session_end"),
+      col("n_events"))
   }
 
   final case class Enriched(event_id: Long, user_id: Long,
@@ -986,44 +987,46 @@ object StreamingJobs {
     val maxUs = batch.agg(max(unix_micros(col("ts")))).head().getLong(0)
     val sentinelNanos = (maxUs + 100L * 3600L * 1000000L) * 1000L
     val sentinelDir = java.nio.file.Files
-      .createTempDirectory("graft_ssj_sentinels").toString
-    spark.range(2).select(
-        lit(-1L).as("event_id"), lit(sentinelNanos).as("ts"),
-        lit(-1L).as("user_id"),
-        when(col("id") === 0, lit("view")).otherwise(lit("purchase"))
-          .as("event_type"),
-        lit(0.0).as("value"), lit("{}").as("props"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(sentinelDir)
-    val sentinels = spark.readStream
-      .schema(nanosSchema)
-      .parquet(sentinelDir)
-      .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    val events = readEvents(spark, dir).union(sentinels)
-    val views = events
-      .filter(col("event_type") === "view")
-      .select(col("user_id"), col("ts").as("view_ts"),
-        col("event_id").as("view_id"))
-      .withWatermark("view_ts", "1 hour")
-    val purchases = events
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-        col("event_id").as("purchase_id"))
-      .withWatermark("p_ts", "1 hour")
-    new java.io.File(tableRoot).mkdirs()
-    val joined = views
-      .join(purchases,
-        col("user_id") === col("p_user") &&
-          col("p_ts") >= col("view_ts") &&
-          col("p_ts") <= col("view_ts") + expr("INTERVAL 1 HOUR"),
-        "left_outer")
-      .select(col("user_id"), col("view_id"), col("purchase_id"),
-        (unix_micros(col("p_ts")) - unix_micros(col("view_ts"))).as("lag_us"))
-    drainBatches(joined, Some(new java.io.File(tableRoot, "_ssj_ckpt"))) {
-      (b, batchId) =>
-        VersionedTable.append(b.filter(col("user_id") >= 0), tableRoot,
-          Write(txn = Some("ssj_outer" -> batchId)))
-    }
+      .createTempDirectory("graft_ssj_sentinels").toFile
+    try {
+      spark.range(2).select(
+          lit(-1L).as("event_id"), lit(sentinelNanos).as("ts"),
+          lit(-1L).as("user_id"),
+          when(col("id") === 0, lit("view")).otherwise(lit("purchase"))
+            .as("event_type"),
+          lit(0.0).as("value"), lit("{}").as("props"))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(sentinelDir.getPath)
+      val sentinels = spark.readStream
+        .schema(nanosSchema)
+        .parquet(sentinelDir.getPath)
+        .withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      val events = readEvents(spark, dir).union(sentinels)
+      val views = events
+        .filter(col("event_type") === "view")
+        .select(col("user_id"), col("ts").as("view_ts"),
+          col("event_id").as("view_id"))
+        .withWatermark("view_ts", "1 hour")
+      val purchases = events
+        .filter(col("event_type") === "purchase")
+        .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
+          col("event_id").as("purchase_id"))
+        .withWatermark("p_ts", "1 hour")
+      new java.io.File(tableRoot).mkdirs()
+      val joined = views
+        .join(purchases,
+          col("user_id") === col("p_user") &&
+            col("p_ts") >= col("view_ts") &&
+            col("p_ts") <= col("view_ts") + expr("INTERVAL 1 HOUR"),
+          "left_outer")
+        .select(col("user_id"), col("view_id"), col("purchase_id"),
+          (unix_micros(col("p_ts")) - unix_micros(col("view_ts"))).as("lag_us"))
+      drainBatches(joined, Some(new java.io.File(tableRoot, "_ssj_ckpt"))) {
+        (b, batchId) =>
+          VersionedTable.append(b.filter(col("user_id") >= 0), tableRoot,
+            Write(txn = Some("ssj_outer" -> batchId)))
+      }
+    } finally Lake.deleteRecursively(sentinelDir)
     VersionedTable.read(spark, tableRoot)
   }
 

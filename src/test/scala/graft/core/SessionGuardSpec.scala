@@ -105,6 +105,31 @@ class SessionGuardSpec extends SparkSuite {
     assert(bad.isEmpty, bad)
   }
 
+  test("read.parquet( appears only in Lake.read's fallback and in " +
+    "VersionedTable's multi-path reads") {
+    // code lines only (comment lines dropped), with their nearest def
+    val Def = """.*\bdef\s+(\w+).*""".r
+    val hits = mainSources.flatMap { case (f, text) =>
+      var enclosing = ""
+      text.linesIterator.flatMap { line =>
+        val t = line.trim
+        if (t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")) None
+        else {
+          line match { case Def(d) => enclosing = d; case _ => }
+          if (line.contains("read.parquet(")) Some((f, enclosing, t)) else None
+        }
+      }.toSeq
+    }
+    assert(hits.count(_._1 == "Lake.scala") == 1, hits)
+    val bad = hits.filterNot {
+      case ("Lake.scala", "read", _) => true
+      case ("VersionedTable.scala", _, t) =>
+        "read\\.parquet\\(.*: _\\*\\)".r.findFirstIn(t).isDefined
+      case _ => false
+    }
+    assert(bad.isEmpty, bad)
+  }
+
   test("the six curation queries leave the session's conf and cache as " +
     "they found them") {
     val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSuite
+import graft.core.Metrics
 
 /** Both key generators must produce exactly {offset+1 … offset+n},
   * each id once (SURVEY.md §7.4 "Surrogate-key protocol"). */
@@ -20,6 +21,24 @@ class KeyGenSpec extends SparkSuite {
       assert(keys.toSeq == (501 to 1500))
       assert(out.columns.toSeq == Seq("name", "grp", "k"))
     }
+  }
+
+  test("a new offset compiles no classes and numbers rows as a literal " +
+    "offset does") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    def keyed(offset: Long) =
+      GlobalRowNumberKeyGen.assign(input, "k", offset)
+        .collect().map(r => (r.getString(0), r.getInt(2))).toSet
+    keyed(500) // compiles this plan's classes once
+    val (got, run) = Metrics.measure(spark)(keyed(9000))
+    assert(run.codegenCompiles == 0, run)
+    val literal = input.withColumn("__tmp_id", monotonically_increasing_id())
+      .withColumn("k", (row_number().over(Window.orderBy(col("__tmp_id"))) +
+        lit(9000L)).cast("int"))
+      .collect().map(r => (r.getString(0), r.getInt(3))).toSet
+    assert(got == literal)
+    assert(got.map(_._2) == (9001 to 10000).toSet)
   }
 
   test("PartitionOffsetKeyGen avoids a global single-partition sort") {

@@ -128,6 +128,8 @@ class DagRunnerSpec extends SparkSuite with TimeLimits {
     val byId = res.map(r => r.id -> r).toMap
     assert(byId("flaky").state == "success" && byId("flaky").tries == 2)
     assert(byId("dead").state == "failed" && byId("dead").tries == 3)
+    assert(byId("dead").error.exists(_.contains("always")), byId("dead"))
+    assert(byId("flaky").error.isEmpty)
     assert(byId("after_dead").state == "upstream_failed" &&
       byId("after_dead").tries == 0)
     assert(byId("after_flaky").state == "success")

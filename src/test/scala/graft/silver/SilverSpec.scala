@@ -2,7 +2,11 @@ package graft.silver
 
 import java.sql.Date
 
+import org.apache.spark.sql.functions.{col, lit, max}
+
 import graft.SparkSuite
+import graft.core.Metrics
+import graft.sources.Lake
 
 /** Silver-layer transform tests on vexere-shaped in-memory fixtures
   * (FIXTURES.md A1/A2/A5; SURVEY.md §5.2 item 2). */
@@ -129,6 +133,80 @@ class SilverSpec extends SparkSuite {
     assert(Silver.maxKey(Some(existing), "Bus_Key") == 12)
     val empty = Seq.empty[String].toDF("Bus_Key")
     assert(Silver.maxKey(Some(empty), "Bus_Key") == 0)
+  }
+
+  /** A fresh directory holding one parquet file per `batches` entry
+    * (keys k, possibly null), appended in order. */
+  private def keyTable(batches: Seq[Seq[Option[Int]]],
+                       opts: Map[String, String] = Map.empty): String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_maxkey")
+      .resolve("t").toString
+    for (b <- batches)
+      b.toDF("k").withColumn("v", lit("x")).coalesce(1)
+        .write.mode("append").options(opts).parquet(dir)
+    dir
+  }
+
+  private def aggMax(df: org.apache.spark.sql.DataFrame, k: String): Int = {
+    val r = df.agg(max(col(k).cast("int"))).head()
+    if (r.isNullAt(0)) 0 else r.getInt(0)
+  }
+
+  test("maxKey folds footers with no Spark job on a bare multi-file scan, " +
+    "empty and all-null files included") {
+    val dir = keyTable(Seq(Seq(Some(3), Some(7)), Seq(), Seq(None, None),
+      Seq(Some(12), None, Some(5))))
+    val df = Lake.read(spark, dir)
+    assert(df.inputFiles.length == 4)
+    val (got, run) = Metrics.measure(spark)(Silver.maxKey(Some(df), "k"))
+    assert(got == 12 && got == aggMax(df, "k"))
+    assert(run.jobs == 0, run)
+    // only empty and all-null files: no key yet
+    val none = Lake.read(spark, keyTable(Seq(Seq(), Seq(None))))
+    val (zero, run0) = Metrics.measure(spark)(Silver.maxKey(Some(none), "k"))
+    assert(zero == 0 && aggMax(none, "k") == 0)
+    assert(run0.jobs == 0, run0)
+  }
+
+  test("maxKey falls back to the aggregate wherever footers cannot answer") {
+    import spark.implicits._
+    val keys = Seq(Seq(Some(3), Some(7)), Seq(Some(12), None))
+    val flat = Lake.read(spark, keyTable(keys))
+    val partitioned = {
+      val d = java.nio.file.Files.createTempDirectory("graft_maxkey_p")
+        .resolve("t").toString
+      Lake.writePartitioned(Seq((4, "a"), (9, "b")).toDF("k", "p"), d, Seq("p"))
+      Lake.read(spark, d)
+    }
+    val longKey = {
+      val d = java.nio.file.Files.createTempDirectory("graft_maxkey_l")
+        .resolve("t").toString
+      Seq(5L, 11L).toDF("k").write.parquet(d)
+      Lake.read(spark, d)
+    }
+    val noStats = Lake.read(spark,
+      keyTable(keys, Map("parquet.column.statistics.enabled" -> "false")))
+    val manyFiles = {
+      val d = java.nio.file.Files.createTempDirectory("graft_maxkey_n")
+        .resolve("t").toString
+      // one row per slice, no shuffle: one file each
+      spark.range(1, 66, 1, 65).select(col("id").cast("int").as("k"))
+        .write.parquet(d)
+      Lake.read(spark, d)
+    }
+    assert(manyFiles.inputFiles.length == 65)
+    for ((label, df, want) <- Seq(
+        ("filtered frame", flat.filter(col("k") < 10), 7),
+        ("LongType key", longKey, 11),
+        ("partitioned table", partitioned, 9),
+        ("column statistics off", noStats, 12),
+        ("more than 64 files", manyFiles, 65))) {
+      assert(Lake.footerMaxInt(df, "k").isEmpty, label)
+      val (got, run) = Metrics.measure(spark)(Silver.maxKey(Some(df), "k"))
+      assert(got == want && got == aggMax(df, "k"), label)
+      assert(run.jobs > 0, s"$label: the aggregate must run")
+    }
   }
 
   test("backfillRange: per-day key continuation, missing day skipped, extended cascade") {

@@ -131,6 +131,23 @@ class StreamingSpec extends SparkSuite {
     assert(graft.sources.VersionedTable.latestVersion(root).get == vBefore)
   }
 
+  test("the sessionize and left-outer join doors delete their sentinel " +
+    "directories") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def sentinelDirs(): Set[String] = tmp.list().toSet.filter(n =>
+      n.startsWith("graft_sessionize_sentinels") ||
+        n.startsWith("graft_ssj_sentinels"))
+    val before = sentinelDirs()
+    assert(StreamingJobs.runSessionizeAvailableNow(spark, sf,
+      "graft_test_sentinel_cleanup").count() > 0)
+    assert(sentinelDirs() == before)
+    val root = Files.createTempDirectory("graft_ssj_cleanup")
+      .resolve("t").toString
+    assert(StreamingJobs.runStreamStreamLeftOuterAvailableNow(spark, sf, root)
+      .count() > 0)
+    assert(sentinelDirs() == before)
+  }
+
   test("flatMapGroups sessionization equals the window-function formulation") {
     import spark.implicits._
     val events = Tables(spark, sf, "events")
